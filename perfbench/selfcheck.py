@@ -1,6 +1,12 @@
 """Tests for the benchmark's own code (not the engine's).
 
-    python3 -m pytest perfbench -q -p no:cacheprovider
+    python3 -m pytest perfbench/selfcheck.py -q -p no:cacheprovider
+
+The file name keeps these out of pytest's default discovery: a bare
+``pytest`` from the repository root must not start the shared JVM with the
+small session below before the engine's suite starts its own (the driver
+heap and other launch-time settings are fixed by whichever session comes
+first).
 """
 
 from __future__ import annotations
