@@ -223,8 +223,20 @@ def build_store_datasource():
 
             import pyarrow.dataset as pads
 
-            if not partition.path or not os.path.isdir(partition.path):
-                return
+            if not partition.path:
+                return  # the empty-table/full-prune sentinel
+            if not os.path.isdir(partition.path):
+                # the manifest this scan planned against points at a bucket
+                # version a later commit replaced and vacuum reclaimed; an
+                # empty read here would silently drop the bucket's rows
+                version = os.path.basename(os.path.dirname(partition.path))
+                raise FileNotFoundError(
+                    f"bucket dir {partition.path!r} is gone: version {version!r} "
+                    "was vacuumed after this scan's manifest was read (an "
+                    "unfiltered view scan can reuse the manifest an earlier query "
+                    "planned with); re-run create_views() after writes, or raise "
+                    "vacuum_retain_s"
+                )
             files = [
                 os.path.join(partition.path, f)
                 for f in sorted(os.listdir(partition.path))

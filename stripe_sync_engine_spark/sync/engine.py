@@ -91,6 +91,28 @@ class SyncConfig:
 
 _RAW_EVENT_SCHEMA = StructType([StructField("value", StringType())])
 
+
+def _first_wins(pairs: list[tuple[str, object]]) -> dict:
+    """``json.loads`` object hook keeping a duplicated key's FIRST value —
+    what Spark's ``from_json`` map parse and ``get_json_object`` read, so
+    driver-decoded webhook envelopes route, probe and expand exactly like
+    the distributed lineage (Python's default keeps the last)."""
+    out: dict = {}
+    for k, v in pairs:
+        out.setdefault(k, v)
+    return out
+
+
+def _has_more(obj: dict | None, prop: str) -> bool:
+    """Python twin of ``get_json_object(payload, '$.<prop>.has_more') ==
+    "true"`` over a ``_first_wins``-decoded payload: a JSON ``true`` or the
+    string ``"true"`` expands, anything else (missing, null, a non-object
+    list property) does not."""
+    lst = obj.get(prop) if isinstance(obj, dict) else None
+    flag = lst.get("has_more") if isinstance(lst, dict) else None
+    return flag is True or flag == "true"
+
+
 # Concurrent in-flight API requests per fetch stage — the reference's own
 # fan-out width (stripeSync.ts:929-931 runs 10 customers in parallel).
 API_CONCURRENCY = 10
@@ -487,11 +509,12 @@ class StripeSparkSync:
         """Process a batch of raw Stripe Event JSON strings (column
         ``value``). Returns {table: merged-row-count}."""
         # Driver-known batches (events_df_from_json — webhook bodies are
-        # Python lists by nature) do the routing plan and the merges'
-        # bucket probes in Python (r16, guide §1.2/§4): the same
-        # json-envelope fields Spark's from_json would read, decoded once
-        # driver-side, replace the distinct-types job, the cache
-        # materialization and (via bucket_counts_of_values, XXH64
+        # Python lists by nature) do the routing plan, the list-expansion
+        # check and the merges' bucket probes in Python (r16, guide
+        # §1.2/§4): the same json-envelope fields Spark's from_json would
+        # read, decoded once driver-side (first key wins, as in Spark),
+        # replace the distinct-types job, the cache materialization, the
+        # has_more scan and (via bucket_counts_of_values, XXH64
         # parity-pinned) each upsert's Spark probe job — the distributed
         # parse→project lineage still runs UNCHANGED inside each entity's
         # write job, so every stored byte comes from the same expressions
@@ -503,7 +526,7 @@ class StripeSparkSync:
             envelopes = []
             for p in payloads:
                 try:
-                    env = json.loads(p)
+                    env = json.loads(p, object_pairs_hook=_first_wins)
                     obj = (env.get("data") or {}).get("object")
                     envelopes.append((env.get("type"), obj if isinstance(obj, dict) else None))
                 except (ValueError, AttributeError):
@@ -641,15 +664,21 @@ class StripeSparkSync:
     def _driver_key_values(
         self, entity: str, driver_objs: list[dict | None] | None
     ) -> list[str] | None:
-        """The batch's post-projection bucket-key values, when knowable
-        driver-side (r16): the merge's probe is then pure Python. Valid
-        only with no API (expansion/backfill/revalidation all reshape the
-        batch), no registered transform (one could rewrite the key), a
-        string-typed declared bucket key (the projected cast is then the
-        identity, so ``payload[bkey]`` IS the projected value), and every
-        payload carrying a non-null string key. Anything else → None →
-        the distributed probe."""
-        if driver_objs is None or self.api is not None or transforms_for(entity):
+        """One merge input's post-projection bucket-key values, when
+        knowable driver-side (r16): the merge's probe is then pure Python.
+        ``driver_objs`` must be the decoded payloads of exactly the rows
+        that merge projects, one per row — a webhook part from
+        ``_expanded_parts``, a backfill flush's buffer, a point sync's
+        object. Webhook bodies must be decoded the way Spark reads them
+        (``_first_wins``); objects the engine serializes itself
+        (``json.dumps``) match by construction. Valid only with no
+        registered transform (one could rewrite the key), a string-typed
+        declared bucket key (the projected cast is then the identity, so
+        ``payload[bkey]`` IS the projected value), and every payload
+        carrying a non-null string key. Anything else (including no
+        payloads: a DataFrame-fed batch, revalidated rows) → None → the
+        distributed probe."""
+        if driver_objs is None or transforms_for(entity):
             return None
         bkey = bucket_key(entity)
         field = {f.name: f for f in entity_schema(entity).fields}.get(bkey)
@@ -668,12 +697,13 @@ class StripeSparkSync:
         refetched events in FLUSH_CHUNK slices, each run through the full
         pipeline immediately — no accumulation of expanded payloads."""
         n = 0
-        driver_keys = self._driver_key_values(entity, driver_objs)
-        for part in self._expanded_parts(entity, subset):
+        for part, part_objs in self._expanded_parts(entity, subset, driver_objs):
             rows = self._project(entity, part, carry={"_event_id": F.col("event_id")})
             if self.config.backfill_related_entities:
                 self._backfill_parents(entity, rows, depth=0)
-            n += self._merge(entity, rows, driver_key_values=driver_keys)
+            n += self._merge(
+                entity, rows, driver_key_values=self._driver_key_values(entity, part_objs)
+            )
             if entity == "subscriptions":
                 self._sync_subscription_items(part)
             elif entity == "checkout_sessions":
@@ -945,38 +975,51 @@ class StripeSparkSync:
                     entity, delete_by_keys(target, keys), touched, planned_n_buckets=nb_planned
                 )
 
-    def _expanded_parts(self, entity: str, subset: DataFrame) -> Iterator[DataFrame]:
+    def _expanded_parts(
+        self, entity: str, subset: DataFrame, objs: list[dict | None] | None = None
+    ) -> Iterator[tuple[DataFrame, list[dict | None] | None]]:
         """autoExpandLists (reference expandEntity, stripeSync.ts:1736-1760):
-        yields the not-truncated remainder of the batch first, then the
-        has_more=true events — payloads refetched with the full list — in
-        ``FLUSH_CHUNK`` slices (flush-250 contract). The caller merges each
-        yielded part immediately, so neither the Python buffer nor any
-        single Spark local relation grows past one chunk of expanded
-        payloads."""
+        yields ``(part, part_objs)`` — the not-truncated remainder of the
+        batch first, then the has_more=true events — payloads refetched
+        with the full list — in ``FLUSH_CHUNK`` slices (flush-250
+        contract). The caller merges each yielded part immediately, so
+        neither the Python buffer nor any single Spark local relation grows
+        past one chunk of expanded payloads.
+
+        ``part_objs`` are the part's decoded payloads, or None when the
+        batch's are unknown (a DataFrame-fed batch). Given ``objs``, the
+        has_more check runs in Python (``_has_more``) — with nothing to
+        expand, the common case, the batch passes through untouched and no
+        Spark job runs. Refetched chunks are built driver-side, so their
+        payloads always ride along."""
         prop = R.EXPANDABLE_LISTS.get(entity)
         if not self.config.auto_expand_lists or prop is None or self.api is None:
-            yield subset
+            yield subset, objs
             return
+        rest = None
+        if objs is not None:
+            flags = [_has_more(o, prop) for o in objs]
+            if not any(flags):
+                yield subset, objs
+                return
+            rest = [o for o, f in zip(objs, flags) if not f]
         has_more = F.get_json_object(F.col("payload"), f"$.{prop}.has_more") == "true"
         needs = subset.where(has_more)
-        yield subset.where(~F.coalesce(has_more, F.lit(False)))
+        yield subset.where(~F.coalesce(has_more, F.lit(False))), rest
         api = self.api
 
-        def expand(r) -> tuple:
+        def expand(r) -> tuple[tuple, dict]:
             payload = json.loads(r["payload"])
             full = api.list_expanded(entity, payload["id"], prop)
             payload[prop] = {"object": "list", "data": full, "has_more": False}
-            return (r["event_id"], r["event_type"], r["event_created"], json.dumps(payload), r["sync_ts"])
+            row = (r["event_id"], r["event_type"], r["event_created"], json.dumps(payload), r["sync_ts"])
+            return row, payload
 
         schema = "event_id string, event_type string, event_created long, payload string, sync_ts timestamp"
-        buf: list[tuple] = []
-        for row in _concurrent_fetch(expand, needs.toLocalIterator()):
-            buf.append(row)
-            if len(buf) >= FLUSH_CHUNK:
-                yield self.spark.createDataFrame(buf, schema)
-                buf = []
-        if buf:
-            yield self.spark.createDataFrame(buf, schema)
+        fetched = _concurrent_fetch(expand, needs.toLocalIterator())
+        for chunk in _chunks(fetched, FLUSH_CHUNK):
+            rows, payloads = zip(*chunk)
+            yield self.spark.createDataFrame(list(rows), schema), list(payloads)
 
     # -- parent backfill ---------------------------------------------------
     def _backfill_parents(self, entity: str, rows: DataFrame, depth: int) -> None:
@@ -1021,7 +1064,7 @@ class StripeSparkSync:
                 )
                 missing_ids = [r["id"] for r in missing.toLocalIterator()]
             fetched = [
-                json.dumps(obj)
+                obj
                 for obj in _concurrent_fetch(lambda mid: api.retrieve(parent, mid), missing_ids)
                 if obj is not None
             ]
@@ -1029,11 +1072,13 @@ class StripeSparkSync:
                 continue
             now = time.time()
             pdf = self.spark.createDataFrame(
-                [(p, now) for p in fetched], "payload string, sync_ts double"
+                [(p, now) for p in to_json_rows(fetched)], "payload string, sync_ts double"
             )
             parent_rows = self._project(parent, pdf)
             self._backfill_parents(parent, parent_rows, depth + 1)
-            self._merge(parent, parent_rows)
+            self._merge(
+                parent, parent_rows, driver_key_values=self._driver_key_values(parent, fetched)
+            )
 
     # -- merge -------------------------------------------------------------
     def _ensure_bucket_key(self, entity: str) -> str:
@@ -1158,12 +1203,16 @@ class StripeSparkSync:
         pushFilters, buckets whose stats exclude it are never scanned
         (input partitions == surviving buckets), and Spark re-applies the
         exact predicate above the scan so results are identical to
-        ``store.read(table).filter(...)``. Views always reflect the
-        CURRENT manifest — planning re-reads it per query, so a merge
-        landing between two queries is visible to the second.
+        ``store.read(table).filter(...)``. Freshness: a FILTERED query
+        re-plans and re-reads the current manifest, so a merge landing
+        between two such queries is visible to the second; an UNFILTERED
+        scan can reuse the manifest an earlier query on the view planned
+        with, missing later commits. Call this again after writes (and
+        after creating new tables, e.g. a first webhook for a new entity)
+        — a stale scan whose bucket versions were since vacuumed fails
+        loudly instead of returning missing rows.
 
-        Returns the view names registered. Call again after creating new
-        tables (e.g. a first webhook for a new entity) to pick them up.
+        Returns the view names registered.
 
         ``as_of_ms`` pins every view to the retained history snapshot
         current at that epoch-ms instant (Delta ``TIMESTAMP AS OF``
@@ -2169,7 +2218,7 @@ class StripeSparkSync:
             rows = self._project(entity, df)
             if self.config.backfill_related_entities:
                 self._backfill_parents(entity, rows, depth=0)
-            self._merge(entity, rows)
+            self._merge(entity, rows, driver_key_values=self._driver_key_values(entity, buffer))
             synced += len(buffer)
             buffer.clear()
             if on_progress is not None:
@@ -2213,7 +2262,11 @@ class StripeSparkSync:
             df = self.spark.createDataFrame(
                 [(p, now) for p in to_json_rows(buffer)], "payload string, sync_ts double"
             )
-            self._merge("payment_methods", self._project("payment_methods", df))
+            self._merge(
+                "payment_methods",
+                self._project("payment_methods", df),
+                driver_key_values=self._driver_key_values("payment_methods", buffer),
+            )
             synced += len(buffer)
             buffer.clear()
 
@@ -2252,5 +2305,5 @@ class StripeSparkSync:
         rows = self._project(entity, df)
         if self.config.backfill_related_entities:
             self._backfill_parents(entity, rows, depth=0)
-        self._merge(entity, rows)
+        self._merge(entity, rows, driver_key_values=self._driver_key_values(entity, [obj]))
         return entity

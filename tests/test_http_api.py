@@ -5,6 +5,7 @@ utils/verifyApiKey.ts."""
 
 from __future__ import annotations
 
+import dataclasses
 import http.client
 import json
 import time
@@ -139,6 +140,51 @@ def test_end_to_end_over_socket(engine):
     finally:
         server.shutdown()
     assert table_rows(engine, "charges")["ch_sock"]["amount"] == 4200
+
+
+def spark_jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` launches from the calling thread, counted through
+    a job group scoped to the call."""
+    sc = spark.sparkContext
+    group = f"jobcount-{time.monotonic_ns()}"
+
+    def in_group(name, call):
+        sc.setJobGroup(name, name)
+        try:
+            call()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+
+    in_group(group, fn)
+    # the status tracker is fed asynchronously, in order: once a later
+    # sentinel job is listed, every job ``fn`` started is listed too
+    in_group(group + "-sentinel", lambda: spark.range(1).collect())
+    deadline = time.monotonic() + 30
+    while not sc.statusTracker().getJobIdsForGroup(group + "-sentinel"):
+        assert time.monotonic() < deadline, "status tracker never listed the sentinel job"
+        time.sleep(0.05)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_api_attached_webhook_runs_no_more_jobs_than_api_less(spark, tmp_path, engine, router):
+    """An attached Stripe API costs a single webhook no extra Spark jobs:
+    the list-expansion check and the merge's bucket probe are decided from
+    the decoded payload on the driver. Related-entity backfill is off on
+    both engines — its parent-table probes are work only an API-attached
+    engine does at all."""
+    engine.config = dataclasses.replace(engine.config, backfill_related_entities=False)
+    bare = StripeSparkSync(spark, TableStore(spark, str(tmp_path / "bare")), config=engine.config)
+    bare_router = Router(bare, api_key=API_KEY)
+    # the table-creating POST, then a merge into the existing table
+    for i in range(2):
+        payload = fx.event("charge.succeeded", fx.charge(id=f"ch_jobs{i}"), created=1_000 + i)
+        statuses = []
+        with_api = spark_jobs(spark, lambda: statuses.append(signed_post(router, payload)[0]))
+        without = spark_jobs(spark, lambda: statuses.append(signed_post(bare_router, payload)[0]))
+        assert statuses == [200, 200]
+        assert with_api <= without, (i, with_api, without)
+    assert sorted(table_rows(engine, "charges")) == sorted(table_rows(bare, "charges"))
 
 
 @pytest.mark.slow  # 340s: full-corpus sweep; per-fixture projection gated by test_fixture_corpus

@@ -423,37 +423,66 @@ def test_transform_registry_applied_before_merge(engine):
         clear_transforms("customers")
 
 
-# r16: driver-known webhook batches (events_df_from_json) route and
-# bucket-probe in Python; a batch arriving as a PLAIN DataFrame (the
-# streaming sink's shape) keeps the distributed probe. The two paths
-# must land byte-equal state and identical counts — including the
-# same-second tiebreak and stale-event semantics the probe feeds into.
+# r16: driver-known webhook batches (events_df_from_json) route,
+# decide list expansion and bucket-probe in Python; a batch arriving as a
+# PLAIN DataFrame (the streaming sink's shape) keeps the distributed
+# probe. The two paths must land byte-equal state and identical counts —
+# including the same-second tiebreak and stale-event semantics the probe
+# feeds into — with and without a Stripe API attached (expansion and
+# parent backfill only run with one).
 def test_driver_known_batch_equals_distributed_batch(spark, tmp_path):
     from stripe_sync_engine_spark.sync.engine import _RAW_EVENT_SCHEMA
 
+    truncated = {"object": "list", "data": [{"id": "re_1", "amount": 1}], "has_more": True}
+    complete = {"object": "list", "data": [{"id": "il_1", "amount": 5}], "has_more": False}
     payloads = [
         fx.event("charge.succeeded", fx.charge(id="ch_E1", amount=1), created=1_000),
         fx.event("charge.updated", fx.charge(id="ch_E1", amount=2), created=2_000),
         fx.event("charge.updated", fx.charge(id="ch_E1", amount=3), created=1_500),  # stale
         fx.event("customer.updated", fx.customer(id="cus_E1", email="e@x.io"), created=1_000),
         fx.event("charge.succeeded", fx.charge(id="ch_E2", amount=9), created=1_000),
+        fx.event("charge.refunded", fx.charge(id="ch_E3", refunds=truncated), created=1_000),
+        fx.event("invoice.updated", fx.invoice(id="in_E1", lines=complete), created=1_000),
+        # a duplicated key: Spark's parse keeps the FIRST value, and so
+        # must the driver's decode (it routes and probes ch_E4's bucket)
+        fx.event("charge.updated", fx.charge(id="ch_E4"), created=1_000).replace(
+            '"id": "ch_E4"', '"id": "ch_E4", "id": "ch_E5"'
+        ),
     ]
-    results = {}
-    for mode in ("driver", "distributed"):
-        eng = StripeSparkSync(spark, TableStore(spark, str(tmp_path / mode)))
-        if mode == "driver":
-            df = eng.events_df_from_json(payloads)
-            assert getattr(df, "_stripe_driver_payloads", None) is not None
-        else:
-            df = spark.createDataFrame([(p,) for p in payloads], _RAW_EVENT_SCHEMA)
-        counts = eng.process_webhook_events(df)
-        results[mode] = (
-            counts,
-            table_rows(eng, "charges"),
-            table_rows(eng, "customers"),
-        )
-    assert results["driver"] == results["distributed"]
-    assert results["driver"][1]["ch_E1"]["amount"] == 2  # stale event lost
+    for with_api in (False, True):
+        results = {}
+        for mode in ("driver", "distributed"):
+            api = InMemoryStripeAPI() if with_api else None
+            if api is not None:
+                api.put_expanded(
+                    "charges", "ch_E3", "refunds",
+                    [{"id": "re_1", "amount": 1}, {"id": "re_2", "amount": 2}],
+                )
+            store = TableStore(spark, str(tmp_path / f"{mode}-{with_api}"))
+            eng = StripeSparkSync(spark, store, api=api)
+            counts = []
+            # the second batch merges into existing tables, where a wrong
+            # probe would leave a row's bucket un-committed
+            for batch in (payloads[:5], payloads[5:]):
+                if mode == "driver":
+                    df = eng.events_df_from_json(batch)
+                    assert getattr(df, "_stripe_driver_payloads", None) is not None
+                else:
+                    df = spark.createDataFrame([(p,) for p in batch], _RAW_EVENT_SCHEMA)
+                counts.append(eng.process_webhook_events(df))
+            results[mode] = (
+                counts,
+                table_rows(eng, "charges"),
+                table_rows(eng, "customers"),
+                table_rows(eng, "invoices"),
+            )
+        assert results["driver"] == results["distributed"]
+        charges = results["driver"][1]
+        assert charges["ch_E1"]["amount"] == 2  # stale event lost
+        assert "ch_E4" in charges and "ch_E5" not in charges
+        # the truncated refunds list was refetched only with an API attached
+        assert ('"re_2"' in charges["ch_E3"]["refunds"]) is with_api
+        assert '"il_1"' in results["driver"][3]["in_E1"]["lines"]
 
 
 def test_driver_known_batch_with_transform_falls_back_and_applies_it(spark, tmp_path):
@@ -2053,8 +2082,9 @@ def test_store_view_prune_matches_table_store(spark, tmp_path):
 def test_create_views_sql_parity_and_pruning(engine):
     """The r6 VERDICT ask: view query ≡ store read, and IO evidence that a
     ``created`` predicate pruned buckets (task count == surviving buckets
-    < all buckets). Also: views see data merged AFTER registration —
-    planning re-reads the manifest per query."""
+    < all buckets). Also: a FILTERED query sees data merged after
+    registration — it re-plans against the current manifest (an unfiltered
+    scan may not; see test_unfiltered_view_scan_after_vacuum_fails_loudly)."""
     from pyspark.sql import functions as F
 
     spark, store = engine.spark, engine.store
@@ -2102,6 +2132,35 @@ def test_create_views_sql_parity_and_pruning(engine):
     )
     n = spark.sql("SELECT count(*) AS n FROM stripe_charges WHERE created >= 1900000000").collect()
     assert n[0]["n"] == 1
+
+
+def test_unfiltered_view_scan_after_vacuum_fails_loudly(engine):
+    """An unfiltered view scan can reuse the manifest an earlier query on
+    the view planned with. Once a later commit replaces a bucket it points
+    at and vacuum reclaims the old version (default vacuum_retain_s=0), the
+    scan must fail and name the version and the remedy, not return the
+    table without those rows. Re-registering reads the current manifest
+    again."""
+    spark, store = engine.spark, engine.store
+    process(engine, fx.event("charge.succeeded", fx.charge(id="ch_V1", amount=1), created=1_000))
+    engine.create_views()
+    assert spark.sql("SELECT id, amount FROM stripe_charges").collect() == [("ch_V1", 1)]
+    v1_bucket = store.buckets_of_values(["ch_V1"], table="charges")[0]
+    stale_version = store._read_manifest("charges")["buckets"][str(v1_bucket)]
+    process(
+        engine,
+        fx.event("charge.updated", fx.charge(id="ch_V1", amount=2), created=2_000),
+        fx.event("charge.succeeded", fx.charge(id="ch_V2", amount=3), created=2_000),
+    )
+    assert len(table_rows(engine, "charges")) == 2
+    with pytest.raises(Exception, match="create_views") as err:
+        spark.sql("SELECT id, amount FROM stripe_charges").collect()
+    assert stale_version in str(err.value)
+    engine.create_views()
+    got = spark.sql("SELECT id, amount FROM stripe_charges ORDER BY id").collect()
+    assert [tuple(r) for r in got] == [("ch_V1", 2), ("ch_V2", 3)]
+    # a fully pruned scan still plans the empty sentinel partition: no rows, no error
+    assert spark.sql("SELECT id FROM stripe_charges WHERE created < 0").collect() == []
 
 
 def test_create_views_as_of_snapshot(spark, tmp_path):
