@@ -61,26 +61,6 @@ import threading
 #: flock sidecar (held-by-flock, presence meaningless).
 LOCK_SIDECAR_SUFFIX = ".flock"
 
-#: the PRE-r13 sidecar suffix (``.{base}.lock``). UPGRADE NOTE — the
-#: r13 suffix change is a FLAG-DAY migration for multi-writer
-#: warehouses: an old writer flocks ``.{base}.lock`` while a new writer
-#: flocks ``.{base}.flock``, so during a mixed-version rollout the two
-#: do NOT exclude each other on the same side file (the lost-update
-#: race read_modify_write exists to prevent). Quiesce writers across
-#: the upgrade (single-writer deployments are unaffected). Afterward,
-#: remove every legacy sidecar — orphaned and live-parent alike — with
-#: the one-time ``reclaim_lock_sidecars(root, migrate_legacy=True)``
-#: pass; the DEFAULT sweep never touches them (old writers lack the
-#: inode re-verification that makes unlinking safe). The
-#: store's presence-style ``.commit.lock`` matches this suffix pattern
-#: and is excluded BY EXACT NAME — it is never a reclaim candidate.
-LEGACY_LOCK_SIDECAR_SUFFIX = ".lock"
-
-#: storage._commit_lock's O_EXCL lock file name — held by PRESENCE, so
-#: unlinking one that exists would break the store's commit mutual
-#: exclusion; excluded from every sweep by exact name.
-STORE_COMMIT_LOCK_NAME = ".commit.lock"
-
 
 class PosixRenameBackend:
     """The default backend: write-to-temp + fsync + atomic rename +
@@ -360,73 +340,17 @@ def read_modify_write(path: str, fn) -> None:
     _backend.read_modify_write(path, fn)
 
 
-#: base-name suffixes a legacy sidecar's parent side file can have —
-#: every file the engine has ever routed through ``read_modify_write``
-#: is a ``.json``/``.jsonl`` side file, so the ``migrate_legacy`` pass
-#: only unlinks ``.{base}.lock`` names whose stripped base matches;
-#: any OTHER dot-``.lock`` file under the warehouse root (presence-style
-#: locks kept by foreign tooling — which a non-blocking flock probe
-#: cannot protect) is left alone and surfaced by ``count_legacy_lock_
-#: sidecars`` instead (ADVICE r14)
-_RMW_SIDE_FILE_SUFFIXES = (".json", ".jsonl")
-
-
-def _is_engine_legacy_sidecar(base: str) -> bool:
-    return base.endswith(_RMW_SIDE_FILE_SUFFIXES)
-
-
-def count_legacy_lock_sidecars(root: str) -> int:
-    """Count pre-r13 legacy flock sidecars (``.{base}.lock`` with an
-    engine-side-file base) under ``root`` WITHOUT touching them — the
-    pending-migration signal ``engine.maintain()`` surfaces so an
-    operator who missed the r13 upgrade note learns the one-time
-    ``reclaim_lock_sidecars(root, migrate_legacy=True)`` pass is still
-    owed (see ``LEGACY_LOCK_SIDECAR_SUFFIX`` for the flag-day
-    contract). The store's ``.commit.lock`` and foreign ``.lock`` files
-    (non-engine bases) are not counted — they are not migration
-    candidates."""
-    n = 0
-    for _dirpath, _dirs, files in os.walk(root):
-        for name in files:
-            if (
-                name.startswith(".")
-                and name != STORE_COMMIT_LOCK_NAME
-                and name.endswith(LEGACY_LOCK_SIDECAR_SUFFIX)
-                and not name.endswith(LOCK_SIDECAR_SUFFIX)
-                and _is_engine_legacy_sidecar(
-                    name[1 : -len(LEGACY_LOCK_SIDECAR_SUFFIX)]
-                )
-            ):
-                n += 1
-    return n
-
-
-def reclaim_lock_sidecars(root: str, migrate_legacy: bool = False) -> list[str]:
+def reclaim_lock_sidecars(root: str) -> list[str]:
     """Remove orphaned flock sidecars (``.{base}.flock`` files whose
     parent side file ``{base}`` no longer exists) under ``root``,
     recursively — the maintenance sweep that keeps a long-lived
     deployment from accumulating one sidecar per vacuumed side file
     forever. Wired into ``engine.maintain()``.
 
-    Pre-r13 LEGACY sidecars (``.{base}.lock``) are touched ONLY by the
-    explicit one-time ``migrate_legacy=True`` pass — never by the
-    default sweep, orphaned or not. The reason is the rollout race the
-    suffix change created: old (pre-upgrade) writers have no
-    inode re-verification, so an old writer that has OPENED but not yet
-    flocked a legacy sidecar holds nothing the non-blocking probe can
-    see, and unlinking it reintroduces the two-inodes lockfile-unlink
-    race for code that never defended against it. Run the migration
-    only after EVERY writer has upgraded (see
-    ``LEGACY_LOCK_SIDECAR_SUFFIX``: the suffix change is a flag-day);
-    at that point it removes legacy sidecars orphaned AND live-parent
-    alike — but ONLY names whose stripped base is an engine side file
-    (``.json``/``.jsonl``, the only files ``read_modify_write`` has
-    ever locked): a FOREIGN ``.lock`` file some other tool keeps under
-    the warehouse root may be a presence-style lock the non-blocking
-    flock probe cannot protect, so the migration never unlinks it
-    (ADVICE r14). The store's presence-style ``.commit.lock`` is
-    excluded by exact name in both modes. ``engine.maintain()`` reports
-    the pending-migration count via ``count_legacy_lock_sidecars``.
+    Only ``.flock`` names are candidates, so no ``.lock`` file is ever
+    unlinked: the store's presence-style ``.commit.lock`` and any lock a
+    foreign tool keeps under the warehouse root are held by EXISTENCE,
+    which the non-blocking flock probe below cannot see.
 
     Safe next to live writers: each candidate is taken with a
     NON-BLOCKING exclusive flock (busy → skip, the holder is mid-commit
@@ -446,29 +370,13 @@ def reclaim_lock_sidecars(root: str, migrate_legacy: bool = False) -> list[str]:
     removed: list[str] = []
     for dirpath, _dirs, files in os.walk(root):
         for name in files:
-            if not name.startswith(".") or name == STORE_COMMIT_LOCK_NAME:
+            if not (name.startswith(".") and name.endswith(LOCK_SIDECAR_SUFFIX)):
                 continue
-            if name.endswith(LOCK_SIDECAR_SUFFIX):
-                suffix, legacy = LOCK_SIDECAR_SUFFIX, False
-            elif name.endswith(LEGACY_LOCK_SIDECAR_SUFFIX):
-                suffix, legacy = LEGACY_LOCK_SIDECAR_SUFFIX, True
-            else:
-                continue
-            base = name[1 : -len(suffix)]
+            base = name[1 : -len(LOCK_SIDECAR_SUFFIX)]
             if not base:
                 continue
-            if legacy and not migrate_legacy:
-                # default sweep never touches legacy sidecars — even
-                # orphans: a pre-upgrade writer mid-open has no inode
-                # re-verification to survive our unlink (see docstring)
-                continue
-            if legacy and not _is_engine_legacy_sidecar(base):
-                # a foreign .lock file under the warehouse root: possibly
-                # a presence-style lock the non-blocking flock probe
-                # cannot protect — never a migration candidate
-                continue
             parent = os.path.join(dirpath, base)
-            if os.path.exists(parent) and not legacy:
+            if os.path.exists(parent):
                 continue
             lockpath = os.path.join(dirpath, name)
             try:
@@ -479,10 +387,8 @@ def reclaim_lock_sidecars(root: str, migrate_legacy: bool = False) -> list[str]:
                         continue  # held — a writer is mid-commit
                     try:
                         # re-check under the lock: the holder we raced
-                        # may have just created the parent (the legacy
-                        # migrate mode removes regardless — the parent
-                        # legitimately exists there)
-                        if legacy or not os.path.exists(parent):
+                        # may have just created the parent
+                        if not os.path.exists(parent):
                             os.unlink(lockpath)
                             removed.append(lockpath)
                     finally:

@@ -95,13 +95,14 @@ def run_parallel(*thunks):
     """Run zero-arg callables concurrently on driver threads, returning
     their results in argument order (first raised exception propagates).
 
-    ONE implementation of the window paths' overlap-two-independent-jobs
-    blocks (guide §2.6 — postings/pq ``_apply_window_once`` each had a
-    verbatim copy). Worker count is CAPPED at 8: under PySpark's pinned
-    thread mode (default since 3.2) each fresh Python thread maps to its
-    own JVM thread, so an unbounded per-call pool in a long-lived
-    streaming driver churns JVM threads for no scheduling benefit — the
-    overlapped jobs are few and short. Thunks must be INDEPENDENT (no
+    ONE implementation of the overlap-independent-jobs blocks in the
+    derived indexes' window routine (postings/pq ``_apply_window_once``,
+    the only write path of ``register``, ``unregister`` and
+    ``apply_changes``; guide §2.6). Worker count is CAPPED at 8: under
+    PySpark's pinned thread mode (default since 3.2) each fresh Python
+    thread maps to its own JVM thread, so an unbounded per-call pool in
+    a long-lived streaming driver churns JVM threads for no scheduling
+    benefit — the overlapped jobs are few and short. Thunks must be INDEPENDENT (no
     thunk may wait on another's result) and must not themselves call
     ``run_parallel``-based helpers reentrantly in a way that blocks —
     every current call site submits leaf work (a localCheckpoint, a
@@ -120,11 +121,10 @@ def checkpoint_parallel(*dfs: DataFrame) -> tuple[DataFrame, ...]:
     """``localCheckpoint(eager=True)`` several INDEPENDENT frames
     concurrently, returned in argument order.
 
-    Why (r15, guide §2.6 — overlap independent jobs): a merged CDC window
-    materializes a handful of frames whose lineages do not depend on each
-    other (the tokenized batch and the delete-id set; the postings rows
-    and the forward rows; the two tables' freshness survivors), but a
-    sequential ``df.localCheckpoint()`` chain makes the driver wait out
+    Why (r15, guide §2.6 — overlap independent jobs): a derived index's
+    window materializes frames whose lineages do not depend on each
+    other (the tokenized or encoded new rows and the delete-id set), but
+    a sequential ``df.localCheckpoint()`` chain makes the driver wait out
     each job's fixed scheduler latency one at a time. Submitting them
     from a thread pool lets one job's tasks back-fill the others' idle
     scheduler time — wall per phase becomes ~max(job), not sum. Spark's
@@ -202,6 +202,53 @@ def commit_fresh(store, table: str, fresh: DataFrame, key: str, manifest: dict) 
         key=key,
         planned_versions=dict(manifest["buckets"]),
     )
+
+
+def window_delete_targets(
+    forward: DataFrame, ids: DataFrame, id_col: str, ins_id: str | None
+) -> DataFrame:
+    """The forward-table rows a CDC window deletes, materialized: every
+    row of the window's delete ``ids`` except those its own insert half
+    already registered under ``ins_id`` (a crash replay of an update
+    must not tear down the new version it landed). ``ins_id`` None — a
+    delete-only window — keeps nothing."""
+    return (
+        forward.join(F.broadcast(ids), id_col, "left_semi")
+        .where(~F.col("batch_id").eqNullSafe(F.lit(ins_id).cast("string")))
+        .localCheckpoint(eager=True)
+    )
+
+
+def window_forward_keep(
+    forward: DataFrame, ids: DataFrame, id_col: str, ins_id: str | None, has_del: bool
+) -> DataFrame:
+    """The post-delete view of ``forward``: rows of the window's delete
+    ``ids`` drop out, except the ones ``window_delete_targets`` spares
+    (registered under ``ins_id``). ``has_del`` False (no targets) is the
+    identity, without the extra joins."""
+    if not has_del:
+        return forward
+    kept = F.col("batch_id").eqNullSafe(F.lit(ins_id).cast("string"))
+    return forward.join(F.broadcast(ids), id_col, "left_anti").unionByName(
+        forward.where(kept).join(F.broadcast(ids), id_col, "left_semi")
+    )
+
+
+def check_birth_replay(
+    store, table: str, forward_table: str, rows: DataFrame, keys: list[str], remedy: str
+) -> None:
+    """Called when a window finds ``table`` but not its forward table.
+    If every row of ``table`` belongs to this window (``rows``, matched
+    on ``keys``), this is the replay of a birth that crashed after the
+    primary write: the caller goes on with an empty forward view and its
+    forward write heals the index. Any other row means the index
+    predates its forward table, which no window can rebuild: raise."""
+    stray = store.read(table).select(*keys).join(rows.select(*keys), keys, "left_anti")
+    if not stray.isEmpty():
+        raise RuntimeError(
+            f"{table!r} has no forward table ({forward_table!r}) and holds rows "
+            f"outside this window — it predates delete support; {remedy}"
+        )
 
 
 class FoldLedger:

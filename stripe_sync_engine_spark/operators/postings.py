@@ -35,21 +35,25 @@ Tables:
 
 * ``_postings_docs`` (doc_id, term_h, dl, batch_id), bucketed by
   ``doc_id`` — the FORWARD index (r8): a document's term hashes and
-  length, the structure that makes ``unregister``/``apply_changes``
-  bucket-pruned (without it, deleting a doc means scanning every
-  postings bucket for its id). Token-less docs keep a NULL-term sentinel
-  row so their stats contribution stays reversible.
+  length, the structure that makes deletes bucket-pruned (without it,
+  deleting a doc means scanning every postings bucket for its id).
+  Token-less docs keep a NULL-term sentinel row so their stats
+  contribution stays reversible.
 
-Idempotence follows the span gate's per-batch design
-(``operators/span_dedup``): postings anti-probe on (term_h, doc_id) —
-a replayed batch, or a half-committed crash, commits only what is
-missing; stats anti-probe on batch_id. Feed each document ONCE per
-registration (the document stream's exact-dedup gate upstream
+Every write is ONE window routine (``_apply_window_once``): a set of
+doc ids to delete and a batch of documents to add, committed as one
+merged version per table in the order stats → postings → forward.
+``register`` is an insert-only window, ``unregister`` a delete-only
+window, ``apply_changes`` (the CDC-driven path that keeps the index
+tracking a mutating corpus without rescans) both, and the index's birth
+is a window against empty state. Idempotence follows the span gate's
+per-batch design (``operators/span_dedup``): postings anti-probe on
+(term_h, doc_id) — a replayed batch, or a half-committed crash, commits
+only what is missing; stats anti-probe on batch_id. Feed each document
+ONCE per registration (the document stream's exact-dedup gate upstream
 guarantees it); re-feeding the same doc under a new batch_id would
 inflate stats while the postings dedupe. To CHANGE or REMOVE a
-document, use ``unregister`` / ``apply_changes`` (r8) — the CDC-driven
-maintenance path that keeps the index tracking a mutating corpus
-without rescans.
+document, use ``unregister`` / ``apply_changes``.
 
 Reference analog: none (training-data-pipeline extension; the ranking
 math is ``plans/textops``' BM25, parity pytest-pinned against the
@@ -64,10 +68,12 @@ from pyspark.sql import functions as F
 from stripe_sync_engine_spark.operators.incremental_dedup import (
     FoldLedger,
     anti_probe,
+    check_birth_replay,
     checkpoint_parallel,
-    commit_fresh,
     fold_batch_rows,
     run_parallel,
+    window_delete_targets,
+    window_forward_keep,
     with_occ_retry,
 )
 from stripe_sync_engine_spark.plans.textops import BM25_B, BM25_K1, tokens_nonempty
@@ -108,7 +114,7 @@ class PersistedPostingsIndex:
             toks.alias("_toks"),
         )
 
-    def _rows(self, base: DataFrame, batch_id: str) -> DataFrame:
+    def _rows(self, base: DataFrame, batch_id: str | None) -> DataFrame:
         return (
             base.select("doc_id", "dl", F.explode("_toks").alias("term"))
             .groupBy("doc_id", "dl", "term")
@@ -119,19 +125,19 @@ class PersistedPostingsIndex:
                 "doc_id",
                 "tf",
                 "dl",
-                F.lit(batch_id).alias("batch_id"),
+                F.lit(batch_id).cast("string").alias("batch_id"),
             )
         )
 
     def register(self, batch: DataFrame, batch_id: str) -> None:
-        """Durably add the batch's postings + stats increment. Idempotent
-        per (term_h, doc_id) and per stats batch_id — replays and
+        """Durably add the batch's postings + stats increment: an
+        insert-only window (``_apply_window_once``). Idempotent per
+        (term_h, doc_id) and per stats batch_id — replays and
         half-committed crashes heal. Raises if ``batch_id`` was already
         absorbed by ``fold_stats`` (the enforced replay horizon: a folded
         batch's stats row is gone, so the anti-probe would re-admit its
         increment and inflate N/avgdl silently)."""
-        FoldLedger(self.store, self.stats_table).check_replayable(batch_id)
-        with_occ_retry(lambda: self._register_once(batch, batch_id))
+        self._apply(batch.select(self.id_col).where(F.lit(False)), batch, None, batch_id)
 
     def fold_stats(self, into_batch_id: str = "_folded") -> dict | None:
         """Collapse the per-batch stats rows into ONE ``into_batch_id``
@@ -150,29 +156,19 @@ class PersistedPostingsIndex:
             self.store,
             self.stats_table,
             key="batch_id",
-            collapse=lambda rows: self._stats_with_schema(rows)
-            .agg(
+            collapse=lambda rows: rows.agg(
                 F.sum("n_docs").cast("long").alias("n_docs"),
                 F.sum("n_dl_docs").cast("long").alias("n_dl_docs"),
                 F.sum("total_dl").cast("long").alias("total_dl"),
-            )
-            .select(
+            ).select(
                 F.lit(into_batch_id).alias("batch_id"), "n_docs", "n_dl_docs", "total_dl"
             ),
             into_batch_id=into_batch_id,
         )
 
-    def _stats_with_schema(self, df: DataFrame) -> DataFrame:
-        """Upgrade a legacy stats frame in place: tables written before
-        ``n_dl_docs`` existed assume every registered doc had text (the
-        old accounting), so the column backfills as n_docs."""
-        if "n_dl_docs" not in df.columns:
-            df = df.withColumn("n_dl_docs", F.col("n_docs"))
-        return df.select("batch_id", "n_docs", "n_dl_docs", "total_dl")
-
-    def _forward_rows(self, base: DataFrame, batch_id: str) -> DataFrame:
+    def _forward_rows(self, base: DataFrame, batch_id: str | None) -> DataFrame:
         # explode_outer keeps token-less docs (empty or NULL text) as one
-        # NULL-term sentinel row, so unregister can reverse their n_docs
+        # NULL-term sentinel row, so a delete can reverse their n_docs
         # (and, for empty-text, n_dl_docs) contribution.
         return base.select(
             "doc_id",
@@ -180,71 +176,15 @@ class PersistedPostingsIndex:
                 F.array_distinct(F.transform("_toks", lambda t: F.xxhash64(t)))
             ).alias("term_h"),
             "dl",
-            F.lit(batch_id).alias("batch_id"),
+            F.lit(batch_id).cast("string").alias("batch_id"),
         )
 
-    def _register_once(self, batch: DataFrame, batch_id: str) -> None:
-        store = self.store
-        # ONE eager tokenization feeds all three derivations (postings
-        # rows, forward rows, stats increment) — the batch's possibly
-        # expensive upstream lineage executes once; the postings rows are
-        # additionally checkpointed because the bucket probe and the
-        # anti-probe both reuse them.
-        base = self._tokenized(batch).localCheckpoint(eager=True)
-        rows = self._rows(base, batch_id).localCheckpoint(eager=True)
-        if not store.exists(self.table):
-            store.write(self.table, rows, key="term_h")
-        else:
-            manifest = store._read_manifest(self.table)
-            touched = store.buckets_of(rows, key="term_h", table=self.table)
-            known = store._scan_manifest(self.table, manifest, touched)
-            fresh = anti_probe(rows, known, ["term_h", "doc_id"]).localCheckpoint(
-                eager=True
-            )
-            if not fresh.isEmpty():
-                commit_fresh(store, self.table, fresh, "term_h", manifest)
-        # Forward index between postings and stats (each step idempotent,
-        # so any crash ordering heals on replay): doc_id → term hashes +
-        # dl, the structure unregister() prunes by.
-        fwd = self._forward_rows(base, batch_id).localCheckpoint(eager=True)
-        if not store.exists(self.forward_table):
-            store.write(self.forward_table, fwd, key="doc_id")
-        else:
-            manifest = store._read_manifest(self.forward_table)
-            touched = store.buckets_of(fwd, key="doc_id", table=self.forward_table)
-            known = store._scan_manifest(self.forward_table, manifest, touched)
-            # NULL-safe probe key: the sentinel rows carry term_h NULL,
-            # which equality joins never match — a replay would duplicate
-            # them. Coalesce to a reserved long (an xxhash64 collision
-            # with a real term is a 2^-64 event whose only consequence is
-            # one skipped forward row).
-            th = F.coalesce(F.col("term_h"), F.lit(-(1 << 62)).cast("long"))
-            fresh = anti_probe(
-                fwd.withColumn("_th", th),
-                known.withColumn("_th", th),
-                ["doc_id", "_th"],
-            ).drop("_th").localCheckpoint(eager=True)
-            if not fresh.isEmpty():
-                commit_fresh(store, self.forward_table, fresh, "doc_id", manifest)
-        # Stats LAST: a crash before this point replays into no-ops above
-        # and a stats heal here. Increments derive from the tokenized
-        # batch itself (not from `fresh`), so a replay of a partially
-        # committed batch records the SAME totals it would have.
-        # NULL-text docs count in n_docs but not n_dl_docs/total_dl —
-        # exactly how the one-shot scan's count(*)/avg(dl) treat them,
-        # which the parity contract depends on.
-        inc = base.agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.count("dl").cast("long").alias("n_dl_docs"),
-            F.coalesce(F.sum("dl"), F.lit(0).cast("long")).alias("total_dl"),
-        ).select(F.lit(batch_id).alias("batch_id"), "n_docs", "n_dl_docs", "total_dl")
-        self._commit_stats(inc)
-
     def _commit_stats(self, inc: DataFrame) -> None:
-        """Idempotently append stats rows (anti-probed on batch_id) —
-        shared by register (positive increments), unregister (negative
-        deltas) and the merged window apply (both at once); query-time
-        SUM nets them out.
+        """Idempotently append stats rows (anti-probed on batch_id): the
+        window's negative delta and positive increment; query-time SUM
+        nets them out. A row with ``n_docs == 0`` (an empty half of the
+        window) carries nothing and is skipped: writing it would only
+        grow the stats table and burn its batch id in the fold ledger.
 
         ``inc`` is a HANDFUL of agg rows by construction (one per
         sub-batch), so the ENTIRE commit runs driver-side (r16, guide
@@ -256,14 +196,16 @@ class PersistedPostingsIndex:
         OCC precondition, and footer-stat harvest as a Spark write).
         This replaced a probe scan job + a write job per window (r15's
         form itself replaced the generic anti-probe machinery, ~1s of
-        jobs to commit two 4-column rows)."""
+        jobs to commit two 4-column rows). A missing stats table is
+        created by a plain ``store.write``."""
         from pyspark.sql.types import StructType
 
         store = self.store
-        if not store.exists(self.stats_table):
+        inc = inc.where(F.col("n_docs") != 0)
+        manifest = store._read_manifest(self.stats_table)
+        if manifest is None:
             store.write(self.stats_table, inc, key="batch_id")
             return
-        manifest = store._read_manifest(self.stats_table)
         nb = int(manifest["n_buckets"])
         rows = inc.withColumn("_b", store.bucket_expr("batch_id", nb)).collect()
         if not rows:
@@ -276,19 +218,8 @@ class PersistedPostingsIndex:
         fresh_rows = [r for r in rows if r["batch_id"] not in known_ids]
         if not fresh_rows:
             return
-        # the base rows union with fresh, so a legacy 3-column base must
-        # be upgraded before the union (the write also migrates the
-        # touched buckets to the new schema as a side effect).
-        def up(r: dict) -> dict:
-            return {
-                "batch_id": r["batch_id"],
-                "n_docs": int(r["n_docs"]),
-                "n_dl_docs": int(r.get("n_dl_docs", r["n_docs"])),
-                "total_dl": int(r["total_dl"]),
-            }
-
         write_set = sorted({int(r["_b"]) for r in fresh_rows})
-        by_bucket = {b: [up(r) for r in base_by_bucket[b]] for b in write_set}
+        by_bucket = {b: list(base_by_bucket[b]) for b in write_set}
         for r in fresh_rows:
             by_bucket[int(r["_b"])].append(
                 {
@@ -309,21 +240,14 @@ class PersistedPostingsIndex:
             planned_versions=dict(manifest["buckets"]),
         )
 
-    def unregister(
-        self, doc_ids: DataFrame, batch_id: str, _keep_batch_id: str | None = None
-    ) -> None:
-        """Remove documents from the index: forward-index bucket-pruned
-        (O(batch) probes, never a postings scan), with a NEGATIVE stats
-        delta row so query-time N/avgdl net out. Idempotent per
-        ``batch_id``; crash anywhere replays to the same state, because
-        the stats delta is derived from the forward rows and committed
-        BEFORE they (or the postings rows) are deleted — a replay still
-        sees enough to recompute, and the anti-probe skips the dupe.
-        ``_keep_batch_id`` (``apply_changes``): forward rows registered
-        under that id survive, making unregister-then-register replays of
-        an UPDATE stable (the new version's rows are never torn down).
-        Raises on indexes built before the forward table existed —
-        rebuild to enable deletes.
+    def unregister(self, doc_ids: DataFrame, batch_id: str) -> None:
+        """Remove documents from the index: a delete-only window,
+        forward-index bucket-pruned (O(batch) probes, never a postings
+        scan), with a NEGATIVE stats delta row so query-time N/avgdl net
+        out. Idempotent per ``batch_id``; a crash anywhere replays to the
+        same state (``_apply_window_once`` has the replay matrix). Raises
+        on indexes built before the forward table existed — rebuild to
+        enable deletes.
 
         Scale note: a doc's postings spread across its DISTINCT TERMS'
         buckets, so a delete's write set fans out wider than any other
@@ -335,125 +259,27 @@ class PersistedPostingsIndex:
         once), so batch deletes through the change feed rather than
         issuing them one document at a time; the eager rewrite is what
         keeps ``topk`` free of any tombstone filtering."""
-        from stripe_sync_engine_spark.operators.incremental_dedup import FoldLedger
-
-        FoldLedger(self.store, self.stats_table).check_replayable(batch_id)
-        with_occ_retry(lambda: self._unregister_once(doc_ids, batch_id, _keep_batch_id))
-
-    def _unregister_once(
-        self, doc_ids: DataFrame, batch_id: str, keep_batch_id: str | None
-    ) -> None:
-        store = self.store
-        ids = (
-            doc_ids.select(F.col(self.id_col).alias("doc_id"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        if ids.isEmpty():
-            # Nothing to delete. Checked BEFORE the forward-table probe:
-            # apply_changes' first poll on a brand-new store is a birth
-            # window of pure inserts — no tables exist yet, and raising
-            # "predates delete support" here would wedge the documented
-            # CDC path at its very first batch.
-            return
-        if not store.exists(self.forward_table):
-            if not store.exists(self.table):
-                return  # brand-new index: nothing is registered at all
-            raise RuntimeError(
-                f"postings index {self.table!r} has no forward table "
-                f"({self.forward_table!r}) — it predates delete support; "
-                "rebuild the index to enable unregister/apply_changes"
-            )
-        fm = store._read_manifest(self.forward_table)
-        fwd_touched = store.buckets_of(ids, key="doc_id", table=self.forward_table)
-        fwd_known = store._scan_manifest(self.forward_table, fm, fwd_touched)
-        targets = fwd_known.join(F.broadcast(ids), "doc_id", "left_semi")
-        if keep_batch_id is not None:
-            targets = targets.where(F.col("batch_id") != keep_batch_id)
-        targets = targets.localCheckpoint(eager=True)
-        if targets.isEmpty():
-            # nothing of these docs is registered (insert-only window, or
-            # a replay past completion): writing a (0,0,0) stats row would
-            # only grow the stats table and burn the batch id in the fold
-            # ledger. Skipping is replay-safe — a real first delivery's
-            # non-empty delta is anti-probed on batch_id anyway.
-            return
-        # 1. stats delta FIRST, derived from the forward rows alone (dl
-        # rides on them) — replays recompute it while they still exist,
-        # and the batch_id anti-probe keeps the first value afterwards.
-        per_doc = targets.groupBy("doc_id").agg(F.max("dl").alias("dl"))
-        dec = per_doc.agg(
-            (-F.count(F.lit(1))).cast("long").alias("n_docs"),
-            (-F.count("dl")).cast("long").alias("n_dl_docs"),
-            (-F.coalesce(F.sum("dl"), F.lit(0))).cast("long").alias("total_dl"),
-        ).select(F.lit(batch_id).alias("batch_id"), "n_docs", "n_dl_docs", "total_dl")
-        self._commit_stats(dec)
-        # 2. delete the postings rows for the targets' (term_h, doc_id)
-        # pairs — write set bounded by the docs' own term buckets.
-        pairs = (
-            targets.where(F.col("term_h").isNotNull())
-            .select("term_h", "doc_id")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        pm = store._read_manifest(self.table)
-        write_set = store.buckets_of(pairs, key="term_h", table=self.table)
-        if write_set:
-            # uncheckpointed: the write consumes this lineage exactly
-            # once (see delete_matching_rows) — materializing the kept
-            # postings first would double-scan the table's biggest frame
-            base = store._scan_manifest(self.table, pm, write_set)
-            keep = base.join(F.broadcast(pairs), ["term_h", "doc_id"], "left_anti")
-            store.write_buckets(
-                self.table,
-                keep,
-                write_set,
-                key="term_h",
-                planned_versions=dict(pm["buckets"]),
-            )
-        # 3. forward rows LAST (they are the replay's memory);
-        # uncheckpointed like the postings rewrite above.
-        if fwd_touched:
-            fwd_keep = fwd_known.join(F.broadcast(ids), "doc_id", "left_anti")
-            if keep_batch_id is not None:
-                fwd_keep = fwd_keep.unionByName(
-                    fwd_known.where(F.col("batch_id") == keep_batch_id).join(
-                        F.broadcast(ids), "doc_id", "left_semi"
-                    )
-                )
-            store.write_buckets(
-                self.forward_table,
-                fwd_keep,
-                fwd_touched,
-                key="doc_id",
-                planned_versions=dict(fm["buckets"]),
-            )
+        no_docs = doc_ids.select(
+            self.id_col, F.lit(None).cast("string").alias(self.text_col)
+        ).where(F.lit(False))
+        self._apply(doc_ids, no_docs, batch_id, None)
 
     def apply_changes(self, feed: DataFrame, batch_id: str) -> None:
         """Maintain the index from one corpus change-feed window
         (``engine.changes`` / ``consume_changes`` output: table columns +
-        ``_change_type``): deletes and updates unregister the old
-        postings (forward-index pruned), inserts and updates register the
-        post-images — the CDC-driven steady state where the retrieval
-        index tracks a mutating corpus without ever rescanning it.
-        Idempotent per ``batch_id`` (sub-batches via ``sub_batch_id`` —
-        epoch-convention window ids stay epoch-convention in the fold
-        ledger, so a long-lived CDC consumer's ledger stays O(consumers),
-        not O(windows)): a replay of a completed window tears nothing
-        down (the update's new rows are registered under the kept ins
-        id) and a crash at any point heals.
+        ``_change_type``): deletes and updates remove the old postings
+        (forward-index pruned), inserts and updates add the post-images
+        — the CDC-driven steady state where the retrieval index tracks a
+        mutating corpus without ever rescanning it. The delete half
+        commits under ``<batch_id>:del`` and the insert half under
+        ``<batch_id>:ins`` (``sub_batch_id`` — epoch-convention window
+        ids stay epoch-convention in the fold ledger, so a long-lived CDC
+        consumer's ledger stays O(consumers), not O(windows)). Idempotent
+        per ``batch_id``: a replay of a completed window tears nothing
+        down (the update's new rows carry the ins id) and a crash at any
+        point heals — the first window on an empty store included.
         ``update_preimage`` rows (a pre-image feed) are ignored here —
-        postings deletes are id-keyed via the forward table.
-
-        Steady state (all three tables exist) commits ONE merged
-        delete+insert version per table — stats, postings, forward — in
-        that order, instead of the six sequential unregister-then-
-        register commits (r15, guide §6: the window's cost was dominated
-        by per-commit overhead, not compute; see ``_apply_window_once``
-        for the replay matrix). Birth and legacy-upgrade windows (a
-        missing postings/forward table) keep the sequential protocol,
-        which owns table creation and the predates-delete-support
-        diagnostics."""
+        postings deletes are id-keyed via the forward table."""
         from stripe_sync_engine_spark.operators.incremental_dedup import (
             ensure_local_checkpoint,
             sub_batch_id,
@@ -466,50 +292,68 @@ class PersistedPostingsIndex:
         new_docs = changed.where(
             F.col("_change_type").isin("insert", "update")
         ).drop("_change_type")
-        del_id = sub_batch_id(batch_id, "del")
-        ins_id = sub_batch_id(batch_id, "ins")
-        if not (
-            self.store.exists(self.table)
-            and self.store.exists(self.forward_table)
-            and self.store.exists(self.stats_table)
-        ):
-            self.unregister(old_ids, del_id, _keep_batch_id=ins_id)
-            self.register(new_docs, ins_id)
-            return
+        self._apply(
+            old_ids, new_docs, sub_batch_id(batch_id, "del"), sub_batch_id(batch_id, "ins")
+        )
+
+    def _apply(
+        self,
+        old_ids: DataFrame,
+        new_docs: DataFrame,
+        del_id: str | None,
+        ins_id: str | None,
+    ) -> None:
         ledger = FoldLedger(self.store, self.stats_table)
-        ledger.check_replayable(del_id)
-        ledger.check_replayable(ins_id)
+        for b in (del_id, ins_id):
+            if b is not None:
+                ledger.check_replayable(b)
         with_occ_retry(
             lambda: self._apply_window_once(old_ids, new_docs, del_id, ins_id)
         )
 
     def _apply_window_once(
-        self, old_ids: DataFrame, new_docs: DataFrame, del_id: str, ins_id: str
+        self,
+        old_ids: DataFrame,
+        new_docs: DataFrame,
+        del_id: str | None,
+        ins_id: str | None,
     ) -> None:
-        """One CDC window as ONE merged delete+insert commit per table —
-        stats (dec+inc rows together), postings, forward, in that order.
-        Equivalent by construction to unregister-then-register: every
-        freshness probe runs against the table VIEW AFTER the window's
-        deletes (``known ∖ pairs``), so an update that keeps a term still
-        lands its new (tf, dl) row exactly as it does when the delete
-        commits first.
+        """The index's ONE write protocol: ``register`` is an insert-only
+        window, ``unregister`` a delete-only one, ``apply_changes`` both.
+        One merged delete+insert commit per table — stats (dec+inc rows
+        together), postings, forward, in that order; the forward rows are
+        the replay's memory, so they go LAST. Every freshness probe runs
+        against the table VIEW AFTER the window's deletes
+        (``known ∖ pairs``), so an update that keeps a term still lands
+        its new (tf, dl) row exactly as it would if the delete committed
+        first.
+
+        Birth is a window against empty state: a missing table reads as
+        empty and is created by a full ``store.write`` at its place in
+        the commit order; a birth with no documents to add creates
+        nothing. A postings table WITHOUT its forward table is
+        the replay of a birth that crashed between the two when every
+        postings row belongs to this window (``check_birth_replay``);
+        otherwise the index predates the forward table and the window
+        raises rather than leave deletes unprunable.
 
         Replay matrix (crash after any prefix of the three commits, then
         re-apply): [none] full redo. [stats] dec recomputed from the
         still-present forward rows and skipped by the batch_id
-        anti-probe; inc likewise; postings/forward proceed. [stats,
-        postings] targets still non-empty (forward rows are the replay's
-        memory, deleted LAST), so the postings rewrite re-lands
-        byte-identically (delete hits nothing, freshness re-admits
-        nothing — the merged write degrades to a no-op rewrite of the
-        touched buckets); forward proceeds. [all three] targets is empty
-        (old rows gone, the update's rows carry the kept ins id), every
-        freshness probe is empty, and both merged writes degrade to
-        no-op rewrites of the window's touched buckets (r16: write sets
-        are the probed buckets, not re-probed from materialized
-        survivors — the replay's wasted IO is bounded by the window's
-        own bucket fan-out). A crash between the ledger check and any
-        commit is a plain retry.
+        anti-probe; inc likewise; postings/forward proceed (at birth:
+        are created). [stats, postings] targets still non-empty (forward
+        rows are the replay's memory, deleted LAST), so the postings
+        rewrite re-lands byte-identically (delete hits nothing,
+        freshness re-admits nothing — the merged write degrades to a
+        no-op rewrite of the touched buckets); forward proceeds (at
+        birth: the birth-replay check passes and forward is created).
+        [all three] targets is empty (old rows gone, the update's rows
+        carry the kept ins id), every freshness probe is empty, and both
+        merged writes degrade to no-op rewrites of the window's touched
+        buckets (r16: write sets are the probed buckets, not re-probed
+        from materialized survivors — the replay's wasted IO is bounded
+        by the window's own bucket fan-out). A crash between the ledger
+        check and any commit is a plain retry.
 
         Job shape (r16, guide §1.2/§2.6 — the window's cost is fixed
         per-job latency, not compute; r16 traced 58 jobs per bench
@@ -525,9 +369,11 @@ class PersistedPostingsIndex:
         (tokenized-rows materialization ∥ forward bucket probe; stats
         collect+driver-commit ∥ postings bucket probe)."""
         store = self.store
-        # ONE eager tokenization feeds all three new-side derivations,
-        # exactly as in _register_once; the delete-id set shares no
-        # lineage with it, so the two materialize concurrently.
+        # ONE eager tokenization feeds all three new-side derivations
+        # (postings rows, forward rows, stats increment), so the batch's
+        # possibly expensive upstream lineage executes once; the delete-id
+        # set shares no lineage with it, so the two materialize
+        # concurrently.
         base, ids = checkpoint_parallel(
             self._tokenized(new_docs),
             old_ids.select(F.col(self.id_col).alias("doc_id")).distinct(),
@@ -540,31 +386,49 @@ class PersistedPostingsIndex:
         # overlaps the postings-rows materialization.
         rows, fwd_probe = run_parallel(
             lambda: self._rows(base, ins_id).localCheckpoint(eager=True),
-            lambda: store.buckets_of(
+            lambda: []
+            if fm is None
+            else store.buckets_of(
                 ids.unionByName(base.select("doc_id")),
                 key="doc_id",
                 table=self.forward_table,
             ),
         )
-        fwd_known = store._scan_manifest(self.forward_table, fm, fwd_probe)
-        targets = (
-            fwd_known.join(F.broadcast(ids), "doc_id", "left_semi")
-            .where(F.col("batch_id") != ins_id)
-            .localCheckpoint(eager=True)
-        )
+        # the new forward rows derive lazily from the checkpointed
+        # tokenization (the forward write is their only consumer)
+        fwd = self._forward_rows(base, ins_id)
+        if fm is None:
+            if pm is None and base.isEmpty():
+                return  # birth with nothing to add: create no tables
+            if pm is not None:
+                check_birth_replay(
+                    store, self.table, self.forward_table, rows, ["term_h", "doc_id"],
+                    "rebuild the index into fresh tables to enable deletes",
+                )
+            fwd_known = fwd.where(F.lit(False))
+        else:
+            fwd_known = store._scan_manifest(self.forward_table, fm, fwd_probe)
+        targets = window_delete_targets(fwd_known, ids, "doc_id", ins_id)
         has_del = not targets.isEmpty()
         # --- 1. stats: dec (from the forward rows, which outlive this
-        # commit) + inc (from the batch itself) in ONE anti-probed
-        # commit. Same skip rule as _unregister_once: no zero :del row.
-        # The stats job and the postings bucket probe are both read-only,
-        # so they overlap; the COMMIT order stays stats → postings →
-        # forward (the stats commit itself is driver-side and completes
-        # before either table rewrite starts).
+        # commit) + inc (from the batch itself, so a replay of a partially
+        # committed window records the SAME totals) in ONE anti-probed
+        # commit; NULL-text docs count in n_docs but not n_dl_docs/
+        # total_dl — exactly how the one-shot scan's count(*)/avg(dl)
+        # treat them. The stats job and the postings bucket probe are
+        # both read-only, so they overlap; the COMMIT order stays stats →
+        # postings → forward (the stats commit itself completes before
+        # either table rewrite commits).
         inc = base.agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.count("dl").cast("long").alias("n_dl_docs"),
             F.coalesce(F.sum("dl"), F.lit(0).cast("long")).alias("total_dl"),
-        ).select(F.lit(ins_id).alias("batch_id"), "n_docs", "n_dl_docs", "total_dl")
+        ).select(
+            F.lit(ins_id).cast("string").alias("batch_id"),
+            "n_docs",
+            "n_dl_docs",
+            "total_dl",
+        )
         pairs = None
         if has_del:
             per_doc = targets.groupBy("doc_id").agg(F.max("dl").alias("dl"))
@@ -596,15 +460,17 @@ class PersistedPostingsIndex:
         # contents into a PRIVATE version dir. The two Spark write jobs
         # (plus their footer harvests) run CONCURRENTLY with each other
         # and with the stats commit (prepare_buckets — version dirs are
-        # unreferenced until committed, guide §2.6); the COMMITS stay
-        # strictly sequential, stats → postings → forward, so the replay
-        # matrix is unchanged. Rewrite lineages stay uncheckpointed: each
-        # write consumes its lineage exactly once while the old version
-        # files still exist (delete_matching_rows has the rationale).
-        # NULL-term sentinels never reach the postings table; on the
-        # forward side they probe via the reserved-long coalesce
-        # (_register_once has the collision note).
+        # unreferenced until committed, guide §2.6); each prep returns
+        # its table's commit, and the COMMITS stay strictly sequential,
+        # stats → postings → forward. A table the window creates commits
+        # by a full store.write in the same slot. Rewrite lineages stay
+        # uncheckpointed: each write consumes its lineage exactly once
+        # while the old version files still exist (delete_matching_rows
+        # has the rationale). NULL-term sentinels never reach the
+        # postings table.
         def prep_postings():
+            if pm is None:
+                return lambda: store.write(self.table, rows, key="term_h")
             write_set = store.buckets_of(probe_keys, key="term_h", table=self.table)
             if not write_set:
                 return None
@@ -615,42 +481,42 @@ class PersistedPostingsIndex:
                 else base_w.join(F.broadcast(pairs), ["term_h", "doc_id"], "left_anti")
             )
             fresh = anti_probe(rows, keep, ["term_h", "doc_id"])
-            return store.prepare_buckets(
+            prep = store.prepare_buckets(
                 self.table, keep.unionByName(fresh), write_set, key="term_h"
             )
+            return lambda: store.commit_prepared(prep, planned_versions=dict(pm["buckets"]))
 
         def prep_forward():
+            if fm is None:
+                return lambda: store.write(self.forward_table, fwd, key="doc_id")
             if not fwd_probe:
                 return None
+            # NULL-safe probe key: the sentinel rows carry term_h NULL,
+            # which equality joins never match — a replay would duplicate
+            # them. Coalesce to a reserved long (an xxhash64 collision
+            # with a real term is a 2^-64 event whose only consequence is
+            # one skipped forward row).
             th = F.coalesce(F.col("term_h"), F.lit(-(1 << 62)).cast("long"))
-            base_w = store._scan_manifest(self.forward_table, fm, fwd_probe)
-            if has_del:
-                keep = base_w.join(F.broadcast(ids), "doc_id", "left_anti").unionByName(
-                    base_w.where(F.col("batch_id") == ins_id).join(
-                        F.broadcast(ids), "doc_id", "left_semi"
-                    )
-                )
-            else:
-                keep = base_w
-            # the new forward rows derive lazily from the checkpointed
-            # tokenization (this is their only consumer)
-            fwd = self._forward_rows(base, ins_id)
+            keep = window_forward_keep(
+                store._scan_manifest(self.forward_table, fm, fwd_probe),
+                ids, "doc_id", ins_id, has_del,
+            )
             fresh_fwd = anti_probe(
                 fwd.withColumn("_th", th),
                 keep.withColumn("_th", th),
                 ["doc_id", "_th"],
             ).drop("_th")
-            return store.prepare_buckets(
+            prep = store.prepare_buckets(
                 self.forward_table, keep.unionByName(fresh_fwd), fwd_probe, key="doc_id"
             )
+            return lambda: store.commit_prepared(prep, planned_versions=dict(fm["buckets"]))
 
-        _, prep_p, prep_f = run_parallel(
+        _, commit_p, commit_f = run_parallel(
             lambda: self._commit_stats(inc), prep_postings, prep_forward
         )
-        if prep_p is not None:
-            store.commit_prepared(prep_p, planned_versions=dict(pm["buckets"]))
-        if prep_f is not None:
-            store.commit_prepared(prep_f, planned_versions=dict(fm["buckets"]))
+        for commit in (commit_p, commit_f):
+            if commit is not None:
+                commit()
 
     def topk(self, query_terms: list[str], k: int = 20) -> DataFrame:
         """``(doc_id, score)`` — BM25 top-k from the index: reads ONLY
@@ -696,7 +562,7 @@ class PersistedPostingsIndex:
             for r in rs
         ]
         n_docs = sum(int(r["n_docs"]) for r in srows)
-        n_dl = sum(int(r.get("n_dl_docs", r["n_docs"])) for r in srows)
+        n_dl = sum(int(r["n_dl_docs"]) for r in srows)
         total_dl = sum(int(r["total_dl"]) for r in srows)
         # same IEEE double division the Spark agg performed; an all-empty
         # corpus (n_dl == 0) has no postings rows, so avgdl is never read

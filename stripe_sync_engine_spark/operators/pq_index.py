@@ -530,19 +530,19 @@ class PersistedIVFPQ:
 
     MUTATING-CORPUS maintenance (the postings-index pattern,
     ``operators/postings.py``): a FORWARD table (vec_id → cell, batch_id)
-    BUCKETED BY VEC_ID makes delete/update bucket-pruned —
-    ``unregister`` probes only the ids' own forward buckets, never the
-    codes table at large, and ``apply_changes`` consumes a corpus
-    change-feed window directly. A vector's identity is its vec_id: a
-    re-register whose embedding CHANGED fails loudly (cell moved → the
-    forward probe sees it; cell kept but code moved → the codes-bucket
-    probe sees it) instead of silently appending-or-skipping, and the
-    sanctioned update path is ``apply_changes`` / unregister-then-
-    register. Indexes persisted before the forward table existed must be
-    rebuilt to enable deletes (unregister raises; register starts
-    recording forward rows for everything it adds, and keeps the
-    fails-loudly guarantee meanwhile via a one-time full-codes-scan
-    moved-cell probe — no silent append even on the upgrade path)."""
+    BUCKETED BY VEC_ID makes delete/update bucket-pruned — a delete
+    probes only the ids' own forward buckets, never the codes table at
+    large. Every write is ONE window routine (``_apply_window_once``):
+    ``register`` is an insert-only window, ``unregister`` a delete-only
+    window, ``apply_changes`` consumes a corpus change-feed window with
+    both halves, and the index's birth is a window against empty state.
+    A vector's identity is its vec_id: an insert whose embedding CHANGED
+    without its delete half in the same window fails loudly (cell moved
+    → the forward probe sees it; cell kept but code moved → the
+    codes-bucket probe sees it) instead of silently appending-or-
+    skipping. An index whose forward table is missing while its codes
+    hold rows outside the window (persisted before the forward table
+    existed) raises naming ``rebuild()``, which rewrites both tables."""
 
     def __init__(
         self,
@@ -561,16 +561,15 @@ class PersistedIVFPQ:
         self.forward_table = forward_table
 
     def register(self, vecs: DataFrame, batch_id: str = "_adhoc") -> None:
-        """Durably add the batch's codes + forward rows. Idempotent per
-        vec_id for byte-identical vectors (deterministic encode → replays
-        anti-probe into no-ops; a crash between the codes and forward
-        commits heals on replay). A vec_id whose embedding CHANGED raises
-        instead of corrupting the index — route updates through
-        ``apply_changes``/``unregister``. ``batch_id`` stamps the forward
-        rows so ``apply_changes`` replays keep an update's new version
-        (``_keep_batch_id`` in ``unregister``).
+        """Durably add the batch's codes + forward rows: an insert-only
+        window (``_apply_window_once``). Idempotent per vec_id for
+        byte-identical vectors (deterministic encode → replays anti-probe
+        into no-ops; a crash between the codes and forward commits heals
+        on replay). A vec_id whose embedding CHANGED raises instead of
+        corrupting the index — route updates through ``apply_changes``/
+        ``unregister``. ``batch_id`` stamps the forward rows.
 
-        The register that CREATES the index also PINS the codebook's
+        The window that CREATES the index also PINS the codebook's
         baseline quantization error (``pin_codebook_baseline``) — the
         creation batch is the training-era distribution, the reference
         point ``measure_codebook_drift`` compares against forever after.
@@ -579,30 +578,9 @@ class PersistedIVFPQ:
         from whatever later window happens to arrive first would anchor
         the baseline at possibly-already-drifted error and mask exactly
         the decay the metric exists to catch. The codebook side file
-        (``load``) does backfill on any register: it is the carried
-        object itself, identical whichever window writes it."""
-        from stripe_sync_engine_spark.operators.incremental_dedup import (
-            with_occ_retry,
-        )
-
-        import os
-
-        if not self.store.exists(self.table) and not os.path.exists(
-            self._baseline_path()
-        ):
-            # Pin BEFORE the creating write (the packer's pin-before-write
-            # discipline): a crash between the codes commit and a
-            # post-commit pin would replay with the table existing, the
-            # creation branch unreachable, and the drift watchdog
-            # permanently disarmed. Pinning first is crash-convergent —
-            # a crash right after the pin replays into an existing-file
-            # no-op here and the registration completing below.
-            self.pin_codebook_baseline(vecs)
-        with_occ_retry(lambda: self._register_once(vecs, batch_id))
-        if self.store.exists(self.table) and not os.path.exists(
-            self._codebook_path()
-        ):
-            self._save_codebook()
+        (``load``) does backfill on any window: it is the carried object
+        itself, identical whichever window writes it."""
+        self._apply(vecs.select(self.id_col).where(F.lit(False)), vecs, batch_id)
 
     @classmethod
     def load(
@@ -782,218 +760,34 @@ class PersistedIVFPQ:
             "rebuild_recommended": ratio > rebuild_ratio,
         }
 
-    def _register_once(self, vecs: DataFrame, batch_id: str) -> None:
-        from stripe_sync_engine_spark.operators.incremental_dedup import (
-            anti_probe,
-            commit_fresh,
-        )
-
-        store, table = self.store, self.table
-        rows = encode_ivf_pq(vecs, self.index, self.id_col, self.vec_col).localCheckpoint(
-            eager=True
-        )
-        if rows.isEmpty():
-            return  # delete-only window: nothing to add, create no tables
-        # Embedding-change detection, both halves bucket-pruned:
-        # 1. cell MOVED — the new cell's buckets no longer hold the old
-        #    row, so probe the forward table (vec_id buckets); when the
-        #    forward table is absent but codes exist (a pre-forward-table
-        #    index being upgraded, or the crash window between a first
-        #    register's codes and forward commits), probe the WHOLE codes
-        #    table instead — the fails-loudly contract must hold on the
-        #    upgrade path too, and the forward BACKFILL below makes this
-        #    full scan a one-time cost, never a steady state.
-        fwd_manifest = None
-        fwd_known = None
-        if store.exists(self.forward_table):
-            fwd_manifest = store._read_manifest(self.forward_table)
-            fwd_touched = store.buckets_of(
-                rows, key="vec_id", table=self.forward_table
-            )
-            fwd_known = store._scan_manifest(
-                self.forward_table, fwd_manifest, fwd_touched
-            )
-            probe_base = fwd_known
-        elif store.exists(table):
-            probe_base = store.read(table)
-        else:
-            probe_base = None
-        if probe_base is not None:
-            moved = probe_base.join(
-                F.broadcast(rows.select("vec_id", F.col("cell").alias("_new_cell"))),
-                "vec_id",
-            ).where(F.col("cell") != F.col("_new_cell"))
-            if not moved.isEmpty():
-                some = [r["vec_id"] for r in moved.select("vec_id").limit(5).collect()]
-                raise RuntimeError(
-                    f"vec_ids {some} are registered in a DIFFERENT cell — their "
-                    "embeddings changed since registration. Re-registering would "
-                    "leave the stale code queryable; apply the change via "
-                    "apply_changes (or unregister first)."
-                )
-        if not store.exists(table):
-            store.write(table, rows, key="cell")
-        else:
-            manifest = store._read_manifest(table)
-            touched = store.buckets_of(rows, key="cell", table=table)
-            known = store._scan_manifest(table, manifest, touched)
-            # 2. cell KEPT but code moved — the old row IS in the batch's
-            #    cell buckets; the vec_id anti-probe would silently skip
-            #    the new code. Compare codes and fail loudly instead.
-            mutated = known.join(
-                F.broadcast(rows.select("vec_id", F.col("codes").alias("_new_codes"))),
-                "vec_id",
-            ).where(F.col("codes") != F.col("_new_codes"))
-            if not mutated.isEmpty():
-                some = [r["vec_id"] for r in mutated.select("vec_id").limit(5).collect()]
-                raise RuntimeError(
-                    f"vec_ids {some} are registered with DIFFERENT codes — their "
-                    "embeddings changed since registration. Route the update "
-                    "through apply_changes (or unregister first)."
-                )
-            fresh = anti_probe(rows, known, ["vec_id"]).localCheckpoint(eager=True)
-            if not fresh.isEmpty():
-                commit_fresh(store, table, fresh, "cell", manifest)
-        # Forward rows LAST (they are unregister's memory — a crash
-        # between the codes and forward commits replays into codes
-        # no-ops and a forward heal).
-        fwd_rows = rows.select(
-            "vec_id", "cell", F.lit(batch_id).alias("batch_id")
-        ).localCheckpoint(eager=True)
-        if fwd_manifest is None:
-            # Creating the forward table: BACKFILL it from the FULL codes
-            # table (post-commit read — includes this batch), not just
-            # this batch's rows. A partial forward table would silently
-            # re-open the moved-cell hole one register later (the forward
-            # probe finds nothing for legacy vec_ids and the full-scan
-            # fallback above no longer fires once the table exists). The
-            # full scan is the one-time upgrade price; on a genuinely
-            # fresh index the codes table IS this batch and the backfill
-            # anti-join is empty.
-            backfill = (
-                store.read(table)
-                .select("vec_id", "cell")
-                .join(F.broadcast(rows.select("vec_id")), "vec_id", "left_anti")
-                .select("vec_id", "cell", F.lit("_backfill").alias("batch_id"))
-            )
-            store.write(
-                self.forward_table, backfill.unionByName(fwd_rows), key="vec_id"
-            )
-            return
-        fresh_fwd = anti_probe(fwd_rows, fwd_known, ["vec_id"]).localCheckpoint(
-            eager=True
-        )
-        if not fresh_fwd.isEmpty():
-            commit_fresh(
-                store, self.forward_table, fresh_fwd, "vec_id", fwd_manifest
-            )
-
-    def unregister(self, vec_ids: DataFrame, _keep_batch_id: str | None = None) -> None:
-        """Remove vectors from the index, forward-table bucket-pruned
-        (O(batch) probes, never a codes scan). Idempotent: a replay finds
-        no forward rows and no-ops; a crash between the codes delete and
-        the forward delete heals on replay (the forward rows are the
-        replay's memory, so they go LAST). ``_keep_batch_id``
-        (``apply_changes``): forward rows registered under that id
-        survive, making unregister-then-register replays of an UPDATE
-        stable. Raises on indexes built before the forward table existed
-        — rebuild to enable deletes."""
-        from stripe_sync_engine_spark.operators.incremental_dedup import (
-            with_occ_retry,
-        )
-
-        with_occ_retry(lambda: self._unregister_once(vec_ids, _keep_batch_id))
-
-    def _unregister_once(self, vec_ids: DataFrame, keep_batch_id: str | None) -> None:
-        store = self.store
-        ids = (
-            vec_ids.select(F.col(self.id_col).alias("vec_id"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        if ids.isEmpty():
-            # Checked BEFORE the forward-table probe: apply_changes' first
-            # poll on a brand-new store is a birth window of pure inserts.
-            return
-        if not store.exists(self.forward_table):
-            if not store.exists(self.table):
-                return  # brand-new index: nothing is registered at all
-            raise RuntimeError(
-                f"IVF-PQ index {self.table!r} has no forward table "
-                f"({self.forward_table!r}) — it predates delete support; "
-                "rebuild the index to enable unregister/apply_changes"
-            )
-        fm = store._read_manifest(self.forward_table)
-        fwd_touched = store.buckets_of(ids, key="vec_id", table=self.forward_table)
-        fwd_known = store._scan_manifest(self.forward_table, fm, fwd_touched)
-        targets = fwd_known.join(F.broadcast(ids), "vec_id", "left_semi")
-        if keep_batch_id is not None:
-            targets = targets.where(F.col("batch_id") != keep_batch_id)
-        targets = targets.localCheckpoint(eager=True)
-        if targets.isEmpty():
-            return
-        # 1. delete the codes rows — write set bounded by the targets'
-        # own cells. The (cell, vec_id) pair key never touches an
-        # update's NEW row: during the first delivery it does not exist
-        # yet (unregister precedes register), and on a replay the kept
-        # forward rows empty `targets` before this point.
-        pairs = targets.select("cell", "vec_id").distinct().localCheckpoint(eager=True)
-        pm = store._read_manifest(self.table)
-        write_set = store.buckets_of(pairs, key="cell", table=self.table)
-        if write_set:
-            # uncheckpointed: the write consumes this lineage exactly
-            # once (see incremental_dedup.delete_matching_rows)
-            base = store._scan_manifest(self.table, pm, write_set)
-            keep = base.join(F.broadcast(pairs), ["cell", "vec_id"], "left_anti")
-            store.write_buckets(
-                self.table,
-                keep,
-                write_set,
-                key="cell",
-                planned_versions=dict(pm["buckets"]),
-            )
-        # 2. forward rows LAST (the replay's memory); uncheckpointed too.
-        fwd_keep = fwd_known.join(F.broadcast(ids), "vec_id", "left_anti")
-        if keep_batch_id is not None:
-            fwd_keep = fwd_keep.unionByName(
-                fwd_known.where(F.col("batch_id") == keep_batch_id).join(
-                    F.broadcast(ids), "vec_id", "left_semi"
-                )
-            )
-        store.write_buckets(
-            self.forward_table,
-            fwd_keep,
-            fwd_touched,
-            key="vec_id",
-            planned_versions=dict(fm["buckets"]),
-        )
+    def unregister(self, vec_ids: DataFrame) -> None:
+        """Remove vectors from the index: a delete-only window,
+        forward-table bucket-pruned (O(batch) probes, never a codes
+        scan). Idempotent: a replay finds no forward rows and no-ops; a
+        crash between the codes delete and the forward delete heals on
+        replay (the forward rows are the replay's memory, so they go
+        LAST). Raises on indexes built before the forward table existed
+        — ``rebuild()`` to enable deletes."""
+        no_vecs = vec_ids.select(
+            self.id_col, F.lit(None).cast("array<double>").alias(self.vec_col)
+        ).where(F.lit(False))
+        self._apply(vec_ids, no_vecs, None)
 
     def apply_changes(self, feed: DataFrame, batch_id: str) -> None:
         """Maintain the index from one corpus change-feed window
         (``engine.changes`` / ``consume_changes`` output: id + embedding
-        columns plus ``_change_type``): deletes and updates unregister
-        the old code (forward-table pruned), inserts and updates register
-        the post-image embeddings — the CDC steady state where the vector
-        index tracks a mutating corpus without rescans or rebuilds.
-        Idempotent per ``batch_id``: a replay of a completed window tears
-        nothing down (the update's new rows are kept via the ``:ins``
-        sub-batch id) and a crash at any point heals.
-
-        Steady state (codes + forward tables exist) commits ONE merged
-        delete+insert version per table — codes, then forward — instead
-        of the four sequential unregister-then-register commits (r15,
-        guide §6: the window's cost was dominated by per-commit
-        overhead, not compute; ``_apply_window_once`` has the replay
-        matrix). Birth and legacy-upgrade windows (a missing codes or
-        forward table) keep the sequential protocol, which owns table
-        creation, the forward backfill, the codebook baseline pin, and
-        the predates-delete-support diagnostics."""
-        import os
-
+        columns plus ``_change_type``): deletes and updates remove the
+        old code (forward-table pruned), inserts and updates add the
+        post-image embeddings — the CDC steady state where the vector
+        index tracks a mutating corpus without rescans or rebuilds. The
+        insert half's forward rows carry ``<batch_id>:ins``
+        (``sub_batch_id``). Idempotent per ``batch_id``: a replay of a
+        completed window tears nothing down (the update's new rows are
+        kept via that id) and a crash at any point heals — the first
+        window on an empty store included."""
         from stripe_sync_engine_spark.operators.incremental_dedup import (
             ensure_local_checkpoint,
             sub_batch_id,
-            with_occ_retry,
         )
 
         changed = ensure_local_checkpoint(feed)
@@ -1003,34 +797,60 @@ class PersistedIVFPQ:
         new_vecs = changed.where(
             F.col("_change_type").isin("insert", "update")
         ).drop("_change_type")
-        ins_id = sub_batch_id(batch_id, "ins")
-        if not (self.store.exists(self.table) and self.store.exists(self.forward_table)):
-            self.unregister(old_ids, _keep_batch_id=ins_id)
-            self.register(new_vecs, ins_id)
-            return
+        self._apply(old_ids, new_vecs, sub_batch_id(batch_id, "ins"))
+
+    def _apply(self, old_ids: DataFrame, new_vecs: DataFrame, ins_id: str | None) -> None:
+        import os
+
+        from stripe_sync_engine_spark.operators.incremental_dedup import (
+            with_occ_retry,
+        )
+
+        if not self.store.exists(self.table) and not os.path.exists(
+            self._baseline_path()
+        ):
+            # Pin BEFORE the creating write (the packer's pin-before-write
+            # discipline): a crash between the codes commit and a
+            # post-commit pin would replay with the table existing, the
+            # creation branch unreachable, and the drift watchdog
+            # permanently disarmed. Pinning first is crash-convergent —
+            # a crash right after the pin replays into an existing-file
+            # no-op here and the window completing below.
+            self.pin_codebook_baseline(new_vecs)
         with_occ_retry(lambda: self._apply_window_once(old_ids, new_vecs, ins_id))
-        # register()'s codebook side-file backfill contract holds on the
-        # merged path too: an index persisted before codebook persistence
-        # existed gets the file on its next maintenance window.
-        if not os.path.exists(self._codebook_path()):
+        if self.store.exists(self.table) and not os.path.exists(
+            self._codebook_path()
+        ):
             self._save_codebook()
 
     def _apply_window_once(
-        self, old_ids: DataFrame, new_vecs: DataFrame, ins_id: str
+        self, old_ids: DataFrame, new_vecs: DataFrame, ins_id: str | None
     ) -> None:
-        """One CDC window as ONE merged delete+insert commit per table —
-        codes, then forward (the replay's memory, LAST). Equivalent by
-        construction to unregister-then-register: every probe — the
-        moved-cell and mutated-code loud failures AND the freshness
-        anti-probes — runs against the table VIEW AFTER the window's
-        deletes, so an update's old row never trips the checks its own
-        delete half would have removed first.
+        """The index's ONE write protocol: ``register`` is an insert-only
+        window, ``unregister`` a delete-only one, ``apply_changes`` both.
+        One merged delete+insert commit per table — codes, then forward
+        (the replay's memory, LAST). Every probe — the moved-cell and
+        mutated-code loud failures AND the freshness anti-probes — runs
+        against the table VIEW AFTER the window's deletes, so an update's
+        old row never trips the checks its own delete half would have
+        removed first.
+
+        Birth is a window against empty state: a missing table reads as
+        empty and is created by a full ``store.write`` at its place in
+        the commit order; a birth with no vectors to add creates nothing
+        (an empty codes table would skip the drift pin of the first real
+        batch). A codes table WITHOUT its forward table is the replay of
+        a birth that crashed between the two when every codes row
+        belongs to this window (``check_birth_replay``); otherwise the
+        index predates the forward table and the window raises naming
+        ``rebuild()``.
 
         Replay matrix (crash after any prefix of the two commits, then
         re-apply): [none] full redo. [codes] forward rows untouched →
         same targets; the codes rewrite re-lands byte-identically (its
         deletes already applied, freshness re-admits nothing); forward
-        proceeds. [both] targets is empty (old forward rows gone, the
+        proceeds (at birth: the birth-replay check passes and forward is
+        created). [both] targets is empty (old forward rows gone, the
         update's rows carry the kept ins id), the checks compare equal
         cells/codes, both freshness probes are empty, and both merged
         writes degrade to no-op rewrites of the window's touched
@@ -1051,8 +871,11 @@ class PersistedIVFPQ:
         loud check runs concurrently with the codes bucket probe."""
         from stripe_sync_engine_spark.operators.incremental_dedup import (
             anti_probe,
+            check_birth_replay,
             checkpoint_parallel,
             run_parallel,
+            window_delete_targets,
+            window_forward_keep,
         )
 
         store, table = self.store, self.table
@@ -1070,31 +893,32 @@ class PersistedIVFPQ:
                 encode_ivf_pq(new_vecs, self.index, self.id_col, self.vec_col),
                 old_ids.select(F.col(self.id_col).alias("vec_id")).distinct(),
             ),
-            lambda: store.buckets_of(probe_ids, key="vec_id", table=self.forward_table),
+            lambda: []
+            if fm is None
+            else store.buckets_of(probe_ids, key="vec_id", table=self.forward_table),
         )
-        fwd_known = store._scan_manifest(self.forward_table, fm, fwd_probe)
-        targets = (
-            fwd_known.join(F.broadcast(ids), "vec_id", "left_semi")
-            .where(F.col("batch_id") != ins_id)
-            .localCheckpoint(eager=True)
+        fwd_rows = rows.select(
+            "vec_id", "cell", F.lit(ins_id).cast("string").alias("batch_id")
         )
-        has_del = not targets.isEmpty()
-        # Post-delete forward view: rows of deleted/updated vecs drop out,
-        # an update's kept :ins rows (crash replays) survive.
-        if has_del:
-            fwd_eff = fwd_known.join(F.broadcast(ids), "vec_id", "left_anti").unionByName(
-                fwd_known.where(F.col("batch_id") == ins_id).join(
-                    F.broadcast(ids), "vec_id", "left_semi"
+        if fm is None:
+            if pm is None and rows.isEmpty():
+                return  # birth with nothing to add: create no tables
+            if pm is not None:
+                check_birth_replay(
+                    store, table, self.forward_table, rows, ["cell", "vec_id"],
+                    "rebuild() the index to enable deletes",
                 )
-            )
+            fwd_known = fwd_rows.where(F.lit(False))
         else:
-            fwd_eff = fwd_known
-        # Moved-cell loud failure, against the post-delete view (an
-        # embedding change routed through THIS window's delete half is
+            fwd_known = store._scan_manifest(self.forward_table, fm, fwd_probe)
+        targets = window_delete_targets(fwd_known, ids, "vec_id", ins_id)
+        has_del = not targets.isEmpty()
+        # Moved-cell loud failure, against the post-delete forward view
+        # (an embedding change routed through THIS window's delete half is
         # legitimate; one smuggled in as a plain insert is not). The
         # check and the codes bucket probe are both read-only, so they
         # overlap; the failure still precedes every commit.
-        moved = fwd_eff.join(
+        moved = window_forward_keep(fwd_known, ids, "vec_id", ins_id, has_del).join(
             F.broadcast(rows.select("vec_id", F.col("cell").alias("_new_cell"))),
             "vec_id",
         ).where(F.col("cell") != F.col("_new_cell"))
@@ -1110,7 +934,9 @@ class PersistedIVFPQ:
         )
         moved_empty, write_set = run_parallel(
             moved.isEmpty,
-            lambda: store.buckets_of(probe_keys, key="cell", table=table),
+            lambda: []
+            if pm is None
+            else store.buckets_of(probe_keys, key="cell", table=table),
         )
         if not moved_empty:
             some = [r["vec_id"] for r in moved.select("vec_id").limit(5).collect()]
@@ -1128,12 +954,15 @@ class PersistedIVFPQ:
         # post-delete view first and still precedes every commit. The two
         # Spark write jobs (plus footer harvests) run CONCURRENTLY
         # (prepare_buckets — version dirs are unreferenced until
-        # committed, guide §2.6); the COMMITS stay strictly sequential,
-        # codes then forward, so the replay matrix is unchanged. Rewrite
-        # lineages stay uncheckpointed: each write consumes its lineage
-        # exactly once while the old version files still exist
-        # (delete_matching_rows has the rationale).
+        # committed, guide §2.6); each prep returns its table's commit,
+        # and the COMMITS stay strictly sequential, codes then forward. A
+        # table the window creates commits by a full store.write in the
+        # same slot. Rewrite lineages stay uncheckpointed: each write
+        # consumes its lineage exactly once while the old version files
+        # still exist (delete_matching_rows has the rationale).
         def prep_codes():
+            if pm is None:
+                return lambda: store.write(table, rows, key="cell")
             if not write_set:
                 return None
             base_w = store._scan_manifest(table, pm, write_set)
@@ -1154,33 +983,29 @@ class PersistedIVFPQ:
                     "through this window's delete half (or unregister first)."
                 )
             fresh = anti_probe(rows, keep, ["vec_id"])
-            return store.prepare_buckets(
+            prep = store.prepare_buckets(
                 table, keep.unionByName(fresh), write_set, key="cell"
             )
+            return lambda: store.commit_prepared(prep, planned_versions=dict(pm["buckets"]))
 
         def prep_forward():
+            if fm is None:
+                return lambda: store.write(self.forward_table, fwd_rows, key="vec_id")
             if not fwd_probe:
                 return None
-            base_w = store._scan_manifest(self.forward_table, fm, fwd_probe)
-            if has_del:
-                keep = base_w.join(F.broadcast(ids), "vec_id", "left_anti").unionByName(
-                    base_w.where(F.col("batch_id") == ins_id).join(
-                        F.broadcast(ids), "vec_id", "left_semi"
-                    )
-                )
-            else:
-                keep = base_w
-            fwd_rows = rows.select("vec_id", "cell", F.lit(ins_id).alias("batch_id"))
+            keep = window_forward_keep(
+                store._scan_manifest(self.forward_table, fm, fwd_probe),
+                ids, "vec_id", ins_id, has_del,
+            )
             fresh_fwd = anti_probe(fwd_rows, keep, ["vec_id"])
-            return store.prepare_buckets(
+            prep = store.prepare_buckets(
                 self.forward_table, keep.unionByName(fresh_fwd), fwd_probe, key="vec_id"
             )
+            return lambda: store.commit_prepared(prep, planned_versions=dict(fm["buckets"]))
 
-        prep_c, prep_f = run_parallel(prep_codes, prep_forward)
-        if prep_c is not None:
-            store.commit_prepared(prep_c, planned_versions=dict(pm["buckets"]))
-        if prep_f is not None:
-            store.commit_prepared(prep_f, planned_versions=dict(fm["buckets"]))
+        for commit in run_parallel(prep_codes, prep_forward):
+            if commit is not None:
+                commit()
 
     def topk(
         self, queries: list[tuple[int, list[float]]], k: int = 10, nprobe: int = 4

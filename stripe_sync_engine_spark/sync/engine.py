@@ -1940,20 +1940,10 @@ class StripeSparkSync:
         # flock sidecars of vacuumed side files (commitio's RMW leaves
         # one .{base}.flock per side file — reclaim-safe sweep, see
         # reclaim_lock_sidecars for the unlink-race protocol)
-        from stripe_sync_engine_spark.commitio import (
-            count_legacy_lock_sidecars,
-            reclaim_lock_sidecars,
-        )
+        from stripe_sync_engine_spark.commitio import reclaim_lock_sidecars
 
         report["lock_sidecars_removed"] = len(
             reclaim_lock_sidecars(self.store.root)
-        )
-        # pre-r13 legacy sidecars: COUNT-ONLY (the default sweep never
-        # touches them) — a non-zero count means the one-time
-        # reclaim_lock_sidecars(root, migrate_legacy=True) flag-day
-        # pass is still pending for this warehouse (VERDICT r15 #4)
-        report["legacy_sidecars"] = count_legacy_lock_sidecars(
-            self.store.root
         )
         if fold_gates_past_horizon:
             # Folds no longer happen silently: each returns a fold-stats

@@ -208,8 +208,8 @@ def test_lock_sidecar_reclaim_removes_only_orphans(tmp_path):
     file are reclaimable — the sweep removes exactly the ones whose
     parent side file is gone (recursively), leaves the live ones (they
     ARE the lock), is idempotent, and never touches held sidecars or
-    the store's presence-style .commit.lock (different suffix by
-    design)."""
+    any .lock file — the store's presence-style .commit.lock and foreign
+    locks alike (different suffix by design)."""
     import fcntl
     import os
 
@@ -222,13 +222,17 @@ def test_lock_sidecar_reclaim_removes_only_orphans(tmp_path):
     live_lock = str(tmp_path / f".live.json{cio.LOCK_SIDECAR_SUFFIX}")
     assert os.path.exists(dead_lock) and os.path.exists(live_lock)
 
-    # a presence-style commit lock must be invisible to the sweep
+    # presence-style locks must be invisible to the sweep: the store's
+    # commit lock, and a foreign .lock whose .json parent is absent (the
+    # shape of an orphaned flock sidecar under the old suffix)
     (tmp_path / "tbl").mkdir()
     commit_lock = tmp_path / "tbl" / ".commit.lock"
     commit_lock.write_text("")
+    foreign_lock = tmp_path / "tbl" / ".x.json.lock"
+    foreign_lock.write_text("")
 
     assert cio.reclaim_lock_sidecars(str(tmp_path)) == [dead_lock]
-    assert os.path.exists(live_lock) and commit_lock.exists()
+    assert os.path.exists(live_lock) and commit_lock.exists() and foreign_lock.exists()
     assert not os.path.exists(dead_lock)
     assert cio.reclaim_lock_sidecars(str(tmp_path)) == []  # idempotent
 
@@ -241,105 +245,6 @@ def test_lock_sidecar_reclaim_removes_only_orphans(tmp_path):
         fcntl.flock(held, fcntl.LOCK_EX)
         assert cio.reclaim_lock_sidecars(str(tmp_path)) == []
     assert cio.reclaim_lock_sidecars(str(tmp_path)) == [gone_lock]
-
-
-def test_legacy_lock_sidecars_migrate(tmp_path):
-    """ADVICE r13 / VERDICT r14 #4: pre-r13 ``.{base}.lock`` sidecars
-    are removed ONLY by the explicit one-time ``migrate_legacy=True``
-    pass — the default sweep leaves them all alone (even orphans:
-    pre-upgrade writers have no inode re-verification, so unlinking
-    under them reintroduces the two-inodes race during a rollout). The
-    store's presence-style ``.commit.lock`` — which MATCHES the legacy
-    suffix pattern — is excluded by exact name in both modes."""
-    import fcntl
-    import os
-
-    # simulate a pre-upgrade warehouse: legacy sidecars beside a live
-    # and a vacuumed side file
-    live = tmp_path / "live.json"
-    live.write_text('{"n": 1}')
-    legacy_live = tmp_path / ".live.json.lock"
-    legacy_live.write_text("")
-    legacy_orphan = tmp_path / "sub"
-    legacy_orphan.mkdir()
-    legacy_dead = legacy_orphan / ".dead.json.lock"
-    legacy_dead.write_text("")
-    (tmp_path / "tbl").mkdir()
-    commit_lock = tmp_path / "tbl" / ".commit.lock"
-    commit_lock.write_text("")
-
-    # default sweep: every legacy sidecar stays (rollout safety), the
-    # commit lock stays
-    assert cio.reclaim_lock_sidecars(str(tmp_path)) == []
-    assert legacy_live.exists() and legacy_dead.exists() and commit_lock.exists()
-
-    # a HELD legacy sidecar (old writer mid-commit) is skipped even by
-    # the migration pass
-    with open(legacy_live, "a") as held:
-        fcntl.flock(held, fcntl.LOCK_EX)
-        assert cio.reclaim_lock_sidecars(str(tmp_path), migrate_legacy=True) == [
-            str(legacy_dead)
-        ]
-    # the one-time post-upgrade migration removes orphaned and
-    # live-parent legacy sidecars alike; .commit.lock and the parent
-    # side file are untouched
-    assert cio.reclaim_lock_sidecars(str(tmp_path), migrate_legacy=True) == [
-        str(legacy_live)
-    ]
-    assert live.exists() and commit_lock.exists()
-    # current-suffix sidecars with live parents never migrate
-    cio.read_modify_write(str(live), lambda p: '{"n": 2}')
-    flock_live = tmp_path / f".live.json{cio.LOCK_SIDECAR_SUFFIX}"
-    assert flock_live.exists()
-    assert cio.reclaim_lock_sidecars(str(tmp_path), migrate_legacy=True) == []
-    assert flock_live.exists()
-
-    # ADVICE r14: a FOREIGN .lock file (base is not an engine .json/
-    # .jsonl side file — e.g. another tool's presence-style lock kept
-    # under the warehouse root) is never a migration candidate: the
-    # non-blocking flock probe cannot protect presence-style locks, so
-    # even migrate_legacy=True leaves it alone
-    foreign = tmp_path / ".editor-session.lock"
-    foreign.write_text("")
-    assert cio.reclaim_lock_sidecars(str(tmp_path), migrate_legacy=True) == []
-    assert foreign.exists()
-
-
-def test_legacy_sidecar_count_surfaces_pending_migration(spark, tmp_path):
-    """VERDICT r15 #4: operators get a SIGNAL that the one-time legacy
-    migration is pending — ``count_legacy_lock_sidecars`` counts
-    engine-base ``.{base}.lock`` files without touching them,
-    ``engine.maintain()`` carries the count in its report, and the
-    default sweep still removes nothing legacy."""
-    from stripe_sync_engine_spark.storage import TableStore
-    from stripe_sync_engine_spark.sync.engine import StripeSparkSync
-
-    store = TableStore(spark, str(tmp_path / "wh"), vacuum_retain_s=3600.0)
-    eng = StripeSparkSync(spark, store)
-    store.write(
-        "t", spark.createDataFrame([(1, "a")], "id long, v string"), key="id"
-    )
-    root = tmp_path / "wh"
-    planted = root / ".cursors.json.lock"
-    planted.write_text("")
-    (root / ".other.jsonl.lock").write_text("")
-    # non-candidates: the commit lock, a current-suffix sidecar, a
-    # foreign presence-style lock
-    (root / "t").mkdir(exist_ok=True)
-    (root / "t" / ".commit.lock").write_text("")
-    (root / f".cursors.json{cio.LOCK_SIDECAR_SUFFIX}").write_text("")
-    (root / ".session.lock").write_text("")
-
-    assert cio.count_legacy_lock_sidecars(str(root)) == 2
-    report = eng.maintain()
-    assert report["legacy_sidecars"] == 2
-    # count-only: the planted sidecars survived the default sweep
-    assert planted.exists() and (root / ".other.jsonl.lock").exists()
-    # after the explicit flag-day pass the signal clears
-    cio.reclaim_lock_sidecars(str(root), migrate_legacy=True)
-    assert cio.count_legacy_lock_sidecars(str(root)) == 0
-    assert eng.maintain()["legacy_sidecars"] == 0
-    assert (root / ".session.lock").exists()  # foreign lock untouched
 
 
 def test_non_posix_rmw_warns_and_reclaim_noops(tmp_path, monkeypatch):

@@ -1959,10 +1959,8 @@ def test_postings_apply_changes_tracks_mutating_corpus(spark, tmp_path, sf_dir):
         for d, s in want.items():
             assert math.isclose(got[d], s, rel_tol=1e-9), (terms, d)
     # netted stats equal the fresh build's
-    s_inc = idx._stats_with_schema(store.read(idx.stats_table)).groupBy().sum().collect()[0]
-    s_new = fresh._stats_with_schema(
-        fresh.store.read(fresh.stats_table)
-    ).groupBy().sum().collect()[0]
+    s_inc = store.read(idx.stats_table).groupBy().sum().collect()[0]
+    s_new = fresh.store.read(fresh.stats_table).groupBy().sum().collect()[0]
     assert s_inc["sum(n_docs)"] == s_new["sum(n_docs)"]
     assert s_inc["sum(n_dl_docs)"] == s_new["sum(n_dl_docs)"]
     assert s_inc["sum(total_dl)"] == s_new["sum(total_dl)"]
@@ -1978,9 +1976,10 @@ def test_postings_apply_changes_tracks_mutating_corpus(spark, tmp_path, sf_dir):
 
 
 def test_postings_apply_changes_insert_only_window_stays_lean(spark, tmp_path):
-    """An insert-only change window must not grow the stats table with a
-    zero ':del' row (or burn that ledger id): only the ':ins' increment
-    lands, and scores match a fresh build."""
+    """A one-sided change window must not grow the stats table with a
+    zero row for its empty half (or burn that ledger id): an insert-only
+    window lands only its ':ins' increment, a delete-only window only its
+    ':del' delta, and scores match a fresh build after each."""
     import math
 
     from stripe_sync_engine_spark.operators.postings import PersistedPostingsIndex
@@ -1993,20 +1992,31 @@ def test_postings_apply_changes_insert_only_window_stays_lean(spark, tmp_path):
     )
     idx = PersistedPostingsIndex(store)
     idx.register(v1, "b0")
-    feed = spark.createDataFrame(
+    inserts = spark.createDataFrame(
         [(100 + i, f"fresh gamma insert {i} words", "insert") for i in range(4)],
         "doc_id long, text string, _change_type string",
     )
-    idx.apply_changes(feed, "w1")
-    ids = [r["batch_id"] for r in store.read(idx.stats_table).collect()]
-    assert sorted(ids) == ["b0", "w1:ins"]  # no zero 'w1:del' row
-    full = PersistedPostingsIndex(TableStore(spark, str(tmp_path / "wh_insonly_f")))
-    full.register(v1.unionByName(feed.drop("_change_type")), "all")
-    got = {r["doc_id"]: r["score"] for r in idx.topk(["alpha", "gamma"], k=15).collect()}
-    want = {r["doc_id"]: r["score"] for r in full.topk(["alpha", "gamma"], k=15).collect()}
-    assert set(got) == set(want)
-    for d, s in want.items():
-        assert math.isclose(got[d], s, rel_tol=1e-9)
+    deletes = spark.createDataFrame(
+        [(3, None, "delete")], "doc_id long, text string, _change_type string"
+    )
+    live = v1.unionByName(inserts.drop("_change_type"))
+    for window, feed, want_ids in (
+        ("w1", inserts, ["b0", "w1:ins"]),  # no zero 'w1:del' row
+        ("w2", deletes, ["b0", "w1:ins", "w2:del"]),  # no zero 'w2:ins' row
+    ):
+        idx.apply_changes(feed, window)
+        ids = [r["batch_id"] for r in store.read(idx.stats_table).collect()]
+        assert sorted(ids) == want_ids
+        live = live.join(
+            feed.where("_change_type = 'delete'").select("doc_id"), "doc_id", "left_anti"
+        )
+        full = PersistedPostingsIndex(TableStore(spark, str(tmp_path / f"wh_lean_{window}")))
+        full.register(live, "all")
+        got = {r["doc_id"]: r["score"] for r in idx.topk(["alpha", "gamma"], k=15).collect()}
+        want = {r["doc_id"]: r["score"] for r in full.topk(["alpha", "gamma"], k=15).collect()}
+        assert set(got) == set(want) and got
+        for d, s in want.items():
+            assert math.isclose(got[d], s, rel_tol=1e-9)
 
 
 def test_postings_apply_changes_bootstraps_fresh_index(spark, tmp_path):
@@ -2047,9 +2057,18 @@ def test_postings_apply_changes_bootstraps_fresh_index(spark, tmp_path):
 
 @pytest.mark.parametrize(
     "crash_after",
-    # default tier keeps the first-commit crash (the hardest replay); the
-    # later matrix params run in the slow tier (pytest.ini rationale)
-    [0, pytest.param(1, marks=pytest.mark.slow), pytest.param(2, marks=pytest.mark.slow)],
+    # default tier keeps a steady window's first-commit crash (the hardest
+    # replay) and a birth window's forward-commit crash (the birth-replay
+    # heal); the other matrix params run in the slow tier (pytest.ini
+    # rationale)
+    [
+        0,
+        pytest.param(1, marks=pytest.mark.slow),
+        pytest.param(2, marks=pytest.mark.slow),
+        pytest.param(("birth", 0), id="birth-0", marks=pytest.mark.slow),
+        pytest.param(("birth", 1), id="birth-1", marks=pytest.mark.slow),
+        pytest.param(("birth", 2), id="birth-2"),
+    ],
 )
 def test_postings_merged_window_crash_replay_converges(spark, tmp_path, crash_after):
     """The merged one-commit-per-table CDC window (r15): crash after any
@@ -2057,12 +2076,17 @@ def test_postings_merged_window_crash_replay_converges(spark, tmp_path, crash_af
     re-apply, and the index converges to the fresh-build state (scores,
     netted stats, no duplicate forward rows); a further replay of the
     completed window moves nothing. This pins the replay matrix in
-    ``_apply_window_once``'s docstring commit by commit."""
+    ``_apply_window_once``'s docstring commit by commit, for a steady
+    window and for a birth window (the first window on an empty store,
+    whose commits create the three tables)."""
     import math
 
     from stripe_sync_engine_spark.operators.postings import PersistedPostingsIndex
     from stripe_sync_engine_spark.storage import TableStore
 
+    birth = isinstance(crash_after, tuple)
+    if birth:
+        crash_after = crash_after[1]
     store = TableStore(spark, str(tmp_path / "wh_crash_idx"), vacuum_retain_s=3600.0)
     docs = spark.createDataFrame(
         [(i, f"alpha spark doc {i} corpus query words") for i in range(20)],
@@ -2071,40 +2095,44 @@ def test_postings_merged_window_crash_replay_converges(spark, tmp_path, crash_af
     store.write("corpus", docs, key="doc_id")
     t0 = store.commits("corpus")[-1]
     idx = PersistedPostingsIndex(store)
-    idx.register(store.read("corpus"), "b0")
+    if birth:
+        feed = store.read_changes("corpus", 0).localCheckpoint(eager=True)
+    else:
+        idx.register(store.read("corpus"), "b0")
 
-    import time as _t
+        import time as _t
 
-    _t.sleep(0.002)
-    cur = store.read("corpus")
-    upd = cur.where("doc_id >= 5 and doc_id < 10").withColumn(
-        "text",
-        F.when(F.col("doc_id") == 5, F.lit(None).cast("string")).otherwise(
-            F.concat(F.lit("rewritten join body "), F.col("text"))
-        ),
-    )
-    new = spark.createDataFrame(
-        [(100 + i, f"brand new spark join document {i}") for i in range(3)],
-        "doc_id long, text string",
-    )
-    nxt = (
-        cur.where("doc_id >= 3")  # doc_id 0..2 deleted
-        .join(upd.select("doc_id"), "doc_id", "left_anti")
-        .unionByName(upd)
-        .unionByName(new)
-    )
-    store.write("corpus", nxt, key="doc_id")
-    feed = store.read_changes("corpus", t0).localCheckpoint(eager=True)
+        _t.sleep(0.002)
+        cur = store.read("corpus")
+        upd = cur.where("doc_id >= 5 and doc_id < 10").withColumn(
+            "text",
+            F.when(F.col("doc_id") == 5, F.lit(None).cast("string")).otherwise(
+                F.concat(F.lit("rewritten join body "), F.col("text"))
+            ),
+        )
+        new = spark.createDataFrame(
+            [(100 + i, f"brand new spark join document {i}") for i in range(3)],
+            "doc_id long, text string",
+        )
+        nxt = (
+            cur.where("doc_id >= 3")  # doc_id 0..2 deleted
+            .join(upd.select("doc_id"), "doc_id", "left_anti")
+            .unionByName(upd)
+            .unionByName(new)
+        )
+        store.write("corpus", nxt, key="doc_id")
+        feed = store.read_changes("corpus", t0).localCheckpoint(eager=True)
     kinds = {r["_change_type"] for r in feed.select("_change_type").distinct().collect()}
-    assert kinds == {"insert", "update", "delete"}
+    assert kinds == ({"insert"} if birth else {"insert", "update", "delete"})
 
-    # Crash injection: the steady-state window commits exactly three
-    # versions — stats (the driver-side tiny commit, write_rows_buckets),
-    # then postings and forward (commit_prepared manifest swaps; their
-    # file writes run concurrently but commits are strictly ordered).
-    # Fail the (crash_after+1)-th commit, whichever surface it lands on.
+    # Crash injection: the window commits exactly three versions — stats
+    # (the driver-side tiny commit, write_rows_buckets), then postings and
+    # forward (commit_prepared manifest swaps; their file writes run
+    # concurrently but commits are strictly ordered). A birth window
+    # creates all three tables with store.write instead. Fail the
+    # (crash_after+1)-th commit, whichever surface it lands on.
     calls = {"n": 0}
-    orig_cp, orig_wrb = store.commit_prepared, store.write_rows_buckets
+    orig_cp, orig_wrb, orig_w = store.commit_prepared, store.write_rows_buckets, store.write
 
     def crashing(orig):
         def run(*a, **k):
@@ -2117,24 +2145,28 @@ def test_postings_merged_window_crash_replay_converges(spark, tmp_path, crash_af
 
     store.commit_prepared = crashing(orig_cp)
     store.write_rows_buckets = crashing(orig_wrb)
+    store.write = crashing(orig_w)
     with pytest.raises(RuntimeError, match="injected crash"):
         idx.apply_changes(feed, "w1")
-    store.commit_prepared, store.write_rows_buckets = orig_cp, orig_wrb
+    store.commit_prepared, store.write_rows_buckets, store.write = orig_cp, orig_wrb, orig_w
 
     idx.apply_changes(feed, "w1")  # recovery replay heals
 
     fresh = PersistedPostingsIndex(TableStore(spark, str(tmp_path / "wh_crash_f")))
     fresh.register(store.read("corpus"), "all")
-    for terms in (["spark", "join"], ["rewritten"], ["document"]):
+    queries = (
+        (["spark", "query"], ["alpha"], ["doc"])
+        if birth
+        else (["spark", "join"], ["rewritten"], ["document"])
+    )
+    for terms in queries:
         got = {r["doc_id"]: r["score"] for r in idx.topk(terms, k=40).collect()}
         want = {r["doc_id"]: r["score"] for r in fresh.topk(terms, k=40).collect()}
         assert set(got) == set(want) and got, terms
         for d, s in want.items():
             assert math.isclose(got[d], s, rel_tol=1e-9), (terms, d)
-    s_inc = idx._stats_with_schema(store.read(idx.stats_table)).groupBy().sum().collect()[0]
-    s_new = fresh._stats_with_schema(
-        fresh.store.read(fresh.stats_table)
-    ).groupBy().sum().collect()[0]
+    s_inc = store.read(idx.stats_table).groupBy().sum().collect()[0]
+    s_new = fresh.store.read(fresh.stats_table).groupBy().sum().collect()[0]
     for c in ("sum(n_docs)", "sum(n_dl_docs)", "sum(total_dl)"):
         assert s_inc[c] == s_new[c], c
     # forward rows: exactly one batch of rows per live doc (no crash dupes)
@@ -2230,41 +2262,6 @@ def test_persisted_postings_null_text_parity(spark, tmp_path):
     assert set(got) == set(want) == {1, 2, 4}
     for d, s in want.items():
         assert math.isclose(got[d], s, rel_tol=1e-9), (d, got[d], s)
-
-
-def test_persisted_postings_upgrades_legacy_stats_schema(spark, tmp_path):
-    """A stats table persisted before n_dl_docs existed keeps working:
-    reads backfill the column (legacy rows assumed text-complete) and the
-    next register migrates the touched buckets to the new schema."""
-    from stripe_sync_engine_spark.operators.postings import PersistedPostingsIndex
-    from stripe_sync_engine_spark.storage import TableStore
-
-    store = TableStore(spark, str(tmp_path / "wh_post"))
-    idx = PersistedPostingsIndex(store)
-    b1 = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "alpha gamma delta")], "doc_id long, text string"
-    )
-    idx.register(b1, "b1")
-    # Rewrite the stats table in the LEGACY 3-column shape (materialize
-    # BEFORE deleting the files the lazy frame reads from).
-    legacy_rows = (
-        store.read(idx.stats_table).select("batch_id", "n_docs", "total_dl").collect()
-    )
-    import shutil as _sh
-
-    _sh.rmtree(store._dir(idx.stats_table), ignore_errors=True)
-    legacy = spark.createDataFrame(
-        legacy_rows, "batch_id string, n_docs long, total_dl long"
-    )
-    store.write(idx.stats_table, legacy, key="batch_id")
-    assert store.read(idx.stats_table).columns == ["batch_id", "n_docs", "total_dl"]
-    # Query works against the legacy table...
-    assert idx.topk(["alpha"], k=5).count() == 2
-    # ...and the next register both lands and upgrades.
-    b2 = spark.createDataFrame([(3, "alpha epsilon")], "doc_id long, text string")
-    idx.register(b2, "b2")
-    assert "n_dl_docs" in store.read(idx.stats_table).columns
-    assert idx.topk(["alpha"], k=5).count() == 3
 
 
 def test_commitio_primitives(tmp_path):

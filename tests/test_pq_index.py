@@ -263,8 +263,6 @@ def test_persisted_ivfpq_apply_changes_tracks_mutating_corpus(spark, sf_dir, tmp
     a replay of the whole window changes nothing. Updates are built to
     MOVE cells (the embedding is swapped with a different-cell vector's),
     the exact case the old append-only contract corrupted silently."""
-    from pyspark.sql import functions as F
-
     from stripe_sync_engine_spark.operators.pq_index import (
         PersistedIVFPQ,
         train_ivf_pq,
@@ -360,21 +358,18 @@ def test_persisted_ivfpq_apply_changes_tracks_mutating_corpus(spark, sf_dir, tmp
     p.apply_changes(feed, "w1")
     assert (codes_set(store, p.table), store.read(p.forward_table).count()) == before
 
-    # crash-shaped partial replay: unregister alone (the first half of the
-    # window) then the whole window again — still converges
-    p.unregister(
-        feed.where(F.col("_change_type").isin("delete", "update")).select("vec_id"),
-        _keep_batch_id="w1:ins",
-    )
-    p.apply_changes(feed, "w1")
-    assert codes_set(store, p.table) == codes_set(fresh_store, fresh.table)
-
 
 @pytest.mark.parametrize(
     "crash_after",
-    # default tier keeps the first-commit crash; the second matrix param
-    # runs in the slow tier (pytest.ini rationale)
-    [0, pytest.param(1, marks=pytest.mark.slow)],
+    # default tier keeps a steady window's first-commit crash and a birth
+    # window's forward-commit crash (the birth-replay heal); the other
+    # matrix params run in the slow tier (pytest.ini rationale)
+    [
+        0,
+        pytest.param(1, marks=pytest.mark.slow),
+        pytest.param(("birth", 0), id="birth-0", marks=pytest.mark.slow),
+        pytest.param(("birth", 1), id="birth-1"),
+    ],
 )
 def test_persisted_ivfpq_merged_window_crash_replay_converges(
     spark, sf_dir, tmp_path, crash_after
@@ -384,74 +379,83 @@ def test_persisted_ivfpq_merged_window_crash_replay_converges(
     index converges to the fresh-build state; a further replay moves
     nothing; and the moved-cell loud failure still fires through the
     merged path for an embedding change smuggled in WITHOUT its delete
-    half."""
-    from pyspark.sql import functions as F
-
+    half. Covers a steady window and a birth window (the first window on
+    an empty store, whose commits create both tables)."""
     from stripe_sync_engine_spark.operators.pq_index import (
         PersistedIVFPQ,
         train_ivf_pq,
     )
     from stripe_sync_engine_spark.storage import TableStore
 
+    birth = isinstance(crash_after, tuple)
+    if birth:
+        crash_after = crash_after[1]
     vecs, X, ids = _corpus(spark, sf_dir)
     idx = train_ivf_pq(vecs, n_cells=8, m=8, k=8)
     cells = _cells_of(spark, idx, X, ids)
     emb_of = {int(i): [float(v) for v in X[k]] for k, i in enumerate(ids)}
+    sorted_ids = sorted(cells)
 
     store = TableStore(spark, str(tmp_path / "wh_pq_crash"), vacuum_retain_s=3600.0)
     store.write("vectors", vecs, key="vec_id")
     t0 = store.commits("vectors")[-1]
     p = PersistedIVFPQ(store, idx)
-    p.register(store.read("vectors"), "b0")
+    if birth:
+        feed = store.read_changes("vectors", 0).localCheckpoint(eager=True)
+    else:
+        p.register(store.read("vectors"), "b0")
 
-    import time as _t
+        import time as _t
 
-    _t.sleep(0.002)
-    sorted_ids = sorted(cells)
-    deleted = sorted_ids[:3]
-    to_update = sorted_ids[3:6]
-    donors = {
-        u: next(d for d in sorted_ids[6:] if cells[d] != cells[u]) for u in to_update
-    }
-    cur = store.read("vectors")
-    upd = spark.createDataFrame(
-        [(u, emb_of[donors[u]]) for u in to_update],
-        "vec_id long, embedding array<double>",
-    )
-    new = spark.createDataFrame(
-        [(100000 + j, emb_of[sorted_ids[10 + j]]) for j in range(3)],
-        "vec_id long, embedding array<double>",
-    )
-    nxt = (
-        cur.join(
-            spark.createDataFrame([(d,) for d in deleted], "vec_id long"),
-            "vec_id",
-            "left_anti",
+        _t.sleep(0.002)
+        deleted = sorted_ids[:3]
+        to_update = sorted_ids[3:6]
+        donors = {
+            u: next(d for d in sorted_ids[6:] if cells[d] != cells[u]) for u in to_update
+        }
+        cur = store.read("vectors")
+        upd = spark.createDataFrame(
+            [(u, emb_of[donors[u]]) for u in to_update],
+            "vec_id long, embedding array<double>",
         )
-        .join(upd.select("vec_id"), "vec_id", "left_anti")
-        .unionByName(upd)
-        .unionByName(new)
-    )
-    store.write("vectors", nxt, key="vec_id")
-    feed = store.read_changes("vectors", t0).localCheckpoint(eager=True)
+        new = spark.createDataFrame(
+            [(100000 + j, emb_of[sorted_ids[10 + j]]) for j in range(3)],
+            "vec_id long, embedding array<double>",
+        )
+        nxt = (
+            cur.join(
+                spark.createDataFrame([(d,) for d in deleted], "vec_id long"),
+                "vec_id",
+                "left_anti",
+            )
+            .join(upd.select("vec_id"), "vec_id", "left_anti")
+            .unionByName(upd)
+            .unionByName(new)
+        )
+        store.write("vectors", nxt, key="vec_id")
+        feed = store.read_changes("vectors", t0).localCheckpoint(eager=True)
 
-    # Crash injection: the steady-state window commits exactly two
-    # versions via commit_prepared manifest swaps — codes, forward (their
-    # file writes run concurrently but commits are strictly ordered).
-    # Fail the (crash_after+1)-th.
+    # Crash injection: the window commits exactly two versions — codes,
+    # forward — via commit_prepared manifest swaps (their file writes run
+    # concurrently but commits are strictly ordered); a birth window
+    # creates both tables with store.write instead. Fail the
+    # (crash_after+1)-th commit, whichever surface it lands on.
     calls = {"n": 0}
-    orig = store.commit_prepared
+    orig_cp, orig_w = store.commit_prepared, store.write
 
-    def crashing(*a, **k):
-        if calls["n"] == crash_after:
-            raise RuntimeError("injected crash")
-        calls["n"] += 1
-        return orig(*a, **k)
+    def crashing(orig):
+        def run(*a, **k):
+            if calls["n"] == crash_after:
+                raise RuntimeError("injected crash")
+            calls["n"] += 1
+            return orig(*a, **k)
 
-    store.commit_prepared = crashing
+        return run
+
+    store.commit_prepared, store.write = crashing(orig_cp), crashing(orig_w)
     with pytest.raises(RuntimeError, match="injected crash"):
         p.apply_changes(feed, "w1")
-    store.commit_prepared = orig
+    store.commit_prepared, store.write = orig_cp, orig_w
 
     p.apply_changes(feed, "w1")  # recovery replay heals
 
@@ -616,13 +620,13 @@ def test_persisted_ivfpq_topk_reranked_store_native(spark, sf_dir, tmp_path):
     assert r_rr >= r_adc
 
 
-def test_persisted_ivfpq_legacy_index_still_fails_loudly_on_moved_cell(spark, sf_dir, tmp_path):
-    """The fails-loudly contract must hold even on a pre-forward-table
-    index (or inside the first register's crash window): with no forward
-    rows to probe, register falls back to a full-codes-scan moved-cell
-    check instead of silently appending a second row while the stale
-    code stays queryable. Byte-identical re-registers still heal (and
-    start recording forward rows)."""
+def test_persisted_ivfpq_forwardless_index_raises_naming_rebuild(spark, sf_dir, tmp_path):
+    """An index whose forward table is missing while its codes hold rows
+    outside the window (persisted before the forward table existed) is
+    not a birth crash replay: every write — a byte-identical re-register
+    or an embedding change alike — raises naming rebuild() instead of
+    guessing at forward rows, and leaves the codes untouched. rebuild()
+    restores the forward table, after which deletes work."""
     import shutil
 
     import pytest
@@ -638,7 +642,8 @@ def test_persisted_ivfpq_legacy_index_still_fails_loudly_on_moved_cell(spark, sf
     store = TableStore(spark, str(tmp_path / "wh_pq_leg"))
     p = PersistedIVFPQ(store, idx)
     p.register(vecs, "b0")
-    shutil.rmtree(f"{store.root}/{p.forward_table}")  # simulate legacy index
+    shutil.rmtree(f"{store.root}/{p.forward_table}")  # simulate a pre-forward index
+    n = store.read(p.table).count()
 
     cells = _cells_of(spark, idx, X, ids)
     sorted_ids = sorted(cells)
@@ -648,17 +653,16 @@ def test_persisted_ivfpq_legacy_index_still_fails_loudly_on_moved_cell(spark, sf
     moved = spark.createDataFrame(
         [(a, emb_of[donor])], "vec_id long, embedding array<double>"
     )
-    with pytest.raises(RuntimeError, match="DIFFERENT cell"):
-        p.register(moved, "b1")
-    n = store.read(p.table).count()
-    p.register(vecs.limit(10), "b0")  # identical replay: no-op + fwd heal
-    assert store.read(p.table).count() == n
-    # the upgrade register BACKFILLS the forward table from the full
-    # codes table — a partial forward table would silently re-open the
-    # moved-cell hole one register later (the reviewer's repro)
+    for batch in (vecs.limit(10), moved):
+        with pytest.raises(RuntimeError, match=r"no forward table.*rebuild\(\)"):
+            p.register(batch, "b1")
+    assert store.read(p.table).count() == n and not store.exists(p.forward_table)
+
+    p.rebuild(vecs)
     assert store.read(p.forward_table).count() == n
-    with pytest.raises(RuntimeError, match="DIFFERENT cell"):
-        p.register(moved, "b2")  # now caught by the FORWARD probe, post-upgrade
+    p.unregister(spark.createDataFrame([(a,)], "vec_id long"))
+    assert store.read(p.table).count() == n - 1
+    assert store.read(p.forward_table).count() == n - 1
 
 
 def test_codebook_drift_metric(spark, sf_dir, tmp_path):
@@ -866,18 +870,18 @@ def test_baseline_pin_survives_creation_crash(spark, sf_dir, tmp_path, monkeypat
     store = TableStore(spark, str(tmp_path / "wh_pin_crash"))
     p = PersistedIVFPQ(store, idx)
 
-    real = PersistedIVFPQ._register_once
+    real = PersistedIVFPQ._apply_window_once
 
-    def boom(self, v, b):
+    def boom(self, old_ids, new_vecs, ins_id):
         raise OSError("injected crash inside the creating register")
 
-    monkeypatch.setattr(PersistedIVFPQ, "_register_once", boom)
+    monkeypatch.setattr(PersistedIVFPQ, "_apply_window_once", boom)
     with _pytest.raises(OSError, match="injected"):
         p.register(vecs, "b:0")
     assert os.path.exists(p._baseline_path())  # pinned despite the crash
     assert not store.exists(p.table)
 
-    monkeypatch.setattr(PersistedIVFPQ, "_register_once", real)
+    monkeypatch.setattr(PersistedIVFPQ, "_apply_window_once", real)
     p.register(vecs, "b:0")  # the replay completes the registration
     assert store.exists(p.table) and os.path.exists(p._codebook_path())
     d = p.measure_codebook_drift(vecs)
