@@ -52,7 +52,9 @@ from __future__ import annotations
 
 import json
 import os
+import random
 import threading
+import time
 
 #: suffix of the flock sidecar files read_modify_write serializes on:
 #: ``.{base}.flock`` beside the side file. Deliberately NOT ``.lock`` —
@@ -255,9 +257,12 @@ class InMemoryConditionalPutBackend:
         snapshot the generation, read, compute, CAS — a lost race
         re-reads and re-applies (``fn`` must therefore be a pure
         function of the current content, which every log append is).
+        A lost race sleeps a jittered, exponentially growing delay before
+        re-reading: an immediate retry re-collides with the same racers,
+        and under N-thread contention one writer could lose every round.
         Bounded so a livelock (or a buggy non-converging ``fn``)
         surfaces instead of spinning forever."""
-        for _ in range(attempts):
+        for i in range(attempts):
             gen = self.generations.get(path, 0)
             try:
                 with open(path) as f:
@@ -268,7 +273,8 @@ class InMemoryConditionalPutBackend:
                 self._conditional_put(path, fn(prior), gen)
                 return
             except ConditionalPutConflict:
-                continue
+                if i < attempts - 1:
+                    time.sleep(random.uniform(0, min(0.05, 0.0005 * 2**i)))
         raise ConditionalPutConflict(
             f"{path}: lost the generation race {attempts} times in a row"
         )

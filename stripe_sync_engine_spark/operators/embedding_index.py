@@ -35,9 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from stripe_sync_engine_spark.operators.incremental_dedup import (
-    anti_probe,
-    commit_fresh,
-    with_occ_retry,
+    apply_gate_window,
+    feed_halves,
 )
 
 
@@ -214,18 +213,26 @@ class IncrementalEmbeddingIndex:
         # ≤|batch| behind a join+agg: hint the broadcast (see text gates)
         return batch.join(F.broadcast(dup_ids), self.id_col, "left_anti")
 
+    def _window(self, ins=None, dels=None) -> None:
+        """``apply_gate_window`` on ``_bq`` rows, deleted and fresh on
+        (bucket, vec_id); a pre-band index fails loudly first."""
+        self._ensure_band_format()
+        keys = ["bucket", "vec_id"]
+        apply_gate_window(self.store, self.table, "bucket", keys, keys, ins, dels)
+
     def register(self, batch: DataFrame, _rows: DataFrame | None = None) -> None:
-        """Durably index ``batch``'s vectors, idempotently (already-
-        indexed (bucket, vec_id) rows register nothing); one OCC-guarded
-        partial commit. Freshness is per (BUCKET, vec_id) — strictly
-        finer than per vec_id — which buys two properties at once:
-        after raising ``n_bands``, re-registering an already-indexed
-        vector writes exactly its missing higher-band rows (the recall
-        upgrade back-fills incrementally instead of silently applying
-        only to vectors registered after the switch); and an UPDATED
-        embedding's new-bucket rows commit instead of being skipped by
-        an id-only probe — the old rows stay as ghosts (the corpus DID
-        contain that embedding; same keep-seen pin as the text gates'
+        """Durably index ``batch``'s vectors — an insert-only window,
+        idempotent (already-indexed (bucket, vec_id) rows register
+        nothing); one OCC-guarded partial commit. Freshness is per
+        (BUCKET, vec_id) — strictly finer than per vec_id — which buys
+        two properties at once: after raising ``n_bands``,
+        re-registering an already-indexed vector writes exactly its
+        missing higher-band rows (the recall upgrade back-fills
+        incrementally instead of silently applying only to vectors
+        registered after the switch); and an UPDATED embedding's
+        new-bucket rows commit instead of being skipped by an id-only
+        probe — the old rows stay as ghosts (the corpus DID contain that
+        embedding; same keep-seen pin as the text gates'
         ``apply_changes``), except the same-bucket coincidence (changed
         vector, unchanged bits) where the stale qv row survives — rare
         and conservative. Out-of-band writers (``engine.maintain()``
@@ -233,67 +240,28 @@ class IncrementalEmbeddingIndex:
         the text gates. ``_rows``: precomputed ``_bq(batch)``
         (re-derivable without reading store files — materialized, or a
         pure projection over materialized frames; a retry re-reads)."""
-        with_occ_retry(lambda: self._register_once(batch, _rows))
-
-    def _register_once(self, batch: DataFrame, _rows: DataFrame | None = None) -> None:
-        self._ensure_band_format()
-        rows = _rows if _rows is not None else self._bq(batch)
-        store, table = self.store, self.table
-        if not store.exists(table):
-            store.write(table, rows, key="bucket")
-            return
-        manifest = store._read_manifest(table)
-        touched = store.buckets_of(rows, key="bucket", table=table)
-        index = store._scan_manifest(table, manifest, touched)
-        fresh = anti_probe(rows, index, ["bucket", "vec_id"]).localCheckpoint(
-            eager=True  # pre-commit lineage cut (vacuum)
-        )
-        if fresh.isEmpty():
-            return
-        commit_fresh(store, table, fresh, "bucket", manifest)
+        self._window(ins=_rows if _rows is not None else self._bq(batch))
 
     def unregister(self, vecs: DataFrame) -> None:
-        """Remove ``vecs``' index rows — the embedding gate's takedown
-        path (mirrors ``IncrementalNearDeduper.unregister``): a vector
-        deleted from the corpus must stop suppressing future
-        near-identical embeddings. ``vecs`` carries the PRE-IMAGE
-        embeddings AS REGISTERED (a change feed's delete rows); bucket
-        keys are recomputed from them, so deletion reads only the ids'
-        own LSH buckets — O(batch), never an index scan. Matched on
-        (bucket, vec_id), idempotent, OCC-guarded."""
-        with_occ_retry(lambda: self._unregister_once(vecs))
-
-    def _unregister_once(self, vecs: DataFrame) -> None:
-        from stripe_sync_engine_spark.operators.incremental_dedup import (
-            delete_matching_rows,
-        )
-
-        if not self.store.exists(self.table):
-            return
-        self._ensure_band_format()
-        pairs = (
-            self._bq(vecs)
-            .select("bucket", "vec_id")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        delete_matching_rows(
-            self.store, self.table, pairs, ["bucket", "vec_id"], "bucket"
-        )
+        """Remove ``vecs``' index rows — a delete-only window, the
+        embedding gate's takedown path (mirrors
+        ``IncrementalNearDeduper.unregister``): a vector deleted from the
+        corpus must stop suppressing future near-identical embeddings.
+        ``vecs`` carries the PRE-IMAGE embeddings AS REGISTERED (a change
+        feed's delete rows); bucket keys are recomputed from them, so
+        deletion reads only the ids' own LSH buckets — O(batch), never an
+        index scan. Matched on (bucket, vec_id), idempotent,
+        OCC-guarded."""
+        self._window(dels=self._bq(vecs))
 
     def apply_changes(self, feed: DataFrame) -> None:
-        """Same change-feed contract as the text gates' ``apply_changes``
-        (``IncrementalDeduper.apply_changes`` has the update-pre-image
-        pin and the ``emit_update_preimages`` upgrade): deletes — and,
-        when present, ``update_preimage`` rows — unregister their
-        pre-image rows, insert/update post-images register. With
-        pre-images an update leaves NO ghost rows (the keep-seen note on
-        ``register`` applies to the default feed only)."""
-        from stripe_sync_engine_spark.operators.incremental_dedup import (
-            apply_feed_changes,
-        )
-
-        apply_feed_changes(self, feed)
+        """The text gates' ``apply_changes`` contract
+        (``IncrementalDeduper.apply_changes``), on ``_bq`` rows: one
+        window, one commit. With pre-images an update leaves NO ghost
+        rows (the keep-seen note on ``register`` applies to the default
+        feed only)."""
+        dels, ins = feed_halves(feed)
+        self._window(self._bq(ins), self._bq(dels))
 
     def filter_new(self, batch: DataFrame) -> DataFrame:
         """select_new + register in one call — sharing ONE bucket-

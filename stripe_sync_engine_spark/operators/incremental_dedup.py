@@ -28,7 +28,8 @@ Both gates are TWO-PHASE so callers control crash ordering:
   schema, no state mutated;
 * ``register(docs)`` durably records fingerprints / band rows,
   idempotently (already-recorded content registers nothing) and
-  OCC-guarded (a concurrent writer racing the commit fails loudly);
+  OCC-guarded (an out-of-band commit racing it re-plans; concurrent
+  registrars serialize externally);
 * ``filter_new(batch)`` = select_new then register(survivors) — the
   one-call form when the caller's sink is the registration itself.
 
@@ -36,6 +37,14 @@ The streaming pipeline (``streaming/documents.py``) orders sink-merge
 BETWEEN select and register, so an at-least-once replay after any crash
 converges: unregistered survivors pass the gate again and the keyed sink
 merge drops them; registered ones never re-pass.
+
+Every gate mutation — ``register``, the takedown ``unregister`` and the
+change-feed ``apply_changes``, for these two gates and for
+``operators/embedding_index`` — is ONE window routine,
+``apply_gate_window``: an insert half, a delete half, or both, applied
+in one OCC body against one manifest with at most one commit into only
+the buckets that gain or lose rows. A change window therefore commits
+each gate table once, and no crash can land between its halves.
 
 Intra-batch semantics: the exact gate collapses within-batch duplicates
 to the min-id row (``dd_exact``'s convention); the near gate admits
@@ -95,21 +104,24 @@ def run_parallel(*thunks):
     """Run zero-arg callables concurrently on driver threads, returning
     their results in argument order (first raised exception propagates).
 
-    ONE implementation of the overlap-independent-jobs blocks in the
-    derived indexes' window routine (postings/pq ``_apply_window_once``,
-    the only write path of ``register``, ``unregister`` and
-    ``apply_changes``; guide §2.6). Worker count is CAPPED at 8: under
-    PySpark's pinned thread mode (default since 3.2) each fresh Python
-    thread maps to its own JVM thread, so an unbounded per-call pool in
-    a long-lived streaming driver churns JVM threads for no scheduling
-    benefit — the overlapped jobs are few and short. Thunks must be INDEPENDENT (no
-    thunk may wait on another's result) and must not themselves call
-    ``run_parallel``-based helpers reentrantly in a way that blocks —
-    every current call site submits leaf work (a localCheckpoint, a
-    bucket probe, a prepare/commit) and waits in the CALLER, never
-    inside a pooled task."""
-    if len(thunks) == 1:
-        return (thunks[0](),)
+    ONE implementation of the overlap-independent-jobs blocks (guide
+    §2.6): the derived indexes' window routine (postings/pq
+    ``_apply_window_once``, the only write path of ``register``,
+    ``unregister`` and ``apply_changes``), ``checkpoint_parallel``, and
+    the engine's CDC fan-out (``engine._apply_change_window`` runs each
+    target's ``apply_changes`` as one thunk). Every thunk is awaited —
+    the pool joins all of them before the first failure, in argument
+    order, propagates. Worker count is CAPPED at 8: under PySpark's
+    pinned thread mode (default since 3.2) each fresh Python thread maps
+    to its own JVM thread, so an unbounded per-call pool in a long-lived
+    streaming driver churns JVM threads for no scheduling benefit — the
+    overlapped jobs are few and short. Thunks must be INDEPENDENT (no
+    thunk may wait on another's result). A thunk may open its own
+    ``run_parallel`` (a fan-out target's window does): every call owns
+    a fresh pool, so nesting never waits on a worker of the outer
+    pool."""
+    if len(thunks) <= 1:
+        return tuple(t() for t in thunks)
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=min(len(thunks), 8)) as pool:
@@ -183,24 +195,124 @@ def with_occ_retry(body, attempts: int = 3):
                 raise
 
 
-def commit_fresh(store, table: str, fresh: DataFrame, key: str, manifest: dict) -> None:
-    """Commit ``fresh`` (materialized, non-empty) rows into ONLY the
-    buckets they land in. The membership probe touches every bucket the
-    BATCH hashes into, but replay-heavy batches leave most of those
-    unchanged — rewriting them is pure wasted IO, and at thousands of
-    buckets the write set shrinks to ~|fresh| buckets. OCC over the write
-    set alone is sufficient: a key's freshness verdict can only be
-    invalidated by a concurrent commit to that key's OWN bucket (keys hash
-    to exactly one), which is in the write set whenever the key is
-    written."""
-    write_set = store.buckets_of(fresh, key=key, table=table)
-    base = store._scan_manifest(table, manifest, write_set)
+def _keys_of(key: str, a: DataFrame | None, b: DataFrame | None) -> DataFrame:
+    """The ``key`` column of ``a`` and ``b`` (either may be None), unioned."""
+    if a is None or b is None:
+        return (a if b is None else b).select(key)
+    return a.select(key).unionByName(b.select(key))
+
+
+def commit_window(
+    store,
+    table: str,
+    key: str,
+    manifest: dict,
+    fresh: DataFrame | None,
+    pairs: DataFrame | None = None,
+    match: list[str] | None = None,
+    hit: DataFrame | None = None,
+) -> None:
+    """The commit step of a gate window: rewrite ONLY the buckets that
+    gain rows (``fresh``, materialized) or lose them (``hit``: the rows
+    the delete ``pairs`` match on ``match``) as the ``manifest`` scan
+    minus ``pairs`` plus ``fresh``; no bucket changing means no commit.
+    The probe touches every bucket the window hashes into, but replays
+    leave most of those unchanged, and rewriting them is wasted IO. OCC
+    over the write set alone is sufficient: a key's verdict can only be
+    invalidated by a commit to that key's OWN bucket, which is in the
+    write set whenever the key is written. Single-table registrars (span
+    gate, packer, contamination gate, document sink) pass ``fresh``
+    alone."""
+    write_set = store.buckets_of(_keys_of(key, fresh, hit), key=key, table=table)
+    if not write_set:
+        return
+    # `rows` feeds the write directly, UNCHECKPOINTED: the commit
+    # consumes the lineage exactly once while the old version files it
+    # reads still exist, and an OCC retry re-derives everything from a
+    # fresh manifest
+    rows = store._scan_manifest(table, manifest, write_set)
+    if pairs is not None:
+        rows = rows.join(F.broadcast(pairs), match, "left_anti")
+    if fresh is not None:
+        rows = rows.unionByName(fresh)
     store.write_buckets(
-        table,
-        base.unionByName(fresh),
-        write_set,
-        key=key,
-        planned_versions=dict(manifest["buckets"]),
+        table, rows, write_set, key=key, planned_versions=dict(manifest["buckets"])
+    )
+
+
+def apply_gate_window(
+    store,
+    table: str,
+    key: str,
+    match: list[str],
+    fresh_keys: list[str],
+    ins: DataFrame | None = None,
+    dels: DataFrame | None = None,
+    digest=None,
+    reduce=None,
+) -> DataFrame | None:
+    """ONE window routine for the content gates (exact, near, embedding):
+    ``register`` is an insert-only window, ``unregister`` a delete-only
+    one, ``apply_changes`` both — one OCC body against one manifest, at
+    most one commit. A gate supplies its derived new rows ``ins``
+    (re-derivable without reading store files: a retry re-evaluates
+    them) and delete rows ``dels``, its bucket ``key``, delete-``match``
+    keys and ``fresh_keys``, plus an optional ``digest`` adding a
+    freshness column to both sides (the near gate's ``_sig_key``) and an
+    optional ``reduce`` of the fresh rows (the exact gate's min id).
+
+    Probe the buckets the delete pairs and new rows hash into; the scan
+    minus the pairs is the post-delete view; the new rows anti-probe
+    against it; ``commit_window`` rewrites only the buckets that gain or
+    lose rows, so a replay commits nothing. An in-window content swap
+    (doc A deletes 'x' while doc B inserts it) lands 'x' under B, and no
+    crash can land between the halves. A missing table has nothing to
+    delete: ``store.write`` births it from the (reduced) new rows, if
+    any. Returns the materialized fresh rows (None for a delete-only
+    window)."""
+    pairs = None
+    if dels is not None:
+        pairs = dels.select(*match).distinct().localCheckpoint(eager=True)
+
+    def body() -> DataFrame | None:
+        if not store.exists(table):
+            if ins is None:
+                return None
+            fresh = (reduce(ins) if reduce else ins).localCheckpoint(eager=True)
+            if not fresh.isEmpty():
+                store.write(table, fresh, key=key)
+            return fresh
+        manifest = store._read_manifest(table)
+        touched = store.buckets_of(_keys_of(key, pairs, ins), key=key, table=table)
+        view = scan = store._scan_manifest(table, manifest, touched)
+        hit = fresh = None
+        if pairs is not None:
+            view = scan.join(F.broadcast(pairs), match, "left_anti")
+            hit = scan.join(F.broadcast(pairs), match, "left_semi")
+        if ins is not None:
+            tag = digest or (lambda df: df)
+            fresh = anti_probe(tag(ins), tag(view), fresh_keys).select(*ins.columns)
+            # materialize BEFORE the commit: the lineage reads the
+            # pre-commit bucket files, which the commit's vacuum deletes
+            # (retain=0) — later re-evaluation would scan vanished paths
+            fresh = (reduce(fresh) if reduce else fresh).localCheckpoint(eager=True)
+        commit_window(store, table, key, manifest, fresh, pairs, match, hit)
+        return fresh
+
+    return with_occ_retry(body)
+
+
+def feed_halves(feed: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(pre-images to delete, post-images to insert) of one change-feed
+    window (``read_changes`` output): delete and ``update_preimage`` rows
+    retire their content, insert/update post-images register. The
+    checkpoint is idempotent: a feed the engine's fan-out already
+    materialized is not re-materialized (``ensure_local_checkpoint``)."""
+    changed = ensure_local_checkpoint(feed)
+    kind = F.col("_change_type")
+    return (
+        changed.where(kind.isin("delete", "update_preimage")).drop("_change_type"),
+        changed.where(kind.isin("insert", "update")).drop("_change_type"),
     )
 
 
@@ -348,64 +460,6 @@ class FoldLedger:
         atomic_write_json(self._path, led)
 
 
-def apply_feed_changes(gate, feed: DataFrame) -> None:
-    """ONE implementation of the gates' change-window protocol (the
-    exact, near, and embedding gates' ``apply_changes`` all delegate
-    here — a fix to the split or the ordering fixes every gate, the
-    ``fold_batch_rows`` discipline): delete and ``update_preimage``
-    rows unregister their pre-images; insert/update post-images
-    register. Unregister FIRST so an in-window content swap (doc A
-    deletes 'x' while doc B inserts 'x') lands registered, not erased.
-    The checkpoint is idempotent: a feed the engine's fan-out already
-    materialized is not re-materialized (``ensure_local_checkpoint``)."""
-    changed = ensure_local_checkpoint(feed)
-    dels = changed.where(
-        F.col("_change_type").isin("delete", "update_preimage")
-    ).drop("_change_type")
-    ups = changed.where(
-        F.col("_change_type").isin("insert", "update")
-    ).drop("_change_type")
-    gate.unregister(dels)
-    if not ups.isEmpty():
-        gate.register(ups)
-
-
-def delete_matching_rows(
-    store, table: str, pairs: DataFrame, keys: list[str], bucket_key: str
-) -> None:
-    """ONE implementation of the gates' bucket-pruned delete (the
-    unregister dance the three gates share): probe only the buckets the
-    ``pairs`` hash into, no-op when nothing matches (replays), and
-    rewrite ONLY the buckets actually losing rows — anti-joined on ALL
-    of ``keys``, so a partial match never deletes a bystander row.
-    ``pairs`` must be materialized (callers localCheckpoint — the
-    commit's vacuum deletes files its lineage could re-read)."""
-    if pairs.isEmpty():
-        return
-    manifest = store._read_manifest(table)
-    touched = store.buckets_of(pairs, key=bucket_key, table=table)
-    base = store._scan_manifest(table, manifest, touched)
-    hit = base.join(F.broadcast(pairs), keys, "left_semi").localCheckpoint(eager=True)
-    if hit.isEmpty():
-        return
-    write_set = store.buckets_of(hit, key=bucket_key, table=table)
-    # `keep` feeds the write directly, UNCHECKPOINTED: the commit
-    # consumes the lineage exactly once while the old version files it
-    # reads still exist, and an OCC retry re-derives everything from a
-    # fresh manifest — eagerly materializing the survivors here would
-    # double-scan the table's biggest frame for nothing.
-    keep = store._scan_manifest(table, manifest, write_set).join(
-        F.broadcast(pairs), keys, "left_anti"
-    )
-    store.write_buckets(
-        table,
-        keep,
-        write_set,
-        key=bucket_key,
-        planned_versions=dict(manifest["buckets"]),
-    )
-
-
 def sub_batch_id(batch_id: str, kind: str) -> str:
     """Namespace a CDC window's sub-batches (postings/ANN apply_changes
     split a window into a delete and an insert half) WITHOUT breaking
@@ -522,9 +576,15 @@ class IncrementalDeduper:
             F.md5(F.col(self.content_col)).alias(FINGERPRINT_COL),
         )
 
+    @staticmethod
+    def _min_id(fps: DataFrame) -> DataFrame:
+        """One (fingerprint, min doc_id) row per content: within-batch
+        duplicates collapse to ``dd_exact``'s keeper."""
+        return fps.groupBy(FINGERPRINT_COL).agg(F.min("doc_id").alias("doc_id"))
+
     def _fresh_fps(self, batch: DataFrame) -> DataFrame:
         """(fingerprint, min doc_id) of batch content the store has not
-        seen — the pure core of both phases. Probes only the buckets the
+        seen — ``select_new``'s pure core. Probes only the buckets the
         batch's hashes touch."""
         fps = self._fingerprints(batch)
         store, table = self.store, self.table
@@ -532,7 +592,7 @@ class IncrementalDeduper:
             touched = store.buckets_of(fps, key=FINGERPRINT_COL, table=table)
             known = store.read_buckets(table, touched)
             fps = anti_probe(fps, known, [FINGERPRINT_COL])
-        return fps.groupBy(FINGERPRINT_COL).agg(F.min("doc_id").alias("doc_id"))
+        return self._min_id(fps)
 
     def select_new(self, batch: DataFrame) -> DataFrame:
         """PURE: rows of ``batch`` with never-seen content (within-batch
@@ -540,106 +600,47 @@ class IncrementalDeduper:
         state is mutated — pair with ``register`` for durability."""
         return self._originals(batch, self._fresh_fps(batch))
 
-    def register(self, docs: DataFrame) -> None:
-        """Durably record ``docs``' fingerprints. Idempotent: content the
-        table already holds registers nothing (so replays are no-ops and
-        calling it with a superset of earlier registrations is safe). One
-        OCC-guarded partial commit into only the touched buckets; a pure
-        replay skips the commit entirely. The committed (fingerprint,
-        first registrant id) rows are the provenance a curation pipeline
-        needs to answer "which document made this one a duplicate".
-
-        Out-of-band writers (``engine.maintain()`` compacting the gate
-        table under a live stream) are tolerated by re-planning on the
-        OCC abort (``with_occ_retry``); concurrent REGISTRARS still
-        serialize externally — batches are the unit."""
-        with_occ_retry(lambda: self._register_once(docs))
-
-    def _register_once(self, docs: DataFrame) -> None:
-        store, table = self.store, self.table
-        if not store.exists(table):
-            store.write(table, self._fresh_fps(docs), key=FINGERPRINT_COL)
-            return
-        fps = self._fingerprints(docs)
-        # plan, read, and commit against ONE manifest; the version map is
-        # the commit's OCC precondition, so a concurrent writer racing on
-        # the same buckets fails loudly instead of losing registrations
-        # (serialize concurrent registrars externally; batches are the unit)
-        manifest = store._read_manifest(table)
-        touched = store.buckets_of(fps, key=FINGERPRINT_COL, table=table)
-        known = store._scan_manifest(table, manifest, touched)
-        fresh = (
-            anti_probe(fps, known, [FINGERPRINT_COL])
-            .groupBy(FINGERPRINT_COL)
-            .agg(F.min("doc_id").alias("doc_id"))
-            # materialize BEFORE the commit: the lineage reads the
-            # pre-commit bucket files, which the commit's vacuum deletes
-            # (retain=0) — later re-evaluation would scan vanished paths
-            .localCheckpoint(eager=True)
+    def _window(self, ins=None, dels=None) -> DataFrame | None:
+        """``apply_gate_window`` on ``_fingerprints`` rows: fresh by
+        fingerprint, deleted on (fingerprint, registrant id)."""
+        fp = FINGERPRINT_COL
+        return apply_gate_window(
+            self.store, self.table, fp, [fp, "doc_id"], [fp], ins, dels, reduce=self._min_id
         )
-        if fresh.isEmpty():
-            return
-        commit_fresh(store, table, fresh, FINGERPRINT_COL, manifest)
+
+    def register(self, docs: DataFrame) -> None:
+        """Durably record ``docs``' fingerprints — an insert-only window.
+        Idempotent: content the table already holds registers nothing, so
+        replays (and supersets of earlier registrations) commit nothing.
+        The committed (fingerprint, first registrant id) rows are the
+        provenance a curation pipeline needs to answer "which document
+        made this one a duplicate". Out-of-band writers
+        (``engine.maintain()`` compacting the table under a live stream)
+        re-plan on the OCC abort; concurrent REGISTRARS serialize
+        externally — batches are the unit."""
+        self._window(ins=self._fingerprints(docs))
 
     def filter_new(self, batch: DataFrame) -> DataFrame:
         """select_new + register in one call: survivors (original schema),
         durably registered so a later batch — or a replay of this one —
-        treats them as seen.
-
-        Fused (r16, guide §1.2): the two-call form scans and anti-probes
-        the touched buckets TWICE — once inside select (to find fresh
-        content) and again inside register (to re-derive the same fresh
-        set from the survivors) — because each phase plans against its own
-        manifest read. Here both phases share ONE manifest, ONE bucket
-        probe and ONE touched-bucket scan: for the EXACT gate the
-        survivors' (fingerprint, min doc_id) pairs ARE the select phase's
-        fresh frame (identical content gates replays, so a survivor is
-        fresh by construction — unlike the near/embedding gates, whose
-        registers keep their own freshness anti-probe because self-matches
-        deliberately never gate there). Concurrency is unchanged: the
-        commit carries the planned manifest's version map, and an OCC
-        abort (out-of-band compaction) re-plans the WHOLE body against a
-        fresh manifest, exactly like register. Crash ordering is the
-        two-call form's: nothing is registered until the single commit."""
-        store, table = self.store, self.table
-        if not store.exists(table):
-            fresh = self._fresh_fps(batch).localCheckpoint(eager=True)
-            survivors = self._originals(batch, fresh).localCheckpoint(eager=True)
-            if not fresh.isEmpty():
-                store.write(table, fresh, key=FINGERPRINT_COL)
-            return survivors
-
-        def body() -> DataFrame:
-            manifest = store._read_manifest(table)
-            fps = self._fingerprints(batch)
-            touched = store.buckets_of(fps, key=FINGERPRINT_COL, table=table)
-            known = store._scan_manifest(table, manifest, touched)
-            fresh = (
-                anti_probe(fps, known, [FINGERPRINT_COL])
-                .groupBy(FINGERPRINT_COL)
-                .agg(F.min("doc_id").alias("doc_id"))
-                # materialized BEFORE the commit (vacuum deletes the bucket
-                # files this lineage reads), and the survivors join reads it
-                .localCheckpoint(eager=True)
-            )
-            survivors = self._originals(batch, fresh).localCheckpoint(eager=True)
-            if not fresh.isEmpty():
-                commit_fresh(store, table, fresh, FINGERPRINT_COL, manifest)
-            return survivors
-
-        return with_occ_retry(body)
+        treats them as seen. One window, not two phases (guide §1.2): for
+        the EXACT gate the survivors' (fingerprint, min doc_id) pairs ARE
+        the window's fresh rows (identical content gates replays — unlike
+        the near/embedding gates, where self-matches never gate), so the
+        survivors join the fresh frame the window returns."""
+        fresh = self._window(ins=self._fingerprints(batch))
+        return self._originals(batch, fresh).localCheckpoint(eager=True)
 
     def unregister(self, docs: DataFrame) -> None:
-        """Remove ``docs``' content fingerprints — the TAKEDOWN path: a
-        document deleted from the corpus (licensing, right-to-erasure)
-        must stop suppressing future near-identical text, or a revised
-        resubmission is rejected forever by a ghost. ``docs`` carries the
-        PRE-IMAGE content (exactly what a change feed's delete rows hold);
-        only rows whose (fingerprint, registrant id) BOTH match are
-        removed, so taking down a never-registered duplicate leaves the
-        surviving keeper's fingerprint — and the gate — intact.
-        Bucket-pruned by fingerprint, idempotent (a replay matches
-        nothing), OCC-guarded like register.
+        """Remove ``docs``' content fingerprints — a delete-only window,
+        the TAKEDOWN path: a document deleted from the corpus (licensing,
+        right-to-erasure) must stop suppressing future identical text,
+        or a revised resubmission is rejected forever by a ghost.
+        ``docs`` carries the PRE-IMAGE content (what a change feed's
+        delete rows hold); only rows whose (fingerprint, registrant id)
+        BOTH match are removed, so taking down a never-registered
+        duplicate leaves the keeper's fingerprint — and the gate —
+        intact. A replay matches nothing and commits nothing.
 
         Known non-refcounted edge: the gate stores ONE registrant per
         fingerprint, so if identical content entered the corpus OUTSIDE
@@ -648,41 +649,24 @@ class IncrementalDeduper:
         fingerprint is removed even though a copy survives — future
         identical submissions re-admit. Content-level refcounting is
         deliberately out of scope (gate-composed ingestion never admits
-        the second copy in the first place); corpora mutated out-of-band
-        should re-register the surviving corpus after takedowns — and
-        the drift this edge leaves is exactly what the sampled audit
-        detects and ``index_audit.repair_from_audit`` re-registers
-        (detect → repair → clean re-audit, the operational loop)."""
-        with_occ_retry(lambda: self._unregister_once(docs))
-
-    def _unregister_once(self, docs: DataFrame) -> None:
-        if not self.store.exists(self.table):
-            return
-        pairs = (
-            self._fingerprints(docs)
-            .select(FINGERPRINT_COL, "doc_id")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        delete_matching_rows(
-            self.store, self.table, pairs, [FINGERPRINT_COL, "doc_id"], FINGERPRINT_COL
-        )
+        the second copy in the first place); the drift this edge leaves
+        is exactly what the sampled audit detects and
+        ``index_audit.repair_from_audit`` re-registers."""
+        self._window(dels=self._fingerprints(docs))
 
     def apply_changes(self, feed: DataFrame) -> None:
         """Keep the gate tracking a mutating corpus from one change-feed
-        window (``read_changes`` output: table columns + ``_change_type``):
-        DELETE rows carry pre-images and unregister; insert/update
-        post-images register (idempotent — already-seen content adds
-        nothing). With the DEFAULT feed, UPDATE pre-images are absent
-        (``read_changes`` emits post-images for updates) and their
-        fingerprints stay by contract: the corpus genuinely contained
-        that content, and for a dedup gate "seen once, ever" is the
-        semantics — full erasure of updated-away content then needs the
-        rebuild path. A feed read with ``emit_update_preimages=True``
-        upgrades the contract: its ``update_preimage`` rows unregister
-        like deletes, so updated-away content retires incrementally
-        too."""
-        apply_feed_changes(self, feed)
+        window (``read_changes`` output) — both halves in ONE window and
+        one commit: delete rows retire their pre-images' fingerprints,
+        insert/update post-images register against the post-delete view.
+        With the DEFAULT feed, UPDATE pre-images are absent and their
+        fingerprints stay by contract: the corpus did contain that
+        content, and for a dedup gate "seen once, ever" is the semantics.
+        A feed read with ``emit_update_preimages=True`` retires its
+        ``update_preimage`` rows like deletes, so updated-away content
+        retires incrementally too."""
+        dels, ins = feed_halves(feed)
+        self._window(self._fingerprints(ins), self._fingerprints(dels))
 
     def _originals(self, batch: DataFrame, fresh_fps: DataFrame) -> DataFrame:
         """Survivor rows in the batch's ORIGINAL schema (semi-join on the
@@ -774,20 +758,34 @@ class IncrementalNearDeduper:
         # can't estimate — hint the broadcast rather than risk a sort-merge
         return batch.join(F.broadcast(dup_ids), self.id_col, "left_anti")
 
+    def _window(self, ins=None, dels=None) -> None:
+        """``apply_gate_window`` on band rows. Deleted on the (band,
+        band_key, doc_id) triple, which sweeps every signature generation
+        of a doc's band. Fresh on (doc_id, band_key, sig digest):
+        (doc_id, band_key) is the embedding gate's (bucket, vec_id)
+        design — an UPDATED doc shares some band keys with its old rows,
+        and a doc_id-only probe would drop ALL its new rows (a recall
+        hole). The digest closes the rest: band rows carry the doc's FULL
+        m0..m11 signature, so an update keeping a band's own slice would
+        otherwise leave that row scoring the OLD text in candidates().
+        Superseded same-key rows stay keep-seen ghosts (they still gate,
+        and max-agreement lets the fresh row dominate) until a pre-image
+        feed retires them."""
+        apply_gate_window(
+            self.store, self.table, "band_key", ["band", "band_key", "doc_id"],
+            ["doc_id", "band_key", "_sig_key"], ins, dels, digest=self._with_sig_key,
+        )
+
     def register(self, docs: DataFrame, _rows: DataFrame | None = None) -> None:
-        """Durably record ``docs``' band rows, idempotently per
-        (doc_id, band_key, sig) — replays register nothing, and an
-        UPDATED doc's rows commit whenever ANY of its signature changed,
-        even for band keys the update left intact (the embedding gate's
-        freshness design, widened by the signature digest; superseded
-        old rows stay keep-seen ghosts until a pre-image feed retires
-        them) — with the same OCC-guarded single partial commit and the
-        same out-of-band re-plan tolerance as the exact gate. ``_rows``:
-        precomputed band rows for exactly ``docs`` (must be re-derivable
-        WITHOUT reading store files — materialized, or a pure projection
-        over materialized frames — because a retry re-reads them after
-        the aborted plan's vacuum)."""
-        with_occ_retry(lambda: self._register_once(docs, _rows))
+        """Durably record ``docs``' band rows — an insert-only window,
+        idempotent per (doc_id, band_key, sig): replays register nothing,
+        and an UPDATED doc's rows commit whenever its signature changed
+        (``_window`` has the design). OCC-guarded like the exact gate.
+        ``_rows``: precomputed band rows for exactly ``docs``
+        (re-derivable WITHOUT reading store files — materialized, or a
+        pure projection over materialized frames — because a retry
+        re-reads them after the aborted plan's vacuum)."""
+        self._window(ins=_rows if _rows is not None else self._band_rows(docs))
 
     @staticmethod
     def _with_sig_key(rows: DataFrame) -> DataFrame:
@@ -803,46 +801,6 @@ class IncrementalNearDeduper:
                 )
             ),
         )
-
-    def _register_once(self, docs: DataFrame, _rows: DataFrame | None = None) -> None:
-        rows = _rows if _rows is not None else self._band_rows(docs)
-        store, table = self.store, self.table
-        if not store.exists(table):
-            store.write(table, rows, key="band_key")
-            return
-        manifest = store._read_manifest(table)
-        touched = store.buckets_of(rows, key="band_key", table=table)
-        index = store._scan_manifest(table, manifest, touched)
-        # Freshness key (doc_id, band_key, sig_digest). (doc_id, band_key)
-        # is the embedding gate's (bucket, vec_id) design — an UPDATED
-        # doc shares some band keys with its old rows, and a doc_id-only
-        # probe would see the doc in one shared bucket and drop ALL its
-        # new rows, permanently missing the new content's bands (a
-        # recall hole). The sig digest closes the REMAINING staleness:
-        # band rows carry the doc's FULL m0..m11 signature, so an update
-        # that keeps a band's own slice (same band_key) but changes other
-        # components would otherwise leave that row's sig columns frozen
-        # at the OLD content, and candidates()'s est_jaccard against it
-        # would score the doc's old text. With the digest in the key,
-        # any signature change re-registers every band row; superseded
-        # same-key rows become keep-seen ghosts (conservative — they
-        # still gate, and max-agreement in candidates() means the fresh
-        # row dominates for current content) until a pre-image feed
-        # retires them (apply_changes unregisters on the (band,
-        # band_key, doc_id) triple, which sweeps every generation).
-        # Replays still register nothing.
-        fresh = (
-            anti_probe(
-                self._with_sig_key(rows),
-                self._with_sig_key(index),
-                ["doc_id", "band_key", "_sig_key"],
-            )
-            .drop("_sig_key")
-            .localCheckpoint(eager=True)
-        )  # pre-commit lineage cut (vacuum)
-        if fresh.isEmpty():
-            return
-        commit_fresh(store, table, fresh, "band_key", manifest)
 
     def filter_new(self, batch: DataFrame) -> DataFrame:
         """select_new + register in one call — sharing ONE band-row
@@ -864,37 +822,20 @@ class IncrementalNearDeduper:
         return survivors
 
     def unregister(self, docs: DataFrame) -> None:
-        """Remove ``docs``' band rows — the near gate's takedown path
-        (mirrors the exact gate's ``unregister``). ``docs`` carries the
-        PRE-IMAGE content AS REGISTERED: band keys are recomputed from it
-        and pruned to their own buckets, so deletion is O(batch), never an
-        index scan. Rows are matched on (band, band_key, doc_id) — all
-        three — so a hash-coincident other document is never touched.
-        Idempotent, OCC-guarded."""
-        with_occ_retry(lambda: self._unregister_once_near(docs))
-
-    def _unregister_once_near(self, docs: DataFrame) -> None:
-        if not self.store.exists(self.table):
-            return
-        # pairs may be empty when every deleted doc was too short to
-        # shingle — delete_matching_rows no-ops on that
-        pairs = (
-            self._band_rows(docs)
-            .select("band", "band_key", "doc_id")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        delete_matching_rows(
-            self.store, self.table, pairs, ["band", "band_key", "doc_id"], "band_key"
-        )
+        """Remove ``docs``' band rows — a delete-only window, the near
+        gate's takedown path. ``docs`` carries the PRE-IMAGE content AS
+        REGISTERED: band keys are recomputed from it and pruned to their
+        own buckets, so deletion is O(batch), never an index scan. Rows
+        match on (band, band_key, doc_id) — all three — so a
+        hash-coincident other document is never touched; docs too short
+        to shingle delete nothing. Idempotent, OCC-guarded."""
+        self._window(dels=self._band_rows(docs))
 
     def apply_changes(self, feed: DataFrame) -> None:
-        """Same change-feed contract as the exact gate's ``apply_changes``
-        (see it for the update-pre-image pin and the
-        ``emit_update_preimages`` upgrade): deletes — and, when present,
-        ``update_preimage`` rows — unregister their pre-image band rows,
-        insert/update post-images register."""
-        apply_feed_changes(self, feed)
+        """The exact gate's ``apply_changes`` contract, on band rows: one
+        window, one commit."""
+        dels, ins = feed_halves(feed)
+        self._window(self._band_rows(ins), self._band_rows(dels))
 
     def _candidates_against(self, rows: DataFrame, index: DataFrame) -> DataFrame:
         from stripe_sync_engine_spark.plans.dedup import MINHASH_SEEDS
@@ -971,7 +912,7 @@ class ContaminationGate:
             fresh = anti_probe(grams, known, ["gram"]).localCheckpoint(eager=True)
             n = fresh.count()
             if n:
-                commit_fresh(store, table, fresh, "gram", manifest)
+                commit_window(store, table, "gram", manifest, fresh)
             return n
 
         return with_occ_retry(attempt)

@@ -399,29 +399,12 @@ def _delete_ids_store_wide(gate, ids: DataFrame) -> None:
     ``vec_id``), at whatever bucket it lives — the repair-path takedown
     that also reaches old-bucket ghosts left by out-of-band embedding
     changes. One column-pruned scan of the index (bucket, vec_id)
-    semi-joined to the broadcast drifted ids (sample-bounded), then the
-    gates' shared bucket-pruned delete; OCC-guarded like every gate
-    mutation."""
-    from stripe_sync_engine_spark.operators.incremental_dedup import (
-        delete_matching_rows,
-        with_occ_retry,
-    )
-
-    def attempt():
-        if not gate.store.exists(gate.table):
-            return
-        pairs = (
-            gate.store.read(gate.table)
-            .select("bucket", "vec_id")
-            .join(F.broadcast(ids), "vec_id", "left_semi")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        delete_matching_rows(
-            gate.store, gate.table, pairs, ["bucket", "vec_id"], "bucket"
-        )
-
-    with_occ_retry(attempt)
+    semi-joined to the broadcast drifted ids (sample-bounded) gives the
+    explicit delete pairs of one delete-only window through the gate's
+    own window routine, OCC-guarded like every gate mutation."""
+    if gate.store.exists(gate.table):
+        index = gate.store.read(gate.table)
+        gate._window(dels=index.join(F.broadcast(ids), "vec_id", "left_semi"))
 
 
 def repair_from_audit(

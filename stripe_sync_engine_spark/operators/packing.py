@@ -312,7 +312,7 @@ class IncrementalPacker:
         from stripe_sync_engine_spark.operators.incremental_dedup import (
             FoldLedger,
             anti_probe,
-            commit_fresh,
+            commit_window,
             with_occ_retry,
         )
 
@@ -338,9 +338,7 @@ class IncrementalPacker:
             fresh = anti_probe(rows, known, ["shard", "batch_id"]).localCheckpoint(
                 eager=True
             )
-            if fresh.isEmpty():
-                return
-            commit_fresh(store, table, fresh, "shard", manifest)
+            commit_window(store, table, "shard", manifest, fresh)
 
         with_occ_retry(once)
 

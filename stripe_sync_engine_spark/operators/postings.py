@@ -465,8 +465,8 @@ class PersistedPostingsIndex:
         # stats → postings → forward. A table the window creates commits
         # by a full store.write in the same slot. Rewrite lineages stay
         # uncheckpointed: each write consumes its lineage exactly once
-        # while the old version files still exist (delete_matching_rows
-        # has the rationale). NULL-term sentinels never reach the
+        # while the old version files still exist (commit_window has the
+        # rationale). NULL-term sentinels never reach the
         # postings table.
         def prep_postings():
             if pm is None:

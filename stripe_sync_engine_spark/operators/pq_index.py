@@ -959,7 +959,7 @@ class PersistedIVFPQ:
         # table the window creates commits by a full store.write in the
         # same slot. Rewrite lineages stay uncheckpointed: each write
         # consumes its lineage exactly once while the old version files
-        # still exist (delete_matching_rows has the rationale).
+        # still exist (commit_window has the rationale).
         def prep_codes():
             if pm is None:
                 return lambda: store.write(table, rows, key="cell")

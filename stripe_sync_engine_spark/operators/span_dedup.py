@@ -45,7 +45,7 @@ from pyspark.sql.window import Window
 from stripe_sync_engine_spark.operators.incremental_dedup import (
     FoldLedger,
     anti_probe,
-    commit_fresh,
+    commit_window,
     fold_batch_rows,
     with_occ_retry,
 )
@@ -377,9 +377,7 @@ class IncrementalSpanDeduper:
             # (retain=0) — later re-evaluation would scan vanished paths
             .localCheckpoint(eager=True)
         )
-        if fresh.isEmpty():
-            return
-        commit_fresh(store, table, fresh, "h", manifest)
+        commit_window(store, table, "h", manifest, fresh)
 
     def filter_batch(self, batch: DataFrame, batch_id: str) -> DataFrame:
         """spans_in + clip + register in one call: the batch with

@@ -38,7 +38,7 @@ from stripe_sync_engine_spark.operators.incremental_dedup import (
     IncrementalDeduper,
     IncrementalNearDeduper,
     anti_probe,
-    commit_fresh,
+    commit_window,
     with_occ_retry,
 )
 
@@ -132,8 +132,8 @@ def _merge_documents(store, table: str, rows: DataFrame) -> int:
         n = fresh.count()
         if n:
             # only the buckets gaining rows are rewritten; replay-only
-            # buckets stay untouched (incremental_dedup.commit_fresh)
-            commit_fresh(store, table, fresh, "doc_id", manifest)
+            # buckets stay untouched (incremental_dedup.commit_window)
+            commit_window(store, table, "doc_id", manifest, fresh)
         return n
 
     # re-plan if an out-of-band maintain() compaction lands mid-merge

@@ -39,7 +39,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from stripe_sync_engine_spark.commitio import atomic_write_json
-from stripe_sync_engine_spark.operators.incremental_dedup import anti_probe, with_occ_retry
+from stripe_sync_engine_spark.operators.incremental_dedup import (
+    anti_probe,
+    run_parallel,
+    with_occ_retry,
+)
 from stripe_sync_engine_spark.operators.merge import (
     delete_by_keys,
     latest_by_key,
@@ -1772,7 +1776,7 @@ class StripeSparkSync:
         independent jobs): each target owns disjoint store tables, so
         their many small probe/commit jobs back-fill each other's
         scheduler idle time instead of serializing; wall per window is
-        max(target), not sum. Failure semantics are unchanged — every
+        max(target), not sum. Failure semantics (``run_parallel``'s): every
         target's outcome is awaited, and the first failure (in declared
         target order, deterministically) propagates so the caller never
         acks a partially failed window. At-least-once already tolerated
@@ -1787,23 +1791,12 @@ class StripeSparkSync:
             ).alias("net"),
         ).first()
         if counts["all"]:
-            tasks = [(f"gate:{i}", g.apply_changes, (feed,)) for i, g in enumerate(gates)]
+            tasks = [lambda g=g: g.apply_changes(feed) for g in gates]
             if postings is not None:
-                tasks.append(("postings", postings.apply_changes, (feed, window)))
+                tasks.append(lambda: postings.apply_changes(feed, window))
             if ann is not None:
-                tasks.append(("ann", ann.apply_changes, (feed, window)))
-            if len(tasks) <= 1:
-                for _, fn, args in tasks:
-                    fn(*args)
-            else:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=min(len(tasks), 4)) as pool:
-                    futs = [(name, pool.submit(fn, *args)) for name, fn, args in tasks]
-                    errs = [(name, f.exception()) for name, f in futs]
-                first_err = next((e for _, e in errs if e is not None), None)
-                if first_err is not None:
-                    raise first_err
+                tasks.append(lambda: ann.apply_changes(feed, window))
+            run_parallel(*tasks)
         return int(counts["net"]), feed
 
     def materialize_changes(

@@ -1158,7 +1158,10 @@ def test_incremental_dedup_apply_changes_window(spark, tmp_path):
     feed = store.read_changes("corpus", t0).localCheckpoint(eager=True)
     kinds = {r["_change_type"] for r in feed.select("_change_type").distinct().collect()}
     assert kinds == {"insert", "update", "delete"}
+    n_commits = len(store.commits(dd.table))
     dd.apply_changes(feed)
+    # both halves land in ONE commit of the gate table
+    assert len(store.commits(dd.table)) == n_commits + 1
 
     probe = spark.createDataFrame(
         [(21, "alpha"), (22, "gamma"), (23, "gamma prime"), (24, "delta")],
@@ -1175,6 +1178,18 @@ def test_incremental_dedup_apply_changes_window(spark, tmp_path):
     dd.apply_changes(feed)
     assert store.read(dd.table).count() == n
     assert {r["doc_id"] for r in dd.select_new(probe).collect()} == {21}
+
+    # an in-window content swap: doc 5 deletes 'x' while doc 6 inserts
+    # it — 'x' stays registered, now under the inserter
+    dd.register(spark.createDataFrame([(5, "x")], "doc_id long, text string"))
+    dd.apply_changes(
+        spark.createDataFrame(
+            [(5, "x", "delete"), (6, "x", "insert")],
+            "doc_id long, text string, _change_type string",
+        )
+    )
+    owners = store.read(dd.table).where(F.col("fingerprint") == F.md5(F.lit("x")))
+    assert [r["doc_id"] for r in owners.collect()] == [6]
 
 
 def test_incremental_dedup_apply_changes_with_update_preimages(spark, tmp_path):
@@ -1574,7 +1589,7 @@ def test_register_replans_on_occ_race(spark, tmp_path, monkeypatch):
     dd = mod.IncrementalDeduper(store)
     dd.register(spark.createDataFrame([(1, "one")], "doc_id long, text string"))
 
-    real = mod.commit_fresh
+    real = mod.commit_window
     fails = {"left": 1}
 
     def flaky(*a, **kw):
@@ -1586,7 +1601,7 @@ def test_register_replans_on_occ_race(spark, tmp_path, monkeypatch):
             )
         return real(*a, **kw)
 
-    monkeypatch.setattr(mod, "commit_fresh", flaky)
+    monkeypatch.setattr(mod, "commit_window", flaky)
     dd.register(spark.createDataFrame([(2, "two")], "doc_id long, text string"))
     assert fails["left"] == 0 and dd.seen_count() == 2
 
@@ -1594,7 +1609,7 @@ def test_register_replans_on_occ_race(spark, tmp_path, monkeypatch):
     def always(*a, **kw):
         raise RuntimeError("disk on fire")
 
-    monkeypatch.setattr(mod, "commit_fresh", always)
+    monkeypatch.setattr(mod, "commit_window", always)
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError, match="disk on fire"):
