@@ -16,10 +16,18 @@ Equivalence to the JVM expression is pinned by
 ``tests/test_operators.py::test_xxh64_matches_spark`` over ascii /
 unicode / long / empty strings and integer casts; a mismatch here would
 silently read the wrong buckets, which is why the test sweeps the
-stripe (>= 32 bytes), 8/4/1-byte tail, and multi-block paths.
+stripe (>= 32 bytes), 8/4/1-byte tail, and multi-block paths. A Spark
+whose ``xxhash64`` or string cast differs is caught at run time too:
+``driver_hash_matches`` checks a probe vector against the running
+SparkContext before the first driver-side hash, and its callers fall
+back to the Spark expression on a mismatch.
 """
 
 from __future__ import annotations
+
+import logging
+import threading
+import weakref
 
 _P1 = 0x9E3779B185EBCA87
 _P2 = 0xC2B2AE3D27D4EB4F
@@ -30,6 +38,23 @@ _M = (1 << 64) - 1
 
 #: Spark's fixed seed for the ``xxhash64`` SQL expression
 SPARK_SEED = 42
+
+#: ``driver_hash_matches``' probe vector: a 45-byte string (the 32-byte
+#: stripe loop plus an 8-, a 4- and a 1-byte tail), one string per tail
+#: path on its own, a non-ASCII string and an int (Spark's long→string cast)
+PARITY_PROBE = (
+    "driver-side bucket placement probe: 45 bytes!",
+    "8 bytes!",
+    "four",
+    "1",
+    "ünïcødé 汉字 🙂",
+    -9007199254740993,
+)
+
+#: SparkContext → whether the probe vector matched (weak keys: a stopped
+#: context's entry goes with it, and no lookup costs a JVM round trip)
+_PARITY: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_PARITY_LOCK = threading.Lock()
 
 
 def _rotl(x: int, r: int) -> int:
@@ -94,3 +119,43 @@ def spark_xxhash64_str(value: str | int) -> int:
         )
     h = xxh64(str(value).encode("utf-8"))
     return h - (1 << 64) if h >= (1 << 63) else h
+
+
+def driver_hash_matches(spark) -> bool:
+    """Whether ``spark_xxhash64_str`` equals the running Spark's
+    ``xxhash64(cast(v as string))`` on ``PARITY_PROBE`` — one small Spark
+    job per SparkContext, memoized per context. A mismatch logs
+    one warning; the driver-side hash callers
+    (``TableStore.bucket_counts_of_values``/``buckets_of_values`` and
+    the postings ``topk`` term hashes) then take the Spark expression,
+    which costs a job per probe but never places a row in the wrong
+    bucket."""
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    with _PARITY_LOCK:
+        if sc not in _PARITY:
+            rows = [
+                (i, v, None) if isinstance(v, str) else (i, None, v)
+                for i, v in enumerate(PARITY_PROBE)
+            ]
+            text = F.coalesce(F.col("s"), F.col("n").cast("string"))
+            got = [
+                r["h"]
+                for r in spark.createDataFrame(rows, "i int, s string, n long")
+                .orderBy("i")
+                .select(F.xxhash64(text).alias("h"))
+                .collect()
+            ]
+            bad = [v for v, h in zip(PARITY_PROBE, got) if spark_xxhash64_str(v) != h]
+            if bad:
+                logging.getLogger(__name__).warning(
+                    "driver-side XXH64 disagrees with this Spark's xxhash64 on "
+                    "%d of %d probe values (%r); bucket probes of driver-known "
+                    "keys fall back to Spark jobs",
+                    len(bad),
+                    len(PARITY_PROBE),
+                    bad,
+                )
+            _PARITY[sc] = not bad
+        return _PARITY[sc]

@@ -44,7 +44,9 @@ change-feed ``apply_changes``, for these two gates and for
 ``apply_gate_window``: an insert half, a delete half, or both, applied
 in one OCC body against one manifest with at most one commit into only
 the buckets that gain or lose rows. A change window therefore commits
-each gate table once, and no crash can land between its halves.
+each gate table once, and no crash can land between its halves. The
+BM25 postings and IVF-PQ indexes, whose deletes go through a forward
+table, share its two-table sibling, ``apply_forward_window``.
 
 Intra-batch semantics: the exact gate collapses within-batch duplicates
 to the min-id row (``dd_exact``'s convention); the near gate admits
@@ -105,8 +107,8 @@ def run_parallel(*thunks):
     their results in argument order (first raised exception propagates).
 
     ONE implementation of the overlap-independent-jobs blocks (guide
-    §2.6): the derived indexes' window routine (postings/pq
-    ``_apply_window_once``, the only write path of ``register``,
+    §2.6): the forward-indexed window routine (``apply_forward_window``,
+    the only write path of the postings and IVF-PQ indexes' ``register``,
     ``unregister`` and ``apply_changes``), ``checkpoint_parallel``, and
     the engine's CDC fan-out (``engine._apply_change_window`` runs each
     target's ``apply_changes`` as one thunk). Every thunk is awaited —
@@ -146,15 +148,18 @@ def checkpoint_parallel(*dfs: DataFrame) -> tuple[DataFrame, ...]:
     with no commit-order semantics, so overlap is semantically
     invisible. Callers must only group frames with NO mutual lineage
     dependency (a frame derived from another's checkpoint belongs in a
-    later phase)."""
-    if len(dfs) <= 1:
-        return tuple(df.localCheckpoint(eager=True) for df in dfs)
-    return run_parallel(*[lambda d=d: d.localCheckpoint(eager=True) for d in dfs])
+    later phase). A None argument comes back as None."""
+    return run_parallel(
+        *[lambda d=d: None if d is None else d.localCheckpoint(eager=True) for d in dfs]
+    )
 
 
-def anti_probe(batch: DataFrame, indexed: DataFrame, keys: list[str]) -> DataFrame:
+def anti_probe(
+    batch: DataFrame, indexed: DataFrame, keys: list[str], null_safe: bool = False
+) -> DataFrame:
     """Rows of ``batch`` whose keys are absent from ``indexed``, with the
-    indexed side never shuffled OR broadcast.
+    indexed side never shuffled OR broadcast. ``null_safe`` matches NULL
+    keys as equal (``<=>``), so a NULL-keyed row is found on replay.
 
     A plain ``batch.join(indexed, keys, "left_anti")`` can only build its
     hash table from ``indexed`` (the anti's right side) — fine while a
@@ -166,9 +171,13 @@ def anti_probe(batch: DataFrame, indexed: DataFrame, keys: list[str]) -> DataFra
     ≤|batch| matches back into ``batch``. The gates' contract is that
     batches are micro-batch sized (bulk loads belong to the one-shot
     corpus plans), so both broadcasts are bounded by the batch."""
+
+    def on(a: DataFrame, b: DataFrame):
+        return [a[k].eqNullSafe(b[k]) for k in keys] if null_safe else keys
+
     probe = F.broadcast(batch.select(*keys).distinct())
-    seen = indexed.join(probe, keys, "left_semi").select(*keys).distinct()
-    return batch.join(F.broadcast(seen), keys, "left_anti")
+    seen = indexed.join(probe, on(indexed, probe), "left_semi").select(*keys).distinct()
+    return batch.join(F.broadcast(seen), on(batch, seen), "left_anti")
 
 
 def with_occ_retry(body, attempts: int = 3):
@@ -316,51 +325,179 @@ def feed_halves(feed: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
 
 
-def window_delete_targets(
-    forward: DataFrame, ids: DataFrame, id_col: str, ins_id: str | None
-) -> DataFrame:
-    """The forward-table rows a CDC window deletes, materialized: every
-    row of the window's delete ``ids`` except those its own insert half
-    already registered under ``ins_id`` (a crash replay of an update
-    must not tear down the new version it landed). ``ins_id`` None — a
-    delete-only window — keeps nothing."""
+def feed_id_halves(feed: DataFrame, id_col: str) -> tuple[DataFrame, DataFrame]:
+    """``feed_halves`` for an index that deletes by id through its
+    forward table (postings, IVF-PQ): (``id_col`` of the delete and
+    update rows, post-images to insert). ``update_preimage`` rows are
+    ignored — the forward table already knows what an id registered."""
+    changed = ensure_local_checkpoint(feed)
+    kind = F.col("_change_type")
     return (
-        forward.join(F.broadcast(ids), id_col, "left_semi")
-        .where(~F.col("batch_id").eqNullSafe(F.lit(ins_id).cast("string")))
-        .localCheckpoint(eager=True)
+        changed.where(kind.isin("delete", "update")).select(id_col),
+        changed.where(kind.isin("insert", "update")).drop("_change_type"),
     )
 
 
-def window_forward_keep(
-    forward: DataFrame, ids: DataFrame, id_col: str, ins_id: str | None, has_del: bool
-) -> DataFrame:
-    """The post-delete view of ``forward``: rows of the window's delete
-    ``ids`` drop out, except the ones ``window_delete_targets`` spares
-    (registered under ``ins_id``). ``has_del`` False (no targets) is the
-    identity, without the extra joins."""
-    if not has_del:
-        return forward
-    kept = F.col("batch_id").eqNullSafe(F.lit(ins_id).cast("string"))
-    return forward.join(F.broadcast(ids), id_col, "left_anti").unionByName(
-        forward.where(kept).join(F.broadcast(ids), id_col, "left_semi")
-    )
-
-
-def check_birth_replay(
-    store, table: str, forward_table: str, rows: DataFrame, keys: list[str], remedy: str
+def apply_forward_window(
+    store,
+    primary: tuple[str, str, list[str]],
+    forward: tuple[str, str, list[str]],
+    derive,
+    ins: DataFrame | None,
+    dels: DataFrame | None,
+    ins_id: str | None,
+    *,
+    remedy: str,
+    checks: tuple[tuple[str, str, str], ...] = (),
+    side=None,
 ) -> None:
-    """Called when a window finds ``table`` but not its forward table.
-    If every row of ``table`` belongs to this window (``rows``, matched
-    on ``keys``), this is the replay of a birth that crashed after the
-    primary write: the caller goes on with an empty forward view and its
-    forward write heals the index. Any other row means the index
-    predates its forward table, which no window can rebuild: raise."""
-    stray = store.read(table).select(*keys).join(rows.select(*keys), keys, "left_anti")
-    if not stray.isEmpty():
-        raise RuntimeError(
-            f"{table!r} has no forward table ({forward_table!r}) and holds rows "
-            f"outside this window — it predates delete support; {remedy}"
+    """ONE window routine for the forward-indexed derived indexes (BM25
+    postings, IVF-PQ): ``register`` is an insert-only window,
+    ``unregister`` a delete-only one, ``apply_changes`` both, and the
+    index's birth is a window against empty state. The missing half of a
+    one-sided window is None.
+
+    An index passes its inputs as data plus one derivation:
+    ``primary``/``forward`` are ``(table, bucket key, freshness keys)``;
+    the forward table's bucket key is the document id, and its rows
+    carry ``batch_id`` plus the primary bucket key they were written
+    under, so (bucket key, id) are the primary's delete pairs. ``ins`` is
+    the new half's first derivation (a tokenization, an encoding), whose
+    ``derive(base)`` gives the (primary rows, forward rows) of its
+    checkpoint ``base``; ``dels`` holds the ids to delete; ``ins_id`` is
+    the insert half's batch id. ``checks`` are ``(table, column,
+    message)``: a kept row of that table whose ``column`` differs from
+    the new row for its id raises ``message.format(ids)`` — an identity
+    change smuggled in without its delete half. ``side(base, targets)``
+    is an optional side commit that lands first (postings' stats).
+
+    Steps, once under ``with_occ_retry``: read both manifests; derive
+    the new rows while the forward bucket probe (the window's ids) runs;
+    take the delete ``targets`` from that forward view, sparing rows
+    already under ``ins_id`` (a crash replay of an update must not tear
+    down the version it landed); then prepare the primary and forward
+    rewrites concurrently with the side commit. Each rewrite is ONE job
+    that scans its write-set buckets (buckets losing ∪ buckets gaining
+    rows), drops the window's delete pairs, runs the checks, anti-probes
+    the new rows against that post-delete view (NULL-safely: postings'
+    token-less sentinel rows have a NULL term hash) and writes a private
+    version dir (``prepare_buckets``). Commits stay strictly sequential —
+    side, primary, then forward LAST, because the forward rows are the
+    replay's memory. Every probe runs against the view AFTER the
+    window's deletes, so an update lands exactly as unregister-then-
+    register would. Rewrite lineages stay uncheckpointed: each write
+    consumes its lineage once while the old version files still exist
+    (``commit_window`` has the rationale); the write sets are the probed
+    buckets, so a replay's wasted IO is bounded by the window's own
+    fan-out.
+
+    Birth: a missing table reads as empty and is created by a full
+    ``store.write`` at its place in the commit order; a birth with
+    nothing to add creates nothing. A primary table WITHOUT its forward
+    table is the replay of a birth that crashed between the two when
+    every primary row belongs to this window; otherwise the index
+    predates its forward table and the window raises naming ``remedy``.
+
+    Replay matrix (crash after any prefix of the commits, then
+    re-apply; a crash before the first commit is a plain retry).
+    Postings (stats → postings → forward): [stats] dec recomputed from
+    the still-present forward rows and skipped by the batch_id
+    anti-probe, inc likewise; postings and forward proceed (at birth:
+    are created). [stats, postings] targets still non-empty, so the
+    postings rewrite re-lands byte-identically (delete hits nothing,
+    freshness re-admits nothing); forward proceeds (at birth: the
+    birth-replay check passes and forward is created). [all] targets is
+    empty (old rows gone, the update's rows carry the kept ins id), every
+    freshness probe is empty, both rewrites degrade to no-op rewrites of
+    the touched buckets. IVF-PQ (codes → forward): [codes] same targets,
+    the codes rewrite re-lands byte-identically, forward proceeds (at
+    birth: as postings). [both] as postings' [all], and the checks
+    compare equal cells/codes."""
+    table, key, fresh_p = primary
+    ftable, fkey, fresh_f = forward
+    base, ids = checkpoint_parallel(ins, None if dels is None else dels.distinct())
+    new_rows, new_fwd = (None, None) if base is None else derive(base)
+    spared = F.col("batch_id").eqNullSafe(F.lit(ins_id).cast("string"))
+
+    def prepare(name, bkey, manifest, view, new, fresh, write_set):
+        for t, col, message in checks:
+            if t == name and new is not None:
+                bad = view.join(
+                    F.broadcast(new.select(fkey, F.col(col).alias("_new"))), fkey
+                ).where(F.col(col) != F.col("_new"))
+                if not bad.isEmpty():
+                    raise RuntimeError(
+                        message.format([r[fkey] for r in bad.select(fkey).limit(5).collect()])
+                    )
+        if new is not None:
+            view = view.unionByName(anti_probe(new, view, fresh, null_safe=True))
+        prep = store.prepare_buckets(name, view, write_set, key=bkey)
+        return lambda: store.commit_prepared(prep, planned_versions=dict(manifest["buckets"]))
+
+    def body() -> None:
+        fm, pm = store._read_manifest(ftable), store._read_manifest(table)
+        rows, probe = run_parallel(
+            lambda: None if new_rows is None else ensure_local_checkpoint(new_rows),
+            lambda: []
+            if fm is None
+            else store.buckets_of(_keys_of(fkey, ids, base), key=fkey, table=ftable),
         )
+        known = targets = pairs = None
+        if fm is None:
+            if pm is not None:
+                stray = store.read(table).select(key, fkey)
+                if rows is not None:
+                    stray = stray.join(rows.select(key, fkey), [key, fkey], "left_anti")
+                if not stray.isEmpty():
+                    raise RuntimeError(
+                        f"{table!r} has no forward table ({ftable!r}) and holds rows "
+                        f"outside this window — it predates delete support; {remedy}"
+                    )
+            elif base is None or base.isEmpty():
+                return  # birth with nothing to add: create no tables
+        else:
+            known = store._scan_manifest(ftable, fm, probe)
+            if ids is not None:
+                hit = known.join(F.broadcast(ids), fkey, "left_semi").where(~spared)
+                hit = hit.localCheckpoint(eager=True)
+                targets = None if hit.isEmpty() else hit
+        if targets is not None:
+            marked = F.broadcast(ids.withColumn("_del", F.lit(True)))
+            known = (
+                known.join(marked, fkey, "left")
+                .where(F.col("_del").isNull() | spared)
+                .drop("_del")
+            )
+            pairs = targets.where(F.col(key).isNotNull()).select(key, fkey).distinct()
+
+        def prep_primary():
+            if pm is None:
+                return None if rows is None else (lambda: store.write(table, rows, key=key))
+            if rows is None and pairs is None:
+                return None
+            write_set = store.buckets_of(_keys_of(key, rows, pairs), key=key, table=table)
+            if not write_set:
+                return None
+            view = store._scan_manifest(table, pm, write_set)
+            if pairs is not None:
+                view = view.join(F.broadcast(pairs), [key, fkey], "left_anti")
+            return prepare(table, key, pm, view, rows, fresh_p, write_set)
+
+        def prep_forward():
+            if fm is None:
+                return None if new_fwd is None else (lambda: store.write(ftable, new_fwd, key=fkey))
+            if not probe or (new_fwd is None and targets is None):
+                return None
+            return prepare(ftable, fkey, fm, known, new_fwd, fresh_f, probe)
+
+        _, commit_p, commit_f = run_parallel(
+            lambda: None if side is None else side(base, targets), prep_primary, prep_forward
+        )
+        for commit in (commit_p, commit_f):
+            if commit is not None:
+                commit()
+
+    with_occ_retry(body)
 
 
 class FoldLedger:

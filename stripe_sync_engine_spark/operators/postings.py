@@ -40,13 +40,14 @@ Tables:
   Token-less docs keep a NULL-term sentinel row so their stats
   contribution stays reversible.
 
-Every write is ONE window routine (``_apply_window_once``): a set of
-doc ids to delete and a batch of documents to add, committed as one
-merged version per table in the order stats → postings → forward.
-``register`` is an insert-only window, ``unregister`` a delete-only
-window, ``apply_changes`` (the CDC-driven path that keeps the index
-tracking a mutating corpus without rescans) both, and the index's birth
-is a window against empty state. Idempotence follows the span gate's
+Every write is one window of ``incremental_dedup.apply_forward_window``,
+the routine IVF-PQ shares: a set of doc ids to delete and a batch of
+documents to add, committed as one merged version per table in the
+order stats (the side commit) → postings → forward. ``register`` is an
+insert-only window, ``unregister`` a delete-only window,
+``apply_changes`` (the CDC-driven path that keeps the index tracking a
+mutating corpus without rescans) both, and the index's birth is a
+window against empty state. Idempotence follows the span gate's
 per-batch design (``operators/span_dedup``): postings anti-probe on
 (term_h, doc_id) — a replayed batch, or a half-committed crash, commits
 only what is missing; stats anti-probe on batch_id. Feed each document
@@ -67,14 +68,10 @@ from pyspark.sql import functions as F
 
 from stripe_sync_engine_spark.operators.incremental_dedup import (
     FoldLedger,
-    anti_probe,
-    check_birth_replay,
-    checkpoint_parallel,
+    apply_forward_window,
+    feed_id_halves,
     fold_batch_rows,
-    run_parallel,
-    window_delete_targets,
-    window_forward_keep,
-    with_occ_retry,
+    sub_batch_id,
 )
 from stripe_sync_engine_spark.plans.textops import BM25_B, BM25_K1, tokens_nonempty
 
@@ -131,13 +128,13 @@ class PersistedPostingsIndex:
 
     def register(self, batch: DataFrame, batch_id: str) -> None:
         """Durably add the batch's postings + stats increment: an
-        insert-only window (``_apply_window_once``). Idempotent per
+        insert-only window (``apply_forward_window``). Idempotent per
         (term_h, doc_id) and per stats batch_id — replays and
         half-committed crashes heal. Raises if ``batch_id`` was already
         absorbed by ``fold_stats`` (the enforced replay horizon: a folded
         batch's stats row is gone, so the anti-probe would re-admit its
         increment and inflate N/avgdl silently)."""
-        self._apply(batch.select(self.id_col).where(F.lit(False)), batch, None, batch_id)
+        self._window(None, batch, None, batch_id)
 
     def fold_stats(self, into_batch_id: str = "_folded") -> dict | None:
         """Collapse the per-batch stats rows into ONE ``into_batch_id``
@@ -179,16 +176,28 @@ class PersistedPostingsIndex:
             F.lit(batch_id).cast("string").alias("batch_id"),
         )
 
-    def _commit_stats(self, inc: DataFrame) -> None:
-        """Idempotently append stats rows (anti-probed on batch_id): the
-        window's negative delta and positive increment; query-time SUM
-        nets them out. A row with ``n_docs == 0`` (an empty half of the
-        window) carries nothing and is skipped: writing it would only
-        grow the stats table and burn its batch id in the fold ledger.
+    def _commit_stats(
+        self,
+        base: DataFrame | None,
+        targets: DataFrame | None,
+        del_id: str | None,
+        ins_id: str | None,
+    ) -> None:
+        """The window's side commit: idempotently append stats rows
+        (anti-probed on batch_id) — the negative delta under ``del_id``
+        from the forward ``targets`` the window deletes (they outlive
+        this commit) and the increment under ``ins_id`` from the batch's
+        tokenization ``base`` (so a replay of a partially committed
+        window records the SAME totals); query-time SUM nets them out.
+        NULL-text docs count in n_docs but not n_dl_docs/total_dl —
+        exactly how the one-shot scan's count(*)/avg(dl) treat them. A
+        row with ``n_docs == 0`` (an empty half of the window) carries
+        nothing and is skipped: writing it would only grow the stats
+        table and burn its batch id in the fold ledger.
 
-        ``inc`` is a HANDFUL of agg rows by construction (one per
-        sub-batch), so the ENTIRE commit runs driver-side (r16, guide
-        §1.2 — the window's cost is per-commit overhead, not compute):
+        The rows are a HANDFUL by construction (one per sub-batch), so
+        the ENTIRE commit runs driver-side (r16 — the window's cost is
+        per-commit overhead, not compute):
         ONE Spark job collects the rows plus their bucket ids; the
         freshness probe reads the touched buckets' few rows with pyarrow,
         and the partial write lands via the store's driver-side
@@ -198,10 +207,32 @@ class PersistedPostingsIndex:
         form itself replaced the generic anti-probe machinery, ~1s of
         jobs to commit two 4-column rows). A missing stats table is
         created by a plain ``store.write``."""
+        from functools import reduce
+
         from pyspark.sql.types import StructType
 
+        def delta(docs: DataFrame, sign: int, batch_id: str | None) -> DataFrame:
+            return docs.agg(
+                (sign * F.count(F.lit(1))).cast("long").alias("n_docs"),
+                (sign * F.count("dl")).cast("long").alias("n_dl_docs"),
+                (sign * F.coalesce(F.sum("dl"), F.lit(0))).cast("long").alias("total_dl"),
+            ).select(
+                F.lit(batch_id).cast("string").alias("batch_id"),
+                "n_docs",
+                "n_dl_docs",
+                "total_dl",
+            )
+
+        halves = []
+        if targets is not None:
+            per_doc = targets.groupBy("doc_id").agg(F.max("dl").alias("dl"))
+            halves.append(delta(per_doc, -1, del_id))
+        if base is not None:
+            halves.append(delta(base, 1, ins_id))
+        if not halves:
+            return
         store = self.store
-        inc = inc.where(F.col("n_docs") != 0)
+        inc = reduce(DataFrame.unionByName, halves).where(F.col("n_docs") != 0)
         manifest = store._read_manifest(self.stats_table)
         if manifest is None:
             store.write(self.stats_table, inc, key="batch_id")
@@ -245,7 +276,7 @@ class PersistedPostingsIndex:
         forward-index bucket-pruned (O(batch) probes, never a postings
         scan), with a NEGATIVE stats delta row so query-time N/avgdl net
         out. Idempotent per ``batch_id``; a crash anywhere replays to the
-        same state (``_apply_window_once`` has the replay matrix). Raises
+        same state (``apply_forward_window`` has the replay matrix). Raises
         on indexes built before the forward table existed — rebuild to
         enable deletes.
 
@@ -259,10 +290,7 @@ class PersistedPostingsIndex:
         once), so batch deletes through the change feed rather than
         issuing them one document at a time; the eager rewrite is what
         keeps ``topk`` free of any tombstone filtering."""
-        no_docs = doc_ids.select(
-            self.id_col, F.lit(None).cast("string").alias(self.text_col)
-        ).where(F.lit(False))
-        self._apply(doc_ids, no_docs, batch_id, None)
+        self._window(doc_ids, None, batch_id, None)
 
     def apply_changes(self, feed: DataFrame, batch_id: str) -> None:
         """Maintain the index from one corpus change-feed window
@@ -280,243 +308,39 @@ class PersistedPostingsIndex:
         point heals — the first window on an empty store included.
         ``update_preimage`` rows (a pre-image feed) are ignored here —
         postings deletes are id-keyed via the forward table."""
-        from stripe_sync_engine_spark.operators.incremental_dedup import (
-            ensure_local_checkpoint,
-            sub_batch_id,
-        )
-
-        changed = ensure_local_checkpoint(feed)
-        old_ids = changed.where(
-            F.col("_change_type").isin("delete", "update")
-        ).select(self.id_col)
-        new_docs = changed.where(
-            F.col("_change_type").isin("insert", "update")
-        ).drop("_change_type")
-        self._apply(
+        old_ids, new_docs = feed_id_halves(feed, self.id_col)
+        self._window(
             old_ids, new_docs, sub_batch_id(batch_id, "del"), sub_batch_id(batch_id, "ins")
         )
 
-    def _apply(
+    def _window(
         self,
-        old_ids: DataFrame,
-        new_docs: DataFrame,
+        old_ids: DataFrame | None,
+        new_docs: DataFrame | None,
         del_id: str | None,
         ins_id: str | None,
     ) -> None:
+        """``apply_forward_window`` (which has the commit order and the
+        replay matrix) on postings rows bucketed by term hash and forward
+        rows bucketed by doc_id, both fresh on (term_h, doc_id). One
+        tokenization feeds both derivations and the stats increment, so a
+        batch's upstream lineage runs once; the stats commit is the side
+        commit."""
         ledger = FoldLedger(self.store, self.stats_table)
         for b in (del_id, ins_id):
             if b is not None:
                 ledger.check_replayable(b)
-        with_occ_retry(
-            lambda: self._apply_window_once(old_ids, new_docs, del_id, ins_id)
+        apply_forward_window(
+            self.store,
+            (self.table, "term_h", ["term_h", "doc_id"]),
+            (self.forward_table, "doc_id", ["doc_id", "term_h"]),
+            lambda base: (self._rows(base, ins_id), self._forward_rows(base, ins_id)),
+            None if new_docs is None else self._tokenized(new_docs),
+            None if old_ids is None else old_ids.select(F.col(self.id_col).alias("doc_id")),
+            ins_id,
+            side=lambda base, targets: self._commit_stats(base, targets, del_id, ins_id),
+            remedy="rebuild the index into fresh tables to enable deletes",
         )
-
-    def _apply_window_once(
-        self,
-        old_ids: DataFrame,
-        new_docs: DataFrame,
-        del_id: str | None,
-        ins_id: str | None,
-    ) -> None:
-        """The index's ONE write protocol: ``register`` is an insert-only
-        window, ``unregister`` a delete-only one, ``apply_changes`` both.
-        One merged delete+insert commit per table — stats (dec+inc rows
-        together), postings, forward, in that order; the forward rows are
-        the replay's memory, so they go LAST. Every freshness probe runs
-        against the table VIEW AFTER the window's deletes
-        (``known ∖ pairs``), so an update that keeps a term still lands
-        its new (tf, dl) row exactly as it would if the delete committed
-        first.
-
-        Birth is a window against empty state: a missing table reads as
-        empty and is created by a full ``store.write`` at its place in
-        the commit order; a birth with no documents to add creates
-        nothing. A postings table WITHOUT its forward table is
-        the replay of a birth that crashed between the two when every
-        postings row belongs to this window (``check_birth_replay``);
-        otherwise the index predates the forward table and the window
-        raises rather than leave deletes unprunable.
-
-        Replay matrix (crash after any prefix of the three commits, then
-        re-apply): [none] full redo. [stats] dec recomputed from the
-        still-present forward rows and skipped by the batch_id
-        anti-probe; inc likewise; postings/forward proceed (at birth:
-        are created). [stats, postings] targets still non-empty (forward
-        rows are the replay's memory, deleted LAST), so the postings
-        rewrite re-lands byte-identically (delete hits nothing,
-        freshness re-admits nothing — the merged write degrades to a
-        no-op rewrite of the touched buckets); forward proceeds (at
-        birth: the birth-replay check passes and forward is created).
-        [all three] targets is empty (old rows gone, the update's rows
-        carry the kept ins id), every freshness probe is empty, and both
-        merged writes degrade to no-op rewrites of the window's touched
-        buckets (r16: write sets are the probed buckets, not re-probed
-        from materialized survivors — the replay's wasted IO is bounded
-        by the window's own bucket fan-out). A crash between the ledger
-        check and any commit is a plain retry.
-
-        Job shape (r16, guide §1.2/§2.6 — the window's cost is fixed
-        per-job latency, not compute; r16 traced 58 jobs per bench
-        window before this form): the freshness anti-probes are FOLDED
-        INTO the two table rewrites (each rewrite's one job scans its
-        write-set buckets, drops the window's delete pairs, anti-probes
-        the new rows against that post-delete view map-side, and writes
-        — no separate survivor materialization, no second write-set
-        probe), the write sets are the already-probed bucket sets, the
-        forward rows derive lazily from the checkpointed tokenization
-        (consumed exactly once, by the forward rewrite), and the two
-        driver waits that remain per phase overlap read-only work
-        (tokenized-rows materialization ∥ forward bucket probe; stats
-        collect+driver-commit ∥ postings bucket probe)."""
-        store = self.store
-        # ONE eager tokenization feeds all three new-side derivations
-        # (postings rows, forward rows, stats increment), so the batch's
-        # possibly expensive upstream lineage executes once; the delete-id
-        # set shares no lineage with it, so the two materialize
-        # concurrently.
-        base, ids = checkpoint_parallel(
-            self._tokenized(new_docs),
-            old_ids.select(F.col(self.id_col).alias("doc_id")).distinct(),
-        )
-        fm = store._read_manifest(self.forward_table)
-        pm = store._read_manifest(self.table)
-        # ONE forward bucket probe serves the delete-target lookup, the
-        # forward freshness view, and the forward write set. Its key set
-        # (the window's doc_ids) derives from base+ids alone, so it
-        # overlaps the postings-rows materialization.
-        rows, fwd_probe = run_parallel(
-            lambda: self._rows(base, ins_id).localCheckpoint(eager=True),
-            lambda: []
-            if fm is None
-            else store.buckets_of(
-                ids.unionByName(base.select("doc_id")),
-                key="doc_id",
-                table=self.forward_table,
-            ),
-        )
-        # the new forward rows derive lazily from the checkpointed
-        # tokenization (the forward write is their only consumer)
-        fwd = self._forward_rows(base, ins_id)
-        if fm is None:
-            if pm is None and base.isEmpty():
-                return  # birth with nothing to add: create no tables
-            if pm is not None:
-                check_birth_replay(
-                    store, self.table, self.forward_table, rows, ["term_h", "doc_id"],
-                    "rebuild the index into fresh tables to enable deletes",
-                )
-            fwd_known = fwd.where(F.lit(False))
-        else:
-            fwd_known = store._scan_manifest(self.forward_table, fm, fwd_probe)
-        targets = window_delete_targets(fwd_known, ids, "doc_id", ins_id)
-        has_del = not targets.isEmpty()
-        # --- 1. stats: dec (from the forward rows, which outlive this
-        # commit) + inc (from the batch itself, so a replay of a partially
-        # committed window records the SAME totals) in ONE anti-probed
-        # commit; NULL-text docs count in n_docs but not n_dl_docs/
-        # total_dl — exactly how the one-shot scan's count(*)/avg(dl)
-        # treat them. The stats job and the postings bucket probe are
-        # both read-only, so they overlap; the COMMIT order stays stats →
-        # postings → forward (the stats commit itself completes before
-        # either table rewrite commits).
-        inc = base.agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.count("dl").cast("long").alias("n_dl_docs"),
-            F.coalesce(F.sum("dl"), F.lit(0).cast("long")).alias("total_dl"),
-        ).select(
-            F.lit(ins_id).cast("string").alias("batch_id"),
-            "n_docs",
-            "n_dl_docs",
-            "total_dl",
-        )
-        pairs = None
-        if has_del:
-            per_doc = targets.groupBy("doc_id").agg(F.max("dl").alias("dl"))
-            dec = per_doc.agg(
-                (-F.count(F.lit(1))).cast("long").alias("n_docs"),
-                (-F.count("dl")).cast("long").alias("n_dl_docs"),
-                (-F.coalesce(F.sum("dl"), F.lit(0))).cast("long").alias("total_dl"),
-            ).select(
-                F.lit(del_id).alias("batch_id"), "n_docs", "n_dl_docs", "total_dl"
-            )
-            inc = dec.unionByName(inc)
-            # lazy over the checkpointed targets — each consumer's
-            # re-derivation is a filter+distinct over materialized rows
-            pairs = (
-                targets.where(F.col("term_h").isNotNull())
-                .select("term_h", "doc_id")
-                .distinct()
-            )
-        probe_keys = (
-            rows.select("term_h")
-            if pairs is None
-            else rows.select("term_h").unionByName(pairs.select("term_h"))
-        )
-
-        # --- 2+3. postings and forward: each rewrite is ONE job that
-        # scans its write-set buckets (buckets losing ∪ buckets gaining
-        # rows), drops the window's delete pairs, anti-probes the new
-        # rows against that post-delete view, and writes the merged
-        # contents into a PRIVATE version dir. The two Spark write jobs
-        # (plus their footer harvests) run CONCURRENTLY with each other
-        # and with the stats commit (prepare_buckets — version dirs are
-        # unreferenced until committed, guide §2.6); each prep returns
-        # its table's commit, and the COMMITS stay strictly sequential,
-        # stats → postings → forward. A table the window creates commits
-        # by a full store.write in the same slot. Rewrite lineages stay
-        # uncheckpointed: each write consumes its lineage exactly once
-        # while the old version files still exist (commit_window has the
-        # rationale). NULL-term sentinels never reach the
-        # postings table.
-        def prep_postings():
-            if pm is None:
-                return lambda: store.write(self.table, rows, key="term_h")
-            write_set = store.buckets_of(probe_keys, key="term_h", table=self.table)
-            if not write_set:
-                return None
-            base_w = store._scan_manifest(self.table, pm, write_set)
-            keep = (
-                base_w
-                if pairs is None
-                else base_w.join(F.broadcast(pairs), ["term_h", "doc_id"], "left_anti")
-            )
-            fresh = anti_probe(rows, keep, ["term_h", "doc_id"])
-            prep = store.prepare_buckets(
-                self.table, keep.unionByName(fresh), write_set, key="term_h"
-            )
-            return lambda: store.commit_prepared(prep, planned_versions=dict(pm["buckets"]))
-
-        def prep_forward():
-            if fm is None:
-                return lambda: store.write(self.forward_table, fwd, key="doc_id")
-            if not fwd_probe:
-                return None
-            # NULL-safe probe key: the sentinel rows carry term_h NULL,
-            # which equality joins never match — a replay would duplicate
-            # them. Coalesce to a reserved long (an xxhash64 collision
-            # with a real term is a 2^-64 event whose only consequence is
-            # one skipped forward row).
-            th = F.coalesce(F.col("term_h"), F.lit(-(1 << 62)).cast("long"))
-            keep = window_forward_keep(
-                store._scan_manifest(self.forward_table, fm, fwd_probe),
-                ids, "doc_id", ins_id, has_del,
-            )
-            fresh_fwd = anti_probe(
-                fwd.withColumn("_th", th),
-                keep.withColumn("_th", th),
-                ["doc_id", "_th"],
-            ).drop("_th")
-            prep = store.prepare_buckets(
-                self.forward_table, keep.unionByName(fresh_fwd), fwd_probe, key="doc_id"
-            )
-            return lambda: store.commit_prepared(prep, planned_versions=dict(fm["buckets"]))
-
-        _, commit_p, commit_f = run_parallel(
-            lambda: self._commit_stats(inc), prep_postings, prep_forward
-        )
-        for commit in (commit_p, commit_f):
-            if commit is not None:
-                commit()
 
     def topk(self, query_terms: list[str], k: int = 20) -> DataFrame:
         """``(doc_id, score)`` — BM25 top-k from the index: reads ONLY
@@ -544,11 +368,14 @@ class PersistedPostingsIndex:
         # the table is bucketed by term_h (the signed xxhash64 of the
         # term), so the driver-side probe hashes twice: term → term_h,
         # then the store's bucket hash over term_h's decimal rendering
-        from stripe_sync_engine_spark.functions.xxh64 import spark_xxhash64_str
+        from stripe_sync_engine_spark.functions import xxh64
 
-        touched = store.buckets_of_values(
-            [spark_xxhash64_str(t) for t in terms], table=self.table
-        )
+        if xxh64.driver_hash_matches(spark):
+            touched = store.buckets_of_values(
+                [xxh64.spark_xxhash64_str(t) for t in terms], table=self.table
+            )
+        else:
+            touched = store.buckets_of(probe, key="term_h", table=self.table)
         hits = (
             store.read_buckets(self.table, touched)
             .join(F.broadcast(probe), ["term_h", "term"], "left_semi")

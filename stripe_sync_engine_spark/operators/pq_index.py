@@ -532,14 +532,15 @@ class PersistedIVFPQ:
     ``operators/postings.py``): a FORWARD table (vec_id → cell, batch_id)
     BUCKETED BY VEC_ID makes delete/update bucket-pruned — a delete
     probes only the ids' own forward buckets, never the codes table at
-    large. Every write is ONE window routine (``_apply_window_once``):
-    ``register`` is an insert-only window, ``unregister`` a delete-only
-    window, ``apply_changes`` consumes a corpus change-feed window with
-    both halves, and the index's birth is a window against empty state.
-    A vector's identity is its vec_id: an insert whose embedding CHANGED
-    without its delete half in the same window fails loudly (cell moved
-    → the forward probe sees it; cell kept but code moved → the
-    codes-bucket probe sees it) instead of silently appending-or-
+    large. Every write is one window of
+    ``incremental_dedup.apply_forward_window``, the routine the postings
+    index shares: ``register`` is an insert-only window, ``unregister``
+    a delete-only window, ``apply_changes`` consumes a corpus change-feed
+    window with both halves, and the index's birth is a window against
+    empty state. A vector's identity is its vec_id: an insert whose
+    embedding CHANGED without its delete half in the same window fails
+    loudly (cell moved → the forward view sees it; cell kept but code
+    moved → the codes view sees it) instead of silently appending-or-
     skipping. An index whose forward table is missing while its codes
     hold rows outside the window (persisted before the forward table
     existed) raises naming ``rebuild()``, which rewrites both tables."""
@@ -562,7 +563,7 @@ class PersistedIVFPQ:
 
     def register(self, vecs: DataFrame, batch_id: str = "_adhoc") -> None:
         """Durably add the batch's codes + forward rows: an insert-only
-        window (``_apply_window_once``). Idempotent per vec_id for
+        window (``apply_forward_window``). Idempotent per vec_id for
         byte-identical vectors (deterministic encode → replays anti-probe
         into no-ops; a crash between the codes and forward commits heals
         on replay). A vec_id whose embedding CHANGED raises instead of
@@ -580,7 +581,7 @@ class PersistedIVFPQ:
         the decay the metric exists to catch. The codebook side file
         (``load``) does backfill on any window: it is the carried object
         itself, identical whichever window writes it."""
-        self._apply(vecs.select(self.id_col).where(F.lit(False)), vecs, batch_id)
+        self._apply(None, vecs, batch_id)
 
     @classmethod
     def load(
@@ -768,10 +769,7 @@ class PersistedIVFPQ:
         replay (the forward rows are the replay's memory, so they go
         LAST). Raises on indexes built before the forward table existed
         — ``rebuild()`` to enable deletes."""
-        no_vecs = vec_ids.select(
-            self.id_col, F.lit(None).cast("array<double>").alias(self.vec_col)
-        ).where(F.lit(False))
-        self._apply(vec_ids, no_vecs, None)
+        self._apply(vec_ids, None, None)
 
     def apply_changes(self, feed: DataFrame, batch_id: str) -> None:
         """Maintain the index from one corpus change-feed window
@@ -786,28 +784,22 @@ class PersistedIVFPQ:
         kept via that id) and a crash at any point heals — the first
         window on an empty store included."""
         from stripe_sync_engine_spark.operators.incremental_dedup import (
-            ensure_local_checkpoint,
+            feed_id_halves,
             sub_batch_id,
         )
 
-        changed = ensure_local_checkpoint(feed)
-        old_ids = changed.where(
-            F.col("_change_type").isin("delete", "update")
-        ).select(self.id_col)
-        new_vecs = changed.where(
-            F.col("_change_type").isin("insert", "update")
-        ).drop("_change_type")
+        old_ids, new_vecs = feed_id_halves(feed, self.id_col)
         self._apply(old_ids, new_vecs, sub_batch_id(batch_id, "ins"))
 
-    def _apply(self, old_ids: DataFrame, new_vecs: DataFrame, ins_id: str | None) -> None:
+    def _apply(
+        self, old_ids: DataFrame | None, new_vecs: DataFrame | None, ins_id: str | None
+    ) -> None:
         import os
 
-        from stripe_sync_engine_spark.operators.incremental_dedup import (
-            with_occ_retry,
-        )
-
-        if not self.store.exists(self.table) and not os.path.exists(
-            self._baseline_path()
+        if (
+            new_vecs is not None
+            and not self.store.exists(self.table)
+            and not os.path.exists(self._baseline_path())
         ):
             # Pin BEFORE the creating write (the packer's pin-before-write
             # discipline): a crash between the codes commit and a
@@ -817,195 +809,59 @@ class PersistedIVFPQ:
             # a crash right after the pin replays into an existing-file
             # no-op here and the window completing below.
             self.pin_codebook_baseline(new_vecs)
-        with_occ_retry(lambda: self._apply_window_once(old_ids, new_vecs, ins_id))
+        self._window(old_ids, new_vecs, ins_id)
         if self.store.exists(self.table) and not os.path.exists(
             self._codebook_path()
         ):
             self._save_codebook()
 
-    def _apply_window_once(
-        self, old_ids: DataFrame, new_vecs: DataFrame, ins_id: str | None
+    def _window(
+        self, old_ids: DataFrame | None, new_vecs: DataFrame | None, ins_id: str | None
     ) -> None:
-        """The index's ONE write protocol: ``register`` is an insert-only
-        window, ``unregister`` a delete-only one, ``apply_changes`` both.
-        One merged delete+insert commit per table — codes, then forward
-        (the replay's memory, LAST). Every probe — the moved-cell and
-        mutated-code loud failures AND the freshness anti-probes — runs
-        against the table VIEW AFTER the window's deletes, so an update's
-        old row never trips the checks its own delete half would have
-        removed first.
-
-        Birth is a window against empty state: a missing table reads as
-        empty and is created by a full ``store.write`` at its place in
-        the commit order; a birth with no vectors to add creates nothing
-        (an empty codes table would skip the drift pin of the first real
-        batch). A codes table WITHOUT its forward table is the replay of
-        a birth that crashed between the two when every codes row
-        belongs to this window (``check_birth_replay``); otherwise the
-        index predates the forward table and the window raises naming
-        ``rebuild()``.
-
-        Replay matrix (crash after any prefix of the two commits, then
-        re-apply): [none] full redo. [codes] forward rows untouched →
-        same targets; the codes rewrite re-lands byte-identically (its
-        deletes already applied, freshness re-admits nothing); forward
-        proceeds (at birth: the birth-replay check passes and forward is
-        created). [both] targets is empty (old forward rows gone, the
-        update's rows carry the kept ins id), the checks compare equal
-        cells/codes, both freshness probes are empty, and both merged
-        writes degrade to no-op rewrites of the window's touched
-        buckets (r16: write sets are the probed buckets, not re-probed
-        from materialized survivors — the replay's wasted IO is bounded
-        by the window's own bucket fan-out).
-
-        Job shape (r16, guide §1.2/§2.6): the freshness anti-probes are
-        FOLDED INTO the two table rewrites (no separate survivor
-        materialization, no second write-set probe — each rewrite's one
-        job scans its write-set buckets, drops the window's delete
-        pairs, anti-probes the new rows against that post-delete view
-        map-side, and writes), the write sets are the already-probed
-        bucket sets, and the remaining driver waits overlap read-only
-        work: the encode+ids materialization runs concurrently with the
-        forward bucket probe (whose key set is the window's changed ids,
-        derivable from the checkpointed feed halves), and the moved-cell
-        loud check runs concurrently with the codes bucket probe."""
+        """``apply_forward_window`` (which has the commit order and the
+        replay matrix) on codes bucketed by cell and forward rows
+        (vec_id, cell, batch_id) bucketed by vec_id, both fresh on
+        vec_id. A vector's identity is its vec_id, so an embedding change
+        without its delete half in the window fails loudly: a moved cell
+        is caught against the forward view, a moved code against the
+        codes view. A birth with no vectors creates no tables (an empty
+        codes table would skip the drift pin of the first real batch)."""
         from stripe_sync_engine_spark.operators.incremental_dedup import (
-            anti_probe,
-            check_birth_replay,
-            checkpoint_parallel,
-            run_parallel,
-            window_delete_targets,
-            window_forward_keep,
+            apply_forward_window,
         )
 
-        store, table = self.store, self.table
-        fm = store._read_manifest(self.forward_table)
-        pm = store._read_manifest(table)
-        # ONE forward bucket probe serves the delete-target lookup, the
-        # moved-cell check, the forward freshness view, and the forward
-        # write set; its key set (every changed id in the window) needs
-        # no encoding, so it overlaps the encode+ids materialization.
-        probe_ids = old_ids.select(F.col(self.id_col).alias("vec_id")).unionByName(
-            new_vecs.select(F.col(self.id_col).alias("vec_id"))
-        )
-        (rows, ids), fwd_probe = run_parallel(
-            lambda: checkpoint_parallel(
-                encode_ivf_pq(new_vecs, self.index, self.id_col, self.vec_col),
-                old_ids.select(F.col(self.id_col).alias("vec_id")).distinct(),
+        apply_forward_window(
+            self.store,
+            (self.table, "cell", ["vec_id"]),
+            (self.forward_table, "vec_id", ["vec_id"]),
+            lambda rows: (
+                rows,
+                rows.select("vec_id", "cell", F.lit(ins_id).cast("string").alias("batch_id")),
             ),
-            lambda: []
-            if fm is None
-            else store.buckets_of(probe_ids, key="vec_id", table=self.forward_table),
+            None
+            if new_vecs is None
+            else encode_ivf_pq(new_vecs, self.index, self.id_col, self.vec_col),
+            None if old_ids is None else old_ids.select(F.col(self.id_col).alias("vec_id")),
+            ins_id,
+            checks=(
+                (
+                    self.forward_table,
+                    "cell",
+                    "vec_ids {} are registered in a DIFFERENT cell — their embeddings "
+                    "changed since registration. Re-registering would leave the stale "
+                    "code queryable; route the update's pre-image through this "
+                    "window's delete half (or unregister first).",
+                ),
+                (
+                    self.table,
+                    "codes",
+                    "vec_ids {} are registered with DIFFERENT codes — their embeddings "
+                    "changed since registration. Route the update through this "
+                    "window's delete half (or unregister first).",
+                ),
+            ),
+            remedy="rebuild() the index to enable deletes",
         )
-        fwd_rows = rows.select(
-            "vec_id", "cell", F.lit(ins_id).cast("string").alias("batch_id")
-        )
-        if fm is None:
-            if pm is None and rows.isEmpty():
-                return  # birth with nothing to add: create no tables
-            if pm is not None:
-                check_birth_replay(
-                    store, table, self.forward_table, rows, ["cell", "vec_id"],
-                    "rebuild() the index to enable deletes",
-                )
-            fwd_known = fwd_rows.where(F.lit(False))
-        else:
-            fwd_known = store._scan_manifest(self.forward_table, fm, fwd_probe)
-        targets = window_delete_targets(fwd_known, ids, "vec_id", ins_id)
-        has_del = not targets.isEmpty()
-        # Moved-cell loud failure, against the post-delete forward view
-        # (an embedding change routed through THIS window's delete half is
-        # legitimate; one smuggled in as a plain insert is not). The
-        # check and the codes bucket probe are both read-only, so they
-        # overlap; the failure still precedes every commit.
-        moved = window_forward_keep(fwd_known, ids, "vec_id", ins_id, has_del).join(
-            F.broadcast(rows.select("vec_id", F.col("cell").alias("_new_cell"))),
-            "vec_id",
-        ).where(F.col("cell") != F.col("_new_cell"))
-        pairs = None
-        if has_del:
-            # lazy over the checkpointed targets — each consumer's
-            # re-derivation is a projection over materialized rows
-            pairs = targets.select("cell", "vec_id").distinct()
-        probe_keys = (
-            rows.select("cell")
-            if pairs is None
-            else rows.select("cell").unionByName(pairs.select("cell"))
-        )
-        moved_empty, write_set = run_parallel(
-            moved.isEmpty,
-            lambda: []
-            if pm is None
-            else store.buckets_of(probe_keys, key="cell", table=table),
-        )
-        if not moved_empty:
-            some = [r["vec_id"] for r in moved.select("vec_id").limit(5).collect()]
-            raise RuntimeError(
-                f"vec_ids {some} are registered in a DIFFERENT cell — their "
-                "embeddings changed since registration. Re-registering would "
-                "leave the stale code queryable; route the update's pre-image "
-                "through this window's delete half (or unregister first)."
-            )
-        # --- 1+2. codes and forward: each rewrite is ONE job that scans
-        # its write-set buckets (buckets losing ∪ buckets gaining rows),
-        # drops the window's delete pairs, anti-probes the new rows
-        # against that post-delete view, and writes into a PRIVATE
-        # version dir; the mutated-code loud check runs against the same
-        # post-delete view first and still precedes every commit. The two
-        # Spark write jobs (plus footer harvests) run CONCURRENTLY
-        # (prepare_buckets — version dirs are unreferenced until
-        # committed, guide §2.6); each prep returns its table's commit,
-        # and the COMMITS stay strictly sequential, codes then forward. A
-        # table the window creates commits by a full store.write in the
-        # same slot. Rewrite lineages stay uncheckpointed: each write
-        # consumes its lineage exactly once while the old version files
-        # still exist (commit_window has the rationale).
-        def prep_codes():
-            if pm is None:
-                return lambda: store.write(table, rows, key="cell")
-            if not write_set:
-                return None
-            base_w = store._scan_manifest(table, pm, write_set)
-            keep = (
-                base_w
-                if pairs is None
-                else base_w.join(F.broadcast(pairs), ["cell", "vec_id"], "left_anti")
-            )
-            mutated = keep.join(
-                F.broadcast(rows.select("vec_id", F.col("codes").alias("_new_codes"))),
-                "vec_id",
-            ).where(F.col("codes") != F.col("_new_codes"))
-            if not mutated.isEmpty():
-                some = [r["vec_id"] for r in mutated.select("vec_id").limit(5).collect()]
-                raise RuntimeError(
-                    f"vec_ids {some} are registered with DIFFERENT codes — their "
-                    "embeddings changed since registration. Route the update "
-                    "through this window's delete half (or unregister first)."
-                )
-            fresh = anti_probe(rows, keep, ["vec_id"])
-            prep = store.prepare_buckets(
-                table, keep.unionByName(fresh), write_set, key="cell"
-            )
-            return lambda: store.commit_prepared(prep, planned_versions=dict(pm["buckets"]))
-
-        def prep_forward():
-            if fm is None:
-                return lambda: store.write(self.forward_table, fwd_rows, key="vec_id")
-            if not fwd_probe:
-                return None
-            keep = window_forward_keep(
-                store._scan_manifest(self.forward_table, fm, fwd_probe),
-                ids, "vec_id", ins_id, has_del,
-            )
-            fresh_fwd = anti_probe(fwd_rows, keep, ["vec_id"])
-            prep = store.prepare_buckets(
-                self.forward_table, keep.unionByName(fresh_fwd), fwd_probe, key="vec_id"
-            )
-            return lambda: store.commit_prepared(prep, planned_versions=dict(fm["buckets"]))
-
-        for commit in run_parallel(prep_codes, prep_forward):
-            if commit is not None:
-                commit()
 
     def topk(
         self, queries: list[tuple[int, list[float]]], k: int = 10, nprobe: int = 4

@@ -262,13 +262,11 @@ class TableStore:
         twin of ``buckets_of`` for probes whose keys already live on the
         driver (a query's terms, an ANN query's probed cells): the same
         ``pmod(xxhash64(cast(key as string)), n_buckets)`` computed in
-        Python (functions/xxh64 — JVM parity pytest-pinned), so an
+        Python (functions/xxh64 — JVM parity pytest-pinned, and checked
+        against the running Spark by ``bucket_counts_of_values``), so an
         indexed read stops paying a Spark job to learn its read set.
         str/int keys only; distributed key frames keep ``buckets_of``."""
-        from stripe_sync_engine_spark.functions.xxh64 import spark_xxhash64_str
-
-        nb = self._table_n_buckets(table) if table else self.n_buckets
-        return sorted({spark_xxhash64_str(v) % nb for v in values})
+        return [b for b, _ in self.bucket_counts_of_values(values, table)]
 
     def bucket_counts_of_values(
         self, values, table: str | None = None
@@ -277,13 +275,22 @@ class TableStore:
         the zero-job twin of ``bucket_counts`` (r16): the webhook merge's
         bucket probe + row accounting for batches whose keys already live
         on the driver, so a micro-batch merge stops paying a Spark probe
-        job before its write. Same hash/pmod as ``buckets_of_values``."""
+        job before its write. If the Python hash disagrees with the
+        running Spark (``xxh64.driver_hash_matches``, checked once per
+        SparkContext), the values go through ``bucket_counts`` instead."""
         from collections import Counter
 
-        from stripe_sync_engine_spark.functions.xxh64 import spark_xxhash64_str
+        from stripe_sync_engine_spark.functions import xxh64
 
+        values = list(values)
+        if not values:
+            return []
+        if not xxh64.driver_hash_matches(self.spark):
+            kind = "string" if isinstance(values[0], str) else "long"
+            frame = self.spark.createDataFrame([(v,) for v in values], f"v {kind}")
+            return self.bucket_counts(frame, key="v", table=table)
         nb = self._table_n_buckets(table) if table else self.n_buckets
-        return sorted(Counter(spark_xxhash64_str(v) % nb for v in values).items())
+        return sorted(Counter(xxh64.spark_xxhash64_str(v) % nb for v in values).items())
 
     def buckets_of(self, df: DataFrame, key: str = "id", table: str | None = None) -> list[int]:
         """Distinct bucket ids present in ``df`` — bounded by n_buckets, so

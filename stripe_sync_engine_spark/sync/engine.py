@@ -448,6 +448,14 @@ class StripeSparkSync:
     # Parsing & projection
     # ------------------------------------------------------------------
     def events_df_from_json(self, payloads: list[str]) -> DataFrame:
+        """A frame of raw Stripe Event JSON strings (column ``value``) for
+        ``process_webhook_events``. The frame carries the driver-side
+        payloads as an annotation, so ``process_webhook_events`` can route
+        and probe it in Python. The annotation covers only the frame this
+        method returns, unmodified: any transformation in between (a
+        filter, a union, a re-projection) yields a plain frame, which
+        falls back to the distributed path — correct, but it costs more
+        Spark jobs."""
         df = self.spark.createDataFrame([(p,) for p in payloads], _RAW_EVENT_SCHEMA)
         # The raw strings live on the DRIVER (an HTTP webhook body is a
         # Python list by nature) — remember them on the frame so
@@ -511,7 +519,12 @@ class StripeSparkSync:
     # ------------------------------------------------------------------
     def process_webhook_events(self, raw_events: DataFrame) -> dict[str, int]:
         """Process a batch of raw Stripe Event JSON strings (column
-        ``value``). Returns {table: merged-row-count}."""
+        ``value``). Returns {table: merged-row-count}.
+
+        The driver-side fast path applies only to the unmodified frame
+        ``events_df_from_json`` returns; any other frame, including one
+        derived from it by a transformation, takes the distributed path,
+        which gives the same result with more Spark jobs."""
         # Driver-known batches (events_df_from_json — webhook bodies are
         # Python lists by nature) do the routing plan, the list-expansion
         # check and the merges' bucket probes in Python (r16, guide

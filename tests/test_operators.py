@@ -1348,7 +1348,7 @@ def test_gate_probe_stays_broadcast_without_auto(spark, tmp_path):
 def test_register_rewrites_only_fresh_buckets(spark, tmp_path):
     """A mixed replay+fresh batch commits ONLY the buckets gaining rows;
     buckets the probe touched but left unchanged keep their version (no
-    wasted rewrite IO — commit_fresh's contract)."""
+    wasted rewrite IO — commit_window's contract)."""
     from stripe_sync_engine_spark.operators.incremental_dedup import IncrementalDeduper
     from stripe_sync_engine_spark.storage import TableStore
 
@@ -2270,9 +2270,23 @@ def test_persisted_postings_null_text_parity(spark, tmp_path):
         [(1, "alpha beta gamma"), (2, "alpha delta"), (3, None), (4, "beta beta")],
         "doc_id long, text string",
     )
-    idx = PersistedPostingsIndex(TableStore(spark, str(tmp_path / "wh_post")))
+    store = TableStore(spark, str(tmp_path / "wh_post"))
+    idx = PersistedPostingsIndex(store)
     idx.register(docs, "b1")
-    got = {r["doc_id"]: r["score"] for r in idx.topk(["alpha", "beta"], k=10).collect()}
+
+    def state():
+        fwd = store.read(idx.forward_table)
+        stats = sorted(map(tuple, store.read(idx.stats_table).collect()))
+        scores = {r["doc_id"]: r["score"] for r in idx.topk(["alpha", "beta"], k=10).collect()}
+        return fwd.count(), fwd.where("term_h IS NULL").count(), stats, scores
+
+    first = state()
+    assert first[1] == 1  # the NULL doc's sentinel forward row
+    # a replay under the same id lands nothing: the forward freshness
+    # key matches the sentinel's NULL term hash NULL-safely
+    idx.register(docs, "b1")
+    assert state() == first
+    got = first[3]
     want = {r["doc_id"]: r["score"] for r in bm25_topk(docs, ["alpha", "beta"], k=10).collect()}
     assert set(got) == set(want) == {1, 2, 4}
     for d, s in want.items():

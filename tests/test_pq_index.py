@@ -870,18 +870,18 @@ def test_baseline_pin_survives_creation_crash(spark, sf_dir, tmp_path, monkeypat
     store = TableStore(spark, str(tmp_path / "wh_pin_crash"))
     p = PersistedIVFPQ(store, idx)
 
-    real = PersistedIVFPQ._apply_window_once
+    real = PersistedIVFPQ._window
 
     def boom(self, old_ids, new_vecs, ins_id):
         raise OSError("injected crash inside the creating register")
 
-    monkeypatch.setattr(PersistedIVFPQ, "_apply_window_once", boom)
+    monkeypatch.setattr(PersistedIVFPQ, "_window", boom)
     with _pytest.raises(OSError, match="injected"):
         p.register(vecs, "b:0")
     assert os.path.exists(p._baseline_path())  # pinned despite the crash
     assert not store.exists(p.table)
 
-    monkeypatch.setattr(PersistedIVFPQ, "_apply_window_once", real)
+    monkeypatch.setattr(PersistedIVFPQ, "_window", real)
     p.register(vecs, "b:0")  # the replay completes the registration
     assert store.exists(p.table) and os.path.exists(p._codebook_path())
     d = p.measure_codebook_drift(vecs)

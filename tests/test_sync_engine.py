@@ -485,6 +485,43 @@ def test_driver_known_batch_equals_distributed_batch(spark, tmp_path):
         assert '"il_1"' in results["driver"][3]["in_E1"]["lines"]
 
 
+def test_xxh64_mismatch_falls_back_to_spark_with_a_warning(
+    spark, tmp_path, monkeypatch, caplog
+):
+    """Driver-side bucket placement stands on the Python XXH64 matching
+    the running Spark's ``xxhash64``. On a Spark where it does not, the
+    once-per-SparkContext parity check logs a warning and the
+    driver-known probes take the Spark expression, so no row lands in,
+    or is read from, the wrong bucket."""
+    import logging
+
+    from stripe_sync_engine_spark.functions import xxh64
+
+    real = xxh64.spark_xxhash64_str
+    # flipping the low bit moves every value to a neighbouring bucket
+    monkeypatch.setattr(xxh64, "spark_xxhash64_str", lambda v: real(v) ^ 1)
+    monkeypatch.setattr(xxh64, "_PARITY", {})
+    store = TableStore(spark, str(tmp_path / "wh"), n_buckets=16)
+    ids = [f"ch_X{i}" for i in range(40)]
+    with caplog.at_level(logging.WARNING, logger=xxh64.__name__):
+        got = store.bucket_counts_of_values(ids)
+    assert any("disagrees" in r.getMessage() for r in caplog.records)
+    frame = spark.createDataFrame([(i,) for i in ids], "id string")
+    assert got == store.bucket_counts(frame, key="id")
+
+    eng = StripeSparkSync(spark, store)
+    batches = (
+        [fx.event("charge.succeeded", fx.charge(id=i, amount=1), created=1_000) for i in ids[:8]],
+        [fx.event("charge.updated", fx.charge(id=i, amount=2), created=2_000) for i in ids[4:12]],
+    )
+    for batch in batches:
+        eng.process_webhook_events(eng.events_df_from_json(batch))
+    charges = table_rows(eng, "charges")
+    assert {i: charges[i]["amount"] for i in sorted(charges)} == {
+        i: 1 if i in ids[:4] else 2 for i in sorted(ids[:12])
+    }
+
+
 def test_driver_known_batch_with_transform_falls_back_and_applies_it(spark, tmp_path):
     from stripe_sync_engine_spark.sync import clear_transforms, register_transform
 
