@@ -2091,7 +2091,7 @@ def test_postings_merged_window_crash_replay_converges(spark, tmp_path, crash_af
     re-apply, and the index converges to the fresh-build state (scores,
     netted stats, no duplicate forward rows); a further replay of the
     completed window moves nothing. This pins the replay matrix in
-    ``_apply_window_once``'s docstring commit by commit, for a steady
+    ``apply_forward_window``'s docstring commit by commit, for a steady
     window and for a birth window (the first window on an empty store,
     whose commits create the three tables)."""
     import math
