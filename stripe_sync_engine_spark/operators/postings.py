@@ -8,13 +8,15 @@ MinHash bands, embedding LSH, IVF-PQ codes): postings live in a store
 table BUCKETED BY TERM HASH, so a query reads only the buckets its own
 terms occupy — O(query terms ∩ buckets) IO per query, never O(corpus).
 
-Honest scale note (measured): at the local test sizes (≤5k docs) the
-indexed path is SLOWER than the scan — its several small jobs (bucket
-probe, pruned read, stats read) each pay fixed scheduler latency while
-the "avoided" corpus scan costs under a second. The crossover is where
-scanning+tokenizing the corpus exceeds that fixed overhead, i.e. from
-low-GB corpora upward; at 100 TB the scan is hours and the pruned read
-stays proportional to the query's buckets.
+Scale note: a query's read set (its terms' buckets plus the stats
+rows) is known on the driver before any row is read, so ``topk`` picks
+its placement by size. When the probed buckets' files total at most
+``spark.sql.autoBroadcastJoinThreshold`` — the size Spark already ships
+to every task — pyarrow reads them and numpy scores them on the driver,
+with ZERO Spark jobs; above it (or with the threshold at -1) the pruned
+bucket scan runs as a Spark plan. The one-shot scan pays a full corpus
+scan + tokenize per query either way; at 100 TB that is hours, while
+both placements stay proportional to the query's buckets.
 
 Tables:
 
@@ -73,7 +75,7 @@ from stripe_sync_engine_spark.operators.incremental_dedup import (
     fold_batch_rows,
     sub_batch_id,
 )
-from stripe_sync_engine_spark.plans.textops import BM25_B, BM25_K1, tokens_nonempty
+from stripe_sync_engine_spark.plans.textops import bm25_part, tokens_nonempty
 
 
 class PersistedPostingsIndex:
@@ -343,16 +345,28 @@ class PersistedPostingsIndex:
         )
 
     def topk(self, query_terms: list[str], k: int = 20) -> DataFrame:
-        """``(doc_id, score)`` — BM25 top-k from the index: reads ONLY
-        the buckets the query's term hashes land in, plus the (tiny)
-        stats table.
+        """``(doc_id, score)`` — BM25 top-k from the index, ordered by
+        (score desc, doc_id asc): reads ONLY the buckets the query's term
+        hashes land in, plus the (tiny) stats table. Empty when no query
+        term is indexed.
 
-        Query-time job shape (r16, guide §1.2): the bucket probe runs
-        driver-side (the terms are driver-known strings —
-        ``buckets_of_values``), and the corpus-level N/avgdl come from a
-        driver-side pyarrow read of the stats table's few rows injected
-        as literals — two Spark jobs' fixed latency removed from every
-        query; the scored scan itself is unchanged."""
+        The read set is known before any row is read: the bucket probe
+        runs driver-side (the terms are driver-known strings —
+        ``buckets_of_values``), and N/avgdl come from a driver-side
+        pyarrow read of the stats table's few rows. It then runs in one
+        of two placements:
+
+        * **driver** (zero Spark jobs), when the probed buckets' files
+          total at most ``spark.sql.autoBroadcastJoinThreshold`` — the
+          size Spark already treats as small enough to ship to every
+          task: pyarrow reads them, numpy scores them, and the top-k
+          comes back as an Arrow-built local frame;
+        * **Spark**, above that bound (or with the threshold at -1): the
+          pruned bucket scan, semi-joined to the query terms, scored and
+          reduced by a TakeOrdered — the scale path.
+
+        Both score with ``textops.bm25_part``; they agree to float
+        rounding (JVM vs libm ``ln`` and summation order differ by ulps)."""
         if not query_terms:
             raise ValueError("query_terms must be non-empty")
         store, spark = self.store, self.store.spark
@@ -362,9 +376,7 @@ class PersistedPostingsIndex:
                 "one batch before querying"
             )
         terms = sorted(set(query_terms))
-        probe = spark.createDataFrame(
-            [(t,) for t in terms], "term string"
-        ).select(F.xxhash64("term").alias("term_h"), "term")
+        probe = None
         # the table is bucketed by term_h (the signed xxhash64 of the
         # term), so the driver-side probe hashes twice: term → term_h,
         # then the store's bucket hash over term_h's decimal rendering
@@ -375,52 +387,72 @@ class PersistedPostingsIndex:
                 [xxh64.spark_xxhash64_str(t) for t in terms], table=self.table
             )
         else:
+            probe = self._term_probe(terms)
             touched = store.buckets_of(probe, key="term_h", table=self.table)
-        hits = (
-            store.read_buckets(self.table, touched)
-            .join(F.broadcast(probe), ["term_h", "term"], "left_semi")
-        )
         sm = store._read_manifest(self.stats_table)
-        srows = [
-            r
-            for rs in store.read_rows_driver(
-                self.stats_table, [int(b) for b in sm["buckets"]], sm
-            ).values()
-            for r in rs
-        ]
-        n_docs = sum(int(r["n_docs"]) for r in srows)
-        n_dl = sum(int(r["n_dl_docs"]) for r in srows)
-        total_dl = sum(int(r["total_dl"]) for r in srows)
+        stats = store.read_arrow(self.stats_table, [int(b) for b in sm["buckets"]], sm)
+        n_docs, n_dl, total_dl = (
+            sum(stats[c].to_pylist()) for c in ("n_docs", "n_dl_docs", "total_dl")
+        )
         # same IEEE double division the Spark agg performed; an all-empty
         # corpus (n_dl == 0) has no postings rows, so avgdl is never read
         avgdl = (float(total_dl) / float(n_dl)) if n_dl else float("nan")
-        stats = spark.createDataFrame(
-            [(n_docs, avgdl)], "n_docs long, avgdl double"
+        hits = store.read_arrow(
+            self.table,
+            touched,
+            columns=["term", "doc_id", "tf", "dl"],
+            max_bytes=store.driver_read_bytes(),
+        )
+        if hits is not None:
+            return self._topk_driver(hits, terms, n_docs, avgdl, k)
+        if probe is None:
+            probe = self._term_probe(terms)
+        hits = store.read_buckets(self.table, touched).join(
+            F.broadcast(probe), ["term_h", "term"], "left_semi"
         )
         dfreq = hits.groupBy("term").agg(
             F.count_distinct(F.col("doc_id")).cast("double").alias("df")
         )
+        part = bm25_part(
+            F.col("tf").cast("double"), F.col("dl"), F.col("df"), n_docs, avgdl, F.log
+        )
         scored = (
             hits.join(F.broadcast(dfreq), "term")
-            .join(F.broadcast(stats))
-            .withColumn(
-                "idf",
-                F.log(
-                    F.lit(1.0)
-                    + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                ),
-            )
-            .withColumn(
-                "part",
-                F.col("idf")
-                * (F.col("tf").cast("double") * (BM25_K1 + 1))
-                / (
-                    F.col("tf").cast("double")
-                    + BM25_K1
-                    * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
-                ),
-            )
             .groupBy("doc_id")
-            .agg(F.sum("part").alias("score"))
+            .agg(F.sum(part).alias("score"))
         )
         return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+
+    def _term_probe(self, terms: list[str]) -> DataFrame:
+        return self.store.spark.createDataFrame(
+            [(t,) for t in terms], "term string"
+        ).select(F.xxhash64("term").alias("term_h"), "term")
+
+    def _topk_driver(self, hits, terms: list[str], n_docs: int, avgdl: float, k: int):
+        """The driver placement of ``topk`` over the probed buckets' rows
+        (a ``pa.Table``): the query terms' postings, sorted by (doc_id,
+        term) so each document's parts sum in one fixed order whatever
+        the file layout."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        rows = (
+            hits.filter(pc.is_in(hits["term"], pa.array(terms)))
+            .sort_by([("doc_id", "ascending"), ("term", "ascending")])
+            .to_pandas()
+        )
+        df = rows.groupby("term")["doc_id"].transform("nunique").astype("float64")
+        part = bm25_part(rows["tf"].astype("float64"), rows["dl"], df, n_docs, avgdl, np.log)
+        scores = (
+            part.groupby(rows["doc_id"], sort=False).sum().rename("score").reset_index()
+            .sort_values(["score", "doc_id"], ascending=[False, True], kind="stable")
+            .head(k)
+        )
+        out = pa.table(
+            {
+                "doc_id": pa.array(scores["doc_id"], hits.schema.field("doc_id").type),
+                "score": pa.array(scores["score"], pa.float64()),
+            }
+        )
+        return self.store.spark.createDataFrame(out)

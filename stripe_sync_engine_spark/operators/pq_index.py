@@ -409,91 +409,121 @@ def quantization_sq_err(
     )
 
 
+def probe_cells(
+    index: IVFPQIndex, queries: list[tuple[int, list[float]]], nprobe: int
+) -> np.ndarray:
+    """``(n_queries, nprobe)`` — each query's ``nprobe`` nearest coarse
+    cells (deterministic). Raises ``ValueError`` on an empty query list
+    or a vector whose length is not the index's dimension."""
+    if not queries:
+        raise ValueError("queries must be non-empty")
+    bad = [q[0] for q in queries if len(q[1]) != index.pq.dim]
+    if bad:
+        raise ValueError(
+            f"query vectors {bad[:5]} do not have the index's dimension {index.pq.dim}"
+        )
+    cel = index.cells_array()
+    qv = np.asarray([q[1] for q in queries], dtype=np.float64)
+    d2 = ((qv[:, None, :] - cel[None, :, :]) ** 2).sum(axis=2)  # (nq, ncells)
+    return np.argsort(d2, axis=1)[:, : min(nprobe, len(cel))]
+
+
+def adc_topk(
+    cells: np.ndarray,
+    centroids: np.ndarray,
+    queries: list[tuple[int, list[float]]],
+    probe: np.ndarray,
+    ids: np.ndarray,
+    cell_of: np.ndarray,
+    codes: np.ndarray,
+    k: int,
+) -> pd.DataFrame:
+    """Residual-ADC top-k of the rows ``(ids, cell_of, codes)`` — THE
+    scoring the ``mapInPandas`` partition step of ``ivf_pq_topk`` and the
+    driver placement of ``PersistedIVFPQ.topk`` share. Each query scores
+    only rows of its own probed cells (``probe``, from ``probe_cells``)
+    against a per (query, cell) (m × k) table, because residual ADC is
+    cell-relative: ``dist²(q, v) ≈ Σ_s ||(q − c_cell)_s − centroid(code_s)||²``.
+    It keeps its ``k`` best by (approx_dist, vec_id), so ties break the
+    way the final window does. ``cells`` is the (n_cells, dim) coarse
+    array, ``centroids`` the (m, k, dim/m) PQ one; returns
+    ``(query_id, vec_id, approx_dist)`` rows."""
+    m, sub = centroids.shape[0], centroids.shape[2]
+    out_q, out_v, out_d = [], [], []
+    for qi, (qid, qvec) in enumerate(queries):
+        mask = np.isin(cell_of, probe[qi])
+        if not mask.any():
+            continue
+        sel_ids, sel_codes, sel_cells = ids[mask], codes[mask], cell_of[mask]
+        dist = np.empty(len(sel_ids), dtype=np.float64)
+        for cell in probe[qi]:
+            cm = sel_cells == cell
+            if cm.any():
+                r = np.asarray(qvec, dtype=np.float64) - cells[cell]
+                tab = np.stack(
+                    [
+                        ((r[s * sub : (s + 1) * sub][None, :] - centroids[s]) ** 2).sum(axis=1)
+                        for s in range(m)
+                    ]
+                )
+                dist[cm] = tab[np.arange(m)[None, :], sel_codes[cm]].sum(axis=1)
+        top = min(k, len(sel_ids))
+        kth = np.partition(dist, top - 1)[top - 1]
+        cand = np.flatnonzero(dist <= kth)
+        best = cand[np.lexsort((sel_ids[cand], dist[cand]))][:top]
+        out_q.extend([int(qid)] * top)
+        out_v.extend(sel_ids[best])
+        out_d.extend(dist[best])
+    return pd.DataFrame(
+        {
+            "query_id": pd.Series(out_q, dtype="int64"),
+            "vec_id": pd.Series(out_v, dtype="int64"),
+            "approx_dist": pd.Series(out_d, dtype="float64"),
+        }
+    )
+
+
 def ivf_pq_topk(
     codes: DataFrame,
     index: IVFPQIndex,
     queries: list[tuple[int, list[float]]],
     k: int = 10,
     nprobe: int = 4,
+    probe: np.ndarray | None = None,
 ) -> DataFrame:
-    """ADC top-k probing only each query's ``nprobe`` nearest cells.
+    """ADC top-k probing only each query's ``nprobe`` nearest cells
+    (``probe``, when the caller already computed ``probe_cells``).
 
     The union of all queries' probe sets prunes the scan FIRST (a plain
     ``isin`` filter — partition-prunable when the codes table is laid
-    out by cell); inside a partition each query scores only rows of its
-    own probed cells. Distance tables are per (query, probed cell)
-    because residual ADC is cell-relative:
-    ``dist²(q, v) ≈ Σ_s ||(q − c_cell)_s − centroid(code_s)||²``."""
-    cells = index.cells
-    cb = index.pq.centroids
-    m, sub = index.pq.m, index.pq.dim // index.pq.m
-    q_ids = [int(q[0]) for q in queries]
-    q_vecs = [list(map(float, q[1])) for q in queries]
-    kk = k
-
-    cel = np.asarray(cells, dtype=np.float64)
-    qv = np.asarray(q_vecs, dtype=np.float64)
-    d2cells = ((qv[:, None, :] - cel[None, :, :]) ** 2).sum(axis=2)  # (nq, ncells)
-    nprobe = min(nprobe, len(cells))
-    probe = np.argsort(d2cells, axis=1)[:, :nprobe]  # (nq, nprobe), deterministic
-    probed_union = sorted({int(c) for row in probe for c in row})
-    probe_sets = [set(int(c) for c in row) for row in probe]
+    out by cell); each partition keeps its ``adc_topk`` rows and a
+    window per query keeps the ``k`` best by (approx_dist, vec_id)."""
+    if probe is None:
+        probe = probe_cells(index, queries, nprobe)
+    cel, cb = index.cells_array(), index.pq.as_array()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c = np.asarray(cb, dtype=np.float64)
-        q = np.asarray(q_vecs, dtype=np.float64)
-        cells_arr = np.asarray(cells, dtype=np.float64)
-        # tables[qi][cell]: (m, k) residual-ADC lookup per probed cell
-        tables: list[dict[int, np.ndarray]] = []
-        for qi in range(len(q_ids)):
-            per_cell = {}
-            for cell in probe[qi]:
-                r = q[qi] - cells_arr[cell]
-                per_cell[int(cell)] = np.stack(
-                    [
-                        ((r[s * sub : (s + 1) * sub][None, :] - c[s]) ** 2).sum(axis=1)
-                        for s in range(m)
-                    ]
-                )
-            tables.append(per_cell)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            codes_arr = np.asarray(list(pdf["codes"]), dtype=np.int64)
-            cell_arr = pdf["cell"].to_numpy()
-            ids = pdf["vec_id"].to_numpy()
-            out_q, out_v, out_d = [], [], []
-            for qi, qid in enumerate(q_ids):
-                mask = np.isin(cell_arr, list(probe_sets[qi]))
-                if not mask.any():
-                    continue
-                sel_ids = ids[mask]
-                sel_codes = codes_arr[mask]
-                sel_cells = cell_arr[mask]
-                dist = np.empty(len(sel_ids), dtype=np.float64)
-                for cell, tab in tables[qi].items():
-                    cm = sel_cells == cell
-                    if cm.any():
-                        dist[cm] = tab[np.arange(m)[None, :], sel_codes[cm]].sum(axis=1)
-                top = min(kk, len(sel_ids))
-                part = np.argpartition(dist, top - 1)[:top]
-                out_q.extend([qid] * top)
-                out_v.extend(sel_ids[part])
-                out_d.extend(dist[part])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": pd.Series(out_q, dtype="int64"),
-                        "vec_id": pd.Series(out_v, dtype="int64"),
-                        "approx_dist": pd.Series(out_d, dtype="float64"),
-                    }
-                )
+            top = adc_topk(
+                cel,
+                cb,
+                queries,
+                probe,
+                pdf["vec_id"].to_numpy(),
+                pdf["cell"].to_numpy(),
+                np.asarray(list(pdf["codes"]), dtype=np.int64),
+                k,
+            )
+            if len(top):
+                yield top
 
     from pyspark.sql.window import Window
 
     partial = (
         codes.select("vec_id", "cell", "codes")
-        .where(F.col("cell").isin(probed_union))
+        .where(F.col("cell").isin(np.unique(probe).tolist()))
         .mapInPandas(run, TOPK_SCHEMA)
     )
     w = Window.partitionBy("query_id").orderBy("approx_dist", "vec_id")
@@ -866,19 +896,48 @@ class PersistedIVFPQ:
     def topk(
         self, queries: list[tuple[int, list[float]]], k: int = 10, nprobe: int = 4
     ) -> DataFrame:
-        """ADC top-k reading ONLY the probed cells' store buckets."""
-        cel = self.index.cells_array()
-        qv = np.asarray([q[1] for q in queries], dtype=np.float64)
-        d2 = ((qv[:, None, :] - cel[None, :, :]) ** 2).sum(axis=2)
-        nprobe = min(nprobe, len(cel))
-        probed = sorted(
-            {int(c) for row in np.argsort(d2, axis=1)[:, :nprobe] for c in row}
-        )
+        """``(query_id, vec_id, approx_dist)`` — per query the ``k`` best
+        by (approx_dist, vec_id), reading ONLY the probed cells' store
+        buckets. The probe cells and their buckets are computed on the
+        driver (``probe_cells``, ``buckets_of_values``: zero jobs), and
+        the scoring (``adc_topk``) runs in one of two placements:
+
+        * **driver** (zero Spark jobs), when the probed buckets' files
+          total at most ``spark.sql.autoBroadcastJoinThreshold``: pyarrow
+          reads them and the top-k comes back as an Arrow-built local
+          frame;
+        * **Spark**, above that bound (or with the threshold at -1):
+          ``ivf_pq_topk`` over the pruned bucket scan — the scale path.
+
+        Both return the same rows. Raises ``ValueError`` on an empty
+        query list or a vector of the wrong dimension."""
+        probe = probe_cells(self.index, queries, nprobe)
         store, table = self.store, self.table
-        # driver-known cell ids → driver-side bucket probe (zero jobs)
-        touched = store.buckets_of_values(probed, table=table)
-        codes = store.read_buckets(table, touched)
-        return ivf_pq_topk(codes, self.index, queries, k=k, nprobe=nprobe)
+        touched = store.buckets_of_values(np.unique(probe).tolist(), table=table)
+        codes = store.read_arrow(
+            table, touched, columns=["vec_id", "cell", "codes"],
+            max_bytes=store.driver_read_bytes(),
+        )
+        if codes is None:
+            return ivf_pq_topk(
+                store.read_buckets(table, touched), self.index, queries, k=k, probe=probe
+            )
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        top = adc_topk(
+            self.index.cells_array(),
+            self.index.pq.as_array(),
+            queries,
+            probe,
+            codes["vec_id"].to_numpy(),
+            codes["cell"].to_numpy(),
+            pc.list_flatten(codes["codes"]).to_numpy().reshape(-1, self.index.pq.m),
+            k,
+        )
+        return store.spark.createDataFrame(
+            pa.Table.from_pandas(top, preserve_index=False), TOPK_SCHEMA
+        )
 
     def topk_reranked(
         self,

@@ -531,6 +531,16 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
+def bm25_part(tf, dl, df, n_docs, avgdl, log):
+    """One posting's BM25 contribution — THE formula the one-shot scan
+    and both placements of the persisted index's ``topk`` share. Plain
+    arithmetic, so the arguments may be Spark Columns (``log=F.log``) or
+    numpy/pandas arrays and scalars (``log=np.log``); ``tf`` must already
+    be a double (or float array)."""
+    idf = log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+    return idf * (tf * (BM25_K1 + 1)) / (tf + BM25_K1 * (1 - BM25_B + BM25_B * dl / avgdl))
+
+
 def tokens_nonempty(text_col: str):
     """Whitespace tokens with empties dropped — THE tokenization the BM25
     scan, the persisted postings index, and span dedup share (one
@@ -591,20 +601,9 @@ def bm25_scores(
         hits.join(F.broadcast(dfreq), "term")
         .join(F.broadcast(n_and_avg))
         .withColumn(
-            "idf",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ),
-        )
-        .withColumn(
             "part",
-            F.col("idf")
-            * (F.col("tf") * (BM25_K1 + 1))
-            / (
-                F.col("tf")
-                + BM25_K1
-                * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
+            bm25_part(
+                F.col("tf"), F.col("dl"), F.col("df"), F.col("n_docs"), F.col("avgdl"), F.log
             ),
         )
         .groupBy(id_col)

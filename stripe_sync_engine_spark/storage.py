@@ -465,6 +465,87 @@ class TableStore:
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(*paths)
 
+    def driver_read_bytes(self) -> int:
+        """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes
+        — the size Spark itself treats as small enough to ship to every
+        task, reused as the bound under which an index read runs on the
+        driver (``read_arrow(max_bytes=...)``). ``-1`` (broadcasts off)
+        keeps every read on Spark."""
+        import re
+
+        raw = str(self.spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+        n, unit = re.fullmatch(r"(-?\d+)\s*([a-z]*)", raw.strip().lower()).groups()
+        return int(n) * 1024 ** "bkmgtp".index(unit[:1] or "b")
+
+    def read_arrow(
+        self,
+        table: str,
+        buckets: list[int],
+        manifest: dict | None = None,
+        columns: list[str] | None = None,
+        max_bytes: int | None = None,
+    ):
+        """Driver-side pyarrow read (no Spark job) of the named buckets of
+        ONE manifest, as a ``pa.Table`` in the manifest's schema: every
+        file is cast to it with all fields nullable (files written by
+        different commits disagree on nullability), and a column an older
+        file lacks comes back as nulls — what ``spark.read.schema`` gives
+        the Spark scan. ``columns`` projects. With ``max_bytes``, returns
+        None instead when the buckets' files total more than that (or the
+        bound is negative): the caller's Spark plan is the scale path.
+
+        A bucket the manifest references whose directory is gone raises:
+        a concurrent commit replaced and vacuumed it after the manifest
+        was read (``vacuum_retain_s=0``), and reading on would return a
+        partial table. The message names a concurrent commit, so
+        ``with_occ_retry`` re-plans such a read."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        manifest = manifest or self._read_manifest(table)
+        if manifest is None:
+            raise RuntimeError(f"read_arrow of unknown table {table!r}")
+        fields = StructType.fromJson(manifest["schema"]).fields
+        if columns is not None:
+            by_name = {f.name: f for f in fields}
+            fields = [by_name[c] for c in columns]
+        schema = pa.schema([pa.field(f.name, to_arrow_type(f.dataType)) for f in fields])
+        files = []
+        for b in buckets:
+            version = manifest["buckets"].get(str(b))
+            if not version:
+                continue
+            bdir = os.path.join(self._dir(table), version, f"_bucket={b}")
+            try:
+                names = os.listdir(bdir)
+            except FileNotFoundError:
+                raise RuntimeError(
+                    f"bucket {b} of {table!r} (version {version!r}) was replaced "
+                    "by a concurrent commit and vacuumed after the manifest was "
+                    "read; re-read the manifest and re-plan"
+                ) from None
+            files += [os.path.join(bdir, n) for n in sorted(names) if n.endswith(".parquet")]
+        if max_bytes is not None and (
+            max_bytes < 0 or sum(os.path.getsize(p) for p in files) > max_bytes
+        ):
+            return None
+        parts = []
+        for p in files:
+            f = pq.ParquetFile(p)
+            have = set(f.schema_arrow.names)
+            t = f.read(columns=[c for c in schema.names if c in have])
+            parts.append(
+                pa.table(
+                    [
+                        t[c] if c in have else pa.nulls(t.num_rows, schema.field(c).type)
+                        for c in schema.names
+                    ],
+                    names=schema.names,
+                ).cast(schema)
+            )
+        return pa.concat_tables(parts) if parts else schema.empty_table()
+
     # -- change data feed ----------------------------------------------
     def _align_to(self, df: DataFrame, schema: StructType) -> DataFrame:
         """Project ``df`` onto ``schema``: common columns cast to the target
@@ -1293,30 +1374,15 @@ class TableStore:
     def read_rows_driver(
         self, table: str, buckets: list[int], manifest: dict | None = None
     ) -> dict[int, list[dict]]:
-        """Driver-side read of the given buckets' rows as per-bucket dict
-        lists (pyarrow, no Spark job). For TINY state tables only —
-        callers own the bound; missing columns (legacy files) come back
-        absent from the row dicts; absent buckets come back as empty
-        lists."""
-        import pyarrow.parquet as pq
-
+        """``read_arrow`` per bucket, as per-bucket dict lists. For TINY
+        state tables only — callers own the bound; absent buckets come
+        back as empty lists (a missing table as all-empty)."""
         manifest = manifest or self._read_manifest(table)
-        out: dict[int, list[dict]] = {int(b): [] for b in buckets}
         if manifest is None:
-            return out
-        for b in buckets:
-            version = manifest["buckets"].get(str(b))
-            if not version:
-                continue
-            bdir = os.path.join(self._dir(table), version, f"_bucket={b}")
-            if not os.path.isdir(bdir):
-                continue
-            for fn in os.listdir(bdir):
-                if fn.endswith(".parquet"):
-                    out[int(b)].extend(
-                        pq.read_table(os.path.join(bdir, fn)).to_pylist()
-                    )
-        return out
+            return {int(b): [] for b in buckets}
+        return {
+            int(b): self.read_arrow(table, [b], manifest).to_pylist() for b in buckets
+        }
 
     def write_rows_buckets(
         self,

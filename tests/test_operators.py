@@ -2293,6 +2293,123 @@ def test_persisted_postings_null_text_parity(spark, tmp_path):
         assert math.isclose(got[d], s, rel_tol=1e-9), (d, got[d], s)
 
 
+def _with_threshold(spark, value, fn):
+    """``fn()`` with ``spark.sql.autoBroadcastJoinThreshold`` at ``value``
+    (the bound of the indexes' driver placement), restored afterwards."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        return fn()
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_postings_topk_driver_and_spark_placements_agree(spark, tmp_path, sf_dir):
+    """One index committed twice (its read set mixes bucket versions whose
+    files disagree on nullability) queried with the broadcast threshold at
+    its default (driver placement) and at -1 (Spark plan): the same doc
+    order with scores within 1e-12; the default placement's
+    ``topk().collect()`` runs 0 Spark jobs, the Spark plan more. Terms the
+    index lacks give an empty frame with the same schema on both."""
+    import math
+
+    from stripe_sync_engine_spark.functions import xxh64
+    from stripe_sync_engine_spark.operators.postings import PersistedPostingsIndex
+    from stripe_sync_engine_spark.storage import TableStore
+    from stripe_sync_engine_spark.tables import load_table
+    from tests.test_http_api import spark_jobs
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    store = TableStore(spark, str(tmp_path / "wh_post"))
+    idx = PersistedPostingsIndex(store)
+    idx.register(docs, "b1")
+    # the second commit rewrites only its one document's term buckets
+    idx.register(spark.createDataFrame([(10**9, "spark spark")], docs.schema), "b2")
+    terms = ["spark", "query"]
+    m = store._read_manifest(idx.table)
+    touched = store.buckets_of_values(
+        [xxh64.spark_xxhash64_str(t) for t in terms], table=idx.table
+    )
+    assert len({m["buckets"][str(b)] for b in touched}) == 2  # both commits
+
+    driver = idx.topk(terms, k=25)
+    spark_plan = _with_threshold(spark, "-1", lambda: idx.topk(terms, k=25))
+    got, want = driver.collect(), spark_plan.collect()
+    assert len(got) == 25
+    assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
+    for a, b in zip(got, want):
+        assert math.isclose(a["score"], b["score"], rel_tol=1e-12), (a, b)
+
+    assert spark_jobs(spark, lambda: idx.topk(terms, k=25).collect()) == 0
+    assert _with_threshold(
+        spark, "-1", lambda: spark_jobs(spark, lambda: idx.topk(terms, k=25).collect())
+    ) > 0
+
+    absent = ["zzz-not-a-term"]
+    e_driver = idx.topk(absent)
+    e_spark = _with_threshold(spark, "-1", lambda: idx.topk(absent))
+    assert e_driver.collect() == e_spark.collect() == []
+    assert e_driver.schema == e_spark.schema == driver.schema
+
+
+def test_driver_read_fails_loudly_on_a_vacuumed_bucket(spark, tmp_path):
+    """A bucket the manifest references whose directory is gone (a
+    concurrent commit replaced and vacuumed it after the manifest was
+    read) raises on the driver read — ``topk``'s stats read and, through
+    ``read_rows_driver``, the windows' stats commit — instead of returning
+    partial N/avgdl and silently wrong scores."""
+    import os
+    import shutil
+
+    import pytest as _pytest
+
+    from stripe_sync_engine_spark.operators.postings import PersistedPostingsIndex
+    from stripe_sync_engine_spark.storage import TableStore
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha w{i} beta") for i in range(12)], "doc_id long, text string"
+    )
+    store = TableStore(spark, str(tmp_path / "wh_post"))
+    idx = PersistedPostingsIndex(store)
+    for i in range(3):
+        idx.register(docs.where(F.col("doc_id") % 3 == i), f"b{i}")
+    assert len(idx.topk(["alpha"]).collect()) == 12
+    sm = store._read_manifest(idx.stats_table)
+    b, version = sorted(sm["buckets"].items())[0]
+    shutil.rmtree(os.path.join(store.root, idx.stats_table, version, f"_bucket={b}"))
+    with _pytest.raises(RuntimeError, match=f"bucket {b} of .*{version}.*concurrent commit"):
+        idx.topk(["alpha"])
+    with _pytest.raises(RuntimeError, match="concurrent commit"):
+        store.read_rows_driver(idx.stats_table, [int(b)])
+
+
+def test_read_arrow_casts_to_the_manifest_schema(spark, tmp_path):
+    """``read_arrow`` returns the manifest's schema with every field
+    nullable — bucket versions written by different commits disagree on
+    nullability — and a column an older file lacks as nulls, the rows
+    Spark's scan returns; ``max_bytes`` below the files' size declines
+    the read."""
+    from stripe_sync_engine_spark.storage import TableStore
+
+    store = TableStore(spark, str(tmp_path / "wh"), n_buckets=4)
+    store.write("t", spark.range(20).select("id", F.lit("x").alias("s")), key="id")
+    b = store.buckets_of_values([3], table="t")[0]
+    rows = store.read_buckets("t", [b]).withColumn("n", (F.col("id") * 10).cast("long"))
+    store.write_buckets("t", rows.localCheckpoint(eager=True), [b], key="id")
+    m = store._read_manifest("t")
+    assert len(set(m["buckets"].values())) == 2
+    got = store.read_arrow("t", sorted(int(x) for x in m["buckets"]))
+    assert got.schema.names == ["id", "s", "n"]
+    assert all(f.nullable for f in got.schema)
+    want = sorted(tuple(r) for r in store.read("t").collect())
+    assert sorted(tuple(r.values()) for r in got.to_pylist()) == want
+    assert sum(r["n"] is None for r in got.to_pylist()) == 20 - rows.count()
+    assert store.read_arrow("t", [b], columns=["n"]).schema.names == ["n"]
+    assert store.read_arrow("t", [b], max_bytes=10) is None
+    assert store.read_arrow("t", [b], max_bytes=-1) is None
+
+
 def test_commitio_primitives(tmp_path):
     """The one commit seam every durable side-file routes through:
     atomic JSON/text replace (dot-prefixed temp, no debris on success)

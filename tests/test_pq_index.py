@@ -886,3 +886,91 @@ def test_baseline_pin_survives_creation_crash(spark, sf_dir, tmp_path, monkeypat
     assert store.exists(p.table) and os.path.exists(p._codebook_path())
     d = p.measure_codebook_drift(vecs)
     assert d["ratio"] == _pytest.approx(1.0) and not d["rebuild_recommended"]
+
+
+def test_persisted_ivfpq_topk_driver_and_spark_placements_agree(spark, sf_dir, tmp_path):
+    """One index committed twice, queried with the broadcast threshold at
+    its default (driver placement) and at -1 (Spark plan): identical rows;
+    the default placement's ``topk().collect()`` runs 0 Spark jobs, the
+    Spark plan more. A query whose probed cell holds no rows gives an
+    empty frame with the same schema on both."""
+    from stripe_sync_engine_spark.operators.pq_index import PersistedIVFPQ, train_ivf_pq
+    from stripe_sync_engine_spark.storage import TableStore
+    from tests.test_http_api import spark_jobs
+    from tests.test_operators import _with_threshold
+
+    vecs, X, ids = _corpus(spark, sf_dir)
+    idx = train_ivf_pq(vecs, n_cells=8, m=8, k=8)
+    cell_of = _cells_of(spark, idx, X, ids)
+    empty = 0
+    store = TableStore(spark, str(tmp_path / "wh_pq"))
+    p = PersistedIVFPQ(store, idx)
+    kept = [int(i) for i in ids if cell_of[int(i)] != empty]
+    late = [i for i in kept if cell_of[i] == 1][:3]  # the second commit: one cell
+    p.register(vecs.where(vecs.vec_id.isin(sorted(set(kept) - set(late)))), "b1")
+    p.register(vecs.where(vecs.vec_id.isin(late)), "b2")
+    assert len(set(store._read_manifest(p.table)["buckets"].values())) == 2
+
+    def rows(qs, k=10, nprobe=4):
+        return sorted(tuple(r) for r in p.topk(qs, k=k, nprobe=nprobe).collect())
+
+    queries = [(i, list(X[ids == i][0])) for i in late[:1]] + [
+        (int(ids[i]), list(X[i])) for i in range(0, 40, 8)
+    ]
+    got = rows(queries)
+    assert len(got) == 10 * len(queries)
+    assert got == _with_threshold(spark, "-1", lambda: rows(queries))
+    assert spark_jobs(spark, lambda: p.topk(queries, k=10, nprobe=4).collect()) == 0
+    assert _with_threshold(
+        spark,
+        "-1",
+        lambda: spark_jobs(spark, lambda: p.topk(queries, k=10, nprobe=4).collect()),
+    ) > 0
+
+    at_empty = [(7, list(idx.cells[empty]))]
+    assert rows(at_empty, nprobe=1) == []
+    assert _with_threshold(spark, "-1", lambda: rows(at_empty, nprobe=1)) == []
+    assert (
+        p.topk(at_empty, nprobe=1).schema
+        == _with_threshold(spark, "-1", lambda: p.topk(at_empty, nprobe=1)).schema
+    )
+
+
+def test_persisted_ivfpq_topk_rejects_bad_queries(spark, sf_dir, tmp_path):
+    """An empty query list or a vector of the wrong dimension is a
+    ValueError naming the problem, not a numpy indexing/broadcast error."""
+    from stripe_sync_engine_spark.operators.pq_index import PersistedIVFPQ, train_ivf_pq
+    from stripe_sync_engine_spark.storage import TableStore
+
+    vecs, X, ids = _corpus(spark, sf_dir)
+    idx = train_ivf_pq(vecs, n_cells=8, m=8, k=8)
+    p = PersistedIVFPQ(TableStore(spark, str(tmp_path / "wh_pq")), idx)
+    p.register(vecs.limit(100).localCheckpoint(eager=True), "b1")
+    with pytest.raises(ValueError, match="non-empty"):
+        p.topk([])
+    with pytest.raises(ValueError, match="dimension 64"):
+        p.topk([(1, list(X[0])), (2, list(X[0][:10]))])
+
+
+def test_persisted_ivfpq_topk_fails_loudly_on_a_vacuumed_bucket(spark, sf_dir, tmp_path):
+    """A codes bucket the manifest references whose directory is gone (a
+    concurrent commit replaced and vacuumed it after the manifest was
+    read) raises instead of ranking the remaining cells as if the
+    vanished vectors never existed."""
+    import os
+    import shutil
+
+    from stripe_sync_engine_spark.operators.pq_index import PersistedIVFPQ, train_ivf_pq
+    from stripe_sync_engine_spark.storage import TableStore
+
+    vecs, X, ids = _corpus(spark, sf_dir)
+    idx = train_ivf_pq(vecs, n_cells=8, m=8, k=8)
+    store = TableStore(spark, str(tmp_path / "wh_pq"))
+    p = PersistedIVFPQ(store, idx)
+    p.register(vecs.localCheckpoint(eager=True), "b1")
+    queries = [(int(ids[0]), list(X[0]))]
+    assert len(p.topk(queries, k=10, nprobe=8).collect()) == 10  # every cell
+    b, version = sorted(store._read_manifest(p.table)["buckets"].items())[0]
+    shutil.rmtree(os.path.join(store.root, p.table, version, f"_bucket={b}"))
+    with pytest.raises(RuntimeError, match=f"bucket {b} of .*concurrent commit"):
+        p.topk(queries, k=10, nprobe=8)
