@@ -6,8 +6,9 @@ A from-scratch re-expression of the capabilities of supabase/stripe-sync-engine
 * **Sync layer** (reference: ``packages/sync-engine/src/stripeSync.ts``):
   webhook-event ingestion, entity routing, timestamp-protected merge/upsert,
   dependency backfill, child-table explosion, replace-set and soft-delete
-  reconciliation — expressed as DataFrame transformations + a join-based
-  merge writer (Delta-style MERGE semantics over Parquet).
+  reconciliation — expressed as DataFrame transformations + a
+  single-shuffle clustered merge writer (Delta-style MERGE semantics over
+  Parquet).
 * **Analytics layer** (reference delegates to Postgres; we delegate to
   Spark SQL / Catalyst): joins, aggregations, windows, top-k, set ops over
   the synced tables.

@@ -17,14 +17,15 @@ Reproduces the semantics of the reference's upsert sinks
 * S12 ``soft_delete_reconcile`` — mark vanished children deleted
   (reference ``markDeletedSubscriptionItems``, stripeSync.ts:1559-1583).
 
-Physical strategy: one shuffle join on the merge key per operator. The
-full_outer join CANNOT be broadcast (Spark's BroadcastHashJoin does not
-support full-outer), so merge cost is O(rows joined) — which is why the
-engine's sync layer feeds these operators BUCKET-PRUNED targets: the store
-is hash-bucketed by key (``storage.py``) and a merge reads/joins/rewrites
-only buckets containing batch keys, making each micro-batch O(batch ∩
-buckets) rather than O(table). These operators stay pure
-DataFrame→DataFrame; the pruning policy lives at the call site.
+Physical strategy: the engine merges through ``merge_upsert_clustered``,
+ONE shuffle by the store's bucket expression (union + per-key argmax,
+full-row or partial-column); ``merge_upsert``, the join-based form, is the
+reference the property tests compare it against. Either way merge cost is
+O(rows merged), which is why the engine's sync layer feeds these operators
+BUCKET-PRUNED targets: the store is hash-bucketed by key (``storage.py``)
+and a merge reads/rewrites only buckets containing batch keys, making each
+micro-batch O(batch ∩ buckets) rather than O(table). These operators stay
+pure DataFrame→DataFrame; the pruning policy lives at the call site.
 """
 
 from __future__ import annotations
@@ -142,14 +143,15 @@ def merge_upsert_clustered(
     ts_col: str | None = "last_synced_at",
     tiebreak_cols: Sequence[str] | None = None,
     num_partitions: int | None = None,
+    update_cols: Sequence[str] | None = None,
 ) -> DataFrame:
-    """Full-row ``merge_upsert`` (``update_cols=None``) in ONE exchange.
+    """``merge_upsert`` in ONE exchange.
 
     ``merge_upsert``'s physical plan costs three shuffles per micro-batch:
     the source argmax window (hash by key), the full-outer join (hash by
     key — Spark cannot broadcast full-outer), and the store's bucket
-    rebalance before the partitioned write (hash by bucket). A full-row
-    timestamp-protected merge, however, is exactly a row-wise argmax over
+    rebalance before the partitioned write (hash by bucket). A
+    timestamp-protected merge, however, is a row-wise argmax over
     target ∪ source — and because the store's bucket expression is a
     FUNCTION OF the merge key (``storage.py`` bucket invariant: a key's
     rows always live in one bucket), partitioning by it co-locates equal
@@ -159,21 +161,30 @@ def merge_upsert_clustered(
     bucketed write — ``TableStore.write_buckets(pre_clustered=True)``
     skips its rebalance, making the whole merge a single-shuffle job.
 
+    ``update_cols`` has ``merge_upsert``'s meaning (the reference's partial
+    upserts, e.g. customer.deleted writes only object/deleted —
+    schemas/customer.ts:29-31): a matched source row that wins takes
+    ``update_cols`` plus ``ts_col`` from the source and every other column
+    from the target row; an insert takes the full source row. The target
+    row is read by a second window over ``(cluster, key)`` evaluated
+    before the keep-first filter; it reuses the same exchange and sort.
+
     Precedence matches ``merge_upsert`` / the reference's guarded upsert
     (``database/postgres.ts:196-203``): highest ``ts_col`` wins with NULLS
     LAST; on an equal non-null timestamp the TARGET row survives (stale
     updates are no-ops); a NULL-ts target loses to any source row; among
     source rows ``tiebreak_cols`` descending break timestamp ties. With
     ``ts_col=None`` the source always beats the target (plain upsert).
-    Equivalence to ``merge_upsert`` is property-tested
-    (tests/test_merge_properties.py).
+    Equivalence to ``merge_upsert``, full-row and partial, is
+    property-tested (tests/test_merge_properties.py).
 
     NULL merge keys are DROPPED — the one deliberate divergence from
     ``merge_upsert`` (whose full-outer join would insert them as unjoinable
-    rows that then accumulate across batches). The reference's tables all
-    declare ``id text primary key``, which rejects NULL; dropping is the
-    parity behavior, and run-boundary detection needs a total order on the
-    key anyway.
+    rows that then accumulate across batches); this holds for partial
+    updates too, so a ``customer.deleted`` event without an id writes
+    nothing. The reference's tables all declare ``id text primary key``,
+    which rejects NULL; dropping is the parity behavior, and run-boundary
+    detection needs a total order on the key anyway.
 
     CONTRACT — cluster consistency: every value of ``key`` must map to ONE
     value of the columns feeding ``cluster_expr``. If a source row carries
@@ -216,8 +227,12 @@ def merge_upsert_clustered(
         )
     else:
         both = src
+    # one named cluster column: both windows then partition by the SAME
+    # attribute, so the key window below reuses the argmax window's sort
+    both = both.withColumn("_cluster", cluster_expr)
+    cluster = F.col("_cluster")
     if num_partitions is not None:
-        both = both.repartition(num_partitions, cluster_expr)
+        both = both.repartition(num_partitions, cluster)
     order: list[Column] = [F.col(key).asc()]
     if ts_col is not None:
         ts = F.col(ts_col)
@@ -228,14 +243,27 @@ def merge_upsert_clustered(
     else:
         order += [is_tgt.asc()]
     order += [F.col(c).desc_nulls_last() for c in (tiebreak_cols or [])]
-    w = Window.partitionBy(cluster_expr).orderBy(*order)
+    w = Window.partitionBy(cluster).orderBy(*order)
     prev_key = F.lag(F.col(key)).over(w)
     keep_cols = target.columns if target is not None else source.columns
-    return (
-        both.withColumn("_keep", prev_key.isNull() | (prev_key != F.col(key)))
-        .where(F.col("_keep"))
-        .select(*keep_cols)
-    )
+    ranked = both.withColumn("_keep", prev_key.isNull() | (prev_key != F.col(key)))
+    out_cols: list[Column | str] = list(keep_cols)
+    kept = []
+    if update_cols is not None and target is not None:
+        kept = [c for c in keep_cols if c not in {key, ts_col, *update_cols}]
+    if kept:
+        # partial update: the key's target row, read before the keep-first
+        # filter drops it, supplies a winning source row's other columns
+        t_row = F.first(F.when(is_tgt == 1, F.struct(*kept)), ignorenulls=True)
+        ranked = ranked.withColumn(
+            "_t_row", t_row.over(Window.partitionBy(cluster, F.col(key)))
+        )
+        matched = (is_tgt == 0) & F.col("_t_row").isNotNull()
+        out_cols = [
+            F.when(matched, F.col("_t_row")[c]).otherwise(F.col(c)).alias(c) if c in kept else c
+            for c in keep_cols
+        ]
+    return ranked.where(F.col("_keep")).select(*out_cols)
 
 
 def delete_by_keys(target: DataFrame, keys: DataFrame, key: str = "id") -> DataFrame:

@@ -314,14 +314,25 @@ class TableStore:
 
     # -- read ----------------------------------------------------------
     def _bucket_paths(self, table: str, manifest: dict, buckets: list[int] | None) -> list[str]:
+        """Directories of the named buckets (all with ``None``) of ONE
+        manifest. A referenced directory that is gone raises: a
+        concurrent commit replaced and vacuumed it after the manifest was
+        read (``vacuum_retain_s=0``), and scanning on
+        would return a partial table. The message names a concurrent
+        commit, so ``with_occ_retry`` re-plans such a read."""
         sel = manifest["buckets"]
         if buckets is not None:
             sel = {str(b): v for b in buckets if (v := manifest["buckets"].get(str(b)))}
         paths = []
         for b, version in sel.items():
             p = os.path.join(self._dir(table), version, f"_bucket={b}")
-            if os.path.exists(p):
-                paths.append(p)
+            if not os.path.isdir(p):
+                raise RuntimeError(
+                    f"bucket {b} of {table!r} (version {version!r}) was replaced "
+                    "by a concurrent commit and vacuumed after the manifest was "
+                    "read; re-read the manifest and re-plan"
+                )
+            paths.append(p)
         return paths
 
     def read(
@@ -459,11 +470,7 @@ class TableStore:
         manifest = self._read_manifest(table)
         if manifest is None:
             return None
-        schema = StructType.fromJson(manifest["schema"])
-        paths = self._bucket_paths(table, manifest, buckets)
-        if not paths:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*paths)
+        return self._scan_manifest(table, manifest, buckets)
 
     def driver_read_bytes(self) -> int:
         """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes
@@ -494,11 +501,8 @@ class TableStore:
         None instead when the buckets' files total more than that (or the
         bound is negative): the caller's Spark plan is the scale path.
 
-        A bucket the manifest references whose directory is gone raises:
-        a concurrent commit replaced and vacuumed it after the manifest
-        was read (``vacuum_retain_s=0``), and reading on would return a
-        partial table. The message names a concurrent commit, so
-        ``with_occ_retry`` re-plans such a read."""
+        A bucket the manifest references whose directory is gone raises
+        (``_bucket_paths``)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_type
@@ -511,21 +515,12 @@ class TableStore:
             by_name = {f.name: f for f in fields}
             fields = [by_name[c] for c in columns]
         schema = pa.schema([pa.field(f.name, to_arrow_type(f.dataType)) for f in fields])
-        files = []
-        for b in buckets:
-            version = manifest["buckets"].get(str(b))
-            if not version:
-                continue
-            bdir = os.path.join(self._dir(table), version, f"_bucket={b}")
-            try:
-                names = os.listdir(bdir)
-            except FileNotFoundError:
-                raise RuntimeError(
-                    f"bucket {b} of {table!r} (version {version!r}) was replaced "
-                    "by a concurrent commit and vacuumed after the manifest was "
-                    "read; re-read the manifest and re-plan"
-                ) from None
-            files += [os.path.join(bdir, n) for n in sorted(names) if n.endswith(".parquet")]
+        files = [
+            os.path.join(bdir, n)
+            for bdir in self._bucket_paths(table, manifest, buckets)
+            for n in sorted(os.listdir(bdir))
+            if n.endswith(".parquet")
+        ]
         if max_bytes is not None and (
             max_bytes < 0 or sum(os.path.getsize(p) for p in files) > max_bytes
         ):

@@ -47,11 +47,15 @@ from stripe_sync_engine_spark.operators.incremental_dedup import (
 from stripe_sync_engine_spark.operators.merge import (
     delete_by_keys,
     latest_by_key,
-    merge_upsert,
     merge_upsert_clustered,
     replace_set,
     soft_delete_reconcile,
 )
+
+# The engine merges through merge_upsert_clustered only. merge_upsert, the
+# join-based reference, stays reachable under this module's name because
+# perfbench/run.py wraps every merge operator on this module by name.
+from stripe_sync_engine_spark.operators.merge import merge_upsert  # noqa: F401
 from stripe_sync_engine_spark.operators.validate import validate_enums
 from stripe_sync_engine_spark.schemas.entities import bucket_key, entity_schema
 from stripe_sync_engine_spark.sources.stripe_api import FLUSH_CHUNK, StripeAPI, to_json_rows
@@ -94,6 +98,10 @@ class SyncConfig:
 
 
 _RAW_EVENT_SCHEMA = StructType([StructField("value", StringType())])
+#: a parsed webhook event rebuilt driver-side (revalidated or list-expanded)
+_EVENT_ROW_SCHEMA = (
+    "event_id string, event_type string, event_created long, payload string, sync_ts timestamp"
+)
 
 
 def _first_wins(pairs: list[tuple[str, object]]) -> dict:
@@ -674,7 +682,8 @@ class StripeSparkSync:
             for chunk, deleted_ids in self._revalidate_chunks(entity, subset):
                 n += self._upsert_rows(entity, chunk)
                 if deleted_ids:
-                    self._delete_ids(entity, deleted_ids)
+                    ids = self.spark.createDataFrame([(i,) for i in deleted_ids], "id string")
+                    self._delete_keys(entity, ids)
             return n
         return self._upsert_rows(entity, subset, driver_objs)
 
@@ -685,14 +694,14 @@ class StripeSparkSync:
         knowable driver-side (r16): the merge's probe is then pure Python.
         ``driver_objs`` must be the decoded payloads of exactly the rows
         that merge projects, one per row — a webhook part from
-        ``_expanded_parts``, a backfill flush's buffer, a point sync's
-        object. Webhook bodies must be decoded the way Spark reads them
-        (``_first_wins``); objects the engine serializes itself
-        (``json.dumps``) match by construction. Valid only with no
-        registered transform (one could rewrite the key), a string-typed
-        declared bucket key (the projected cast is then the identity, so
-        ``payload[bkey]`` IS the projected value), and every payload
-        carrying a non-null string key. Anything else (including no
+        ``_expanded_parts`` or a ``_merge_objects`` batch. Webhook bodies
+        must be decoded the way Spark reads them (``_first_wins``);
+        objects the engine serializes itself (``json.dumps``) match by
+        construction. Valid only with no registered transform (one could
+        rewrite the key), a string-typed declared bucket key (the
+        projected cast is then the identity, so ``payload[bkey]`` IS the
+        projected value), and every payload carrying a non-null string
+        key. Anything else (including no
         payloads: a DataFrame-fed batch, revalidated rows) → None → the
         distributed probe."""
         if driver_objs is None or transforms_for(entity):
@@ -736,26 +745,27 @@ class StripeSparkSync:
     def _handle_delete(self, entity: str, subset: DataFrame) -> int:
         """Hard delete (product/price/plan/tax_id .deleted —
         stripeSync.ts:1360-1399,:1480-1482)."""
-        keys = self._project(entity, subset).select("id")
+        return self._delete_keys(entity, self._project(entity, subset).select("id"))
+
+    def _delete_keys(self, entity: str, keys: DataFrame) -> int:
+        """S10 hard delete of the rows whose ``id`` is in ``keys``; returns
+        the number of key rows. Bucket-pruned like the merge: only buckets
+        holding the keys are anti-joined and rewritten, and the bucket
+        probe doubles as the row accounting (one job over the keys, no
+        separate count() re-executing their lineage)."""
         with self._table_write_lock(entity):
             exists = self.store.exists(entity)
             nb_planned = self.store._table_n_buckets(entity)
-            # the bucket probe doubles as the row accounting (same trick as
-            # _merge_plan) — one job over the keys, no separate post-commit
-            # count() re-executing the parse→project lineage
             probe = self.store.bucket_counts(keys, "id", table=entity if exists else None)
-            n = int(sum(c for _, c in probe))
-            if exists:
-                touched = [b for b, _ in probe]
-                target = self.store.read_buckets(entity, touched)
-                if target is not None and touched:
-                    self._commit_buckets(
-                        entity,
-                        delete_by_keys(target, keys),
-                        touched,
-                        planned_n_buckets=nb_planned,
-                    )
-        return n
+            touched = [b for b, _ in probe]
+            if exists and touched:
+                self._commit_buckets(
+                    entity,
+                    delete_by_keys(self.store.read_buckets(entity, touched), keys),
+                    touched,
+                    planned_n_buckets=nb_planned,
+                )
+        return int(sum(c for _, c in probe))
 
     def _handle_entitlement_summary(self, subset: DataFrame) -> int:
         """entitlements.active_entitlement_summary.updated → replace-set of
@@ -868,7 +878,7 @@ class StripeSparkSync:
         # commit as the upsert (one write per batch instead of two).
         with self._table_write_lock("subscription_items"):
             nb_planned = self.store._table_n_buckets("subscription_items")
-            merged, touched, bkey, _n, pre_clustered = self._merge_plan("subscription_items", rows)
+            merged, touched, bkey, _n = self._merge_plan("subscription_items", rows)
             if not touched and self.store.exists("subscription_items"):
                 return  # batch had no items — nothing to merge or reconcile
             current = rows.select("id", "subscription")
@@ -882,7 +892,7 @@ class StripeSparkSync:
                 marked,
                 touched,
                 key=bkey,
-                pre_clustered=pre_clustered,
+                pre_clustered=True,
                 planned_n_buckets=nb_planned,
             )
 
@@ -894,37 +904,20 @@ class StripeSparkSync:
             return
         api = self.api
 
-        def fetch(sid: str) -> list[str]:
+        def fetch(sid: str) -> list[dict]:
             out = []
             for item in api.list_line_items(sid):
                 item = dict(item)
                 if isinstance(item.get("price"), dict):
                     item["price"] = item["price"].get("id")
                 item["checkout_session"] = sid
-                out.append(json.dumps(item))
+                out.append(item)
             return out
 
-        # Flush every FLUSH_CHUNK items (the reference's flush-250 contract,
-        # stripeSync.ts:1037) — the driver buffer is bounded regardless of
-        # how many sessions (or how many line items each) the batch holds.
         sids = (r["id"] for r in session_rows.select("id").distinct().toLocalIterator())
-        buffer: list[str] = []
-
-        def flush() -> None:
-            if not buffer:
-                return
-            now = time.time()
-            df = self.spark.createDataFrame(
-                [(p, now) for p in buffer], "payload string, sync_ts double"
-            )
-            self._merge("checkout_session_line_items", self._project("checkout_session_line_items", df))
-            buffer.clear()
-
-        for items in _concurrent_fetch(fetch, sids):
-            buffer.extend(items)
-            if len(buffer) >= FLUSH_CHUNK:
-                flush()
-        flush()
+        self._merge_pages(
+            "checkout_session_line_items", _concurrent_fetch(fetch, sids), backfill_depth=None
+        )
 
     # -- optional refetch / expansion ------------------------------------
     def _revalidate_chunks(
@@ -962,7 +955,6 @@ class StripeSparkSync:
                     deleted_id = payload["id"]
             return (r["event_id"], r["event_type"], r["event_created"], json.dumps(payload), sync_ts), deleted_id
 
-        schema = "event_id string, event_type string, event_created long, payload string, sync_ts timestamp"
         buf: list[tuple] = []
         dels: list[str] = []
         for row, deleted_id in _concurrent_fetch(refetch, subset.toLocalIterator()):
@@ -971,26 +963,10 @@ class StripeSparkSync:
             else:
                 buf.append(row)
             if len(buf) + len(dels) >= FLUSH_CHUNK:
-                yield self.spark.createDataFrame(buf, schema), dels
+                yield self.spark.createDataFrame(buf, _EVENT_ROW_SCHEMA), dels
                 buf, dels = [], []
         if buf or dels:
-            yield self.spark.createDataFrame(buf, schema), dels
-
-    def _delete_ids(self, entity: str, ids: list[str]) -> None:
-        """Hard-delete rows whose upstream object no longer exists.
-        Bucket-pruned like the merge: only buckets holding the keys are
-        anti-joined and rewritten."""
-        keys = self.spark.createDataFrame([(i,) for i in ids], "id string")
-        with self._table_write_lock(entity):
-            if not self.store.exists(entity):
-                return
-            nb_planned = self.store._table_n_buckets(entity)
-            touched = self.store.buckets_of(keys, "id", table=entity)
-            target = self.store.read_buckets(entity, touched)
-            if target is not None:
-                self._commit_buckets(
-                    entity, delete_by_keys(target, keys), touched, planned_n_buckets=nb_planned
-                )
+            yield self.spark.createDataFrame(buf, _EVENT_ROW_SCHEMA), dels
 
     def _expanded_parts(
         self, entity: str, subset: DataFrame, objs: list[dict | None] | None = None
@@ -1032,19 +1008,19 @@ class StripeSparkSync:
             row = (r["event_id"], r["event_type"], r["event_created"], json.dumps(payload), r["sync_ts"])
             return row, payload
 
-        schema = "event_id string, event_type string, event_created long, payload string, sync_ts timestamp"
         fetched = _concurrent_fetch(expand, needs.toLocalIterator())
         for chunk in _chunks(fetched, FLUSH_CHUNK):
             rows, payloads = zip(*chunk)
-            yield self.spark.createDataFrame(list(rows), schema), list(payloads)
+            yield self.spark.createDataFrame(list(rows), _EVENT_ROW_SCHEMA), list(payloads)
 
     # -- parent backfill ---------------------------------------------------
     def _backfill_parents(self, entity: str, rows: DataFrame, depth: int) -> None:
         """Anti-join the batch's FK ids against the parent table; fetch and
         upsert the missing parents (reference backfill via
         findMissingEntries + fetchMissingEntities,
-        database/postgres.ts:106-120 + stripeSync.ts:1762-1776). Iterative
-        with capped depth instead of recursion."""
+        database/postgres.ts:106-120 + stripeSync.ts:1762-1776). Fetched
+        parents backfill their own parents one level deeper, down to
+        ``max_backfill_depth``."""
         if self.api is None or depth >= self.config.max_backfill_depth:
             return
         api = self.api
@@ -1085,17 +1061,8 @@ class StripeSparkSync:
                 for obj in _concurrent_fetch(lambda mid: api.retrieve(parent, mid), missing_ids)
                 if obj is not None
             ]
-            if not fetched:
-                continue
-            now = time.time()
-            pdf = self.spark.createDataFrame(
-                [(p, now) for p in to_json_rows(fetched)], "payload string, sync_ts double"
-            )
-            parent_rows = self._project(parent, pdf)
-            self._backfill_parents(parent, parent_rows, depth + 1)
-            self._merge(
-                parent, parent_rows, driver_key_values=self._driver_key_values(parent, fetched)
-            )
+            if fetched:
+                self._merge_objects(parent, fetched, backfill_depth=depth + 1)
 
     # -- merge -------------------------------------------------------------
     def _ensure_bucket_key(self, entity: str) -> str:
@@ -1116,15 +1083,16 @@ class StripeSparkSync:
         rows: DataFrame,
         update_cols: list[str] | None = None,
         driver_key_values: list[str] | None = None,
-    ) -> tuple[DataFrame, list[int], str, int, bool]:
+    ) -> tuple[DataFrame, list[int], str, int]:
         """Build (but do not write) the merged contents of the buckets a
         batch touches. Returns ``(merged, touched_buckets, bucket_key,
-        n_batch_rows, pre_clustered)`` so callers that compose further
-        bucket-local operators onto the merge (subscription-item
-        reconciliation) commit ONE version instead of two —
-        ``pre_clustered`` says whether ``merged`` is already partitioned by
-        the store's bucket expression (pass it to ``write_buckets`` to skip
-        the rebalance exchange)."""
+        n_batch_rows)`` so callers that compose further bucket-local
+        operators onto the merge (subscription-item reconciliation) commit
+        ONE version instead of two. Every merge, full-row or partial
+        (``update_cols``: customer.deleted), is ``merge_upsert_clustered``:
+        ONE shuffle clustered by the store's bucket expression, so
+        ``merged`` is always pre-clustered and its write skips the
+        rebalance exchange (``write_buckets(pre_clustered=True)``)."""
         # Public UDF seam (SURVEY §2.10): user-registered per-entity
         # transforms run on the projected rows just before every merge —
         # all write paths (webhook, backfill, fan-out, point sync) funnel
@@ -1161,42 +1129,24 @@ class StripeSparkSync:
         touched = [b for b, _ in probe]
         n_rows = int(sum(n for _, n in probe))
         target = self.store.read_buckets(entity, touched)
-        if update_cols is None:
-            # Hot path: full-row merge as ONE shuffle clustered by the
-            # store's bucket expression — the write then skips its
-            # rebalance, so the whole micro-batch merge is a single
-            # exchange (vs argmax + full-outer + rebalance = three).
-            merged = merge_upsert_clustered(
-                target,
-                rows,
-                cluster_expr=self.store.cluster_expr_for(entity, bkey),
-                key="id",
-                ts_col="last_synced_at",
-                tiebreak_cols=tiebreaks,
-                # one task per touched bucket (r16): without the explicit
-                # count AQE coalesces the merge's exchange to one task for
-                # a micro-batch, and that task writes every touched bucket
-                # dir sequentially — the serial tail the non-pre-clustered
-                # write path already avoids (storage._prepare_buckets).
-                num_partitions=max(1, len(touched)),
-            )
-            pre_clustered = True
-        else:
-            # Partial-column updates (customer.deleted) keep the join-based
-            # merge — a matched row mixes target and source columns, which
-            # the union/argmax formulation cannot express.
-            merged = merge_upsert(
-                target,
-                rows,
-                key="id",
-                ts_col="last_synced_at",
-                tiebreak_cols=tiebreaks,
-                update_cols=update_cols,
-            )
-            pre_clustered = False
+        merged = merge_upsert_clustered(
+            target,
+            rows,
+            cluster_expr=self.store.cluster_expr_for(entity, bkey),
+            key="id",
+            ts_col="last_synced_at",
+            tiebreak_cols=tiebreaks,
+            # one task per touched bucket (r16): without the explicit
+            # count AQE coalesces the merge's exchange to one task for
+            # a micro-batch, and that task writes every touched bucket
+            # dir sequentially — the serial tail the non-pre-clustered
+            # write path already avoids (storage._prepare_buckets).
+            num_partitions=max(1, len(touched)),
+            update_cols=update_cols,
+        )
         if tiebreaks:
             merged = merged.drop(*tiebreaks)
-        return merged, touched, bkey, n_rows, pre_clustered
+        return merged, touched, bkey, n_rows
 
     def rebucket_entity(self, entity: str, n_buckets: int) -> None:
         """Online rebucket serialized against this engine's merges: the
@@ -2076,7 +2026,7 @@ class StripeSparkSync:
             # out-of-band rebucket between here and the commit then fails
             # the write loudly instead of corrupting buckets
             nb_planned = self.store._table_n_buckets(entity)
-            merged, touched, bkey, n_rows, pre_clustered = self._merge_plan(
+            merged, touched, bkey, n_rows = self._merge_plan(
                 entity, rows, update_cols, driver_key_values
             )
             # An empty batch touches no buckets — skip the write job unless
@@ -2088,10 +2038,59 @@ class StripeSparkSync:
                     merged,
                     touched,
                     key=bkey,
-                    pre_clustered=pre_clustered,
+                    pre_clustered=True,
                     planned_n_buckets=nb_planned,
                 )
         return n_rows
+
+    def _merge_objects(
+        self, entity: str, objs: list[dict], backfill_depth: int | None = 0
+    ) -> None:
+        """Decoded API objects → one merge: serialize (``json.dumps``),
+        project with a wall-clock sync timestamp (getSyncTimestamp,
+        stripeSync.ts:580-582), backfill missing parents from
+        ``backfill_depth`` (None: no parent probe), merge with the
+        zero-job driver probe."""
+        now = time.time()
+        df = self.spark.createDataFrame(
+            [(p, now) for p in to_json_rows(objs)], "payload string, sync_ts double"
+        )
+        rows = self._project(entity, df)
+        if backfill_depth is not None and self.config.backfill_related_entities:
+            self._backfill_parents(entity, rows, depth=backfill_depth)
+        self._merge(entity, rows, driver_key_values=self._driver_key_values(entity, objs))
+
+    def _merge_pages(
+        self,
+        entity: str,
+        pages: Iterable[list[dict]],
+        backfill_depth: int | None = 0,
+        on_flush: Callable[[int], None] | None = None,
+    ) -> int:
+        """Buffer pages of objects into ``_merge_objects`` batches — the
+        reference's flush-250 contract (stripeSync.ts:1033-1058): flush
+        once the buffer reaches FLUSH_CHUNK after a whole page, then the
+        rest, so the driver buffer stays bounded. ``on_flush`` receives
+        the objects merged so far after every flush. Returns that total."""
+        synced = 0
+        buffer: list[dict] = []
+
+        def flush() -> None:
+            nonlocal synced
+            if not buffer:
+                return
+            self._merge_objects(entity, buffer, backfill_depth)
+            synced += len(buffer)
+            buffer.clear()
+            if on_flush is not None:
+                on_flush(synced)
+
+        for page in pages:
+            buffer.extend(page)
+            if len(buffer) >= FLUSH_CHUNK:
+                flush()
+        flush()
+        return synced
 
     # ------------------------------------------------------------------
     # Backfill layer (§3.2) — paginated scans in dependency order
@@ -2200,32 +2199,12 @@ class StripeSparkSync:
         is this engine's natural cadence."""
         if self.api is None:
             return 0
-        synced = 0
-        buffer: list[dict] = []
 
-        def flush() -> None:
-            nonlocal synced
-            if not buffer:
-                return
-            now = time.time()
-            df = self.spark.createDataFrame(
-                [(p, now) for p in to_json_rows(buffer)], "payload string, sync_ts double"
-            )
-            rows = self._project(entity, df)
-            if self.config.backfill_related_entities:
-                self._backfill_parents(entity, rows, depth=0)
-            self._merge(entity, rows, driver_key_values=self._driver_key_values(entity, buffer))
-            synced += len(buffer)
-            buffer.clear()
+        def progress(synced: int) -> None:
             if on_progress is not None:
                 on_progress({"entity": entity, "created": created, "synced": synced})
 
-        for page in self.api.list(entity, created):
-            buffer.extend(page)
-            if len(buffer) >= FLUSH_CHUNK:
-                flush()
-        flush()
-        return synced
+        return self._merge_pages(entity, self.api.list(entity, created), on_flush=progress)
 
     def sync_payment_methods_fanout(self) -> int:
         """S3 fan-out scan: payment methods have no global list endpoint —
@@ -2247,33 +2226,10 @@ class StripeSparkSync:
         # fan-out width), flushed through the merge pipeline in bounded
         # chunks so neither the object buffer nor a single merge batch
         # grows with the customer count.
-        synced = 0
-        buffer: list[dict] = []
-
-        def flush() -> None:
-            nonlocal synced
-            if not buffer:
-                return
-            now = time.time()
-            df = self.spark.createDataFrame(
-                [(p, now) for p in to_json_rows(buffer)], "payload string, sync_ts double"
-            )
-            self._merge(
-                "payment_methods",
-                self._project("payment_methods", df),
-                driver_key_values=self._driver_key_values("payment_methods", buffer),
-            )
-            synced += len(buffer)
-            buffer.clear()
-
-        for objs in _concurrent_fetch(
+        pages = _concurrent_fetch(
             lambda cid: api.list_by_parent("payment_methods", "customer", cid), ids
-        ):
-            buffer.extend(objs)
-            if len(buffer) >= FLUSH_CHUNK:
-                flush()
-        flush()
-        return synced
+        )
+        return self._merge_pages("payment_methods", pages, backfill_depth=None)
 
     def sync_single_entity(self, stripe_id: str) -> str | None:
         """S4 point lookup: dispatch on id prefix → retrieve → upsert
@@ -2291,15 +2247,8 @@ class StripeSparkSync:
             # reference maps Stripe's resource_missing to a delete
             # (stripeSync.ts:267-273, 300-306, 333-339).
             if entity in R.DELETE_ON_REFETCH_MISSING:
-                self._delete_ids(entity, [stripe_id])
+                self._delete_keys(entity, self.spark.createDataFrame([(stripe_id,)], "id string"))
                 return entity
             return None
-        now = time.time()
-        df = self.spark.createDataFrame(
-            [(json.dumps(obj), now)], "payload string, sync_ts double"
-        )
-        rows = self._project(entity, df)
-        if self.config.backfill_related_entities:
-            self._backfill_parents(entity, rows, depth=0)
-        self._merge(entity, rows, driver_key_values=self._driver_key_values(entity, [obj]))
+        self._merge_objects(entity, [obj])
         return entity

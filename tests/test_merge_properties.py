@@ -117,48 +117,52 @@ def _cluster():
 _ts_or_null = st.one_of(st.none(), st.integers(min_value=0, max_value=5))
 
 
-def _merge_rows(spark, rows, with_tiebreak):
-    """rows: (key, ts|None, value[, seq])."""
+def _merge_rows(spark, rows, with_tiebreak, with_note=False):
+    """rows: (key, ts|None, value[, note][, seq])."""
     base = dt.datetime(2024, 1, 1)
-    if with_tiebreak:
-        data = [
-            (k, v, base + dt.timedelta(seconds=ts) if ts is not None else None, f"evt_{seq:03d}")
-            for (k, ts, v, seq) in rows
-        ]
-        schema = "id string, value long, last_synced_at timestamp, _event_id string"
-    else:
-        data = [
-            (k, v, base + dt.timedelta(seconds=ts) if ts is not None else None)
-            for (k, ts, v) in rows
-        ]
-        schema = "id string, value long, last_synced_at timestamp"
+    data = []
+    for k, ts, v, *rest in rows:
+        row = [k, v]
+        if with_note:
+            row.append(f"n{rest.pop(0)}")
+        row.append(base + dt.timedelta(seconds=ts) if ts is not None else None)
+        if with_tiebreak:
+            row.append(f"evt_{rest.pop(0):03d}")
+        data.append(tuple(row))
+    schema = (
+        "id string, value long, "
+        + ("note string, " if with_note else "")
+        + "last_synced_at timestamp"
+        + (", _event_id string" if with_tiebreak else "")
+    )
     return spark.createDataFrame(data, schema)
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     target=st.lists(
-        st.tuples(st.sampled_from(KEYS), _ts_or_null, st.integers(0, 99)),
+        st.tuples(st.sampled_from(KEYS), _ts_or_null, st.integers(0, 99), st.integers(0, 9)),
         max_size=3,
         unique_by=lambda t: t[0],
     ),
     source=st.lists(
-        st.tuples(st.sampled_from(KEYS), _ts_or_null, st.integers(0, 99)),
+        st.tuples(st.sampled_from(KEYS), _ts_or_null, st.integers(0, 99), st.integers(0, 9)),
         min_size=1,
         max_size=8,
     ),
+    update_cols=st.one_of(st.none(), st.lists(st.sampled_from(["value", "note"]), unique=True)),
 )
-def test_clustered_merge_equals_join_merge(spark, target, source):
-    tdf = _merge_rows(spark, target, False) if target else None
-    src = [(k, ts, v, i) for i, (k, ts, v) in enumerate(source)]
-    sdf = _merge_rows(spark, src, True)
-    want = merge_upsert(
-        tdf, sdf, key="id", ts_col="last_synced_at", tiebreak_cols=["_event_id"]
-    ).drop("_event_id")
-    got = merge_upsert_clustered(
-        tdf, sdf, _cluster(), key="id", ts_col="last_synced_at", tiebreak_cols=["_event_id"]
-    ).drop("_event_id")
-    cols = ["id", "value", "last_synced_at"]
+def test_clustered_merge_equals_join_merge(spark, target, source, update_cols):
+    """Full-row (``update_cols=None``) and partial merges: ``note`` is a
+    non-key, non-ts column, so a partial update that leaves it out must
+    keep the target's value on a matched row."""
+    tdf = _merge_rows(spark, target, False, with_note=True) if target else None
+    src = [(k, ts, v, n, i) for i, (k, ts, v, n) in enumerate(source)]
+    sdf = _merge_rows(spark, src, True, with_note=True)
+    kw = dict(key="id", ts_col="last_synced_at", tiebreak_cols=["_event_id"], update_cols=update_cols)
+    want = merge_upsert(tdf, sdf, **kw).drop("_event_id")
+    got = merge_upsert_clustered(tdf, sdf, _cluster(), **kw).drop("_event_id")
+    cols = ["id", "value", "note", "last_synced_at"]
     assert sorted(map(tuple, got.select(cols).collect())) == sorted(
         map(tuple, want.select(cols).collect())
     )

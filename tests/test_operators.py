@@ -289,8 +289,9 @@ def test_point_lookup_pushes_filter_to_scan(spark, sf_dir):
 
 
 def test_clustered_merge_is_single_exchange(spark, tmp_path):
-    """The micro-batch merge's claimed physical shape: ONE shuffle
-    (hash by the store's bucket expression), no full-outer join, and no
+    """The micro-batch merge's claimed physical shape, for a full-row
+    merge and for the partial customer.deleted merge: ONE shuffle (hash
+    by the store's bucket expression), no full-outer join, and no
     rebalance before the bucketed write (merge_upsert_clustered +
     write_buckets(pre_clustered=True))."""
     import json as _json
@@ -321,12 +322,41 @@ def test_clustered_merge_is_single_exchange(spark, tmp_path):
     parsed = eng._parse_envelope(eng.events_df_from_json(batch(100, 100))).withColumn(
         "sync_ts", F.to_timestamp(F.col("event_created"))
     )
-    rows = eng._project("charges", parsed, carry={"_event_id": F.col("event_id")})
-    merged, touched, bkey, _n, pre_clustered = eng._merge_plan("charges", rows)
-    assert pre_clustered and touched
-    plan = merged._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1
-    assert "FullOuter" not in plan and "full_outer" not in plan
+    def assert_single_exchange(entity, rows, update_cols=None):
+        merged, touched, _bkey, _n = eng._merge_plan(entity, rows, update_cols=update_cols)
+        assert touched
+        plan = merged._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange") == 1
+        assert "FullOuter" not in plan and "full_outer" not in plan
+
+    assert_single_exchange(
+        "charges", eng._project("charges", parsed, carry={"_event_id": F.col("event_id")})
+    )
+
+    # the partial customer.deleted merge into an existing table: same shape
+    def customer_events(kind, start):
+        return [
+            _json.dumps(
+                {
+                    "id": f"evt_{kind}_{i:06d}",
+                    "object": "event",
+                    "type": f"customer.{kind}",
+                    "created": 1_700_000_000 + start + i,
+                    "data": {"object": {"id": f"cus_{i}", "object": "customer", "email": "a@b"}},
+                }
+            )
+            for i in range(20)
+        ]
+
+    eng.process_webhook_events(eng.events_df_from_json(customer_events("created", 0)))
+    parsed = eng._parse_envelope(eng.events_df_from_json(customer_events("deleted", 100))).withColumn(
+        "sync_ts", F.to_timestamp(F.col("event_created"))
+    )
+    assert_single_exchange(
+        "customers",
+        eng._project("customers", parsed, carry={"_event_id": F.col("event_id")}),
+        update_cols=["object", "deleted", "updated_at"],
+    )
 
 
 # ---------------------------------------------------------------------------

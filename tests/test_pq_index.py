@@ -956,12 +956,16 @@ def test_persisted_ivfpq_topk_fails_loudly_on_a_vacuumed_bucket(spark, sf_dir, t
     """A codes bucket the manifest references whose directory is gone (a
     concurrent commit replaced and vacuumed it after the manifest was
     read) raises instead of ranking the remaining cells as if the
-    vanished vectors never existed."""
+    vanished vectors never existed — on both placements of ``topk``, and
+    in the store's Spark scans of the current manifest (``read``,
+    ``read_buckets``), naming the bucket, its version and a concurrent
+    commit so ``with_occ_retry`` re-plans."""
     import os
     import shutil
 
     from stripe_sync_engine_spark.operators.pq_index import PersistedIVFPQ, train_ivf_pq
     from stripe_sync_engine_spark.storage import TableStore
+    from tests.test_operators import _with_threshold
 
     vecs, X, ids = _corpus(spark, sf_dir)
     idx = train_ivf_pq(vecs, n_cells=8, m=8, k=8)
@@ -972,5 +976,12 @@ def test_persisted_ivfpq_topk_fails_loudly_on_a_vacuumed_bucket(spark, sf_dir, t
     assert len(p.topk(queries, k=10, nprobe=8).collect()) == 10  # every cell
     b, version = sorted(store._read_manifest(p.table)["buckets"].items())[0]
     shutil.rmtree(os.path.join(store.root, p.table, version, f"_bucket={b}"))
-    with pytest.raises(RuntimeError, match=f"bucket {b} of .*concurrent commit"):
+    loud = f"bucket {b} of .*{version}.*concurrent commit"
+    with pytest.raises(RuntimeError, match=loud):
         p.topk(queries, k=10, nprobe=8)
+    with pytest.raises(RuntimeError, match=loud):
+        _with_threshold(spark, "-1", lambda: p.topk(queries, k=10, nprobe=8).collect())
+    with pytest.raises(RuntimeError, match=loud):
+        store.read(p.table)
+    with pytest.raises(RuntimeError, match=loud):
+        store.read_buckets(p.table, [int(b)])
