@@ -17,23 +17,32 @@ Reproduces the semantics of the reference's upsert sinks
 * S12 ``soft_delete_reconcile`` — mark vanished children deleted
   (reference ``markDeletedSubscriptionItems``, stripeSync.ts:1559-1583).
 
-Physical strategy: the engine merges through ``merge_upsert_clustered``,
-ONE shuffle by the store's bucket expression (union + per-key argmax,
-full-row or partial-column); ``merge_upsert``, the join-based form, is the
-reference the property tests compare it against. Either way merge cost is
+Physical strategy: one merge has two placements and one reference.
+``merge_upsert_arrow`` is the DRIVER placement: a pure Arrow/Python kernel
+the engine runs when a batch is driver-known and its touched buckets are
+small (the store's ``read_arrow`` bound) — no Spark job, no merge plan.
+``merge_upsert_clustered`` is the SPARK placement for everything else: ONE
+shuffle by the store's bucket expression (union + per-key argmax, full-row
+or partial-column). ``merge_upsert``, the join-based form, is the reference
+the property tests compare both against. Either way merge cost is
 O(rows merged), which is why the engine's sync layer feeds these operators
 BUCKET-PRUNED targets: the store is hash-bucketed by key (``storage.py``)
 and a merge reads/rewrites only buckets containing batch keys, making each
-micro-batch O(batch ∩ buckets) rather than O(table). These operators stay
-pure DataFrame→DataFrame; the pruning policy lives at the call site.
+micro-batch O(batch ∩ buckets) rather than O(table). The pruning and
+placement policy lives at the call site.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterable, Sequence
+from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType, TimestampType
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 def latest_by_key(
@@ -264,6 +273,125 @@ def merge_upsert_clustered(
             for c in keep_cols
         ]
     return ranked.where(F.col("_keep")).select(*out_cols)
+
+
+def arrow_of_rows(rows: Sequence, schema: StructType) -> pa.Table:
+    """Python rows (tuples or ``Row``s in ``schema``'s field order) as a
+    ``pa.Table`` of Spark's Arrow types. Timestamps go through
+    ``TimestampType.toInternal``, the inverse of what ``collect()`` returns
+    and what ``createDataFrame`` applies to a naive datetime, so their
+    microseconds are exact whatever the process time zone."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    cols = []
+    for i, f in enumerate(schema.fields):
+        vals = [r[i] for r in rows]
+        if isinstance(f.dataType, TimestampType):
+            vals = [None if v is None else f.dataType.toInternal(v) for v in vals]
+        cols.append(pa.array(vals, type=to_arrow_type(f.dataType)))
+    return pa.table(cols, names=schema.names)
+
+
+def collect_arrow(df: DataFrame) -> pa.Table:
+    """``df.collect()`` as Arrow. Over a local relation (an Arrow-built
+    frame and the projections on it) this runs no Spark job, where
+    ``toArrow()`` runs one."""
+    return arrow_of_rows(df.collect(), df.schema)
+
+
+def merge_upsert_arrow(
+    target: pa.Table,
+    source: pa.Table | None,
+    key: str = "id",
+    ts_col: str | None = "last_synced_at",
+    tiebreak_cols: Sequence[str] | None = None,
+    update_cols: Sequence[str] | None = None,
+    delete_keys: Iterable[str] = (),
+) -> pa.Table:
+    """``merge_upsert_clustered`` on the driver: the merged contents of the
+    buckets ``target`` holds, as a ``pa.Table`` in ``target``'s schema
+    (column order and types; source columns it lacks, like the
+    ``_event_id`` tiebreak carry, are dropped, and target columns the
+    source lacks come in as NULL). Same precedence per key: highest
+    ``ts_col`` first with NULLs last (compared as int64 microseconds); on
+    an equal non-null timestamp the target wins; when both are NULL the
+    source wins; ``tiebreak_cols`` descending, NULLs last, order source
+    rows; ``ts_col=None`` lets the source always win. ``update_cols`` is
+    the partial update: a winning source row with a target row takes
+    ``update_cols`` plus ``ts_col`` from the source and the rest from the
+    target row, and an insert takes the full source row. NULL keys are
+    dropped on both sides, and so is every key in ``delete_keys`` (S10,
+    the hard delete of the same rewrite). Equivalence to ``merge_upsert``
+    is property-tested beside the Spark placement's."""
+    import pyarrow as pa
+
+    schema = target.schema
+    if source is None:
+        source = schema.empty_table()
+    n_src = source.num_rows
+    aligned = pa.table(
+        [
+            source.column(c).cast(schema.field(c).type)
+            if c in source.column_names
+            else pa.nulls(n_src, schema.field(c).type)
+            for c in schema.names
+        ],
+        schema=schema,
+    )
+
+    def values(t: pa.Table, c: str | None) -> list:
+        if c is None or c not in t.column_names:
+            return [None] * t.num_rows
+        col = t.column(c)
+        return (col.cast(pa.int64()) if c == ts_col else col).to_pylist()
+
+    gone = set(delete_keys)
+    best: dict = {}  # key → (rank, is_tgt, row index); larger rank wins
+    t_row: dict = {}  # key → index of its best-ranked target row
+    for t, is_tgt in ((target, 1), (source, 0)):
+        cols = [values(t, key), values(t, ts_col)] + [values(t, c) for c in tiebreak_cols or ()]
+        for i, (k, ts, *ties) in enumerate(zip(*cols)):
+            if k is None or k in gone:
+                continue
+            if ts_col is None:
+                rank = (1 - is_tgt,)
+            elif ts is None:
+                rank = ((0,), 1 - is_tgt)
+            else:
+                rank = ((1, ts), is_tgt)
+            rank += tuple((0,) if v is None else (1, v) for v in ties)
+            cur = best.get(k)
+            if cur is None or rank > cur[0]:
+                best[k] = (rank, is_tgt, i)
+        if is_tgt:  # the target pass alone: each key's best target row
+            t_row = {k: i for k, (_, _, i) in best.items()}
+    keep_t, keep_s, part_s, part_t = [], [], [], []
+    for k, (_, is_tgt, i) in best.items():
+        if is_tgt:
+            keep_t.append(i)
+        elif update_cols is not None and k in t_row:
+            part_s.append(i)
+            part_t.append(t_row[k])
+        else:
+            keep_s.append(i)
+
+    def take(t: pa.Table, idx: list[int]):
+        return t.take(pa.array(idx, type=pa.int64()))
+
+    parts = [take(target, keep_t), take(aligned, keep_s)]
+    if part_s:
+        src_side = {key, ts_col, *update_cols}
+        from_t, from_s = take(target, part_t), take(aligned, part_s)
+        parts.append(
+            pa.table(
+                [(from_s if c in src_side else from_t).column(c) for c in schema.names],
+                schema=schema,
+            )
+        )
+    # one chunk: Spark 4.1's createDataFrame(pa.Table) silently drops every
+    # batch after an empty one, and a bucket file wants one row group anyway
+    return pa.concat_tables(parts).combine_chunks()
 
 
 def delete_by_keys(target: DataFrame, keys: DataFrame, key: str = "id") -> DataFrame:

@@ -20,9 +20,19 @@ unreferenced version dir (vacuumed later); the manifest rename is the
 atomic commit, and readers of the old manifest keep a consistent view.
 
 Bucket assignment is ``pmod(xxhash64(key), n_buckets)`` — stable across
-sessions, computed JVM-side. 32 buckets suit the local harness; at 100 TB
-you would raise ``n_buckets`` into the thousands (it is recorded per table
-in the manifest, so stores of different widths coexist).
+sessions, computed JVM-side (and, for keys already on the driver, by the
+parity-checked Python twin in ``functions/xxh64``). 32 buckets suit the
+local harness; at 100 TB you would raise ``n_buckets`` into the thousands
+(it is recorded per table in the manifest, so stores of different widths
+coexist).
+
+A version dir is written in one of two places. Spark writes it
+(``write``/``write_buckets``/``prepare_buckets``) for table births and
+for any write whose rows live in a DataFrame. Rows already on the driver —
+state-table rows, and sync merges whose touched buckets fit under
+``driver_read_bytes()`` — are written with pyarrow, one file per bucket
+(``write_rows_buckets``/``write_arrow_buckets``), with no Spark job. Both
+commit through the same locked manifest swap (``_commit_partial``).
 
 The ``migrate()`` analog of the reference's migration runner records
 applied DDL in a ``_migrations.json`` file.
@@ -66,6 +76,16 @@ INDEXED_STATS_COLUMNS = (
     "subtotal",
     "customer",
 )
+
+
+def _buckets_of(values: list, nb: int) -> list[int]:
+    """``pmod(xxhash64(cast(v as string)), nb)`` of each driver-known key
+    (functions/xxh64); NULL hashes to Spark's seed."""
+    from stripe_sync_engine_spark.functions import xxh64
+
+    return [
+        (xxh64.SPARK_SEED if v is None else xxh64.spark_xxhash64_str(v)) % nb for v in values
+    ]
 
 
 class TableStore:
@@ -272,12 +292,14 @@ class TableStore:
         self, values, table: str | None = None
     ) -> list[tuple[int, int]]:
         """``(bucket id, value count)`` pairs of DRIVER-KNOWN key values —
-        the zero-job twin of ``bucket_counts`` (r16): the webhook merge's
+        the zero-job twin of ``bucket_counts`` (r16): the sync merges'
         bucket probe + row accounting for batches whose keys already live
         on the driver, so a micro-batch merge stops paying a Spark probe
-        job before its write. If the Python hash disagrees with the
-        running Spark (``xxh64.driver_hash_matches``, checked once per
-        SparkContext), the values go through ``bucket_counts`` instead."""
+        job before its write. A None value counts in the bucket Spark puts
+        a NULL key in (``xxhash64`` of NULL is its seed). If the Python
+        hash disagrees with the running Spark
+        (``xxh64.driver_hash_matches``, checked once per SparkContext),
+        the values go through ``bucket_counts`` instead."""
         from collections import Counter
 
         from stripe_sync_engine_spark.functions import xxh64
@@ -286,11 +308,11 @@ class TableStore:
         if not values:
             return []
         if not xxh64.driver_hash_matches(self.spark):
-            kind = "string" if isinstance(values[0], str) else "long"
+            kind = "long" if any(isinstance(v, int) for v in values) else "string"
             frame = self.spark.createDataFrame([(v,) for v in values], f"v {kind}")
             return self.bucket_counts(frame, key="v", table=table)
         nb = self._table_n_buckets(table) if table else self.n_buckets
-        return sorted(Counter(xxh64.spark_xxhash64_str(v) % nb for v in values).items())
+        return sorted(Counter(_buckets_of(values, nb)).items())
 
     def buckets_of(self, df: DataFrame, key: str = "id", table: str | None = None) -> list[int]:
         """Distinct bucket ids present in ``df`` — bounded by n_buckets, so
@@ -1284,7 +1306,7 @@ class TableStore:
     ) -> None:
         """The locked manifest swap of a partial write — shared by
         ``write_buckets``/``commit_prepared`` (Spark-written version dirs)
-        and ``write_rows_buckets`` (driver-written tiny version dirs):
+        and ``_commit_arrow`` (pyarrow-written version dirs):
         OCC preconditions, bucket re-point/drop, vacuum; ``written`` and
         ``stats`` were harvested by the prepare phase."""
         with self._commit_lock(table):
@@ -1343,27 +1365,31 @@ class TableStore:
         replaced = set(prior["buckets"].values()) - set(new_buckets.values())
         self._vacuum(table, replaced)
 
-    # -- driver-side tiny commits ----------------------------------------
-    # Some state tables hold a HANDFUL of rows per commit (postings stats:
-    # one 4-column row per sub-batch). Routing those through a Spark write
-    # job costs a full job launch + shuffle + task commit (~0.5-1s of pure
-    # fixed latency per CDC window, r16 measured) to move a few hundred
-    # bytes. The store owns its file format, so a driver-side pyarrow
-    # write into a private version dir + the SAME locked manifest swap is
-    # an equivalent commit at ~none of the cost — the guide §5 rule
-    # ("the driver should do almost no data work") is about data volume,
-    # and these commits are bounded at a few rows BY CONSTRUCTION
-    # (callers own that contract).
+    # -- driver-side commits -------------------------------------------------
+    # A commit whose rows already live on the driver — postings stats (one
+    # 4-column row per sub-batch), a driver-known sync batch merged by
+    # operators/merge.merge_upsert_arrow — would pay a full Spark job
+    # launch + shuffle + task commit (~0.5-1s of fixed latency, r16
+    # measured) to move a few kilobytes. The store owns its file format, so
+    # a driver-side pyarrow write into a private version dir + the SAME
+    # locked manifest swap is an equivalent commit at ~none of the cost.
+    # The guide §5 rule ("the driver should do almost no data work") is
+    # about data volume: these writes stay under the callers' bounds (a
+    # fixed handful of stats rows; the touched buckets' bytes under
+    # ``driver_read_bytes()`` for sync merges).
 
+    #: Spark type name → pyarrow type factory and arguments; timestamps are
+    #: the store's TIMESTAMP_MICROS, adjusted to UTC
     _ARROW_TYPES = {
-        "long": "int64",
-        "integer": "int32",
-        "short": "int16",
-        "byte": "int8",
-        "double": "float64",
-        "float": "float32",
-        "string": "string",
-        "boolean": "bool_",
+        "long": ("int64",),
+        "integer": ("int32",),
+        "short": ("int16",),
+        "byte": ("int8",),
+        "double": ("float64",),
+        "float": ("float32",),
+        "string": ("string",),
+        "boolean": ("bool_",),
+        "timestamp": ("timestamp", "us", "UTC"),
     }
 
     def read_rows_driver(
@@ -1379,6 +1405,22 @@ class TableStore:
             int(b): self.read_arrow(table, [b], manifest).to_pylist() for b in buckets
         }
 
+    def _partial_prior(self, table: str, planned_n_buckets: int | None) -> dict:
+        """The manifest a driver-side partial write plans against, with
+        ``_prepare_buckets``' existence and rebucket checks."""
+        prior = self._read_manifest(table)
+        if prior is None:
+            raise RuntimeError(
+                f"driver-side partial writes require an existing table (got {table!r}); "
+                "route a table's first version through write()"
+            )
+        if planned_n_buckets is not None and planned_n_buckets != int(prior["n_buckets"]):
+            raise RuntimeError(
+                f"{table!r} was rebucketed ({planned_n_buckets} → {prior['n_buckets']}) "
+                "after this write was planned; re-read the manifest and re-plan the batch"
+            )
+        return prior
+
     def write_rows_buckets(
         self,
         table: str,
@@ -1387,26 +1429,18 @@ class TableStore:
         key: str,
         planned_versions: dict[str, str] | None = None,
     ) -> None:
-        """Partial write of driver-side rows (the tiny-commit twin of
+        """Partial write of driver-side rows (the driver twin of
         ``write_buckets``): ``rows_by_bucket`` holds the FULL new contents
         of exactly its bucket ids, pre-bucketed by the caller (bucket ids
         must come from the store's own bucket expression — callers compute
         them JVM-side in the same collect that yielded the rows). Files
-        are written driver-side with pyarrow; the manifest swap, OCC
-        preconditions, footer-stat harvest, and vacuum are exactly
-        ``write_buckets``'s. Only flat schemas of simple types (string /
-        integral / float / bool) are supported — state tables are."""
+        are written driver-side with pyarrow (``_commit_arrow``); the
+        manifest swap, OCC preconditions, footer-stat harvest, and vacuum
+        are exactly ``write_buckets``'s. Only flat schemas of simple types
+        (string / integral / float / bool / timestamp) are supported."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        prior = self._read_manifest(table)
-        if prior is None:
-            raise RuntimeError(
-                f"write_rows_buckets requires an existing table (got {table!r}); "
-                "route a table's first version through write()"
-            )
-        nb = int(prior["n_buckets"])
-        key = prior.get("bucket_key", key)
+        prior = self._partial_prior(table, None)
         fields = []
         for f in schema.fields:
             tn = f.dataType.typeName()
@@ -1415,31 +1449,90 @@ class TableStore:
                     f"write_rows_buckets supports simple flat types only; "
                     f"{table!r} column {f.name!r} is {tn}"
                 )
-            fields.append(pa.field(f.name, getattr(pa, self._ARROW_TYPES[tn])()))
+            factory, *args = self._ARROW_TYPES[tn]
+            fields.append(pa.field(f.name, getattr(pa, factory)(*args)))
         aschema = pa.schema(fields)
+        self._commit_arrow(
+            table,
+            prior,
+            {b: pa.Table.from_pylist(rows, schema=aschema) for b, rows in rows_by_bucket.items()},
+            prior.get("bucket_key", key),
+            json.loads(schema.json()),
+            planned_versions,
+        )
+
+    def write_arrow_buckets(
+        self,
+        table: str,
+        data,
+        buckets: list[int],
+        planned_n_buckets: int | None = None,
+    ) -> None:
+        """Partial write of a driver-side ``pa.Table`` in the manifest's
+        schema (``read_arrow``'s, so a driver merge of it writes back what
+        it read): ``data`` holds the full new contents of exactly
+        ``buckets``, and buckets left without rows drop from the manifest —
+        ``write_buckets``' contract. Rows are placed by the Python XXH64 of
+        the table's bucket key, so the caller must have checked
+        ``xxh64.driver_hash_matches``; the manifest's schema stays as it
+        is. ``planned_n_buckets`` fails a write planned before a rebucket."""
+        import pyarrow as pa
+
+        prior = self._partial_prior(table, planned_n_buckets)
+        nb = int(prior["n_buckets"])
+        key = prior.get("bucket_key", "id")
+        by_bucket: dict[int, list[int]] = {int(b): [] for b in buckets}
+        for i, b in enumerate(_buckets_of(data.column(key).to_pylist(), nb)):
+            if b not in by_bucket:
+                raise RuntimeError(
+                    f"row {i} of a {table!r} write hashes to bucket {b}, outside "
+                    f"the touched set {sorted(by_bucket)}"
+                )
+            by_bucket[b].append(i)
+        self._commit_arrow(
+            table,
+            prior,
+            {b: data.take(pa.array(idx, type=pa.int64())) for b, idx in by_bucket.items()},
+            key,
+            prior["schema"],
+            None,
+        )
+
+    def _commit_arrow(
+        self,
+        table: str,
+        prior: dict,
+        by_bucket: dict,
+        key: str,
+        schema_json: dict,
+        planned_versions: dict[str, str] | None,
+    ) -> None:
+        """THE driver-side writer: one pyarrow file per non-empty bucket of
+        ``by_bucket`` (bucket id → ``pa.Table``) in a private version dir,
+        then ``_commit_partial``'s locked swap over exactly those bucket
+        ids. ``store_schema=False`` leaves out the embedded
+        ``ARROW:schema`` footer blob, which alone made a small bucket file
+        about twice the bytes of Spark's; the store's readers take the
+        schema from the manifest."""
+        import pyarrow.parquet as pq
+
         version = f"v{int(time.time() * 1000)}_{os.getpid()}_{time.monotonic_ns()}"
         vdir = os.path.join(self._dir(table), version)
         written = set()
-        for b, rows in rows_by_bucket.items():
-            if not rows:
+        for b, t in by_bucket.items():
+            if not t.num_rows:
                 continue
             bdir = os.path.join(vdir, f"_bucket={b}")
             os.makedirs(bdir, exist_ok=True)
-            cols = {
-                f.name: [r.get(f.name) for r in rows] for f in schema.fields
-            }
-            pq.write_table(
-                pa.table(cols, schema=aschema),
-                os.path.join(bdir, "part-driver.parquet"),
-            )
+            pq.write_table(t, os.path.join(bdir, "part-driver.parquet"), store_schema=False)
             written.add(str(b))
         self._commit_partial(
             table,
             version,
-            sorted(rows_by_bucket),
+            sorted(by_bucket),
             key,
-            nb,
-            json.loads(schema.json()),
+            int(prior["n_buckets"]),
+            schema_json,
             planned_versions,
             written,
             self._version_stats(table, version),

@@ -36,24 +36,36 @@ from datetime import datetime, timezone
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import (
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from stripe_sync_engine_spark.commitio import atomic_write_json
+from stripe_sync_engine_spark.functions import xxh64
 from stripe_sync_engine_spark.operators.incremental_dedup import (
     anti_probe,
     run_parallel,
     with_occ_retry,
 )
 from stripe_sync_engine_spark.operators.merge import (
+    arrow_of_rows,
+    collect_arrow,
     delete_by_keys,
     latest_by_key,
+    merge_upsert_arrow,
     merge_upsert_clustered,
     replace_set,
     soft_delete_reconcile,
 )
 
-# The engine merges through merge_upsert_clustered only. merge_upsert, the
-# join-based reference, stays reachable under this module's name because
+# The engine merges through merge_upsert_arrow (driver placement) and
+# merge_upsert_clustered (Spark placement). merge_upsert, the join-based
+# reference, stays reachable under this module's name because
 # perfbench/run.py wraps every merge operator on this module by name.
 from stripe_sync_engine_spark.operators.merge import merge_upsert  # noqa: F401
 from stripe_sync_engine_spark.operators.validate import validate_enums
@@ -61,7 +73,7 @@ from stripe_sync_engine_spark.schemas.entities import bucket_key, entity_schema
 from stripe_sync_engine_spark.sources.stripe_api import FLUSH_CHUNK, StripeAPI, to_json_rows
 from stripe_sync_engine_spark.storage import TableStore
 from stripe_sync_engine_spark.sync import registry as R
-from stripe_sync_engine_spark.sync.transforms import apply_transforms, transforms_for
+from stripe_sync_engine_spark.sync.transforms import apply_transforms
 
 #: sentinel distinguishing "caller accepted the sampled fold-audit
 #: default" from an explicit fold_sample — the implicit default emits a
@@ -99,9 +111,20 @@ class SyncConfig:
 
 _RAW_EVENT_SCHEMA = StructType([StructField("value", StringType())])
 #: a parsed webhook event rebuilt driver-side (revalidated or list-expanded)
-_EVENT_ROW_SCHEMA = (
-    "event_id string, event_type string, event_created long, payload string, sync_ts timestamp"
+_EVENT_ROW_SCHEMA = StructType(
+    [
+        StructField("event_id", StringType()),
+        StructField("event_type", StringType()),
+        StructField("event_created", LongType()),
+        StructField("payload", StringType()),
+        StructField("sync_ts", TimestampType()),
+    ]
 )
+#: a decoded API object, serialized, with its epoch-seconds sync stamp
+_OBJECT_ROW_SCHEMA = StructType(
+    [StructField("payload", StringType()), StructField("sync_ts", DoubleType())]
+)
+_ID_SCHEMA = StructType([StructField("id", StringType())])
 
 
 def _first_wins(pairs: list[tuple[str, object]]) -> dict:
@@ -177,6 +200,10 @@ class StripeSparkSync:
         # across batches. Sorted multi-acquisition prevents deadlock.
         self._table_locks: dict = {}
         self._table_locks_guard = threading.Lock()
+        # Column lists built once: (entity, sync column) → _project's
+        # default projection, and _parse_envelope's
+        self._projections: dict[tuple[str, str], list] = {}
+        self._envelope: list[Column] | None = None
 
     @contextlib.contextmanager
     def _table_write_lock(self, *tables: str):
@@ -318,15 +345,14 @@ class StripeSparkSync:
                     return len([c for c in commits if c > applied])
         raise KeyError(f"no registered rollup named {name!r}")
 
-    def _commit_buckets(
-        self, table: str, df: DataFrame, touched: list[int] | None, **kw
-    ) -> None:
+    def _commit_buckets(self, table: str, df, touched: list[int] | None, **kw) -> None:
         """All engine bucket writes funnel here: snapshot the touched
         buckets' aggregate contributions, commit, then apply each
         registered rollup's exact delta (new minus old contributions —
         O(touched buckets) regardless of table size; zero for replayed or
         stale batches, so maintenance inherits the merge's idempotence).
-        ``touched=None`` means a full-table write."""
+        ``touched=None`` means a full-table write. ``df`` is a DataFrame
+        (Spark write) or a driver merge's ``pa.Table`` (pyarrow write)."""
         from stripe_sync_engine_spark.operators import rollup as R_
 
         specs = self._rollups.get(table, ())
@@ -349,8 +375,10 @@ class StripeSparkSync:
         if touched is None:
             kw.pop("planned_n_buckets", None)  # full write: no stale-plan risk
             self.store.write(table, df, **kw)
-        else:
+        elif isinstance(df, DataFrame):
             self.store.write_buckets(table, df, touched, **kw)
+        else:
+            self.store.write_arrow_buckets(table, df, touched, **kw)
         if not specs:
             return
         src_ms = self.store.commits(table)[-1]
@@ -455,16 +483,25 @@ class StripeSparkSync:
     # ------------------------------------------------------------------
     # Parsing & projection
     # ------------------------------------------------------------------
+    def _local_frame(self, rows: list[tuple], schema: StructType) -> DataFrame:
+        """THE constructor of engine frames built from driver lists: an
+        Arrow-backed local relation. Spark folds the parse/project plans
+        over it into the relation itself, so collecting their rows runs no
+        Spark job — the driver merge placement rests on that — while a
+        ``createDataFrame(list)`` frame is an RDD scan and costs a job per
+        action."""
+        return self.spark.createDataFrame(arrow_of_rows(rows, schema), schema)
+
     def events_df_from_json(self, payloads: list[str]) -> DataFrame:
         """A frame of raw Stripe Event JSON strings (column ``value``) for
         ``process_webhook_events``. The frame carries the driver-side
         payloads as an annotation, so ``process_webhook_events`` can route
-        and probe it in Python. The annotation covers only the frame this
-        method returns, unmodified: any transformation in between (a
-        filter, a union, a re-projection) yields a plain frame, which
-        falls back to the distributed path — correct, but it costs more
-        Spark jobs."""
-        df = self.spark.createDataFrame([(p,) for p in payloads], _RAW_EVENT_SCHEMA)
+        it in Python and merge it on the driver. The annotation covers
+        only the frame this method returns, unmodified: any transformation
+        in between (a filter, a union, a re-projection) yields a plain
+        frame, which falls back to the distributed path — correct, but it
+        costs more Spark jobs."""
+        df = self._local_frame([(p,) for p in payloads], _RAW_EVENT_SCHEMA)
         # The raw strings live on the DRIVER (an HTTP webhook body is a
         # Python list by nature) — remember them on the frame so
         # process_webhook_events can do its routing/probe bookkeeping in
@@ -474,22 +511,27 @@ class StripeSparkSync:
         df._stripe_driver_payloads = list(payloads)
         return df
 
-    @staticmethod
-    def _parse_envelope(raw: DataFrame) -> DataFrame:
-        """raw JSON → (event_id, event_type, event_created, payload) where
-        payload is the embedded entity as raw JSON text. One map-typed
-        parse per level; nested objects stay as JSON text (P1 projection
-        then drops unknown fields for free)."""
-        env = F.from_json(F.col("value"), "map<string,string>")
-        return raw.select(
-            env["id"].alias("event_id"),
-            env["type"].alias("event_type"),
-            env["created"].cast("long").alias("event_created"),
-            F.from_json(env["data"], "map<string,string>")["object"].alias("payload"),
-        )
+    def _parse_envelope(self, raw: DataFrame) -> DataFrame:
+        """raw JSON → (event_id, event_type, event_created, payload,
+        sync_ts) where payload is the embedded entity as raw JSON text and
+        sync_ts is event.created as a timestamp. One map-typed parse per
+        level; nested objects stay as JSON text (P1 projection then drops
+        unknown fields for free). The columns are built once per engine,
+        like ``_project``'s."""
+        if self._envelope is None:
+            env = F.from_json(F.col("value"), "map<string,string>")
+            created = env["created"].cast("long")
+            self._envelope = [
+                env["id"].alias("event_id"),
+                env["type"].alias("event_type"),
+                created.alias("event_created"),
+                F.from_json(env["data"], "map<string,string>")["object"].alias("payload"),
+                F.to_timestamp(created).alias("sync_ts"),
+            ]
+        return raw.select(*self._envelope)
 
-    @staticmethod
     def _project(
+        self,
         entity: str,
         with_payload: DataFrame,
         sync_ts_col: str = "sync_ts",
@@ -502,22 +544,32 @@ class StripeSparkSync:
         maps column name → Column expression evaluated against the input
         (payload available as the ``payload`` column). ``carry`` appends
         extra pass-through columns (e.g. the event id used as a merge
-        tiebreaker) that are NOT part of the entity schema."""
-        pm = F.from_json(F.col("payload"), "map<string,string>")
-        overrides = dict(overrides or {})
-        if entity == "customers":
-            # deleted boolean NOT NULL default false (migration 0015)
-            overrides.setdefault("deleted", F.coalesce(pm["deleted"].cast("boolean"), F.lit(False)))
-        cols = []
-        for f in entity_schema(entity).fields:
-            if f.name in ("updated_at", "last_synced_at"):
-                continue
-            if f.name in overrides:
-                cols.append(overrides[f.name].cast(f.dataType).alias(f.name))
-            else:
-                cols.append(pm[f.name].cast(f.dataType).alias(f.name))
-        cols.append(F.col(sync_ts_col).cast("timestamp").alias("updated_at"))
-        cols.append(F.col(sync_ts_col).cast("timestamp").alias("last_synced_at"))
+        tiebreaker) that are NOT part of the entity schema.
+
+        The default column list is built once per (entity, sync column)
+        and reused: each Column costs several py4j calls, and on a
+        one-event webhook building ~40 of them cost more than running the
+        projection."""
+        ck = (entity, sync_ts_col)
+        if ck not in self._projections:
+            pm = F.from_json(F.col("payload"), "map<string,string>")
+            defaults = {}
+            if entity == "customers":
+                # deleted boolean NOT NULL default false (migration 0015)
+                defaults["deleted"] = F.coalesce(pm["deleted"].cast("boolean"), F.lit(False))
+            base = []
+            for f in entity_schema(entity).fields:
+                if f.name in ("updated_at", "last_synced_at"):
+                    expr = F.col(sync_ts_col)
+                else:
+                    expr = defaults.get(f.name, pm[f.name])
+                base.append((f.name, f.dataType, expr.cast(f.dataType).alias(f.name)))
+            self._projections[ck] = base
+        overrides = overrides or {}
+        cols = [
+            overrides[name].cast(dtype).alias(name) if name in overrides else col
+            for name, dtype, col in self._projections[ck]
+        ]
         for name, expr in (carry or {}).items():
             cols.append(expr.alias(name))
         return with_payload.select(*cols)
@@ -534,17 +586,17 @@ class StripeSparkSync:
         derived from it by a transformation, takes the distributed path,
         which gives the same result with more Spark jobs."""
         # Driver-known batches (events_df_from_json — webhook bodies are
-        # Python lists by nature) do the routing plan, the list-expansion
-        # check and the merges' bucket probes in Python (r16, guide
-        # §1.2/§4): the same json-envelope fields Spark's from_json would
-        # read, decoded once driver-side (first key wins, as in Spark),
-        # replace the distinct-types job, the cache materialization, the
-        # has_more scan and (via bucket_counts_of_values, XXH64
-        # parity-pinned) each upsert's Spark probe job — the distributed
-        # parse→project lineage still runs UNCHANGED inside each entity's
-        # write job, so every stored byte comes from the same expressions
-        # as the generic path. Distributed batches (the streaming webhook
-        # sink) keep the original shape including the persist.
+        # Python lists by nature) do the routing plan and the
+        # list-expansion check in Python (r16, guide §1.2/§4): the same
+        # json-envelope fields Spark's from_json would read, decoded once
+        # driver-side (first key wins, as in Spark), replace the
+        # distinct-types job, the cache materialization and the has_more
+        # scan. Their merges then take the driver placement (_merge): the
+        # parse→project lineage runs UNCHANGED over the local relation and
+        # is collected with no Spark job, so every stored byte comes from
+        # the same expressions as the generic path. Distributed batches
+        # (the streaming webhook sink) keep the original shape including
+        # the persist.
         payloads = getattr(raw_events, "_stripe_driver_payloads", None)
         envelopes: list[tuple[str | None, dict | None]] | None = None
         if payloads is not None:
@@ -556,9 +608,7 @@ class StripeSparkSync:
                     envelopes.append((env.get("type"), obj if isinstance(obj, dict) else None))
                 except (ValueError, AttributeError):
                     envelopes.append((None, None))
-        parsed = self._parse_envelope(raw_events).withColumn(
-            "sync_ts", F.to_timestamp(F.col("event_created"))
-        )
+        parsed = self._parse_envelope(raw_events)
         if envelopes is None:
             # Cache the parsed batch: every per-entity handler (and its row
             # accounting) re-reads it, and without the cache each one would
@@ -581,7 +631,7 @@ class StripeSparkSync:
                 types = [t for t, r in R.EVENT_ROUTES.items() if r == (entity, action) and t in present]
                 if types:
                     objs = None
-                    if envelopes is not None and action == R.UPSERT:
+                    if envelopes is not None:
                         tset = set(types)
                         objs = [o for t, o in envelopes if t in tset]
                     groups.append((entity, action, types, objs))
@@ -652,9 +702,9 @@ class StripeSparkSync:
                 if action == R.UPSERT:
                     n = self._handle_upsert(entity, subset, driver_objs)
                 elif action == R.CUSTOMER_DELETED:
-                    n = self._handle_customer_deleted(subset)
+                    n = self._handle_customer_deleted(subset, driver_objs is not None)
                 elif action == R.DELETE:
-                    n = self._handle_delete(entity, subset)
+                    n = self._handle_delete(entity, subset, driver_objs is not None)
                 elif action == R.ENTITLEMENT_SUMMARY:
                     n = self._handle_entitlement_summary(subset)
                 else:  # pragma: no cover
@@ -679,41 +729,12 @@ class StripeSparkSync:
             # stripeSync.ts:1037), so the driver never buffers the whole
             # batch; each chunk runs the full upsert pipeline.
             n = 0
-            for chunk, deleted_ids in self._revalidate_chunks(entity, subset):
-                n += self._upsert_rows(entity, chunk)
+            for chunk, objs, deleted_ids in self._revalidate_chunks(entity, subset):
+                n += self._upsert_rows(entity, chunk, objs)
                 if deleted_ids:
-                    ids = self.spark.createDataFrame([(i,) for i in deleted_ids], "id string")
-                    self._delete_keys(entity, ids)
+                    self._delete_keys(entity, deleted_ids)
             return n
         return self._upsert_rows(entity, subset, driver_objs)
-
-    def _driver_key_values(
-        self, entity: str, driver_objs: list[dict | None] | None
-    ) -> list[str] | None:
-        """One merge input's post-projection bucket-key values, when
-        knowable driver-side (r16): the merge's probe is then pure Python.
-        ``driver_objs`` must be the decoded payloads of exactly the rows
-        that merge projects, one per row — a webhook part from
-        ``_expanded_parts`` or a ``_merge_objects`` batch. Webhook bodies
-        must be decoded the way Spark reads them (``_first_wins``);
-        objects the engine serializes itself (``json.dumps``) match by
-        construction. Valid only with no registered transform (one could
-        rewrite the key), a string-typed declared bucket key (the
-        projected cast is then the identity, so ``payload[bkey]`` IS the
-        projected value), and every payload carrying a non-null string
-        key. Anything else (including no
-        payloads: a DataFrame-fed batch, revalidated rows) → None → the
-        distributed probe."""
-        if driver_objs is None or transforms_for(entity):
-            return None
-        bkey = bucket_key(entity)
-        field = {f.name: f for f in entity_schema(entity).fields}.get(bkey)
-        if field is None or not isinstance(field.dataType, StringType):
-            return None
-        vals = [o.get(bkey) if isinstance(o, dict) else None for o in driver_objs]
-        if any(not isinstance(v, str) for v in vals):
-            return None
-        return vals
 
     def _upsert_rows(
         self, entity: str, subset: DataFrame, driver_objs: list[dict | None] | None = None
@@ -721,42 +742,62 @@ class StripeSparkSync:
         """Expand → project → parent backfill → merge → child side-writes.
         List expansion yields the untruncated remainder first and then the
         refetched events in FLUSH_CHUNK slices, each run through the full
-        pipeline immediately — no accumulation of expanded payloads."""
+        pipeline immediately — no accumulation of expanded payloads.
+        ``driver_objs`` (the decoded payloads of a driver-built batch, or
+        None) marks the batch driver-known for the merge placement."""
         n = 0
         for part, part_objs in self._expanded_parts(entity, subset, driver_objs):
             rows = self._project(entity, part, carry={"_event_id": F.col("event_id")})
             if self.config.backfill_related_entities:
                 self._backfill_parents(entity, rows, depth=0)
-            n += self._merge(
-                entity, rows, driver_key_values=self._driver_key_values(entity, part_objs)
-            )
+            n += self._merge(entity, rows, driver_known=part_objs is not None)
             if entity == "subscriptions":
                 self._sync_subscription_items(part)
             elif entity == "checkout_sessions":
                 self._sync_checkout_line_items(rows)
         return n
 
-    def _handle_customer_deleted(self, subset: DataFrame) -> int:
+    def _handle_customer_deleted(self, subset: DataFrame, driver_known: bool = False) -> int:
         """customer.deleted: partial upsert of id/object/deleted only
         (reference customerDeletedSchema, schemas/customer.ts:29-31)."""
         rows = self._project("customers", subset, carry={"_event_id": F.col("event_id")})
-        return self._merge("customers", rows, update_cols=["object", "deleted", "updated_at"])
+        return self._merge(
+            "customers",
+            rows,
+            update_cols=["object", "deleted", "updated_at"],
+            driver_known=driver_known,
+        )
 
-    def _handle_delete(self, entity: str, subset: DataFrame) -> int:
+    def _handle_delete(self, entity: str, subset: DataFrame, driver_known: bool = False) -> int:
         """Hard delete (product/price/plan/tax_id .deleted —
-        stripeSync.ts:1360-1399,:1480-1482)."""
-        return self._delete_keys(entity, self._project(entity, subset).select("id"))
+        stripeSync.ts:1360-1399,:1480-1482). A driver-known batch's ids
+        are collected with no Spark job and delete on the driver."""
+        keys = self._project(entity, subset).select("id")
+        if driver_known:
+            keys = [r["id"] for r in keys.collect()]
+        return self._delete_keys(entity, keys)
 
-    def _delete_keys(self, entity: str, keys: DataFrame) -> int:
+    def _delete_keys(self, entity: str, keys: DataFrame | list[str | None]) -> int:
         """S10 hard delete of the rows whose ``id`` is in ``keys``; returns
         the number of key rows. Bucket-pruned like the merge: only buckets
-        holding the keys are anti-joined and rewritten, and the bucket
-        probe doubles as the row accounting (one job over the keys, no
-        separate count() re-executing their lineage)."""
+        holding the keys are rewritten, and the bucket probe doubles as the
+        row accounting. Driver-known ids (a list) probe in Python and
+        delete through the driver placement (``_commit_on_driver``); a key
+        frame, or buckets past the driver bound, take one probe job and
+        the Spark anti-join."""
         with self._table_write_lock(entity):
             exists = self.store.exists(entity)
             nb_planned = self.store._table_n_buckets(entity)
-            probe = self.store.bucket_counts(keys, "id", table=entity if exists else None)
+            if isinstance(keys, list):
+                ids = keys
+                probe = self.store.bucket_counts_of_values(ids, table=entity if exists else None)
+                if self._commit_on_driver(
+                    entity, probe, nb_planned, lambda t: merge_upsert_arrow(t, None, delete_keys=ids)
+                ):
+                    return len(ids)
+                keys = self._local_frame([(k,) for k in ids], _ID_SCHEMA)
+            else:
+                probe = self.store.bucket_counts(keys, "id", table=entity if exists else None)
             touched = [b for b, _ in probe]
             if exists and touched:
                 self._commit_buckets(
@@ -878,7 +919,9 @@ class StripeSparkSync:
         # commit as the upsert (one write per batch instead of two).
         with self._table_write_lock("subscription_items"):
             nb_planned = self.store._table_n_buckets("subscription_items")
-            merged, touched, bkey, _n = self._merge_plan("subscription_items", rows)
+            merged, touched, bkey, _n = self._merge_plan(
+                "subscription_items", self._prepare_rows("subscription_items", rows)
+            )
             if not touched and self.store.exists("subscription_items"):
                 return  # batch had no items — nothing to merge or reconcile
             current = rows.select("id", "subscription")
@@ -922,7 +965,7 @@ class StripeSparkSync:
     # -- optional refetch / expansion ------------------------------------
     def _revalidate_chunks(
         self, entity: str, subset: DataFrame
-    ) -> Iterator[tuple[DataFrame, list[str]]]:
+    ) -> Iterator[tuple[DataFrame, list[dict], list[str]]]:
         """T3 read-repair: ignore webhook payload, refetch from the API —
         unless the object is in a final state (P4 refetch suppression,
         reference fetchOrUseWebhookData stripeSync.ts:584-604). Refetches
@@ -931,11 +974,13 @@ class StripeSparkSync:
         contract, stripeSync.ts:1037) — the driver never buffers the whole
         revalidated batch.
 
-        Yields ``(chunk_df, deleted_ids)``: for entities where a failed
-        refetch means the object was deleted upstream (Stripe's
-        ``resource_missing`` on products/prices/plans — reference
-        stripeSync.ts:267-273, 300-306, 333-339), the vanished ids ride
-        alongside their chunk for deletion instead of being silently kept."""
+        Yields ``(chunk_df, chunk_payloads, deleted_ids)``: the chunk is
+        driver-built, so its decoded payloads ride along (driver-known);
+        for entities where a failed refetch means the object was deleted
+        upstream (Stripe's ``resource_missing`` on products/prices/plans —
+        reference stripeSync.ts:267-273, 300-306, 333-339), the vanished
+        ids ride alongside their chunk for deletion instead of being
+        silently kept."""
         status_col, finals = R.FINAL_STATES.get(entity, ("status", ()))
         api = self.api
         treat_missing_as_delete = entity in R.DELETE_ON_REFETCH_MISSING
@@ -953,20 +998,23 @@ class StripeSparkSync:
                     sync_ts = datetime.now(timezone.utc).replace(tzinfo=None)
                 elif treat_missing_as_delete:
                     deleted_id = payload["id"]
-            return (r["event_id"], r["event_type"], r["event_created"], json.dumps(payload), sync_ts), deleted_id
+            row = (r["event_id"], r["event_type"], r["event_created"], json.dumps(payload), sync_ts)
+            return row, payload, deleted_id
 
         buf: list[tuple] = []
+        objs: list[dict] = []
         dels: list[str] = []
-        for row, deleted_id in _concurrent_fetch(refetch, subset.toLocalIterator()):
+        for row, payload, deleted_id in _concurrent_fetch(refetch, subset.toLocalIterator()):
             if deleted_id is not None:
                 dels.append(deleted_id)
             else:
                 buf.append(row)
+                objs.append(payload)
             if len(buf) + len(dels) >= FLUSH_CHUNK:
-                yield self.spark.createDataFrame(buf, _EVENT_ROW_SCHEMA), dels
-                buf, dels = [], []
+                yield self._local_frame(buf, _EVENT_ROW_SCHEMA), objs, dels
+                buf, objs, dels = [], [], []
         if buf or dels:
-            yield self.spark.createDataFrame(buf, _EVENT_ROW_SCHEMA), dels
+            yield self._local_frame(buf, _EVENT_ROW_SCHEMA), objs, dels
 
     def _expanded_parts(
         self, entity: str, subset: DataFrame, objs: list[dict | None] | None = None
@@ -1011,7 +1059,7 @@ class StripeSparkSync:
         fetched = _concurrent_fetch(expand, needs.toLocalIterator())
         for chunk in _chunks(fetched, FLUSH_CHUNK):
             rows, payloads = zip(*chunk)
-            yield self.spark.createDataFrame(list(rows), _EVENT_ROW_SCHEMA), list(payloads)
+            yield self._local_frame(list(rows), _EVENT_ROW_SCHEMA), list(payloads)
 
     # -- parent backfill ---------------------------------------------------
     def _backfill_parents(self, entity: str, rows: DataFrame, depth: int) -> None:
@@ -1077,14 +1125,25 @@ class StripeSparkSync:
             self.store.write(entity, self.store.read(entity), key=bkey)
         return bkey
 
+    def _prepare_rows(self, entity: str, rows: DataFrame) -> DataFrame:
+        """The projected rows as every merge placement consumes them.
+        Public UDF seam (SURVEY §2.10): user-registered per-entity
+        transforms run on the projected rows just before every merge — all
+        write paths (webhook, backfill, fan-out, point sync) funnel through
+        here. Enum-as-text checks (reference Postgres enum types) ride the
+        same plan — no extra validation pass."""
+        rows = apply_transforms(entity, rows)
+        return validate_enums(entity, rows, policy=self.config.enum_policy)
+
     def _merge_plan(
         self,
         entity: str,
         rows: DataFrame,
         update_cols: list[str] | None = None,
-        driver_key_values: list[str] | None = None,
+        probe: list[tuple[int, int]] | None = None,
     ) -> tuple[DataFrame, list[int], str, int]:
-        """Build (but do not write) the merged contents of the buckets a
+        """Build (but do not write) the Spark placement of a merge of
+        ``_prepare_rows`` output: the merged contents of the buckets the
         batch touches. Returns ``(merged, touched_buckets, bucket_key,
         n_batch_rows)`` so callers that compose further bucket-local
         operators onto the merge (subscription-item reconciliation) commit
@@ -1092,15 +1151,9 @@ class StripeSparkSync:
         (``update_cols``: customer.deleted), is ``merge_upsert_clustered``:
         ONE shuffle clustered by the store's bucket expression, so
         ``merged`` is always pre-clustered and its write skips the
-        rebalance exchange (``write_buckets(pre_clustered=True)``)."""
-        # Public UDF seam (SURVEY §2.10): user-registered per-entity
-        # transforms run on the projected rows just before every merge —
-        # all write paths (webhook, backfill, fan-out, point sync) funnel
-        # through here.
-        rows = apply_transforms(entity, rows)
-        # Enum-as-text checks (reference Postgres enum types) ride the
-        # merge plan itself — no extra validation pass.
-        rows = validate_enums(entity, rows, policy=self.config.enum_policy)
+        rebalance exchange (``write_buckets(pre_clustered=True)``).
+        ``probe`` is the Python probe of a driver-known batch the driver
+        placement declined."""
         # Webhook-fed rows carry ``_event_id`` so two events for the same
         # object with equal event.created (same-second updates are common)
         # reduce deterministically — the reference applies rows sequentially
@@ -1117,14 +1170,7 @@ class StripeSparkSync:
         # accounting, so no separate count() re-executes the
         # parse→project lineage per entity.
         bkey = self._ensure_bucket_key(entity)
-        if driver_key_values is not None and not transforms_for(entity):
-            # Zero-job probe (r16): the batch's bucket-key values are
-            # driver-known (see _driver_key_values for the validity
-            # conditions, re-checked here against late transform
-            # registration) — the probe + row accounting is a Python
-            # Counter over the XXH64 parity hash instead of a Spark job.
-            probe = self.store.bucket_counts_of_values(driver_key_values, table=entity)
-        else:
+        if probe is None:
             probe = self.store.bucket_counts(rows, bkey, table=entity)
         touched = [b for b, _ in probe]
         n_rows = int(sum(n for _, n in probe))
@@ -2011,13 +2057,47 @@ class StripeSparkSync:
                 entity, max_files_per_bucket=max_files_per_bucket, sort_col=sort_col
             )
 
+    def _commit_on_driver(
+        self,
+        entity: str,
+        probe: list[tuple[int, int]],
+        nb_planned: int,
+        merge: Callable,
+    ) -> bool:
+        """The driver placement of a bucket rewrite: read the touched
+        buckets with ``read_arrow`` — declining above
+        ``driver_read_bytes()``, Spark's own broadcast bound, as the top-k
+        reads do — rewrite them with ``merge`` (``pa.Table`` → ``pa.Table``,
+        a ``merge_upsert_arrow`` call) and commit through
+        ``_commit_buckets`` (pyarrow files, the locked manifest swap,
+        rollups). No Spark job. Also declined: a table birth (a full Spark
+        write) and a Python XXH64 that disagrees with this Spark's. False
+        when declined: nothing was written, and the caller runs the Spark
+        plan on the same ``probe``."""
+        if not (self.store.exists(entity) and xxh64.driver_hash_matches(self.spark)):
+            return False
+        touched = [b for b, _ in probe]
+        if not touched:
+            return True
+        target = self.store.read_arrow(entity, touched, max_bytes=self.store.driver_read_bytes())
+        if target is None:
+            return False
+        self._commit_buckets(entity, merge(target), touched, planned_n_buckets=nb_planned)
+        return True
+
     def _merge(
         self,
         entity: str,
         rows: DataFrame,
         update_cols: list[str] | None = None,
-        driver_key_values: list[str] | None = None,
+        driver_known: bool = False,
     ) -> int:
+        """Merge projected ``rows`` into ``entity``; returns the batch's row
+        count. A ``driver_known`` batch (built by ``_local_frame``) is
+        collected with no Spark job; its probe is the Python XXH64 of the
+        collected bucket keys, and small touched buckets merge on the
+        driver (``_commit_on_driver``). Everything else — DataFrame-fed
+        batches, table births, big buckets — runs the Spark plan."""
         # the PLAN reads the current bucket state, so plan+write must sit
         # inside the same critical section (cross-batch writers racing on
         # a bucket would otherwise be last-commit-wins)
@@ -2026,9 +2106,25 @@ class StripeSparkSync:
             # out-of-band rebucket between here and the commit then fails
             # the write loudly instead of corrupting buckets
             nb_planned = self.store._table_n_buckets(entity)
-            merged, touched, bkey, n_rows = self._merge_plan(
-                entity, rows, update_cols, driver_key_values
-            )
+            rows = self._prepare_rows(entity, rows)
+            probe = None
+            if driver_known:
+                bkey = self._ensure_bucket_key(entity)
+                source = collect_arrow(rows)
+                probe = self.store.bucket_counts_of_values(
+                    source.column(bkey).to_pylist(), table=entity
+                )
+                tiebreaks = ["_event_id"] if "_event_id" in source.column_names else None
+                if self._commit_on_driver(
+                    entity,
+                    probe,
+                    nb_planned,
+                    lambda t: merge_upsert_arrow(
+                        t, source, tiebreak_cols=tiebreaks, update_cols=update_cols
+                    ),
+                ):
+                    return source.num_rows
+            merged, touched, bkey, n_rows = self._merge_plan(entity, rows, update_cols, probe)
             # An empty batch touches no buckets — skip the write job unless
             # the table doesn't exist yet (first write materializes the
             # schema).
@@ -2049,16 +2145,14 @@ class StripeSparkSync:
         """Decoded API objects → one merge: serialize (``json.dumps``),
         project with a wall-clock sync timestamp (getSyncTimestamp,
         stripeSync.ts:580-582), backfill missing parents from
-        ``backfill_depth`` (None: no parent probe), merge with the
-        zero-job driver probe."""
+        ``backfill_depth`` (None: no parent probe), merge as a driver-known
+        batch."""
         now = time.time()
-        df = self.spark.createDataFrame(
-            [(p, now) for p in to_json_rows(objs)], "payload string, sync_ts double"
-        )
+        df = self._local_frame([(p, now) for p in to_json_rows(objs)], _OBJECT_ROW_SCHEMA)
         rows = self._project(entity, df)
         if backfill_depth is not None and self.config.backfill_related_entities:
             self._backfill_parents(entity, rows, depth=backfill_depth)
-        self._merge(entity, rows, driver_key_values=self._driver_key_values(entity, objs))
+        self._merge(entity, rows, driver_known=True)
 
     def _merge_pages(
         self,
@@ -2247,7 +2341,7 @@ class StripeSparkSync:
             # reference maps Stripe's resource_missing to a delete
             # (stripeSync.ts:267-273, 300-306, 333-339).
             if entity in R.DELETE_ON_REFETCH_MISSING:
-                self._delete_keys(entity, self.spark.createDataFrame([(stripe_id,)], "id string"))
+                self._delete_keys(entity, [stripe_id])
                 return entity
             return None
         self._merge_objects(entity, [obj])

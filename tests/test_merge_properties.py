@@ -108,7 +108,11 @@ def test_replay_idempotent(spark, events):
 
 from pyspark.sql import functions as _F  # noqa: E402
 
-from stripe_sync_engine_spark.operators.merge import merge_upsert_clustered  # noqa: E402
+from stripe_sync_engine_spark.operators.merge import (  # noqa: E402
+    collect_arrow,
+    merge_upsert_arrow,
+    merge_upsert_clustered,
+)
 
 def _cluster():
     # built lazily — Column construction needs an active SparkContext
@@ -138,6 +142,14 @@ def _merge_rows(spark, rows, with_tiebreak, with_note=False):
     return spark.createDataFrame(data, schema)
 
 
+def _kernel_merge(spark, target, sdf, with_note=False, **kw):
+    """``merge_upsert_arrow`` over the same rows, back as a DataFrame (an
+    empty target table stands in for ``target=None``: the kernel always
+    merges into bucket contents)."""
+    tgt = collect_arrow(_merge_rows(spark, target, False, with_note=with_note))
+    return spark.createDataFrame(merge_upsert_arrow(tgt, collect_arrow(sdf), **kw))
+
+
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     target=st.lists(
@@ -155,17 +167,20 @@ def _merge_rows(spark, rows, with_tiebreak, with_note=False):
 def test_clustered_merge_equals_join_merge(spark, target, source, update_cols):
     """Full-row (``update_cols=None``) and partial merges: ``note`` is a
     non-key, non-ts column, so a partial update that leaves it out must
-    keep the target's value on a matched row."""
+    keep the target's value on a matched row. Both placements — the Spark
+    ``merge_upsert_clustered`` and the driver kernel ``merge_upsert_arrow``
+    — must equal the join-based reference."""
     tdf = _merge_rows(spark, target, False, with_note=True) if target else None
     src = [(k, ts, v, n, i) for i, (k, ts, v, n) in enumerate(source)]
     sdf = _merge_rows(spark, src, True, with_note=True)
     kw = dict(key="id", ts_col="last_synced_at", tiebreak_cols=["_event_id"], update_cols=update_cols)
     want = merge_upsert(tdf, sdf, **kw).drop("_event_id")
     got = merge_upsert_clustered(tdf, sdf, _cluster(), **kw).drop("_event_id")
+    kernel = _kernel_merge(spark, target, sdf, with_note=True, **kw)
     cols = ["id", "value", "note", "last_synced_at"]
-    assert sorted(map(tuple, got.select(cols).collect())) == sorted(
-        map(tuple, want.select(cols).collect())
-    )
+    expected = sorted(map(tuple, want.select(cols).collect()))
+    assert sorted(map(tuple, got.select(cols).collect())) == expected
+    assert sorted(map(tuple, kernel.select(cols).collect())) == expected
 
 
 @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
@@ -192,10 +207,13 @@ def test_clustered_merge_no_ts_tiebreak_only(spark, target, source):
     got = merge_upsert_clustered(
         tdf, sdf, _cluster(), key="id", ts_col=None, tiebreak_cols=["_event_id"]
     ).drop("_event_id")
-    cols = ["id", "value", "last_synced_at"]
-    assert sorted(map(tuple, got.select(cols).collect())) == sorted(
-        map(tuple, want.select(cols).collect())
+    kernel = _kernel_merge(
+        spark, target, sdf, key="id", ts_col=None, tiebreak_cols=["_event_id"]
     )
+    cols = ["id", "value", "last_synced_at"]
+    expected = sorted(map(tuple, want.select(cols).collect()))
+    assert sorted(map(tuple, got.select(cols).collect())) == expected
+    assert sorted(map(tuple, kernel.select(cols).collect())) == expected
 
 
 # ---------------------------------------------------------------------------

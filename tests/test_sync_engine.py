@@ -324,6 +324,19 @@ def test_resource_missing_deletes_on_point_sync(engine):
     assert "prod_p" not in table_rows(engine, "products")
 
 
+# 13c. the vanished id is driver-known: the point-sync delete probes its
+# bucket in Python and rewrites it on the driver — no Spark job at all
+def test_point_sync_delete_of_vanished_product_runs_no_spark_job(spark, engine):
+    process(
+        engine,
+        fx.event("product.created", fx.product(id="prod_v"), created=100),
+        fx.event("product.created", fx.product(id="prod_w"), created=100),
+    )
+    jobs = spark_jobs_between(spark, lambda: engine.sync_single_entity("prod_v"))
+    assert jobs == 0
+    assert sorted(table_rows(engine, "products")) == ["prod_w"]
+
+
 # 14. entitlement summary backfills missing features
 def test_entitlement_summary_backfills_features(engine):
     engine.api.put("features", {"id": "feat_bf", "object": "entitlements.feature",
@@ -423,13 +436,43 @@ def test_transform_registry_applied_before_merge(engine):
         clear_transforms("customers")
 
 
-# r16: driver-known webhook batches (events_df_from_json) route,
-# decide list expansion and bucket-probe in Python; a batch arriving as a
-# PLAIN DataFrame (the streaming sink's shape) keeps the distributed
-# probe. The two paths must land byte-equal state and identical counts —
-# including the same-second tiebreak and stale-event semantics the probe
-# feeds into — with and without a Stripe API attached (expansion and
-# parent backfill only run with one).
+def spark_jobs_between(spark, fn) -> int:
+    """Spark jobs started while ``fn`` runs, from ANY thread (the engine
+    runs handler chains on a pool): job ids are sequential, so the count
+    is the id gap between a sentinel job before and one after."""
+    import time
+
+    sc = spark.sparkContext
+
+    def sentinel_id() -> int:
+        group = f"sentinel-{time.monotonic_ns()}"
+        sc.setJobGroup(group, group)
+        try:
+            spark.range(1).collect()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        deadline = time.monotonic() + 30
+        while not (ids := sc.statusTracker().getJobIdsForGroup(group)):
+            assert time.monotonic() < deadline, "status tracker never listed the sentinel job"
+            time.sleep(0.05)
+        return min(ids)
+
+    before = sentinel_id()
+    fn()
+    return sentinel_id() - before - 1
+
+
+# r16: driver-known webhook batches (events_df_from_json) route and
+# decide list expansion in Python, and merge on the driver when their
+# touched buckets are small; a batch arriving as a PLAIN DataFrame (the
+# streaming sink's shape) keeps the distributed path, and a driver-known
+# batch with broadcasts off (autoBroadcastJoinThreshold=-1, the driver
+# bound) takes the Spark placement. All three must land equal state and
+# identical counts — including the same-second tiebreak and stale-event
+# semantics — with and without a Stripe API attached (expansion and
+# parent backfill only run with one). The two placements of a
+# driver-known batch must also commit the same bucket set and stats.
 def test_driver_known_batch_equals_distributed_batch(spark, tmp_path):
     from stripe_sync_engine_spark.sync.engine import _RAW_EVENT_SCHEMA
 
@@ -449,9 +492,10 @@ def test_driver_known_batch_equals_distributed_batch(spark, tmp_path):
             '"id": "ch_E4"', '"id": "ch_E4", "id": "ch_E5"'
         ),
     ]
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     for with_api in (False, True):
-        results = {}
-        for mode in ("driver", "distributed"):
+        results, manifests = {}, {}
+        for mode in ("driver", "distributed", "spark"):
             api = InMemoryStripeAPI() if with_api else None
             if api is not None:
                 api.put_expanded(
@@ -461,22 +505,41 @@ def test_driver_known_batch_equals_distributed_batch(spark, tmp_path):
             store = TableStore(spark, str(tmp_path / f"{mode}-{with_api}"))
             eng = StripeSparkSync(spark, store, api=api)
             counts = []
-            # the second batch merges into existing tables, where a wrong
-            # probe would leave a row's bucket un-committed
-            for batch in (payloads[:5], payloads[5:]):
-                if mode == "driver":
+            # the first batch creates every table, so the second merges
+            # into existing ones, where a wrong probe would leave a row's
+            # bucket un-committed
+            batches = (payloads[:5] + payloads[6:7], payloads[5:6] + payloads[7:])
+            for i, batch in enumerate(batches):
+                if mode == "distributed":
+                    df = spark.createDataFrame([(p,) for p in batch], _RAW_EVENT_SCHEMA)
+                else:
                     df = eng.events_df_from_json(batch)
                     assert getattr(df, "_stripe_driver_payloads", None) is not None
-                else:
-                    df = spark.createDataFrame([(p,) for p in batch], _RAW_EVENT_SCHEMA)
-                counts.append(eng.process_webhook_events(df))
+                if mode == "spark":
+                    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+                try:
+                    jobs = spark_jobs_between(
+                        spark, lambda df=df: counts.append(eng.process_webhook_events(df))
+                    )
+                finally:
+                    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+                if mode == "driver" and i == 1 and not with_api:
+                    # every table exists: the whole batch merges on the
+                    # driver (with an API, ch_E3's list expansion scans)
+                    assert jobs == 0
             results[mode] = (
                 counts,
                 table_rows(eng, "charges"),
                 table_rows(eng, "customers"),
                 table_rows(eng, "invoices"),
             )
-        assert results["driver"] == results["distributed"]
+            manifests[mode] = {
+                t: (sorted(m["buckets"]), m["stats"])
+                for t in ("charges", "customers", "invoices")
+                for m in [store._read_manifest(t)]
+            }
+        assert results["driver"] == results["distributed"] == results["spark"]
+        assert manifests["driver"] == manifests["spark"]
         charges = results["driver"][1]
         assert charges["ch_E1"]["amount"] == 2  # stale event lost
         assert "ch_E4" in charges and "ch_E5" not in charges
@@ -520,6 +583,14 @@ def test_xxh64_mismatch_falls_back_to_spark_with_a_warning(
     assert {i: charges[i]["amount"] for i in sorted(charges)} == {
         i: 1 if i in ids[:4] else 2 for i in sorted(ids[:12])
     }
+    # every id sits in the bucket Spark's own expression computes
+    placed = {
+        r["id"]: r["b"]
+        for r in frame.select("id", store.bucket_expr("id", 16).alias("b")).collect()
+    }
+    for b in range(16):
+        part = store.read_buckets("charges", [b])
+        assert all(placed[r["id"]] == b for r in part.collect())
 
 
 def test_driver_known_batch_with_transform_falls_back_and_applies_it(spark, tmp_path):
