@@ -19,6 +19,17 @@ A from-scratch re-expression of the capabilities of supabase/stripe-sync-engine
 Design stance: declare logical plans with the DataFrame/SQL API and let
 Catalyst + Tungsten choose physical strategies; Python UDFs only where
 built-ins genuinely cannot express the semantics (and then Arrow-batched).
+
+Python workers never import this package: it is registered for by-value
+pickling, so every package function and class a worker closure references
+ships to the workers as code. The driver may run from any directory;
+workers need only pyspark, pyarrow, numpy and pandas.
 """
+
+import sys
+
+from pyspark import cloudpickle
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 __version__ = "0.1.0"

@@ -131,7 +131,7 @@ class Router:
             if self.landing_dir is not None:
                 self._land(payload, signature)
             else:
-                self.engine.process_webhook_events(self.engine.events_df_from_json([payload]))
+                self.engine.process_webhook_events([payload])
         except Exception as err:  # reference returns 400 with the message
             return 400, f"Webhook Error: {err}"
         return 200, {"received": True}

@@ -227,11 +227,10 @@ def encode_documents(
     text_col: str = "text",
     keep_tokens: bool = True,
 ) -> DataFrame:
-    """Distributed encode: the merge table rides the closure to every
+    """Distributed encode: the tokenizer rides the closure to every
     worker (a few KB); each Arrow batch encodes independently — no
     shuffle, linear scan, the 100 TB shape. ``keep_tokens=False`` returns
     counts only (the common case when feeding packing)."""
-    merges = tokenizer.merges
     schema = (
         ENCODED_SCHEMA
         if keep_tokens
@@ -241,8 +240,7 @@ def encode_documents(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import re
 
-        tok = BPETokenizer(merges=merges)
-        ranks = {p: i for i, p in enumerate(merges)}
+        ranks = {p: i for i, p in enumerate(tokenizer.merges)}
         # Piece-level memo: natural-language vocabulary repeats heavily
         # (Zipf), so most pieces encode once per partition, not once per
         # occurrence — measured ~6× on the bench corpus.
@@ -254,7 +252,7 @@ def encode_documents(
             for piece in pat.findall(text):
                 got = memo.get(piece)
                 if got is None:
-                    got = memo[piece] = tok.encode_piece(piece, ranks)
+                    got = memo[piece] = tokenizer.encode_piece(piece, ranks)
                 out.extend(got)
             return out
 

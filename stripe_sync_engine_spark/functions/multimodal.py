@@ -28,204 +28,182 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 DECODED_META_SCHEMA = (
     "doc_id long, n_bytes long, content_sha int, fake_width long, fake_height long"
 )
 
 
-def _build_header_parser():
-    """One copy of the pure-stdlib image-header decoder, built as a NESTED
-    function: cloudpickle pickles nested functions by value, so the
-    ``decode_headers`` worker ships it to executors without needing this
-    package importable there — same closure rule as every mapInPandas body
-    in this module. Full pixel decode still needs PIL/ffmpeg (absent from
-    this container); container headers are enough for the metadata columns
-    the pipeline actually uses (format, width, height)."""
+def decode_real(payload: bytes) -> dict:
+    """Real header decode — PNG / GIF / BMP / JPEG format and dimensions
+    with no dependencies. Full pixel decode still needs PIL/ffmpeg
+    (absent from this container); container headers are enough for the
+    metadata columns the pipeline actually uses (format, width, height)."""
+    import struct
 
-    def parse_image_header(payload: bytes) -> dict:
-        import struct
-
-        if payload[:8] == b"\x89PNG\r\n\x1a\n":
-            # IHDR is mandatory-first: width/height are big-endian u32 at 16
-            if len(payload) < 24 or payload[12:16] != b"IHDR":
-                raise ValueError("truncated PNG header")
-            w, h = struct.unpack(">II", payload[16:24])
-            return {"format": "png", "width": w, "height": h}
-        if payload[:6] in (b"GIF87a", b"GIF89a"):
-            if len(payload) < 10:
-                raise ValueError("truncated GIF header")
-            w, h = struct.unpack("<HH", payload[6:10])
-            return {"format": "gif", "width": w, "height": h}
-        if payload[:2] == b"BM":
-            if len(payload) < 26:
-                raise ValueError("truncated BMP header")
-            # BITMAPINFOHEADER: int32 LE width/height at 18/22; height may
-            # be negative for top-down DIBs
-            w, h = struct.unpack("<ii", payload[18:26])
-            return {"format": "bmp", "width": w, "height": abs(h)}
-        if payload[:2] == b"\xff\xd8":
-            # walk JPEG segments to the first SOFn frame header
-            i = 2
-            while i + 4 <= len(payload):
-                if payload[i] != 0xFF:
+    if payload[:8] == b"\x89PNG\r\n\x1a\n":
+        # IHDR is mandatory-first: width/height are big-endian u32 at 16
+        if len(payload) < 24 or payload[12:16] != b"IHDR":
+            raise ValueError("truncated PNG header")
+        w, h = struct.unpack(">II", payload[16:24])
+        return {"format": "png", "width": w, "height": h}
+    if payload[:6] in (b"GIF87a", b"GIF89a"):
+        if len(payload) < 10:
+            raise ValueError("truncated GIF header")
+        w, h = struct.unpack("<HH", payload[6:10])
+        return {"format": "gif", "width": w, "height": h}
+    if payload[:2] == b"BM":
+        if len(payload) < 26:
+            raise ValueError("truncated BMP header")
+        # BITMAPINFOHEADER: int32 LE width/height at 18/22; height may
+        # be negative for top-down DIBs
+        w, h = struct.unpack("<ii", payload[18:26])
+        return {"format": "bmp", "width": w, "height": abs(h)}
+    if payload[:2] == b"\xff\xd8":
+        # walk JPEG segments to the first SOFn frame header
+        i = 2
+        while i + 4 <= len(payload):
+            if payload[i] != 0xFF:
+                break
+            marker = payload[i + 1]
+            if marker == 0xFF:  # fill byte
+                i += 1
+                continue
+            if marker in (0x01,) or 0xD0 <= marker <= 0xD9:  # standalone
+                i += 2
+                continue
+            if i + 4 > len(payload):
+                break
+            seg_len = struct.unpack(">H", payload[i + 2 : i + 4])[0]
+            if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
+                if i + 9 > len(payload):
                     break
-                marker = payload[i + 1]
-                if marker == 0xFF:  # fill byte
-                    i += 1
-                    continue
-                if marker in (0x01,) or 0xD0 <= marker <= 0xD9:  # standalone
-                    i += 2
-                    continue
-                if i + 4 > len(payload):
-                    break
-                seg_len = struct.unpack(">H", payload[i + 2 : i + 4])[0]
-                if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                    if i + 9 > len(payload):
-                        break
-                    h, w = struct.unpack(">HH", payload[i + 5 : i + 9])
-                    return {"format": "jpeg", "width": w, "height": h}
-                i += 2 + seg_len
-            raise ValueError("truncated JPEG: no SOF marker found")
-        raise ValueError("unsupported image container (not PNG/GIF/BMP/JPEG)")
+                h, w = struct.unpack(">HH", payload[i + 5 : i + 9])
+                return {"format": "jpeg", "width": w, "height": h}
+            i += 2 + seg_len
+        raise ValueError("truncated JPEG: no SOF marker found")
+    raise ValueError("unsupported image container (not PNG/GIF/BMP/JPEG)")
 
-    return parse_image_header
-
-
-#: Real header decode — PNG / GIF / BMP / JPEG dimensions with no
-#: dependencies. (Replaces the former NotImplementedError seam; full pixel
-#: decode beyond the header remains a PIL/ffmpeg integration.)
-decode_real = _build_header_parser()
 
 HEADER_META_SCHEMA = "doc_id long, format string, width long, height long"
 
 
-def _build_media_prober():
-    """One copy of the pure-stdlib MEDIA prober (images + RIFF/WAVE audio
-    + ISO-BMFF video containers), nested so cloudpickle ships it by value —
-    same closure rule as the rest of this module. Images return the header
-    dict of ``_build_header_parser``; 16-bit PCM WAV returns channels /
-    sample rate / bit depth / sample count plus the raw PCM bytes for DSP
-    downstream; MP4/MOV walks the box tree for mvhd duration (version 0
-    and 1) and the first video track's tkhd 16.16 fixed-point dims
-    (audio-only tracks carry 0×0 and leave dims NULL). The RIFF chunk walk
+def _mp4_boxes(buf: bytes, i: int, end: int):
+    """ISO-BMFF box walk over ``buf[i:end]``: yields ``(type, body_start,
+    box_end)``. size==1 means a 64-bit largesize follows the type, size==0
+    a box that runs to ``end``; raises ``ValueError`` on truncation or an
+    over-long size (the module's failure-row convention)."""
+    import struct
+
+    while i + 8 <= end:
+        (size,) = struct.unpack(">I", buf[i : i + 4])
+        btype = buf[i + 4 : i + 8]
+        body = i + 8
+        min_size = 8
+        if size == 1:
+            if i + 16 > end:
+                raise ValueError("truncated largesize box")
+            (size,) = struct.unpack(">Q", buf[i + 8 : i + 16])
+            body = i + 16
+            min_size = 16  # the largesize field is inside the box
+        elif size == 0:
+            size = end - i
+        if size < min_size or i + size > end:
+            raise ValueError("truncated mp4 box")
+        yield btype, body, i + size
+        i += size
+
+
+def probe_real(payload: bytes) -> dict:
+    """The pure-stdlib media prober (images + RIFF/WAVE audio + ISO-BMFF
+    video containers). Images return the header dict of ``decode_real``;
+    16-bit PCM WAV returns channels / sample rate / bit depth / sample
+    count plus the raw PCM bytes for DSP downstream; MP4/MOV walks the box
+    tree for mvhd duration (version 0 and 1) and the first video track's
+    tkhd 16.16 fixed-point dims (audio-only tracks carry 0×0 and leave
+    dims NULL). The RIFF chunk walk
     honors the even-byte padding rule; both walks raise ``ValueError`` on
     any truncation or over-long box size (the failure-row convention)."""
-    parse_image = _build_header_parser()
+    import struct
 
-    def probe_payload(payload: bytes) -> dict:
-        import struct
+    if len(payload) >= 12 and payload[4:8] == b"ftyp":
+        # ISO-BMFF (MP4/MOV): walk top-level boxes, then moov's
+        # children for mvhd (timescale+duration) and the first video
+        # tkhd (16.16 fixed-point dims). Version-0 and -1 boxes both parse.
+        mvhd = None
+        width = height = None
+        for btype, body, bend in _mp4_boxes(payload, 0, len(payload)):
+            if btype != b"moov":
+                continue
+            for ctype, cbody, cend in _mp4_boxes(payload, body, bend):
+                if ctype == b"mvhd":
+                    ver = payload[cbody] if cbody < cend else 0
+                    need = 32 if ver == 1 else 20
+                    if cbody + need > cend:
+                        raise ValueError("truncated mvhd box")
+                    if ver == 1:
+                        ts, dur = struct.unpack(">IQ", payload[cbody + 20 : cbody + 32])
+                    else:
+                        ts, dur = struct.unpack(">II", payload[cbody + 12 : cbody + 20])
+                    if ts < 1:
+                        raise ValueError("invalid mvhd timescale")
+                    mvhd = (ts, dur)
+                elif ctype == b"trak" and width is None:
+                    for ttype, tbody, tend in _mp4_boxes(payload, cbody, cend):
+                        if ttype == b"tkhd":
+                            ver = payload[tbody] if tbody < tend else 0
+                            off = tbody + (88 if ver == 1 else 76)
+                            if off + 8 > tend:
+                                raise ValueError("truncated tkhd box")
+                            w16, h16 = struct.unpack(">II", payload[off : off + 8])
+                            if w16 and h16:  # audio tracks carry 0x0
+                                width, height = w16 >> 16, h16 >> 16
+                            break
+        if mvhd is None:
+            raise ValueError("mp4 missing mvhd")
+        ts, dur = mvhd
+        return {
+            "format": "mp4",
+            "width": width,
+            "height": height,
+            "duration_ms": dur * 1000.0 / ts,
+        }
+    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
+        i, fmt, data = 12, None, None
+        while i + 8 <= len(payload):
+            cid = payload[i : i + 4]
+            (size,) = struct.unpack("<I", payload[i + 4 : i + 8])
+            body = payload[i + 8 : i + 8 + size]
+            if len(body) < size:
+                raise ValueError("truncated WAV chunk")
+            if cid == b"fmt ":
+                if size < 16:
+                    raise ValueError("short fmt chunk")
+                afmt, ch, rate, _brate, _balign, bits = struct.unpack("<HHIIHH", body[:16])
+                if afmt != 1:
+                    raise ValueError("only PCM (format 1) WAV supported")
+                if ch < 1 or rate < 1:
+                    raise ValueError("invalid fmt chunk")
+                fmt = (ch, rate, bits)
+            elif cid == b"data":
+                data = body
+            i += 8 + size + (size & 1)  # chunks pad to even offsets
+        if fmt is None or data is None:
+            raise ValueError("WAV missing fmt/data chunk")
+        ch, rate, bits = fmt
+        if bits != 16:
+            raise ValueError("only 16-bit PCM supported")
+        n = len(data) // (2 * ch)
+        return {
+            "format": "wav",
+            "channels": ch,
+            "sample_rate": rate,
+            "bits": bits,
+            "n_samples": n,
+            "pcm": data[: n * 2 * ch],
+        }
+    return decode_real(payload)
 
-        if len(payload) >= 12 and payload[4:8] == b"ftyp":
-            # ISO-BMFF (MP4/MOV): walk top-level boxes, then moov's
-            # children for mvhd (timescale+duration) and the first video
-            # tkhd (16.16 fixed-point dims). Version-0 and -1 boxes both
-            # parse; size==1 means a 64-bit largesize follows the type.
-            def boxes(buf: bytes, i: int, end: int):
-                while i + 8 <= end:
-                    (size,) = struct.unpack(">I", buf[i : i + 4])
-                    btype = buf[i + 4 : i + 8]
-                    body = i + 8
-                    min_size = 8
-                    if size == 1:
-                        if i + 16 > end:
-                            raise ValueError("truncated largesize box")
-                        (size,) = struct.unpack(">Q", buf[i + 8 : i + 16])
-                        body = i + 16
-                        min_size = 16  # the largesize field is inside the box
-                    elif size == 0:
-                        size = end - i
-                    if size < min_size or i + size > end:
-                        raise ValueError("truncated mp4 box")
-                    yield btype, body, i + size
-                    i += size
-
-            mvhd = None
-            width = height = None
-            for btype, body, bend in boxes(payload, 0, len(payload)):
-                if btype != b"moov":
-                    continue
-                for ctype, cbody, cend in boxes(payload, body, bend):
-                    if ctype == b"mvhd":
-                        ver = payload[cbody] if cbody < cend else 0
-                        need = 32 if ver == 1 else 20
-                        if cbody + need > cend:
-                            raise ValueError("truncated mvhd box")
-                        if ver == 1:
-                            ts, dur = struct.unpack(
-                                ">IQ", payload[cbody + 20 : cbody + 32]
-                            )
-                        else:
-                            ts, dur = struct.unpack(
-                                ">II", payload[cbody + 12 : cbody + 20]
-                            )
-                        if ts < 1:
-                            raise ValueError("invalid mvhd timescale")
-                        mvhd = (ts, dur)
-                    elif ctype == b"trak" and width is None:
-                        for ttype, tbody, tend in boxes(payload, cbody, cend):
-                            if ttype == b"tkhd":
-                                ver = payload[tbody] if tbody < tend else 0
-                                off = tbody + (88 if ver == 1 else 76)
-                                if off + 8 > tend:
-                                    raise ValueError("truncated tkhd box")
-                                w16, h16 = struct.unpack(
-                                    ">II", payload[off : off + 8]
-                                )
-                                if w16 and h16:  # audio tracks carry 0x0
-                                    width, height = w16 >> 16, h16 >> 16
-                                break
-            if mvhd is None:
-                raise ValueError("mp4 missing mvhd")
-            ts, dur = mvhd
-            return {
-                "format": "mp4",
-                "width": width,
-                "height": height,
-                "duration_ms": dur * 1000.0 / ts,
-            }
-        if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-            i, fmt, data = 12, None, None
-            while i + 8 <= len(payload):
-                cid = payload[i : i + 4]
-                (size,) = struct.unpack("<I", payload[i + 4 : i + 8])
-                body = payload[i + 8 : i + 8 + size]
-                if len(body) < size:
-                    raise ValueError("truncated WAV chunk")
-                if cid == b"fmt ":
-                    if size < 16:
-                        raise ValueError("short fmt chunk")
-                    afmt, ch, rate, _brate, _balign, bits = struct.unpack("<HHIIHH", body[:16])
-                    if afmt != 1:
-                        raise ValueError("only PCM (format 1) WAV supported")
-                    if ch < 1 or rate < 1:
-                        raise ValueError("invalid fmt chunk")
-                    fmt = (ch, rate, bits)
-                elif cid == b"data":
-                    data = body
-                i += 8 + size + (size & 1)  # chunks pad to even offsets
-            if fmt is None or data is None:
-                raise ValueError("WAV missing fmt/data chunk")
-            ch, rate, bits = fmt
-            if bits != 16:
-                raise ValueError("only 16-bit PCM supported")
-            n = len(data) // (2 * ch)
-            return {
-                "format": "wav",
-                "channels": ch,
-                "sample_rate": rate,
-                "bits": bits,
-                "n_samples": n,
-                "pcm": data[: n * 2 * ch],
-            }
-        return parse_image(payload)
-
-    return probe_payload
-
-
-#: Real media probe — image headers plus WAV audio metadata/PCM.
-probe_real = _build_media_prober()
 
 MEDIA_PROBE_SCHEMA = (
     "doc_id long, format string, width long, height long, channels long, "
@@ -246,8 +224,6 @@ def probe_media(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload")
     payloads yield all-NULL metadata rows, so one bad object never fails
     a 100 TB scan; empty audio (0 samples) keeps its header metadata
     with NULL signal stats."""
-    probe = _build_media_prober()
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as _np
 
@@ -260,7 +236,7 @@ def probe_media(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload")
             rows = []
             for doc_id, payload in zip(pdf[id_col], pdf[bin_col]):
                 try:
-                    m = probe(bytes(payload))
+                    m = probe_real(bytes(payload))
                 except (ValueError, TypeError):
                     rows.append((doc_id, *nulls))
                     continue
@@ -314,8 +290,6 @@ def audio_windows(
     swap the stats for a model call and the plan is unchanged.
     Non-WAV or undecodable payloads contribute no rows (a probe stage
     routes media types; this operator is the audio branch)."""
-    probe = _build_media_prober()
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as _np
 
@@ -327,7 +301,7 @@ def audio_windows(
             parts = []
             for doc_id, payload in zip(pdf[id_col], pdf[bin_col]):
                 try:
-                    m = probe(bytes(payload))
+                    m = probe_real(bytes(payload))
                 except (ValueError, TypeError):
                     continue
                 if m["format"] != "wav" or m["n_samples"] == 0:
@@ -388,14 +362,12 @@ def decode_headers(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payloa
     decoder; undecodable payloads yield NULL metadata rows (a decoder
     failure row — downstream filters on ``format IS NOT NULL``), so one bad
     object never fails a 100 TB scan."""
-    parse = _build_header_parser()  # nested fn → pickled by value
-
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for doc_id, payload in zip(pdf[id_col], pdf[bin_col]):
                 try:
-                    m = parse(bytes(payload))
+                    m = decode_real(bytes(payload))
                     rows.append((doc_id, m["format"], m["width"], m["height"]))
                 except (ValueError, TypeError):
                     rows.append((doc_id, None, None, None))
@@ -404,63 +376,89 @@ def decode_headers(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payloa
     return df.mapInPandas(decode, schema=HEADER_META_SCHEMA)
 
 
-def _build_meta_decoder(id_col: str, bin_col: str):
-    """Worker body for ``decode_binary_meta``, built as a nested function
-    (pickled by value; executors never import this package). The pixel
-    seam is RUNTIME-OPTIONAL: each worker process tries ``import PIL``
-    once — when present, the width/height columns carry the REAL decoded
-    dimensions (undecodable payloads → NULL dims, the failure-row
-    convention of ``decode_headers``); when absent (this container), the
-    deterministic byte-length fake keeps the oracles exact. Deploy PIL
-    uniformly across executors — the branch is per worker process."""
+def _pil_dims():
+    """The RUNTIME-OPTIONAL pixel decoder, resolved once per worker call:
+    ``payload -> (width, height)`` through PIL, or None when the worker
+    has no PIL (this container), where the deterministic byte-length fake
+    stands in and keeps the oracles exact. Deploy PIL uniformly across
+    executors — the branch is per worker process."""
+    try:
+        import io
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hl
+        from PIL import Image
+    except ImportError:
+        return None
 
-        try:  # the optional pixel decoder — resolved once per worker
-            import io as _io
+    def real_dims(payload: bytes):
+        with Image.open(io.BytesIO(payload)) as img:
+            return img.size
 
-            from PIL import Image as _Image
+    return real_dims
 
-            def real_dims(payload: bytes):
-                with _Image.open(_io.BytesIO(payload)) as img:
-                    return img.size
-        except ImportError:
-            real_dims = None
 
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[bin_col]):
-                payload = bytes(payload)
-                n = len(payload)
-                sha = _hl.md5(payload).digest()[0]
-                if real_dims is None:
-                    # deterministic stand-in: dims from the byte length
-                    rows.append((doc_id, n, sha, n % 640, (n * 7) % 480))
-                else:
-                    try:
-                        w, h = real_dims(payload)
-                        rows.append((doc_id, n, sha, w, h))
-                    except Exception:
-                        rows.append((doc_id, n, sha, None, None))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_bytes", "content_sha", "fake_width", "fake_height"]
-            )
+def _src_dims(payload: bytes, real_dims) -> tuple:
+    """A payload's source (width, height): PIL's decoded size, (None,
+    None) when PIL cannot decode it (the failure-row convention), or the
+    byte-length fake when ``real_dims`` is None."""
+    if real_dims is None:
+        n = len(payload)
+        return n % 640, (n * 7) % 480
+    try:
+        return real_dims(payload)
+    except Exception:
+        return None, None
 
-    return decode
+
+def _fit_box(w, h) -> tuple:
+    """Keep-aspect fit of (w, h) into RESIZE_BOX: ``(out_w, out_h,
+    out_bytes)`` for RGB output, all None for degenerate or unknown dims."""
+    if not w or not h:
+        return None, None, None
+    max_w, max_h = RESIZE_BOX
+    scale = min(1.0, max_w / w, max_h / h)
+    out_w, out_h = int(w * scale), int(h * scale)
+    return out_w, out_h, out_w * out_h * 3
+
+
+def _byte_classes(payload: bytes) -> tuple:
+    """(digits, upper, lower, space, other) byte counts in one C pass over
+    the bytes instead of four interpreted sweeps — the per-byte cost is
+    what scales with payload size at 100 TB."""
+    import numpy as np
+
+    hist = np.bincount(np.frombuffer(payload, dtype=np.uint8), minlength=256)
+    d = int(hist[0x30:0x3A].sum())
+    u = int(hist[0x41:0x5B].sum())
+    lo = int(hist[0x61:0x7B].sum())
+    sp = int(hist[0x20])
+    return d, u, lo, sp, len(payload) - d - u - lo - sp
+
+
+def _decode_meta(batches: Iterator[pd.DataFrame], id_col: str, bin_col: str):
+    """Worker body of ``decode_binary_meta``."""
+    import hashlib as _hl
+
+    real_dims = _pil_dims()
+    for pdf in batches:
+        rows = []
+        for doc_id, payload in zip(pdf[id_col], pdf[bin_col]):
+            payload = bytes(payload)
+            w, h = _src_dims(payload, real_dims)
+            rows.append((doc_id, len(payload), _hl.md5(payload).digest()[0], w, h))
+        yield pd.DataFrame(
+            rows, columns=["doc_id", "n_bytes", "content_sha", "fake_width", "fake_height"]
+        )
 
 
 def decode_binary_meta(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload") -> DataFrame:
     """binary column → typed metadata rows via mapInPandas (Arrow batches).
-
-    The worker function closes over ONLY stdlib + pandas: every mapInPandas
-    body in this module is a nested function referencing no module-level
-    helpers, so cloudpickle ships it by value and executors never need this
-    package importable on their own sys.path (a fresh driver session from
-    any cwd works). With PIL installed on the workers the ``fake_*`` dim
-    columns carry real decoded dimensions (see ``_build_meta_decoder``);
-    the column names stay stable so both branches share one schema."""
-    return df.mapInPandas(_build_meta_decoder(id_col, bin_col), schema=DECODED_META_SCHEMA)
+    With PIL installed on the workers the ``fake_*`` dim columns carry
+    real decoded dimensions (undecodable payloads → NULL dims, the
+    failure-row convention of ``decode_headers``; see ``_pil_dims``); the
+    column names stay stable so both branches share one schema."""
+    return df.mapInPandas(
+        lambda batches: _decode_meta(batches, id_col, bin_col), schema=DECODED_META_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -482,50 +480,17 @@ FEATURES_SCHEMA = (
 )
 
 
-def _build_resizer(id_col: str, bin_col: str):
-    """Worker body for ``resize_binary`` (nested → pickled by value).
-    Runtime-optional pixel seam, same contract as ``_build_meta_decoder``:
-    with PIL the source dims are the REAL decoded size (undecodable →
-    NULL row); without, the deterministic byte-length fake. The keep-
-    aspect scale math is shared by both branches, so the plan, schema and
-    downstream consumers are identical either way."""
-    max_w, max_h = RESIZE_BOX
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            import io as _io
-
-            from PIL import Image as _Image
-
-            def real_dims(payload: bytes):
-                with _Image.open(_io.BytesIO(payload)) as img:
-                    return img.size
-        except ImportError:
-            real_dims = None
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[bin_col]):
-                payload = bytes(payload)
-                n = len(payload)
-                if real_dims is None:
-                    w, h = n % 640, (n * 7) % 480
-                else:
-                    try:
-                        w, h = real_dims(payload)
-                    except Exception:
-                        w, h = 0, 0  # decoder failure → NULL output dims
-                if w == 0 or h == 0:
-                    rows.append((doc_id, w, h, None, None, None))
-                    continue
-                scale = min(1.0, max_w / w, max_h / h)
-                out_w, out_h = int(w * scale), int(h * scale)
-                rows.append((doc_id, w, h, out_w, out_h, out_w * out_h * 3))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "src_w", "src_h", "out_w", "out_h", "out_bytes"]
-            )
-
-    return resize
+def _resize(batches: Iterator[pd.DataFrame], id_col: str, bin_col: str):
+    """Worker body of ``resize_binary``."""
+    real_dims = _pil_dims()
+    for pdf in batches:
+        rows = []
+        for doc_id, payload in zip(pdf[id_col], pdf[bin_col]):
+            w, h = _src_dims(bytes(payload), real_dims)
+            rows.append((doc_id, w, h, *_fit_box(w, h)))
+        yield pd.DataFrame(
+            rows, columns=["doc_id", "src_w", "src_h", "out_w", "out_h", "out_bytes"]
+        )
 
 
 def resize_binary(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload") -> DataFrame:
@@ -533,15 +498,15 @@ def resize_binary(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload
     the workers the source dims come from the real decoder (and a real
     implementation would call ``img.thumbnail(RESIZE_BOX)`` on the decoded
     image — the scale math here IS that computation); without it, the
-    deterministic byte-length fake. Degenerate dims (0) yield NULL output
-    dims, mirroring a decoder failure row — downstream filters on
-    ``out_w IS NOT NULL``."""
-    return df.mapInPandas(_build_resizer(id_col, bin_col), schema=RESIZED_SCHEMA)
+    deterministic byte-length fake. Degenerate dims (0) and decoder
+    failures (NULL source dims) yield NULL output dims — downstream
+    filters on ``out_w IS NOT NULL``."""
+    return df.mapInPandas(lambda batches: _resize(batches, id_col, bin_col), schema=RESIZED_SCHEMA)
 
 
-def _build_mp4_frame_walker():
+def mp4_frame_table(payload: bytes) -> list:
     """Pure-stdlib ISO-BMFF (ISO/IEC 14496-12 §8.7) sample-table walk:
-    ``frame_table(payload) -> [(offset, size), ...]`` — every sample's
+    ``mp4_frame_table(payload) -> [(offset, size), ...]`` — every sample's
     REAL byte extent in the file, from the first trak carrying a complete
     stbl. stsz gives per-sample sizes (or one constant size), stsc maps
     chunks to samples-per-chunk runs, stco/co64 give chunk file offsets;
@@ -549,139 +514,116 @@ def _build_mp4_frame_walker():
     preceding samples in that chunk. Frame LOCATION therefore needs no
     media decoder — pixel DECODE remains the ffmpeg/PIL seam. Raises
     ``ValueError`` on truncation or an inconsistent table (the module's
-    failure-row convention). Nested so cloudpickle ships it by value."""
+    failure-row convention)."""
+    import struct
 
-    def frame_table(payload: bytes) -> list:
-        import struct
+    def child(buf, i, end, btype):
+        for t, b, e in _mp4_boxes(buf, i, end):
+            if t == btype:
+                return b, e
+        return None
 
-        def boxes(buf: bytes, i: int, end: int):
-            while i + 8 <= end:
-                (size,) = struct.unpack(">I", buf[i : i + 4])
-                btype = buf[i + 4 : i + 8]
-                body = i + 8
-                min_size = 8
-                if size == 1:
-                    if i + 16 > end:
-                        raise ValueError("truncated largesize box")
-                    (size,) = struct.unpack(">Q", buf[i + 8 : i + 16])
-                    body = i + 16
-                    min_size = 16
-                elif size == 0:
-                    size = end - i
-                if size < min_size or i + size > end:
-                    raise ValueError("truncated mp4 box")
-                yield btype, body, i + size
-                i += size
+    def full_body(buf, b, e):  # skip a FullBox's version/flags word
+        if b + 4 > e:
+            raise ValueError("truncated full box")
+        return b + 4, e
 
-        def child(buf, i, end, btype):
-            for t, b, e in boxes(buf, i, end):
-                if t == btype:
-                    return b, e
-            return None
-
-        def full_body(buf, b, e):  # skip a FullBox's version/flags word
-            if b + 4 > e:
-                raise ValueError("truncated full box")
-            return b + 4, e
-
-        moov = child(payload, 0, len(payload), b"moov")
-        if moov is None:
-            raise ValueError("mp4 missing moov")
-        for ttype, tbody, tend in boxes(payload, *moov):
-            if ttype != b"trak":
-                continue
-            stbl = None
-            mdia = child(payload, tbody, tend, b"mdia")
-            if mdia:
-                minf = child(payload, *mdia, b"minf")
-                if minf:
-                    stbl = child(payload, *minf, b"stbl")
-            if stbl is None:
-                continue
-            stsz = child(payload, *stbl, b"stsz")
-            stsc = child(payload, *stbl, b"stsc")
-            stco = child(payload, *stbl, b"stco")
-            wide = 4
-            if stco is None:
-                stco = child(payload, *stbl, b"co64")
-                wide = 8
-            if stsz is None or stsc is None or stco is None:
-                continue  # not a complete table (e.g. an empty hint track)
-            # Resource discipline: this walker runs over UNTRUSTED
-            # web-scale payloads gated only by an ftyp magic, so every
-            # declared count is validated against the byte extent that
-            # must contain it BEFORE any allocation — a crafted header
-            # must not be able to allocate GBs or loop unboundedly.
-            b, e = full_body(payload, *stsz)
-            if b + 8 > e:
-                raise ValueError("truncated stsz")
-            const_size, n_samples = struct.unpack(">II", payload[b : b + 8])
-            # Hard cap on per-sample bookkeeping: hours of 60 fps video is
-            # ~10^6 samples; 2^22 (~4.2M) is far beyond any real container
-            # yet bounds the extent/size lists to tens of MB — a crafted
-            # const_size=1 header could otherwise declare ~payload-length
-            # samples and OOM the task through bookkeeping alone.
-            if n_samples > (1 << 22):
-                raise ValueError("implausible stsz sample count")
-            if const_size == 0:
-                if b + 8 + 4 * n_samples > e:
-                    raise ValueError("truncated stsz entries")
-                sizes = list(
-                    struct.unpack(f">{n_samples}I", payload[b + 8 : b + 8 + 4 * n_samples])
-                )
-            else:
-                # the samples must physically fit in the file: bounds the
-                # list allocation by the payload the caller already holds
-                if n_samples * const_size > len(payload):
-                    raise ValueError("stsz declares more sample bytes than the payload")
-                sizes = [const_size] * n_samples
-            b, e = full_body(payload, *stsc)
-            if b + 4 > e:
-                raise ValueError("truncated stsc")
-            (n_runs,) = struct.unpack(">I", payload[b : b + 4])
-            if b + 4 + 12 * n_runs > e:
-                raise ValueError("truncated stsc entries")
-            runs = [
-                struct.unpack(">III", payload[b + 4 + 12 * r : b + 16 + 12 * r])
-                for r in range(n_runs)
-            ]
-            if any(runs[r][0] >= runs[r + 1][0] for r in range(len(runs) - 1)):
-                raise ValueError("stsc first_chunk not strictly ascending")
-            b, e = full_body(payload, *stco)
-            if b + 4 > e:
-                raise ValueError("truncated stco")
-            (n_chunks,) = struct.unpack(">I", payload[b : b + 4])
-            if b + 4 + wide * n_chunks > e:
-                raise ValueError("truncated stco entries")
-            fmt = ">Q" if wide == 8 else ">I"
-            offs = [
-                struct.unpack(fmt, payload[b + 4 + wide * c : b + 4 + wide * (c + 1)])[0]
-                for c in range(n_chunks)
-            ]
-            # One pass over chunks with a run POINTER (ascending
-            # first_chunk proven above): O(n_chunks + n_runs + n_samples),
-            # never the per-chunk run rescan a hostile (n_chunks × n_runs)
-            # header could drive into 10^10 iterations.
-            out, s, r = [], 0, -1
-            for c in range(1, n_chunks + 1):
-                while r + 1 < len(runs) and runs[r + 1][0] <= c:
-                    r += 1
-                spc = runs[r][1] if r >= 0 else 0
-                pos = offs[c - 1]
-                for _ in range(spc):
-                    if s >= n_samples:
-                        raise ValueError("stsc assigns more samples than stsz has")
-                    if pos + sizes[s] > len(payload):
-                        raise ValueError("sample extends past payload")
-                    out.append((pos, sizes[s]))
-                    pos += sizes[s]
-                    s += 1
-            if s != n_samples:
-                raise ValueError("sample table inconsistent (unassigned samples)")
-            return out
-        raise ValueError("mp4 has no trak with a complete stbl")
-
-    return frame_table
+    moov = child(payload, 0, len(payload), b"moov")
+    if moov is None:
+        raise ValueError("mp4 missing moov")
+    for ttype, tbody, tend in _mp4_boxes(payload, *moov):
+        if ttype != b"trak":
+            continue
+        stbl = None
+        mdia = child(payload, tbody, tend, b"mdia")
+        if mdia:
+            minf = child(payload, *mdia, b"minf")
+            if minf:
+                stbl = child(payload, *minf, b"stbl")
+        if stbl is None:
+            continue
+        stsz = child(payload, *stbl, b"stsz")
+        stsc = child(payload, *stbl, b"stsc")
+        stco = child(payload, *stbl, b"stco")
+        wide = 4
+        if stco is None:
+            stco = child(payload, *stbl, b"co64")
+            wide = 8
+        if stsz is None or stsc is None or stco is None:
+            continue  # not a complete table (e.g. an empty hint track)
+        # Resource discipline: this walker runs over UNTRUSTED
+        # web-scale payloads gated only by an ftyp magic, so every
+        # declared count is validated against the byte extent that
+        # must contain it BEFORE any allocation — a crafted header
+        # must not be able to allocate GBs or loop unboundedly.
+        b, e = full_body(payload, *stsz)
+        if b + 8 > e:
+            raise ValueError("truncated stsz")
+        const_size, n_samples = struct.unpack(">II", payload[b : b + 8])
+        # Hard cap on per-sample bookkeeping: hours of 60 fps video is
+        # ~10^6 samples; 2^22 (~4.2M) is far beyond any real container
+        # yet bounds the extent/size lists to tens of MB — a crafted
+        # const_size=1 header could otherwise declare ~payload-length
+        # samples and OOM the task through bookkeeping alone.
+        if n_samples > (1 << 22):
+            raise ValueError("implausible stsz sample count")
+        if const_size == 0:
+            if b + 8 + 4 * n_samples > e:
+                raise ValueError("truncated stsz entries")
+            sizes = list(
+                struct.unpack(f">{n_samples}I", payload[b + 8 : b + 8 + 4 * n_samples])
+            )
+        else:
+            # the samples must physically fit in the file: bounds the
+            # list allocation by the payload the caller already holds
+            if n_samples * const_size > len(payload):
+                raise ValueError("stsz declares more sample bytes than the payload")
+            sizes = [const_size] * n_samples
+        b, e = full_body(payload, *stsc)
+        if b + 4 > e:
+            raise ValueError("truncated stsc")
+        (n_runs,) = struct.unpack(">I", payload[b : b + 4])
+        if b + 4 + 12 * n_runs > e:
+            raise ValueError("truncated stsc entries")
+        runs = [
+            struct.unpack(">III", payload[b + 4 + 12 * r : b + 16 + 12 * r])
+            for r in range(n_runs)
+        ]
+        if any(runs[r][0] >= runs[r + 1][0] for r in range(len(runs) - 1)):
+            raise ValueError("stsc first_chunk not strictly ascending")
+        b, e = full_body(payload, *stco)
+        if b + 4 > e:
+            raise ValueError("truncated stco")
+        (n_chunks,) = struct.unpack(">I", payload[b : b + 4])
+        if b + 4 + wide * n_chunks > e:
+            raise ValueError("truncated stco entries")
+        fmt = ">Q" if wide == 8 else ">I"
+        offs = [
+            struct.unpack(fmt, payload[b + 4 + wide * c : b + 4 + wide * (c + 1)])[0]
+            for c in range(n_chunks)
+        ]
+        # One pass over chunks with a run POINTER (ascending
+        # first_chunk proven above): O(n_chunks + n_runs + n_samples),
+        # never the per-chunk run rescan a hostile (n_chunks × n_runs)
+        # header could drive into 10^10 iterations.
+        out, s, r = [], 0, -1
+        for c in range(1, n_chunks + 1):
+            while r + 1 < len(runs) and runs[r + 1][0] <= c:
+                r += 1
+            spc = runs[r][1] if r >= 0 else 0
+            pos = offs[c - 1]
+            for _ in range(spc):
+                if s >= n_samples:
+                    raise ValueError("stsc assigns more samples than stsz has")
+                if pos + sizes[s] > len(payload):
+                    raise ValueError("sample extends past payload")
+                out.append((pos, sizes[s]))
+                pos += sizes[s]
+                s += 1
+        if s != n_samples:
+            raise ValueError("sample table inconsistent (unassigned samples)")
+        return out
+    raise ValueError("mp4 has no trak with a complete stbl")
 
 
 def sample_frames(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload") -> DataFrame:
@@ -695,8 +637,6 @@ def sample_frames(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload
     FRAME_BYTES framing (the deterministic stand-in the driver oracle
     mirrors over text). Each row carries a signature byte (md5 of the
     frame bytes — the stand-in for a real thumbnail/phash)."""
-    frame_table = _build_mp4_frame_walker()
-
     def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import struct as _struct
 
@@ -738,7 +678,7 @@ def sample_frames(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload
                     plausible = False
                 if plausible:
                     try:
-                        table = frame_table(payload)
+                        table = mp4_frame_table(payload)
                     except (ValueError, _struct.error):
                         # failure row convention: no rows. struct.error is
                         # belt-and-braces — the walker guards every unpack,
@@ -781,24 +721,11 @@ def profile_assets(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payloa
     convention); without it, the deterministic byte-length fake keeps the
     oracle exact. ``content_sha`` and the byte-class histogram come from
     the raw payload in both branches."""
-    max_w, max_h = RESIZE_BOX
 
     def profile(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib as _hl
 
-        import numpy as _np
-
-        try:  # optional pixel decoder — resolved once per worker process
-            import io as _io
-
-            from PIL import Image as _Image
-
-            def real_dims(payload: bytes):
-                with _Image.open(_io.BytesIO(payload)) as img:
-                    return img.size
-        except ImportError:
-            real_dims = None
-
+        real_dims = _pil_dims()
         cols = [
             "doc_id", "n_bytes", "content_sha", "src_w", "src_h",
             "out_w", "out_h", "out_bytes",
@@ -808,33 +735,12 @@ def profile_assets(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payloa
             rows = []
             for doc_id, payload in zip(pdf[id_col], pdf[bin_col]):
                 payload = bytes(payload)
-                n = len(payload)
-                sha = _hl.md5(payload).digest()[0]
-                # one C pass over the bytes instead of four interpreted
-                # generator sweeps — the per-byte cost is what scales with
-                # payload size at 100 TB
-                hist = _np.bincount(
-                    _np.frombuffer(payload, dtype=_np.uint8), minlength=256
-                )
-                d = int(hist[0x30:0x3A].sum())
-                u = int(hist[0x41:0x5B].sum())
-                lo = int(hist[0x61:0x7B].sum())
-                sp = int(hist[0x20])
-                feats = (d, u, lo, sp, n - d - u - lo - sp)
-                if real_dims is None:
-                    w, h = n % 640, (n * 7) % 480
-                else:
-                    try:
-                        w, h = real_dims(payload)
-                    except Exception:
-                        w, h = None, None  # decoder failure row
-                if not w or not h:
-                    rows.append((doc_id, n, sha, w, h, None, None, None, *feats))
-                    continue
-                scale = min(1.0, max_w / w, max_h / h)
-                out_w, out_h = int(w * scale), int(h * scale)
+                w, h = _src_dims(payload, real_dims)
                 rows.append(
-                    (doc_id, n, sha, w, h, out_w, out_h, out_w * out_h * 3, *feats)
+                    (
+                        doc_id, len(payload), _hl.md5(payload).digest()[0], w, h,
+                        *_fit_box(w, h), *_byte_classes(payload),
+                    )
                 )
             yield pd.DataFrame(rows, columns=cols)
 
@@ -849,21 +755,11 @@ def extract_features(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payl
     (plans/similarity.py) unchanged."""
 
     def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-
         for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[bin_col]):
-                n = len(payload)
-                # one C pass, not four interpreted sweeps (see profile_assets)
-                hist = _np.bincount(
-                    _np.frombuffer(bytes(payload), dtype=_np.uint8), minlength=256
-                )
-                d = int(hist[0x30:0x3A].sum())
-                u = int(hist[0x41:0x5B].sum())
-                lo = int(hist[0x61:0x7B].sum())
-                sp = int(hist[0x20])
-                rows.append((doc_id, n, d, u, lo, sp, n - d - u - lo - sp))
+            rows = [
+                (doc_id, len(payload), *_byte_classes(bytes(payload)))
+                for doc_id, payload in zip(pdf[id_col], pdf[bin_col])
+            ]
             yield pd.DataFrame(
                 rows,
                 columns=["doc_id", "n_bytes", "n_digit", "n_upper", "n_lower", "n_space", "n_other"],

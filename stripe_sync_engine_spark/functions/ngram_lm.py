@@ -182,23 +182,14 @@ def score_documents(
     """(doc_id, lm_score): mean per-token log-prob, one Arrow pass, zero
     shuffle. Feed the score to a threshold cut exactly like the document
     stream's quality knobs."""
-    uni, bi, total, vocab, lam, add_k = (
-        lm.uni,
-        lm.bi,
-        lm.total,
-        lm.vocab_size,
-        lm.lam,
-        lm.add_k,
-    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = NgramLM(uni=uni, bi=bi, total=total, vocab_size=vocab, lam=lam, add_k=add_k)
         for pdf in batches:
             yield pd.DataFrame(
                 {
                     "doc_id": pdf[id_col].astype("int64"),
                     "lm_score": pd.Series(
-                        [model.score(t or "") for t in pdf[text_col]], dtype="float64"
+                        [lm.score(t or "") for t in pdf[text_col]], dtype="float64"
                     ),
                 }
             )

@@ -282,11 +282,7 @@ def _buckets_and_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64 matmul is microseconds per batch. The arithmetic is exactly the
     JVM/_quant semantics: float32→float64 (exact), ×1e7, floor, int64 —
     bit-identical on both engines, so the DuckDB oracle is unchanged.
-    Still zero-shuffle and embarrassingly parallel at 100 TB.
-
-    The worker closure references only numpy/pandas + captured plain-data
-    literals (plane list, ints) so it pickles by value — executors never
-    import this package."""
+    Still zero-shuffle and embarrassingly parallel at 100 TB."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     return buckets_and_quant_for(emb)
 

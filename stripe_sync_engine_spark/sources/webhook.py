@@ -6,12 +6,12 @@ endpoint secret (stripe.webhooks.constructEventAsync,
 stripeSync.ts:97-105; the algorithm is re-derived in its test at
 test/webhooks.test.ts:133-135).
 
-Two implementations:
+Two entry points, one check:
 * ``verify_signature`` — pure-Python, for the HTTP edge / driver-side
   single events.
 * ``with_signature_verified`` — bulk column-wise verification for landed
-  event batches via an Arrow-batched pandas UDF (Spark has no HMAC
-  built-in; per-row Python would be the slow path).
+  event batches: ``verify_signature`` inside an Arrow-batched pandas UDF
+  (Spark has no HMAC built-in; per-row Python would be the slow path).
 """
 
 from __future__ import annotations
@@ -59,30 +59,16 @@ def verify_signature(secret: str, header: str, payload: str, tolerance_s: int | 
 
 def with_signature_verified(df: DataFrame, secret: str, payload_col: str = "value", header_col: str = "signature") -> DataFrame:
     """Adds ``signature_valid`` (boolean) via an Arrow-batched pandas UDF —
-    vectorized transfer, Python HMAC per row only inside the batch loop.
-
-    The verification is inlined into the UDF body (same algorithm as
-    ``verify_signature``, kept in sync by ``test_signature_roundtrip``)
-    rather than calling the module-level function: a nested function
-    referencing only stdlib pickles by VALUE, so executors never need this
-    package on their sys.path."""
+    vectorized transfer, ``verify_signature`` per row only inside the
+    batch loop. A NULL payload or header is invalid."""
 
     @pandas_udf("boolean")
     def _verify(payload: pd.Series, header: pd.Series) -> pd.Series:
-        def one(h: str | None, p: str | None) -> bool:
-            if h is None or p is None:
-                return False
-            parts = dict(x.split("=", 1) for x in h.split(",") if "=" in x)
-            ts, sig = parts.get("t"), parts.get("v1")
-            if ts is None or sig is None:
-                return False
-            try:
-                ts_int = int(ts)
-            except ValueError:
-                return False
-            mac = hmac_mod.new(secret.encode(), f"{ts_int}.{p}".encode(), hashlib.sha256)
-            return hmac_mod.compare_digest(mac.hexdigest(), sig)
-
-        return pd.Series([one(h, p) for p, h in zip(payload, header)])
+        return pd.Series(
+            [
+                h is not None and p is not None and verify_signature(secret, h, p)
+                for p, h in zip(payload, header)
+            ]
+        )
 
     return df.withColumn("signature_valid", _verify(F.col(payload_col), F.col(header_col)))

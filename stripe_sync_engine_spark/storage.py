@@ -88,6 +88,127 @@ def _buckets_of(values: list, nb: int) -> list[int]:
     ]
 
 
+# -- manifest, history and data-skipping primitives ---------------------
+# Module-level so both the store and the ``stripe_store`` DataSource
+# readers (which run in Spark's Python workers) share one copy.
+
+
+def read_manifest(tdir: str) -> dict | None:
+    """The current ``MANIFEST.json`` of the table at ``tdir``; None when
+    the table does not exist."""
+    path = os.path.join(tdir, "MANIFEST.json")
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return json.load(f)
+
+
+def history_commits(tdir: str) -> list[int]:
+    """Commit timestamps (ms) recorded in the table's history, ascending."""
+    hdir = os.path.join(tdir, "_history")
+    if not os.path.isdir(hdir):
+        return []
+    return sorted(
+        int(n[:-5]) for n in os.listdir(hdir) if n.endswith(".json") and n[:-5].isdigit()
+    )
+
+
+def snapshot_at(tdir: str, ms: int) -> dict | None:
+    """The newest retained history snapshot at or before ``ms``; None when
+    no retained commit is that old. Raises when the snapshot references a
+    vacuumed version — loud, never partial data."""
+    eligible = [c for c in history_commits(tdir) if c <= ms]
+    if not eligible:
+        return None
+    with open(os.path.join(tdir, "_history", f"{eligible[-1]}.json")) as f:
+        manifest = json.load(f)
+    for b, version in manifest["buckets"].items():
+        if not os.path.exists(os.path.join(tdir, version, f"_bucket={b}")):
+            raise FileNotFoundError(
+                f"snapshot {eligible[-1]} of {tdir!r} references vacuumed version "
+                f"{version!r} (bucket {b}); raise vacuum_retain_s to keep older "
+                "snapshots readable (beyond a stream's maximal downtime)"
+            )
+    return manifest
+
+
+def canon_stat(v, naive_tz=None):
+    """Canonicalize a stat/predicate value into the JSON-storable,
+    order-preserving domain: numbers stay numbers, timestamps become
+    epoch microseconds, dates ISO strings (ISO order == date order),
+    strings stay strings. None = not representable (no skipping).
+
+    ``naive_tz``: the timezone a NAIVE datetime is interpreted in
+    (None = system-local via astimezone; the string ``"noskip"`` =
+    not canonicalizable, return None so the bucket is read). Callers
+    must pass whatever zone the EXACT filter will use for the same
+    value — ``read_where`` removes the ambiguity entirely by pinning
+    naive predicate values to tz-aware instants before either side
+    sees them (see ``TableStore._resolve_where_tz``)."""
+    import datetime as _dt
+    import decimal
+
+    if isinstance(v, bool):
+        return int(v)
+    if isinstance(v, (int, float)):
+        return v
+    if isinstance(v, _dt.datetime):
+        if v.tzinfo is None:
+            if naive_tz == "noskip":
+                return None
+            v = v.replace(tzinfo=naive_tz) if naive_tz is not None else v.astimezone()
+        return int(v.timestamp() * 1_000_000)
+    if isinstance(v, _dt.date):
+        return v.isoformat()
+    if isinstance(v, str):
+        return v
+    if isinstance(v, decimal.Decimal):
+        return float(v)
+    return None
+
+
+def bucket_may_match(bstats: dict | None, col: str, op: str, val, naive_tz=None) -> bool:
+    """Whether a bucket's stats admit any row satisfying ``col op val``.
+    Conservative: missing stats ⇒ True (read the bucket)."""
+    if not bstats:
+        return True
+    cs = (bstats.get("cols") or {}).get(col)
+    if cs is None:
+        return True
+    rows, nulls = bstats.get("rows"), cs.get("nulls")
+    all_null = rows is not None and nulls is not None and nulls >= rows and rows > 0
+    if op == "isnull":
+        return nulls is None or nulls > 0  # zero recorded nulls: skip
+    if op == "isnotnull":
+        return not all_null
+    if all_null:
+        return False  # all-null column: no comparison ever matches
+    mn, mx = cs.get("min"), cs.get("max")
+
+    def cmp_ok(a, b):  # only compare within one ordered domain
+        num = (int, float)
+        return (isinstance(a, num) and isinstance(b, num)) or (
+            isinstance(a, str) and isinstance(b, str)
+        )
+
+    vals = [canon_stat(v, naive_tz) for v in (val if op == "in" else [val])]
+    if any(v is None for v in vals):
+        return True  # unrepresentable predicate value: no skipping
+    hits = []
+    for v in vals:
+        if op in (">=", ">"):
+            hits.append(mx is None or not cmp_ok(mx, v) or (mx >= v if op == ">=" else mx > v))
+        elif op in ("<=", "<"):
+            hits.append(mn is None or not cmp_ok(mn, v) or (mn <= v if op == "<=" else mn < v))
+        elif op in ("=", "==", "in"):
+            lo = mn is None or not cmp_ok(mn, v) or mn <= v
+            hi = mx is None or not cmp_ok(mx, v) or mx >= v
+            hits.append(lo and hi)
+        else:
+            raise ValueError(f"unsupported data-skipping op {op!r}")
+    return any(hits) if hits else False  # 'in ()' matches nothing
+
+
 class TableStore:
     """Bucketed parquet datasets with an atomic per-bucket manifest."""
 
@@ -169,11 +290,7 @@ class TableStore:
         return os.path.join(self._dir(table), "MANIFEST.json")
 
     def _read_manifest(self, table: str) -> dict | None:
-        path = self._manifest_path(table)
-        if not os.path.exists(path):
-            return None
-        with open(path) as f:
-            return json.load(f)
+        return read_manifest(self._dir(table))
 
     def _commit_manifest(self, table: str, manifest: dict) -> None:
         """Swap the manifest pointer AND record the commit in the table's
@@ -440,30 +557,21 @@ class TableStore:
         """The manifest snapshot current at ``as_of_ms`` (None = table did
         not exist then; raises when the snapshot aged out of retention or
         references vacuumed versions — loud, never partial data)."""
-        eligible = [c for c in self.commits(table) if c <= as_of_ms]
-        if not eligible:
-            m = self._read_manifest(table)
-            if m is None:
-                return None  # table does not exist at all
-            created = m.get("created_ms")
-            if created is not None and as_of_ms < created:
-                return None  # before the table's first commit — genuinely absent
-            # the table existed at as_of_ms but its snapshot aged out —
-            # loud, like the vacuumed-version case below
-            raise FileNotFoundError(
-                f"no retained snapshot of {table!r} at {as_of_ms} (history pruned); "
-                "raise vacuum_retain_s to keep older snapshots readable"
-            )
-        with open(os.path.join(self._dir(table), "_history", f"{eligible[-1]}.json")) as f:
-            manifest = json.load(f)
-        for b, version in manifest["buckets"].items():
-            if not os.path.exists(os.path.join(self._dir(table), version, f"_bucket={b}")):
-                raise FileNotFoundError(
-                    f"snapshot {eligible[-1]} of {table!r} references vacuumed "
-                    f"version {version!r} (bucket {b}); raise vacuum_retain_s "
-                    "to keep older snapshots readable"
-                )
-        return manifest
+        manifest = snapshot_at(self._dir(table), as_of_ms)
+        if manifest is not None:
+            return manifest
+        m = self._read_manifest(table)
+        if m is None:
+            return None  # table does not exist at all
+        created = m.get("created_ms")
+        if created is not None and as_of_ms < created:
+            return None  # before the table's first commit — genuinely absent
+        # the table existed at as_of_ms but its snapshot aged out — loud,
+        # like snapshot_at's vacuumed-version case
+        raise FileNotFoundError(
+            f"no retained snapshot of {table!r} at {as_of_ms} (history pruned); "
+            "raise vacuum_retain_s to keep older snapshots readable"
+        )
 
     def _scan_manifest(
         self, table: str, manifest: dict, buckets: list[int] | None
@@ -479,12 +587,7 @@ class TableStore:
 
     def commits(self, table: str) -> list[int]:
         """Commit timestamps (ms) recorded in the table's history, ascending."""
-        hdir = os.path.join(self._dir(table), "_history")
-        if not os.path.isdir(hdir):
-            return []
-        return sorted(
-            int(n[:-5]) for n in os.listdir(hdir) if n.endswith(".json") and n[:-5].isdigit()
-        )
+        return history_commits(self._dir(table))
 
     def read_buckets(self, table: str, buckets: list[int] | None) -> DataFrame | None:
         """Read the whole table (``buckets=None``) or only the named
@@ -737,45 +840,6 @@ class TableStore:
 
     _STR_STAT_MAX = 64  # longer strings: keep truncated min (safe), drop max
 
-    @staticmethod
-    def _canon_stat(v, naive_tz=None):
-        """Canonicalize a stat/predicate value into the JSON-storable,
-        order-preserving domain: numbers stay numbers, timestamps become
-        epoch microseconds, dates ISO strings (ISO order == date order),
-        strings stay strings. None = not representable (no skipping).
-
-        ``naive_tz``: the timezone a NAIVE datetime is interpreted in
-        (None = system-local via astimezone; the string ``"noskip"`` =
-        not canonicalizable, return None so the bucket is read). Callers
-        must pass whatever zone the EXACT filter will use for the same
-        value — ``read_where`` removes the ambiguity entirely by pinning
-        naive predicate values to tz-aware instants before either side
-        sees them (see ``_resolve_where_tz``)."""
-        import datetime as _dt
-
-        if isinstance(v, bool):
-            return int(v)
-        if isinstance(v, (int, float)):
-            return v
-        if isinstance(v, _dt.datetime):
-            if v.tzinfo is None:
-                if naive_tz == "noskip":
-                    return None
-                v = v.replace(tzinfo=naive_tz) if naive_tz is not None else v.astimezone()
-            return int(v.timestamp() * 1_000_000)
-        if isinstance(v, _dt.date):
-            return v.isoformat()
-        if isinstance(v, str):
-            return v
-        try:  # Decimal and friends
-            import decimal
-
-            if isinstance(v, decimal.Decimal):
-                return float(v)
-        except ImportError:  # pragma: no cover
-            pass
-        return None
-
     def _version_stats(self, table: str, version: str) -> dict[str, dict]:
         """Per-bucket stats of one version dir, from parquet footers.
 
@@ -855,8 +919,8 @@ class TableStore:
                     mn = mx = None
                     if st is not None and st.has_min_max:
                         try:
-                            mn = self._canon_stat(st.min, _utc)
-                            mx = self._canon_stat(st.max, _utc)
+                            mn = canon_stat(st.min, _utc)
+                            mx = canon_stat(st.max, _utc)
                         except Exception:
                             mn = mx = None  # e.g. decimal chunks
                     if isinstance(mn, str) and len(mn) > self._STR_STAT_MAX:
@@ -900,50 +964,6 @@ class TableStore:
         except Exception:
             return None
 
-    @classmethod
-    def _bucket_may_match(
-        cls, bstats: dict | None, col: str, op: str, val, naive_tz=None
-    ) -> bool:
-        """Whether a bucket's stats admit any row satisfying ``col op val``.
-        Conservative: missing stats ⇒ True (read the bucket)."""
-        if not bstats:
-            return True
-        cs = (bstats.get("cols") or {}).get(col)
-        if cs is None:
-            return True
-        rows, nulls = bstats.get("rows"), cs.get("nulls")
-        all_null = rows is not None and nulls is not None and nulls >= rows and rows > 0
-        if op == "isnull":
-            return nulls is None or nulls > 0  # zero recorded nulls: skip
-        if op == "isnotnull":
-            return not all_null
-        if all_null:
-            return False  # all-null column: no comparison ever matches
-        mn, mx = cs.get("min"), cs.get("max")
-
-        def cmp_ok(a, b):  # only compare within one ordered domain
-            num = (int, float)
-            return (isinstance(a, num) and isinstance(b, num)) or (
-                isinstance(a, str) and isinstance(b, str)
-            )
-
-        vals = [cls._canon_stat(v, naive_tz) for v in (val if op == "in" else [val])]
-        if any(v is None for v in vals):
-            return True  # unrepresentable predicate value: no skipping
-        hits = []
-        for v in vals:
-            if op in (">=", ">"):
-                hits.append(mx is None or not cmp_ok(mx, v) or (mx >= v if op == ">=" else mx > v))
-            elif op in ("<=", "<"):
-                hits.append(mn is None or not cmp_ok(mn, v) or (mn <= v if op == "<=" else mn < v))
-            elif op in ("=", "==", "in"):
-                lo = mn is None or not cmp_ok(mn, v) or mn <= v
-                hi = mx is None or not cmp_ok(mx, v) or mx >= v
-                hits.append(lo and hi)
-            else:
-                raise ValueError(f"unsupported data-skipping op {op!r}")
-        return any(hits) if hits else False  # 'in ()' matches nothing
-
     def prune_buckets(
         self, table: str, where: list[tuple], manifest: dict | None = None
     ) -> list[int] | None:
@@ -961,7 +981,7 @@ class TableStore:
         # direct prune_buckets callers get the same convention); for
         # TIMESTAMP_NTZ, naive-vs-wall-clock comparison semantics depend
         # on how the caller will evaluate the exact filter, so never skip
-        # ("noskip" → _canon_stat None → bucket is read). The engine's own
+        # ("noskip" → canon_stat None → bucket is read). The engine's own
         # tables carry no NTZ columns.
         import datetime as _dt
 
@@ -988,7 +1008,7 @@ class TableStore:
         keep = []
         for b in manifest["buckets"]:
             if all(
-                self._bucket_may_match(stats.get(b), c, op, v, naive_tz_of(c, op, v))
+                bucket_may_match(stats.get(b), c, op, v, naive_tz_of(c, op, v))
                 for c, op, v in where
             ):
                 keep.append(int(b))

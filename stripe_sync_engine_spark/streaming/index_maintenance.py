@@ -275,12 +275,7 @@ def start_index_maintenance_stream(
     via ``engine._apply_change_window``."""
     gates = tuple(gates)
     mixture_folds = tuple(mixture_folds)
-    if mixture_folds and not emit_update_preimages:
-        raise ValueError(
-            "mixture_folds require emit_update_preimages=True — "
-            "without pre-image rows an update cannot move its "
-            "weight out of the old (category, stratum)"
-        )
+    engine._require_fold_preimages(mixture_folds, emit_update_preimages)
     checkpoint_dir = _local_checkpoint_path(checkpoint_dir)
     if (
         starting_commit_ms == 0
@@ -346,29 +341,15 @@ def start_index_maintenance_stream(
                     # planned); a zero-row BATCH (bounds None) has no
                     # window at all and the cursor correctly holds
                     fold.apply_window(applied, since_ms, until_ms)
-        record = {
-            "op": "corpus_cdc_fanout_stream",
-            "entity": entity,
-            "window": window,
-            "applied": bool(n),
-            "rows": n,
-            "targets": {
-                "gates": len(gates),
-                "postings": postings is not None,
-                "ann": ann is not None,
-                "mixture_folds": len(mixture_folds),
-            },
-        }
-        if n and ann is not None and hasattr(ann, "measure_codebook_drift"):
-            # parity with the cron form: the window's post-image vectors
-            # vs the pinned baseline, O(window); observability only, so a
-            # failure lands in the record rather than killing the stream
-            try:
-                post = applied.where(F.col("_change_type").isin("insert", "update"))
-                record["ann_drift"] = ann.measure_codebook_drift(post)
-            except Exception as e:  # noqa: BLE001 — reported, never silent
-                record["ann_drift"] = {"error": f"{type(e).__name__}: {e}"}
-        engine._log_maintenance(record)
+        engine._log_fanout(
+            {"op": "corpus_cdc_fanout_stream", "entity": entity, "window": window},
+            n,
+            applied,
+            gates,
+            postings,
+            ann,
+            mixture_folds,
+        )
 
     writer = feed.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir

@@ -494,22 +494,11 @@ class StripeSparkSync:
 
     def events_df_from_json(self, payloads: list[str]) -> DataFrame:
         """A frame of raw Stripe Event JSON strings (column ``value``) for
-        ``process_webhook_events``. The frame carries the driver-side
-        payloads as an annotation, so ``process_webhook_events`` can route
-        it in Python and merge it on the driver. The annotation covers
-        only the frame this method returns, unmodified: any transformation
-        in between (a filter, a union, a re-projection) yields a plain
-        frame, which falls back to the distributed path — correct, but it
-        costs more Spark jobs."""
-        df = self._local_frame([(p,) for p in payloads], _RAW_EVENT_SCHEMA)
-        # The raw strings live on the DRIVER (an HTTP webhook body is a
-        # Python list by nature) — remember them on the frame so
-        # process_webhook_events can do its routing/probe bookkeeping in
-        # Python instead of paying Spark jobs for it (r16, guide §1.2/§4).
-        # Purely an annotation: the distributed lineage is identical and
-        # any consumer that ignores the attribute behaves as before.
-        df._stripe_driver_payloads = list(payloads)
-        return df
+        ``process_webhook_events``: a driver-local relation, so
+        ``process_webhook_events`` takes its payloads back with one
+        job-free ``collect()`` and merges on the driver. Passing the list
+        itself skips even that collect."""
+        return self._local_frame([(p,) for p in payloads], _RAW_EVENT_SCHEMA)
 
     def _parse_envelope(self, raw: DataFrame) -> DataFrame:
         """raw JSON → (event_id, event_type, event_created, payload,
@@ -577,27 +566,31 @@ class StripeSparkSync:
     # ------------------------------------------------------------------
     # Webhook batch processing (§3.1)
     # ------------------------------------------------------------------
-    def process_webhook_events(self, raw_events: DataFrame) -> dict[str, int]:
-        """Process a batch of raw Stripe Event JSON strings (column
-        ``value``). Returns {table: merged-row-count}.
+    def process_webhook_events(self, raw_events: list[str] | DataFrame) -> dict[str, int]:
+        """Process a batch of raw Stripe Event JSON strings: a list, or a
+        frame with a ``value`` column. Returns {table: merged-row-count}.
 
-        The driver-side fast path applies only to the unmodified frame
-        ``events_df_from_json`` returns; any other frame, including one
-        derived from it by a transformation, takes the distributed path,
+        A list, or a driver-local frame (``DataFrame.isLocal()``, as
+        ``events_df_from_json`` builds), is driver-known and takes the
+        driver-side fast path; any other frame, such as a streaming
+        micro-batch or a filtered local frame, takes the distributed path,
         which gives the same result with more Spark jobs."""
-        # Driver-known batches (events_df_from_json — webhook bodies are
-        # Python lists by nature) do the routing plan and the
-        # list-expansion check in Python (r16, guide §1.2/§4): the same
-        # json-envelope fields Spark's from_json would read, decoded once
-        # driver-side (first key wins, as in Spark), replace the
-        # distinct-types job, the cache materialization and the has_more
-        # scan. Their merges then take the driver placement (_merge): the
-        # parse→project lineage runs UNCHANGED over the local relation and
-        # is collected with no Spark job, so every stored byte comes from
-        # the same expressions as the generic path. Distributed batches
-        # (the streaming webhook sink) keep the original shape including
-        # the persist.
-        payloads = getattr(raw_events, "_stripe_driver_payloads", None)
+        # Driver-known batches do the routing plan and the list-expansion
+        # check in Python: the same json-envelope fields Spark's from_json
+        # would read, decoded once driver-side (first key wins, as in
+        # Spark), replace the distinct-types job, the cache
+        # materialization and the has_more scan. Their merges then take
+        # the driver placement (_merge): the parse→project lineage runs
+        # UNCHANGED over the local relation and is collected with no Spark
+        # job, so every stored byte comes from the same expressions as the
+        # generic path. Distributed batches keep the original shape
+        # including the persist.
+        payloads = None
+        if isinstance(raw_events, list):
+            payloads = raw_events
+            raw_events = self.events_df_from_json(payloads)
+        elif raw_events.isLocal():
+            payloads = [r[0] for r in raw_events.select("value").collect()]
         envelopes: list[tuple[str | None, dict | None]] | None = None
         if payloads is not None:
             envelopes = []
@@ -606,7 +599,7 @@ class StripeSparkSync:
                     env = json.loads(p, object_pairs_hook=_first_wins)
                     obj = (env.get("data") or {}).get("object")
                     envelopes.append((env.get("type"), obj if isinstance(obj, dict) else None))
-                except (ValueError, AttributeError):
+                except (TypeError, ValueError, AttributeError):
                     envelopes.append((None, None))
         parsed = self._parse_envelope(raw_events)
         if envelopes is None:
@@ -1234,12 +1227,12 @@ class StripeSparkSync:
         (e.g. ``"stripe_asof_"``) to query a snapshot next to the live
         views. Tables with no retained snapshot at that instant are
         skipped (they did not exist yet, or history was pruned)."""
-        from stripe_sync_engine_spark.sources.store_datasource import build_store_datasource
+        from stripe_sync_engine_spark.sources.store_datasource import StoreDataSource
 
         # the Python-datasource pushdown path is conf-gated; planning
         # fails loudly without it, so flip it here (dynamic conf)
         self.spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-        self.spark.dataSource.register(build_store_datasource())
+        self.spark.dataSource.register(StoreDataSource)
         views = []
         for table in self.store.tables():
             if as_of_ms is not None and not [
@@ -1300,7 +1293,7 @@ class StripeSparkSync:
         across restarts — the streaming twin of ``consume_changes``).
         One input partition per changed bucket, diffed locally (bucket
         widths pair old and new rows — zero shuffle); see
-        ``sources/store_datasource.build_changes_datasource``. Default
+        ``sources/store_datasource.ChangesDataSource``. Default
         start = 0: the first batch delivers the whole table as inserts.
         ``emit_update_preimages`` matches the batch feed's option (one
         contract across both surfaces): each update also yields its OLD
@@ -1309,12 +1302,10 @@ class StripeSparkSync:
         carrying each micro-batch's end offset (commit ms) — the PUBLIC
         window bound cursor-aligned consumers (the mixture folds) need,
         replacing any dependence on Spark's private checkpoint file
-        layout (see ``build_changes_datasource``)."""
-        from stripe_sync_engine_spark.sources.store_datasource import (
-            build_changes_datasource,
-        )
+        layout (see ``ChangesDataSource``)."""
+        from stripe_sync_engine_spark.sources.store_datasource import ChangesDataSource
 
-        self.spark.dataSource.register(build_changes_datasource())
+        self.spark.dataSource.register(ChangesDataSource)
         return (
             self.spark.readStream.format("stripe_store_changes")
             .option("root", self.store.root)
@@ -1513,12 +1504,7 @@ class StripeSparkSync:
         operator runs forever leaves an auditable trace."""
         gates = tuple(gates)
         mixture_folds = tuple(mixture_folds)
-        if mixture_folds and not emit_update_preimages:
-            raise ValueError(
-                "mixture_folds require emit_update_preimages=True — "
-                "without pre-image rows an update cannot move its "
-                "weight out of the old (category, stratum)"
-            )
+        self._require_fold_preimages(mixture_folds, emit_update_preimages)
         # the window's lower bound, read BEFORE the consume: the folds'
         # alignment guard checks their applied_until against it (a
         # pinned crash-retry re-reads the same unadvanced cursor, so
@@ -1542,39 +1528,21 @@ class StripeSparkSync:
             # stays aligned with this consumer for the NEXT window
             fold.apply_window(applied_feed, since, cursor)
         self.ack_changes(consumer, entity, cursor)
-        report = {
-            "op": "corpus_cdc_fanout",
-            "consumer": consumer,
-            "entity": entity,
-            "window": f"{consumer}:{cursor}",
-            "cursor": cursor,
-            "applied": bool(n),
-            "rows": n,
-            "targets": {
-                "gates": len(gates),
-                "postings": postings is not None,
-                "ann": ann is not None,
-                "mixture_folds": len(mixture_folds),
+        self._log_fanout(
+            {
+                "op": "corpus_cdc_fanout",
+                "consumer": consumer,
+                "entity": entity,
+                "window": f"{consumer}:{cursor}",
+                "cursor": cursor,
             },
-        }
-        if n and ann is not None and hasattr(ann, "measure_codebook_drift"):
-            # apply_changes keeps the codes current but the codebook ages
-            # (pq_index: "retrain means rebuild") — measure the WINDOW's
-            # post-image vectors against the pinned baseline: the
-            # incoming distribution vs the training distribution, which
-            # is the drift that ages the codebook, at O(window) cost (a
-            # corpus-wide number is the audit's job, on the operator's
-            # schedule). Post-ack and observability-only, so a failure
-            # here must not make the successfully committed poll look
-            # failed — it lands in the report instead.
-            try:
-                post = applied_feed.where(
-                    F.col("_change_type").isin("insert", "update")
-                )
-                report["ann_drift"] = ann.measure_codebook_drift(post)
-            except Exception as e:  # noqa: BLE001 — reported, never silent
-                report["ann_drift"] = {"error": f"{type(e).__name__}: {e}"}
-        self._log_maintenance(report)
+            n,
+            applied_feed,
+            gates,
+            postings,
+            ann,
+            mixture_folds,
+        )
         return {"cursor": cursor, "applied": bool(n), "rows": n}
 
     def audit_corpus_indexes(
@@ -1764,6 +1732,50 @@ class StripeSparkSync:
         result["entity"] = entity
         self._log_maintenance(result)
         return result
+
+    @staticmethod
+    def _require_fold_preimages(mixture_folds, emit_update_preimages: bool) -> None:
+        if mixture_folds and not emit_update_preimages:
+            raise ValueError(
+                "mixture_folds require emit_update_preimages=True — "
+                "without pre-image rows an update cannot move its "
+                "weight out of the old (category, stratum)"
+            )
+
+    def _log_fanout(
+        self, head: dict, n: int, applied_feed, gates, postings, ann, mixture_folds
+    ) -> None:
+        """Append one applied fan-out window to the maintenance log — the
+        record both fan-out forms (cron and stream) write: ``head`` (op
+        and window identity), then ``applied``, ``rows`` and ``targets``.
+
+        A non-empty window with an ANN target also gets ``ann_drift``:
+        apply_changes keeps the codes current but the codebook ages
+        (pq_index: "retrain means rebuild"), so the WINDOW's post-image
+        vectors are measured against the pinned baseline — the incoming
+        distribution vs the training distribution, at O(window) cost (a
+        corpus-wide number is the audit's job, on the operator's
+        schedule). Post-apply and observability-only, so a failure here
+        must not make the committed window look failed — it lands in the
+        record instead."""
+        report = {
+            **head,
+            "applied": bool(n),
+            "rows": n,
+            "targets": {
+                "gates": len(gates),
+                "postings": postings is not None,
+                "ann": ann is not None,
+                "mixture_folds": len(mixture_folds),
+            },
+        }
+        if n and ann is not None and hasattr(ann, "measure_codebook_drift"):
+            try:
+                post = applied_feed.where(F.col("_change_type").isin("insert", "update"))
+                report["ann_drift"] = ann.measure_codebook_drift(post)
+            except Exception as e:  # noqa: BLE001 — reported, never silent
+                report["ann_drift"] = {"error": f"{type(e).__name__}: {e}"}
+        self._log_maintenance(report)
 
     @staticmethod
     def _apply_change_window(feed, window: str, gates, postings, ann):

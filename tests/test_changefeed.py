@@ -392,7 +392,7 @@ def test_streaming_change_feed_planning_units(spark, tmp_path):
     """In-process unit checks of the stream reader's planning: offsets
     track history commits, only changed buckets become partitions, and a
     rebucket inside a window fails loudly."""
-    from stripe_sync_engine_spark.sources.store_datasource import build_changes_datasource
+    from stripe_sync_engine_spark.sources.store_datasource import ChangesDataSource
 
     store = TableStore(spark, str(tmp_path / "wh_cdc_sp"), vacuum_retain_s=3600.0)
     store.write("t", _mk(spark, [(f"k{i}", i) for i in range(64)]))
@@ -403,8 +403,7 @@ def test_streaming_change_feed_planning_units(spark, tmp_path):
     store.write_buckets("t", cur.join(one.select("id"), "id", "left_anti").unionByName(one), [b])
     t1 = store.commits("t")[-1]
 
-    cls = build_changes_datasource()
-    ds = cls(options={"root": store.root, "table": "t", "starting_commit_ms": "0"})
+    ds = ChangesDataSource(options={"root": store.root, "table": "t", "starting_commit_ms": "0"})
     reader = ds.streamReader(ds.schema())
     assert reader.initialOffset() == {"commit_ms": 0}
     assert reader.latestOffset() == {"commit_ms": t1}
@@ -432,7 +431,7 @@ def test_change_feed_float_edge_parity(spark, tmp_path):
     IEEE == plus isnan/isnan equates — so a 0.0 → -0.0 rewrite and an
     unchanged-NaN row are silent on BOTH surfaces, while a real value
     change surfaces on both."""
-    from stripe_sync_engine_spark.sources.store_datasource import build_changes_datasource
+    from stripe_sync_engine_spark.sources.store_datasource import ChangesDataSource
 
     store = TableStore(spark, str(tmp_path / "wh_cdc_float"), vacuum_retain_s=3600.0)
     mk = lambda rows: spark.createDataFrame(rows, "id string, v double")  # noqa: E731
@@ -447,8 +446,7 @@ def test_change_feed_float_edge_parity(spark, tmp_path):
     assert batch == {"one": "update"}
 
     # streaming surface: the SAME change set from the same window
-    cls = build_changes_datasource()
-    ds = cls(options={"root": store.root, "table": "t", "starting_commit_ms": "0"})
+    ds = ChangesDataSource(options={"root": store.root, "table": "t", "starting_commit_ms": "0"})
     reader = ds.streamReader(ds.schema())
     got = {}
     for p in reader.partitions({"commit_ms": t0}, {"commit_ms": t1}):

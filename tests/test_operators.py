@@ -598,14 +598,14 @@ def test_mp4_sample_table_round_trip(spark, co64):
     import hashlib
 
     from stripe_sync_engine_spark.functions.multimodal import (
-        _build_mp4_frame_walker,
+        mp4_frame_table,
         sample_frames,
     )
 
     frames = [bytes([i]) * (20 + 7 * i) for i in range(9)]  # varied sizes
     payload, expected = _mp4_with_samples(frames, [2, 2, 4, 1], co64=co64)
     # the walker itself: every frame, exact extents
-    assert _build_mp4_frame_walker()(payload) == expected
+    assert mp4_frame_table(payload) == expected
     # the operator: every FRAME_STRIDE-th frame with true offset/size/sig
     df = spark.createDataFrame(
         [(1, bytearray(payload)), (2, bytearray(_mp4_bytes(600, 1200, 320, 240)))],
@@ -630,7 +630,7 @@ def test_mp4_sample_table_hostile_headers(spark):
     import struct
 
     from stripe_sync_engine_spark.functions.multimodal import (
-        _build_mp4_frame_walker,
+        mp4_frame_table,
         sample_frames,
     )
 
@@ -651,10 +651,9 @@ def test_mp4_sample_table_hostile_headers(spark):
     for stbl in (stbl1, stbl2):
         trak = box(b"trak", box(b"mdia", box(b"minf", stbl)))
         payloads.append(ftyp + box(b"moov", trak))
-    walker = _build_mp4_frame_walker()
     for p in payloads:
         with pytest.raises(ValueError):  # never struct.error, never OOM
-            walker(p)
+            mp4_frame_table(p)
     df = spark.createDataFrame(
         [(i, bytearray(p)) for i, p in enumerate(payloads)],
         "doc_id long, payload binary",
@@ -962,24 +961,21 @@ def test_meta_decoder_real_branch(monkeypatch):
     undecodable payloads become NULL-dim failure rows."""
     import pandas as pd
 
-    from stripe_sync_engine_spark.functions.multimodal import (
-        _build_meta_decoder,
-        _build_resizer,
-    )
+    from stripe_sync_engine_spark.functions.multimodal import _decode_meta, _resize
 
     good, bad = b"\x01" * 100, b"junk"
     _stub_pil(monkeypatch, {100: (640, 480)})
     out = pd.concat(
-        _build_meta_decoder("doc_id", "payload")(
-            iter([pd.DataFrame({"doc_id": [1, 2], "payload": [good, bad]})])
+        _decode_meta(
+            iter([pd.DataFrame({"doc_id": [1, 2], "payload": [good, bad]})]), "doc_id", "payload"
         )
     )
     by_id = out.set_index("doc_id")
     assert (by_id.loc[1, "fake_width"], by_id.loc[1, "fake_height"]) == (640, 480)
     assert pd.isna(by_id.loc[2, "fake_width"]) and by_id.loc[2, "n_bytes"] == 4
     rout = pd.concat(
-        _build_resizer("doc_id", "payload")(
-            iter([pd.DataFrame({"doc_id": [1, 2], "payload": [good, bad]})])
+        _resize(
+            iter([pd.DataFrame({"doc_id": [1, 2], "payload": [good, bad]})]), "doc_id", "payload"
         )
     ).set_index("doc_id")
     # 640x480 keep-aspect into (320, 240) → 320x240
@@ -1026,15 +1022,13 @@ def test_meta_decoder_fake_branch_without_pil():
     import pandas as pd
     import pytest
 
-    from stripe_sync_engine_spark.functions.multimodal import _build_meta_decoder
+    from stripe_sync_engine_spark.functions.multimodal import _decode_meta
 
     if importlib.util.find_spec("PIL") is not None:  # pragma: no cover
         pytest.skip("PIL present: fake branch not reachable")
     payload = b"\x02" * 123
     out = pd.concat(
-        _build_meta_decoder("doc_id", "payload")(
-            iter([pd.DataFrame({"doc_id": [7], "payload": [payload]})])
-        )
+        _decode_meta(iter([pd.DataFrame({"doc_id": [7], "payload": [payload]})]), "doc_id", "payload")
     )
     assert tuple(out.iloc[0][["fake_width", "fake_height"]]) == (123 % 640, (123 * 7) % 480)
 

@@ -495,7 +495,7 @@ def test_driver_known_batch_equals_distributed_batch(spark, tmp_path):
     threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     for with_api in (False, True):
         results, manifests = {}, {}
-        for mode in ("driver", "distributed", "spark"):
+        for mode in ("driver", "list", "distributed", "spark"):
             api = InMemoryStripeAPI() if with_api else None
             if api is not None:
                 api.put_expanded(
@@ -512,9 +512,12 @@ def test_driver_known_batch_equals_distributed_batch(spark, tmp_path):
             for i, batch in enumerate(batches):
                 if mode == "distributed":
                     df = spark.createDataFrame([(p,) for p in batch], _RAW_EVENT_SCHEMA)
+                    assert not df.isLocal()
+                elif mode == "list":
+                    df = list(batch)  # the typed driver entry point
                 else:
                     df = eng.events_df_from_json(batch)
-                    assert getattr(df, "_stripe_driver_payloads", None) is not None
+                    assert df.isLocal()
                 if mode == "spark":
                     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
                 try:
@@ -523,7 +526,7 @@ def test_driver_known_batch_equals_distributed_batch(spark, tmp_path):
                     )
                 finally:
                     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-                if mode == "driver" and i == 1 and not with_api:
+                if mode in ("driver", "list") and i == 1 and not with_api:
                     # every table exists: the whole batch merges on the
                     # driver (with an API, ch_E3's list expansion scans)
                     assert jobs == 0
@@ -538,7 +541,9 @@ def test_driver_known_batch_equals_distributed_batch(spark, tmp_path):
                 for t in ("charges", "customers", "invoices")
                 for m in [store._read_manifest(t)]
             }
-        assert results["driver"] == results["distributed"] == results["spark"]
+        assert (
+            results["driver"] == results["list"] == results["distributed"] == results["spark"]
+        )
         assert manifests["driver"] == manifests["spark"]
         charges = results["driver"][1]
         assert charges["ch_E1"]["amount"] == 2  # stale event lost
@@ -1147,7 +1152,8 @@ def test_data_skipping_is_conservative_without_stats(spark, tmp_path):
 
 
 def test_bucket_may_match_semantics():
-    bm = TableStore._bucket_may_match
+    from stripe_sync_engine_spark.storage import bucket_may_match as bm
+
     st = {"rows": 10, "cols": {"v": {"min": 5, "max": 20, "nulls": 2}}}
     assert bm(st, "v", ">=", 21) is False
     assert bm(st, "v", ">=", 20) is True
@@ -2123,18 +2129,18 @@ def test_compact_entity_serializes_with_merges(engine):
 # as a temp view over the stripe_store Python DataSource; a WHERE on an
 # indexed column reaches pushFilters and prunes buckets via manifest stats.
 def _store_reader(store, table):
-    from stripe_sync_engine_spark.sources.store_datasource import build_store_datasource
+    from stripe_sync_engine_spark.sources.store_datasource import StoreDataSource
 
-    cls = build_store_datasource()
-    ds = cls({"root": store.root, "table": table})
+    ds = StoreDataSource({"root": store.root, "table": table})
     return ds.reader(ds.schema())
 
 
 def test_store_view_prune_matches_table_store(spark, tmp_path):
-    """The DataSource's compact pruning check must agree with
-    TableStore.prune_buckets on every predicate shape — the pin that keeps
-    the deliberate duplication honest — and stay conservative on naive
-    datetimes (no skipping)."""
+    """The DataSource reader's pushed-filter translation must prune
+    exactly like TableStore.prune_buckets on every predicate shape (both
+    run ``storage.bucket_may_match``), report every filter back to Spark
+    as un-handled, and stay conservative on naive datetimes (no
+    skipping)."""
     import datetime as dt
 
     from pyspark.sql.datasource import (
@@ -2300,72 +2306,6 @@ def test_create_views_as_of_snapshot(spark, tmp_path):
     assert live == {"ch_1", "ch_2"} and old == {"ch_1"}
     # before the table existed: no view registered
     assert eng.create_views(prefix="x_", as_of_ms=t1 - 10_000_000) == []
-
-
-def test_datasource_prune_equivalence_property(spark, tmp_path):
-    """Hypothesis pin: the DataSource's compact _may_match agrees with
-    TableStore._bucket_may_match on every generated (stats, predicate)
-    for the value domains a pushed filter carries — the guard that keeps
-    the deliberate duplication from drifting."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    store = TableStore(spark, str(tmp_path / "wh_prop"))
-    store.write("t", spark.createDataFrame([("a", 1)], "id string, v int"))
-    # the check is only reachable through partitions() (nested closure), so
-    # drive equivalence at the OUTCOME level: plant generated stats on a
-    # one-bucket manifest and compare keep/skip decisions
-    num = st.one_of(st.integers(-1000, 1000), st.floats(-1e6, 1e6, allow_nan=False))
-    stat = st.fixed_dictionaries(
-        {
-            "rows": st.integers(0, 100),
-            "cols": st.fixed_dictionaries(
-                {
-                    "v": st.fixed_dictionaries(
-                        {"nulls": st.one_of(st.none(), st.integers(0, 100))},
-                        optional={"min": num, "max": num},
-                    )
-                }
-            ),
-        }
-    )
-    ops = st.sampled_from([">=", ">", "<=", "<", "="])
-
-    from pyspark.sql.datasource import (
-        EqualTo,
-        GreaterThan,
-        GreaterThanOrEqual,
-        LessThan,
-        LessThanOrEqual,
-    )
-
-    fcls = {
-        ">=": GreaterThanOrEqual,
-        ">": GreaterThan,
-        "<=": LessThanOrEqual,
-        "<": LessThan,
-        "=": EqualTo,
-    }
-
-    @settings(max_examples=200, deadline=None)
-    @given(bstats=st.one_of(st.none(), stat), op=ops, val=num)
-    def check(bstats, op, val):
-        want = TableStore._bucket_may_match(bstats, "v", op, val)
-        # outcome-level: plant the stats on the real manifest's buckets and
-        # compare the reader's keep-set against prune_buckets
-        reader = _store_reader(store, "t")
-        reader._manifest = {
-            "n_buckets": 1,
-            "buckets": {"0": "v0"},
-            "stats": {"0": bstats},
-            "schema": store._read_manifest("t")["schema"],
-        }
-        reader._dir = str(tmp_path / "nonexistent")
-        reader.pushFilters([fcls[op](("v",), val)])
-        kept = [p for p in reader.partitions() if p.path]
-        assert bool(kept) == want, (bstats, op, val)
-
-    check()
 
 
 def test_data_skipping_null_ops(spark, tmp_path):
