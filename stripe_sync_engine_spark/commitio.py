@@ -44,23 +44,22 @@ the fake does.
 
 Single-writer expectations stay with the CALLERS (the store's commit
 lock, the gates' external-serialization contract, the stream's serial
-foreachBatch); this module only guarantees that each individual commit
-is all-or-nothing.
+foreachBatch); this module guarantees that each individual commit is
+all-or-nothing, and owns the one lock, ``exclusive_lock``.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import random
 import threading
 import time
 
-#: suffix of the flock sidecar files read_modify_write serializes on:
-#: ``.{base}.flock`` beside the side file. Deliberately NOT ``.lock`` —
-#: the store's transient O_EXCL ``.commit.lock`` (held-by-presence,
-#: storage._commit_lock) must never be confused with a reclaimable
-#: flock sidecar (held-by-flock, presence meaningless).
+#: suffix of the flock sidecar files ``exclusive_lock`` locks:
+#: ``.{base}.flock`` beside the locked file. Not ``.lock``, so a lock a
+#: foreign tool keeps under the warehouse root is never reclaimed.
 LOCK_SIDECAR_SUFFIX = ".flock"
 
 
@@ -121,24 +120,7 @@ class PosixRenameBackend:
         committed content (rename is atomic, the lock orders commits).
         NFS caveat: flock over NFS requires a lock-manager-enabled
         mount — the same caveat every flock-based log store carries.
-
-        Sidecar lifecycle: one ``.{base}.flock`` file per RMW'd side
-        file, a few bytes each. They are NOT deleted on release (an
-        unlink while another writer is blocked in ``flock`` would hand
-        out locks on two different inodes — the classic lockfile-unlink
-        race); ``reclaim_lock_sidecars`` removes the ones whose parent
-        side file is gone, safely (it unlinks UNDER the lock, and this
-        method re-verifies the locked inode is still the one at the
-        path, retrying on a fresh inode if the reclaimer got there
-        first). ``engine.maintain()`` runs the reclaim over the store
-        root on every pass."""
-        try:
-            import fcntl
-        except ImportError:  # non-POSIX: callers hold the engine's locks
-            fcntl = None
-        d, base = os.path.split(path)
-        if d:
-            os.makedirs(d, exist_ok=True)
+        The lock and its sidecar lifecycle are ``exclusive_lock``'s."""
 
         def apply():
             try:
@@ -148,7 +130,9 @@ class PosixRenameBackend:
                 prior = ""
             self.put_atomic(path, fn(prior))
 
-        if fcntl is None:
+        try:
+            import fcntl  # noqa: F401
+        except ImportError:
             import warnings
 
             warnings.warn(
@@ -161,28 +145,51 @@ class PosixRenameBackend:
             )
             apply()
             return
-        lockpath = os.path.join(d, f".{base}{LOCK_SIDECAR_SUFFIX}")
-        while True:
-            with open(lockpath, "a") as lk:
-                fcntl.flock(lk, fcntl.LOCK_EX)
+        with exclusive_lock(path):
+            apply()
+
+
+@contextlib.contextmanager
+def exclusive_lock(path: str):
+    """Hold an exclusive kernel ``flock`` on the ``.{base}.flock`` sidecar
+    of ``path`` for the ``with`` body — THE lock of the engine: it
+    serializes ``read_modify_write`` and the store's manifest commits
+    (``TableStore._commit_lock``) across threads AND processes on one
+    host. The kernel releases it when the holder's process dies, so a
+    crashed committer never stalls the next one, and a live holder keeps
+    it however long it pauses. Raises where ``fcntl`` does not exist:
+    such a platform cannot serialize writers this way.
+
+    The sidecar is never deleted on release (an unlink while another
+    writer is blocked in ``flock`` would hand out locks on two inodes);
+    ``reclaim_lock_sidecars`` removes orphaned ones UNDER the lock, so
+    the acquirer re-checks that the inode it locked is still the one at
+    the path and retries on a fresh sidecar when a reclaimer got there
+    first."""
+    try:
+        import fcntl
+    except ImportError:
+        raise RuntimeError(
+            f"fcntl is unavailable on this platform — cannot lock {path!r} "
+            "against concurrent writers"
+        ) from None
+    d, base = os.path.split(path)
+    if d:
+        os.makedirs(d, exist_ok=True)
+    lockpath = os.path.join(d, f".{base}{LOCK_SIDECAR_SUFFIX}")
+    while True:
+        with open(lockpath, "a") as lk:
+            fcntl.flock(lk, fcntl.LOCK_EX)
+            try:
                 try:
-                    # the reclaimer may have unlinked the sidecar between
-                    # our open and our flock — a later writer would then
-                    # create a NEW inode at this path and the two locks
-                    # would not exclude each other; hold only a lock whose
-                    # inode is still the one at the path
-                    try:
-                        same = (
-                            os.fstat(lk.fileno()).st_ino
-                            == os.stat(lockpath).st_ino
-                        )
-                    except FileNotFoundError:
-                        same = False
-                    if same:
-                        apply()
-                        return
-                finally:
-                    fcntl.flock(lk, fcntl.LOCK_UN)
+                    same = os.fstat(lk.fileno()).st_ino == os.stat(lockpath).st_ino
+                except FileNotFoundError:
+                    same = False
+                if same:
+                    yield
+                    return
+            finally:
+                fcntl.flock(lk, fcntl.LOCK_UN)
 
 
 class ConditionalPutConflict(RuntimeError):
@@ -336,9 +343,9 @@ def read_modify_write(path: str, fn) -> None:
     the loser of the generation race re-reads and re-applies (``fn``
     must be a pure function of the current content); on POSIX an
     exclusive flock on a ``.{base}.flock`` sidecar serializes threads
-    AND processes (see ``PosixRenameBackend.read_modify_write`` for the
-    sidecar lifecycle and ``reclaim_lock_sidecars``). Engine state
-    files today are single-writer by contract and use
+    AND processes (see ``exclusive_lock`` and ``reclaim_lock_sidecars``
+    for the sidecar lifecycle). Engine state files today are
+    single-writer by contract and use
     ``atomic_write_*`` directly; route any FUTURE multi-writer
     read-modify-write file through here, never through a bare
     read-then-``atomic_write_text`` (which is last-writer-wins on every
@@ -353,22 +360,21 @@ def reclaim_lock_sidecars(root: str) -> list[str]:
     deployment from accumulating one sidecar per vacuumed side file
     forever. Wired into ``engine.maintain()``.
 
-    Only ``.flock`` names are candidates, so no ``.lock`` file is ever
-    unlinked: the store's presence-style ``.commit.lock`` and any lock a
-    foreign tool keeps under the warehouse root are held by EXISTENCE,
-    which the non-blocking flock probe below cannot see.
+    Only ``.flock`` names are candidates, so no ``.lock`` file a foreign
+    tool keeps under the warehouse root is ever unlinked. A table's
+    ``.MANIFEST.json.flock`` (the store's commit lock) stays while its
+    manifest exists.
 
     Safe next to live writers: each candidate is taken with a
     NON-BLOCKING exclusive flock (busy → skip, the holder is mid-commit
     and the parent is about to exist), the parent's absence is
     re-checked UNDER the lock, and the unlink happens before release —
     a writer that then acquires the unlinked inode re-verifies inode
-    identity (see ``PosixRenameBackend.read_modify_write``) and retries
-    on a fresh sidecar, so no two writers ever hold locks on different
-    inodes of the same path. ``.flock`` sidecars of side files that
-    still exist are left alone (they are the lock). No-op on platforms
-    without ``fcntl`` and on backends without sidecars (conditional-put
-    has none). Returns the removed paths."""
+    identity (see ``exclusive_lock``) and retries on a fresh sidecar,
+    so no two writers ever hold locks on different inodes of the same
+    path. ``.flock`` sidecars of side files that still exist are left
+    alone (they are the lock). No-op on platforms without ``fcntl``.
+    Returns the removed paths."""
     try:
         import fcntl
     except ImportError:  # non-POSIX: no flock sidecars exist

@@ -215,7 +215,7 @@ def merge_upsert_clustered(
     set pass ``len(touched)``. Without it, the window's ENSURE_REQUIREMENTS
     exchange is AQE-coalescible, and a micro-batch merge collapses to ONE
     task that then writes every touched bucket dir SEQUENTIALLY (the exact
-    serial-tail pathology storage._prepare_buckets already fixes for
+    serial-tail pathology storage.prepare_buckets already fixes for
     non-pre-clustered partial writes with an explicit per-bucket
     repartition). An explicit-count ``repartition(n, cluster_expr)``
     satisfies the window's clustered-distribution requirement (no second

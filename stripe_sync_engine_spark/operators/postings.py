@@ -211,7 +211,7 @@ class PersistedPostingsIndex:
         created by a plain ``store.write``."""
         from functools import reduce
 
-        from pyspark.sql.types import StructType
+        import pyarrow as pa
 
         def delta(docs: DataFrame, sign: int, batch_id: str | None) -> DataFrame:
             return docs.agg(
@@ -244,32 +244,23 @@ class PersistedPostingsIndex:
         if not rows:
             return
         touched = sorted({int(r["_b"]) for r in rows})
-        base_by_bucket = store.read_rows_driver(self.stats_table, touched, manifest)
-        known_ids = {
-            r["batch_id"] for rs in base_by_bucket.values() for r in rs
-        }
-        fresh_rows = [r for r in rows if r["batch_id"] not in known_ids]
-        if not fresh_rows:
+        stored = {b: store.read_arrow(self.stats_table, [b], manifest) for b in touched}
+        known_ids = {i for t in stored.values() for i in t.column("batch_id").to_pylist()}
+        fresh = {}
+        for r in rows:
+            if r["batch_id"] not in known_ids:
+                fresh.setdefault(int(r["_b"]), []).append(r.asDict())
+        if not fresh:
             return
-        write_set = sorted({int(r["_b"]) for r in fresh_rows})
-        by_bucket = {b: list(base_by_bucket[b]) for b in write_set}
-        for r in fresh_rows:
-            by_bucket[int(r["_b"])].append(
-                {
-                    "batch_id": r["batch_id"],
-                    "n_docs": int(r["n_docs"]),
-                    "n_dl_docs": int(r["n_dl_docs"]),
-                    "total_dl": int(r["total_dl"]),
-                }
-            )
-        schema = StructType.fromDDL(
-            "batch_id string, n_docs long, n_dl_docs long, total_dl long"
-        )
         store.write_rows_buckets(
             self.stats_table,
-            by_bucket,
-            schema,
-            key="batch_id",
+            {
+                b: pa.concat_tables(
+                    [stored[b], pa.Table.from_pylist(new, schema=stored[b].schema)]
+                )
+                for b, new in fresh.items()
+            },
+            planned_n_buckets=nb,
             planned_versions=dict(manifest["buckets"]),
         )
 

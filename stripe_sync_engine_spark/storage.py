@@ -26,13 +26,14 @@ local harness; at 100 TB you would raise ``n_buckets`` into the thousands
 (it is recorded per table in the manifest, so stores of different widths
 coexist).
 
-A version dir is written in one of two places. Spark writes it
+A version dir is prepared in one of two placements. Spark writes it
 (``write``/``write_buckets``/``prepare_buckets``) for table births and
 for any write whose rows live in a DataFrame. Rows already on the driver —
-state-table rows, and sync merges whose touched buckets fit under
+postings stats rows, and sync merges whose touched buckets fit under
 ``driver_read_bytes()`` — are written with pyarrow, one file per bucket
-(``write_rows_buckets``/``write_arrow_buckets``), with no Spark job. Both
-commit through the same locked manifest swap (``_commit_partial``).
+(``write_rows_buckets``), with no Spark job. Every table change then
+commits through one locked manifest read-modify-write
+(``_swap_manifest``).
 
 The ``migrate()`` analog of the reference's migration runner records
 applied DDL in a ``_migrations.json`` file.
@@ -52,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from stripe_sync_engine_spark.commitio import atomic_write_json
+from stripe_sync_engine_spark.commitio import atomic_write_json, exclusive_lock
 from stripe_sync_engine_spark.schemas.entities import bucket_key, entity_schema, entity_tables
 
 DEFAULT_N_BUCKETS = 32
@@ -78,7 +79,7 @@ INDEXED_STATS_COLUMNS = (
 )
 
 
-def _buckets_of(values: list, nb: int) -> list[int]:
+def bucket_ids(values: list, nb: int) -> list[int]:
     """``pmod(xxhash64(cast(v as string)), nb)`` of each driver-known key
     (functions/xxh64); NULL hashes to Spark's seed."""
     from stripe_sync_engine_spark.functions import xxh64
@@ -297,9 +298,9 @@ class TableStore:
         history (``_history/<ms>.json``, a full manifest snapshot — a few
         hundred bytes). Because version dirs are immutable, a retained
         history file IS a readable snapshot: ``read(table, as_of_ms=...)``
-        plans against it, Delta-time-travel style. Always called under the
-        commit lock, so history timestamps are strictly increasing per
-        table."""
+        plans against it, Delta-time-travel style. Called only by
+        ``_swap_manifest``, under the commit lock, so history timestamps
+        are strictly increasing per table."""
         atomic_write_json(self._manifest_path(table), manifest)
         # History is written AFTER the atomic swap: a crash between the two
         # loses one history entry (as-of reads around that instant resolve
@@ -312,7 +313,6 @@ class TableStore:
             ms += 1
         atomic_write_json(os.path.join(hdir, f"{ms}.json"), manifest)
 
-    @contextlib.contextmanager
     def _commit_lock(self, table: str):
         """Mutual exclusion for the manifest read-modify-write. The HTTP
         front door is a threading server, so a webhook batch and a backfill
@@ -320,44 +320,9 @@ class TableStore:
         second commit's manifest would be based on a stale read and drop
         the first commit's bucket re-points. Data files never conflict
         (version dirs are unique per ms+pid) — only the pointer swap needs
-        serializing. O_CREAT|O_EXCL lock file; a lock older than 60s is
-        treated as left by a crashed holder and broken."""
-        tdir = self._dir(table)
-        os.makedirs(tdir, exist_ok=True)
-        lock = os.path.join(tdir, ".commit.lock")
-        stale_s = 60.0
-        # the deadline must outlive the stale threshold, or a waiter that
-        # arrives just after a crash times out before the lock ever
-        # becomes breakable
-        deadline = time.time() + stale_s + 30.0
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                break
-            except FileExistsError:
-                try:
-                    if time.time() - os.path.getmtime(lock) > stale_s:
-                        # claim the break atomically: rename only succeeds
-                        # for ONE waiter (a bare unlink would let two
-                        # waiters each delete-and-recreate, both entering
-                        # the critical section)
-                        claimed = f"{lock}.stale.{os.getpid()}.{time.monotonic_ns()}"
-                        os.rename(lock, claimed)
-                        os.unlink(claimed)
-                        continue
-                except FileNotFoundError:
-                    continue
-                except OSError:
-                    pass  # lost the break race; keep waiting
-                if time.time() > deadline:
-                    raise TimeoutError(f"commit lock on {table!r} held for >{stale_s + 30.0:.0f}s")
-                time.sleep(0.02)
-        try:
-            yield
-        finally:
-            os.close(fd)
-            with contextlib.suppress(FileNotFoundError):
-                os.unlink(lock)
+        serializing. ``commitio.exclusive_lock`` on the manifest: a kernel
+        flock, released by the kernel if the holder dies."""
+        return exclusive_lock(self._manifest_path(table))
 
     def exists(self, table: str) -> bool:
         return os.path.exists(self._manifest_path(table))
@@ -429,7 +394,7 @@ class TableStore:
             frame = self.spark.createDataFrame([(v,) for v in values], f"v {kind}")
             return self.bucket_counts(frame, key="v", table=table)
         nb = self._table_n_buckets(table) if table else self.n_buckets
-        return sorted(Counter(_buckets_of(values, nb)).items())
+        return sorted(Counter(bucket_ids(values, nb)).items())
 
     def buckets_of(self, df: DataFrame, key: str = "id", table: str | None = None) -> list[int]:
         """Distinct bucket ids present in ``df`` — bounded by n_buckets, so
@@ -1103,20 +1068,34 @@ class TableStore:
         return df
 
     # -- write ---------------------------------------------------------
+    # Every table change is ONE commit, ``_swap_manifest``. What it
+    # commits is a private version dir prepared in one of two placements:
+    # a Spark write (``_write_version``: ``write``, ``prepare_buckets``)
+    # or pyarrow files written on the driver (``write_rows_buckets``).
+    def _new_version(self, table: str) -> tuple[str, str]:
+        """The name and path of a fresh private version dir. ms + pid +
+        per-process monotonic ns: two commits of one table inside the SAME
+        millisecond (a hot JVM does this) must not share a version dir
+        name — they'd overwrite each other's files while both manifest
+        entries point at the survivor, and the OCC precondition
+        (planned_versions) couldn't even see the swap. vacuum_orphans
+        parses the leading ms for the age floor; the extra suffix is
+        opaque to it (split('_', 1))."""
+        version = f"v{int(time.time() * 1000)}_{os.getpid()}_{time.monotonic_ns()}"
+        return version, os.path.join(self._dir(table), version)
+
+    def _written_buckets(self, table: str, version: str) -> list[str]:
+        vdir = os.path.join(self._dir(table), version)
+        return [
+            d.split("=", 1)[1]
+            for d in (os.listdir(vdir) if os.path.exists(vdir) else [])
+            if d.startswith("_bucket=")
+        ]
+
     def _write_version(
         self, table: str, df: DataFrame, key: str, nb: int, pre_clustered: bool = False
     ) -> str:
-        tdir = self._dir(table)
-        os.makedirs(tdir, exist_ok=True)
-        # ms + pid + per-process monotonic ns: two commits of one table
-        # inside the SAME millisecond (a hot JVM does this) must not share
-        # a version dir name — they'd overwrite each other's files while
-        # both manifest entries point at the survivor, and the OCC
-        # precondition (planned_versions) couldn't even see the swap.
-        # vacuum_orphans parses the leading ms for the age floor; the
-        # extra suffix is opaque to it (split('_', 1)).
-        version = f"v{int(time.time() * 1000)}_{os.getpid()}_{time.monotonic_ns()}"
-        path = os.path.join(tdir, version)
+        version, path = self._new_version(table)
         out = df.withColumn("_bucket", self.bucket_expr(key, nb))
         if not pre_clustered:
             # co-locate each bucket before partitionBy: without this every
@@ -1136,6 +1115,28 @@ class TableStore:
         out.write.partitionBy("_bucket").mode("overwrite").parquet(path)
         return version
 
+    def _swap_manifest(self, table: str, update) -> None:
+        """THE commit of every table change: under the table's commit lock,
+        read the LATEST manifest (not the one the caller planned against —
+        concurrent disjoint commits survive), build the next one with
+        ``update(prior)`` — which raises to abort: a rebucket, an OCC
+        conflict, a vanished table — and commit it with
+        ``_commit_manifest``; then vacuum the versions it replaced."""
+        with self._commit_lock(table):
+            prior = self._read_manifest(table)
+            manifest = update(prior)
+            # table birth time, carried across every rewrite — read(as_of)
+            # uses it to tell "before the table existed" (None) from
+            # "snapshot aged out of retention" (raise)
+            manifest["created_ms"] = (prior or {}).get("created_ms", int(time.time() * 1000))
+            self._commit_manifest(table, manifest)
+        replaced = (
+            set(prior["buckets"].values()) - set(manifest["buckets"].values())
+            if prior
+            else set()
+        )
+        self._vacuum(table, replaced)
+
     def write(
         self,
         table: str,
@@ -1148,32 +1149,14 @@ class TableStore:
         ``n_buckets`` overrides the table's recorded width (rebucket())."""
         nb = n_buckets if n_buckets is not None else self._table_n_buckets(table)
         version = self._write_version(table, df, key, nb, pre_clustered=pre_clustered)
-        vdir = os.path.join(self._dir(table), version)
-        present = [
-            d.split("=", 1)[1]
-            for d in (os.listdir(vdir) if os.path.exists(vdir) else [])
-            if d.startswith("_bucket=")
-        ]
         manifest = {
             "n_buckets": nb,
             "bucket_key": key,
             "schema": json.loads(df.schema.json()),
-            "buckets": {b: version for b in present},
+            "buckets": {b: version for b in self._written_buckets(table, version)},
             "stats": self._version_stats(table, version),
         }
-        with self._commit_lock(table):
-            prior = self._read_manifest(table)
-            # table birth time, carried across every rewrite — read(as_of)
-            # uses it to tell "before the table existed" (None) from
-            # "snapshot aged out of retention" (raise)
-            manifest["created_ms"] = (prior or {}).get("created_ms", int(time.time() * 1000))
-            self._commit_manifest(table, manifest)
-        replaced = (
-            set(prior["buckets"].values()) - set(manifest["buckets"].values())
-            if prior
-            else set()
-        )
-        self._vacuum(table, replaced)
+        self._swap_manifest(table, lambda prior: manifest)
 
     def write_buckets(
         self,
@@ -1212,15 +1195,45 @@ class TableStore:
         read-modify-write maintenance (``compact``) that runs outside the
         engine's table write locks; merges serialized by the engine don't
         need it."""
+        if not self.exists(table):
+            # a partial write of a table's only data is its first full
+            # version
+            return self.write(table, df, key=key, pre_clustered=pre_clustered)
+        prep = self.prepare_buckets(table, df, buckets, key, pre_clustered, planned_n_buckets)
+        self.commit_prepared(prep, planned_versions=planned_versions)
+
+    def _prepare(self, table: str, buckets, planned_n_buckets: int | None, write_files) -> dict:
+        """Phase 1 of a partial write, in either placement: check the plan
+        against the current manifest, let ``write_files(manifest)`` fill a
+        private version dir and return ``(version, schema json)``, then
+        harvest which buckets it wrote and their footer stats. Returns the
+        handle ``_commit_partial`` commits."""
         prior = self._read_manifest(table)
         if prior is None:
-            # table does not exist yet — a partial write of its only data
-            # is simply its first full version
-            return self.write(table, df, key=key, pre_clustered=pre_clustered)
-        prep = self._prepare_buckets(
-            prior, table, df, buckets, key, pre_clustered, planned_n_buckets
-        )
-        self.commit_prepared(prep, planned_versions=planned_versions)
+            raise RuntimeError(
+                f"partial writes require an existing table (got {table!r}); "
+                "route a table's first version through write()"
+            )
+        nb = int(prior["n_buckets"])
+        if planned_n_buckets is not None and planned_n_buckets != nb:
+            raise RuntimeError(
+                f"{table!r} was rebucketed ({planned_n_buckets} → {nb}) after this "
+                "write was planned; re-read the manifest and re-plan the batch"
+            )
+        version, schema_json = write_files(prior)
+        return {
+            "table": table,
+            "version": version,
+            "buckets": buckets,
+            # the table's recorded bucket key wins over any argument: a
+            # partial write with a different key would scatter rows across
+            # buckets the manifest doesn't re-point
+            "key": prior.get("bucket_key", "id"),
+            "nb": nb,
+            "schema_json": schema_json,
+            "written": set(self._written_buckets(table, version)),
+            "stats": self._version_stats(table, version),
+        }
 
     def prepare_buckets(
         self,
@@ -1239,70 +1252,33 @@ class TableStore:
         (r16, guide §2.6 — a merged CDC window overlaps its two table
         rewrites' Spark jobs this way) while the COMMITS keep their
         declared order; a prepare whose commit never happens is a plain
-        crash leftover, vacuumed later. Requires an existing table."""
-        prior = self._read_manifest(table)
-        if prior is None:
-            raise RuntimeError(
-                f"prepare_buckets requires an existing table (got {table!r}); "
-                "route a table's first version through write()"
-            )
-        return self._prepare_buckets(
-            prior, table, df, buckets, key, pre_clustered, planned_n_buckets
-        )
+        crash leftover, vacuumed later. Requires an existing table; ``key``
+        is ignored for the table's recorded one."""
 
-    def _prepare_buckets(
-        self,
-        prior: dict,
-        table: str,
-        df: DataFrame,
-        buckets: list[int],
-        key: str,
-        pre_clustered: bool,
-        planned_n_buckets: int | None,
-    ) -> dict:
-        nb = int(prior["n_buckets"])
-        if planned_n_buckets is not None and planned_n_buckets != nb:
-            raise RuntimeError(
-                f"{table!r} was rebucketed ({planned_n_buckets} → {nb}) after this "
-                "write was planned; re-read the manifest and re-plan the batch"
-            )
-        # the table's recorded bucket key wins over the argument: a partial
-        # write with a different key would scatter rows across buckets the
-        # manifest doesn't re-point. Manifests that predate the bucket_key
-        # field were all id-bucketed.
-        key = prior.get("bucket_key", "id")
-        if not pre_clustered and buckets:
-            # r15 (guide §2.4/§6): cluster the partial write by an EXPLICIT
-            # per-bucket repartition instead of the rebalance hint. A
-            # rebalance lets AQE coalesce a small window to one partition,
-            # whose single task then writes every touched bucket dir
-            # SEQUENTIALLY — measured 0.85s for a 150-row/32-dir commit vs
-            # 0.32s for the same 32 files written by parallel tasks; partial
-            # writes are the CDC hot path, so that serial tail taxed every
-            # window. One task per touched bucket is compact()'s established
-            # posture and scales with the window's touched-bucket count; a
-            # whole bucket per task is the store's rewrite unit everywhere
-            # (an outgrown bucket is what rebucket() is for). Full-table
-            # writes (write()) keep the rebalance + AQE skew-split.
-            df = df.repartition(len(buckets), self.bucket_expr(key, nb))
-            pre_clustered = True
-        version = self._write_version(table, df, key, nb, pre_clustered=pre_clustered)
-        vdir = os.path.join(self._dir(table), version)
-        written = {
-            d.split("=", 1)[1]
-            for d in (os.listdir(vdir) if os.path.exists(vdir) else [])
-            if d.startswith("_bucket=")
-        }
-        return {
-            "table": table,
-            "version": version,
-            "buckets": buckets,
-            "key": key,
-            "nb": nb,
-            "schema_json": json.loads(df.schema.json()),
-            "written": written,
-            "stats": self._version_stats(table, version),
-        }
+        def spark_write(prior: dict) -> tuple[str, dict]:
+            nb, bkey = int(prior["n_buckets"]), prior.get("bucket_key", "id")
+            out = df
+            if not pre_clustered and buckets:
+                # r15 (guide §2.4/§6): cluster the partial write by an
+                # EXPLICIT per-bucket repartition instead of the rebalance
+                # hint. A rebalance lets AQE coalesce a small window to one
+                # partition, whose single task then writes every touched
+                # bucket dir SEQUENTIALLY — measured 0.85s for a
+                # 150-row/32-dir commit vs 0.32s for the same 32 files
+                # written by parallel tasks; partial writes are the CDC hot
+                # path, so that serial tail taxed every window. One task
+                # per touched bucket is compact()'s established posture
+                # and scales with the window's touched-bucket count; a
+                # whole bucket per task is the store's rewrite unit
+                # everywhere (an outgrown bucket is what rebucket() is
+                # for). Full-table writes (write()) keep the rebalance +
+                # AQE skew-split.
+                out = df.repartition(len(buckets), self.bucket_expr(bkey, nb))
+            clustered = pre_clustered or bool(buckets)
+            version = self._write_version(table, out, bkey, nb, pre_clustered=clustered)
+            return version, json.loads(df.schema.json())
+
+        return self._prepare(table, buckets, planned_n_buckets, spark_write)
 
     def commit_prepared(
         self, prep: dict, planned_versions: dict[str, str] | None = None
@@ -1310,33 +1286,18 @@ class TableStore:
         """Phase 2 of a partial write: the locked manifest swap for a
         ``prepare_buckets`` handle — OCC preconditions, bucket
         re-point/drop, vacuum."""
-        self._commit_partial(planned_versions=planned_versions, **prep)
+        self._commit_partial(prep, planned_versions)
 
-    def _commit_partial(
-        self,
-        table: str,
-        version: str,
-        buckets: list[int],
-        key: str,
-        nb: int,
-        schema_json: dict,
-        planned_versions: dict[str, str] | None,
-        written: set[str],
-        stats: dict[str, dict],
-    ) -> None:
-        """The locked manifest swap of a partial write — shared by
-        ``write_buckets``/``commit_prepared`` (Spark-written version dirs)
-        and ``_commit_arrow`` (pyarrow-written version dirs):
-        OCC preconditions, bucket re-point/drop, vacuum; ``written`` and
-        ``stats`` were harvested by the prepare phase."""
-        with self._commit_lock(table):
-            # base the pointer swap on the LATEST manifest, not the one the
-            # caller planned against — concurrent disjoint commits survive
-            prior = self._read_manifest(table)
+    def _commit_partial(self, prep: dict, planned_versions: dict[str, str] | None) -> None:
+        """``_swap_manifest`` of a ``_prepare`` handle, from either
+        placement: re-point the handle's buckets that the version dir
+        holds, drop the ones it left empty, and abort on a rebucket or a
+        moved ``planned_versions`` bucket."""
+        table, nb, version = prep["table"], prep["nb"], prep["version"]
+
+        def update(prior: dict | None) -> dict:
             if prior is None:
-                raise RuntimeError(
-                    f"{table!r} disappeared between planning and commit"
-                )
+                raise RuntimeError(f"{table!r} disappeared between planning and commit")
             if int(prior["n_buckets"]) != nb:
                 # a rebucket landed between this write's planning and its
                 # commit: the data was bucketed at the OLD width, so
@@ -1352,7 +1313,7 @@ class TableStore:
             if planned_versions is not None:
                 moved = [
                     b
-                    for b in buckets
+                    for b in prep["buckets"]
                     if prior["buckets"].get(str(b)) != planned_versions.get(str(b))
                 ]
                 if moved:
@@ -1361,201 +1322,68 @@ class TableStore:
                         "commit after this write was planned; committing would lose "
                         "that writer's rows — re-read and re-plan"
                     )
-            new_buckets = dict(prior["buckets"])
+            buckets = dict(prior["buckets"])
             # untouched buckets carry their stats forward; rewritten buckets
             # take the fresh footer stats (or LOSE stats if harvesting
             # failed — stale bounds would skip wrongly)
-            new_stats = dict(prior.get("stats") or {})
-            for b in buckets:
-                if str(b) in written:
-                    new_buckets[str(b)] = version
-                    new_stats[str(b)] = stats.get(str(b))
+            stats = dict(prior.get("stats") or {})
+            for b in map(str, prep["buckets"]):
+                if b in prep["written"]:
+                    buckets[b] = version
+                    stats[b] = prep["stats"].get(b)
                 else:
-                    new_buckets.pop(str(b), None)  # bucket emptied by deletes
-                    new_stats.pop(str(b), None)
-            manifest = {
+                    buckets.pop(b, None)  # bucket emptied by deletes
+                    stats.pop(b, None)
+            return {
                 "n_buckets": nb,
-                "bucket_key": key,
-                "schema": schema_json,
-                "buckets": new_buckets,
-                "stats": {k: v for k, v in new_stats.items() if v},
-                "created_ms": prior.get("created_ms", int(time.time() * 1000)),
+                "bucket_key": prep["key"],
+                "schema": prep["schema_json"],
+                "buckets": buckets,
+                "stats": {k: v for k, v in stats.items() if v},
             }
-            self._commit_manifest(table, manifest)
-        replaced = set(prior["buckets"].values()) - set(new_buckets.values())
-        self._vacuum(table, replaced)
 
-    # -- driver-side commits -------------------------------------------------
-    # A commit whose rows already live on the driver — postings stats (one
-    # 4-column row per sub-batch), a driver-known sync batch merged by
-    # operators/merge.merge_upsert_arrow — would pay a full Spark job
-    # launch + shuffle + task commit (~0.5-1s of fixed latency, r16
-    # measured) to move a few kilobytes. The store owns its file format, so
-    # a driver-side pyarrow write into a private version dir + the SAME
-    # locked manifest swap is an equivalent commit at ~none of the cost.
-    # The guide §5 rule ("the driver should do almost no data work") is
-    # about data volume: these writes stay under the callers' bounds (a
-    # fixed handful of stats rows; the touched buckets' bytes under
-    # ``driver_read_bytes()`` for sync merges).
-
-    #: Spark type name → pyarrow type factory and arguments; timestamps are
-    #: the store's TIMESTAMP_MICROS, adjusted to UTC
-    _ARROW_TYPES = {
-        "long": ("int64",),
-        "integer": ("int32",),
-        "short": ("int16",),
-        "byte": ("int8",),
-        "double": ("float64",),
-        "float": ("float32",),
-        "string": ("string",),
-        "boolean": ("bool_",),
-        "timestamp": ("timestamp", "us", "UTC"),
-    }
-
-    def read_rows_driver(
-        self, table: str, buckets: list[int], manifest: dict | None = None
-    ) -> dict[int, list[dict]]:
-        """``read_arrow`` per bucket, as per-bucket dict lists. For TINY
-        state tables only — callers own the bound; absent buckets come
-        back as empty lists (a missing table as all-empty)."""
-        manifest = manifest or self._read_manifest(table)
-        if manifest is None:
-            return {int(b): [] for b in buckets}
-        return {
-            int(b): self.read_arrow(table, [b], manifest).to_pylist() for b in buckets
-        }
-
-    def _partial_prior(self, table: str, planned_n_buckets: int | None) -> dict:
-        """The manifest a driver-side partial write plans against, with
-        ``_prepare_buckets``' existence and rebucket checks."""
-        prior = self._read_manifest(table)
-        if prior is None:
-            raise RuntimeError(
-                f"driver-side partial writes require an existing table (got {table!r}); "
-                "route a table's first version through write()"
-            )
-        if planned_n_buckets is not None and planned_n_buckets != int(prior["n_buckets"]):
-            raise RuntimeError(
-                f"{table!r} was rebucketed ({planned_n_buckets} → {prior['n_buckets']}) "
-                "after this write was planned; re-read the manifest and re-plan the batch"
-            )
-        return prior
+        self._swap_manifest(table, update)
 
     def write_rows_buckets(
         self,
         table: str,
-        rows_by_bucket: dict[int, list[dict]],
-        schema,
-        key: str,
+        data: dict,
+        planned_n_buckets: int | None = None,
         planned_versions: dict[str, str] | None = None,
     ) -> None:
-        """Partial write of driver-side rows (the driver twin of
-        ``write_buckets``): ``rows_by_bucket`` holds the FULL new contents
-        of exactly its bucket ids, pre-bucketed by the caller (bucket ids
-        must come from the store's own bucket expression — callers compute
-        them JVM-side in the same collect that yielded the rows). Files
-        are written driver-side with pyarrow (``_commit_arrow``); the
-        manifest swap, OCC preconditions, footer-stat harvest, and vacuum
-        are exactly ``write_buckets``'s. Only flat schemas of simple types
-        (string / integral / float / bool / timestamp) are supported."""
-        import pyarrow as pa
+        """Partial write of driver-side rows, the driver placement of
+        ``write_buckets``: ``data`` maps each bucket id to a ``pa.Table``
+        in the manifest's schema (``read_arrow``'s, so a driver rewrite of
+        what it read writes it back) holding that bucket's FULL new
+        contents, placed by the store's bucket function. Buckets left
+        without rows drop from the manifest, whose schema stays as it is.
+        One pyarrow file per non-empty bucket, with no Spark job;
+        ``store_schema=False`` leaves out the embedded ``ARROW:schema``
+        footer blob, which alone made a small bucket file about twice the
+        bytes of Spark's (the store's readers take the schema from the
+        manifest). The commit, its preconditions and the footer-stat
+        harvest are ``write_buckets``'.
 
-        prior = self._partial_prior(table, None)
-        fields = []
-        for f in schema.fields:
-            tn = f.dataType.typeName()
-            if tn not in self._ARROW_TYPES:
-                raise ValueError(
-                    f"write_rows_buckets supports simple flat types only; "
-                    f"{table!r} column {f.name!r} is {tn}"
-                )
-            factory, *args = self._ARROW_TYPES[tn]
-            fields.append(pa.field(f.name, getattr(pa, factory)(*args)))
-        aschema = pa.schema(fields)
-        self._commit_arrow(
-            table,
-            prior,
-            {b: pa.Table.from_pylist(rows, schema=aschema) for b, rows in rows_by_bucket.items()},
-            prior.get("bucket_key", key),
-            json.loads(schema.json()),
-            planned_versions,
-        )
-
-    def write_arrow_buckets(
-        self,
-        table: str,
-        data,
-        buckets: list[int],
-        planned_n_buckets: int | None = None,
-    ) -> None:
-        """Partial write of a driver-side ``pa.Table`` in the manifest's
-        schema (``read_arrow``'s, so a driver merge of it writes back what
-        it read): ``data`` holds the full new contents of exactly
-        ``buckets``, and buckets left without rows drop from the manifest —
-        ``write_buckets``' contract. Rows are placed by the Python XXH64 of
-        the table's bucket key, so the caller must have checked
-        ``xxh64.driver_hash_matches``; the manifest's schema stays as it
-        is. ``planned_n_buckets`` fails a write planned before a rebucket."""
-        import pyarrow as pa
-
-        prior = self._partial_prior(table, planned_n_buckets)
-        nb = int(prior["n_buckets"])
-        key = prior.get("bucket_key", "id")
-        by_bucket: dict[int, list[int]] = {int(b): [] for b in buckets}
-        for i, b in enumerate(_buckets_of(data.column(key).to_pylist(), nb)):
-            if b not in by_bucket:
-                raise RuntimeError(
-                    f"row {i} of a {table!r} write hashes to bucket {b}, outside "
-                    f"the touched set {sorted(by_bucket)}"
-                )
-            by_bucket[b].append(i)
-        self._commit_arrow(
-            table,
-            prior,
-            {b: data.take(pa.array(idx, type=pa.int64())) for b, idx in by_bucket.items()},
-            key,
-            prior["schema"],
-            None,
-        )
-
-    def _commit_arrow(
-        self,
-        table: str,
-        prior: dict,
-        by_bucket: dict,
-        key: str,
-        schema_json: dict,
-        planned_versions: dict[str, str] | None,
-    ) -> None:
-        """THE driver-side writer: one pyarrow file per non-empty bucket of
-        ``by_bucket`` (bucket id → ``pa.Table``) in a private version dir,
-        then ``_commit_partial``'s locked swap over exactly those bucket
-        ids. ``store_schema=False`` leaves out the embedded
-        ``ARROW:schema`` footer blob, which alone made a small bucket file
-        about twice the bytes of Spark's; the store's readers take the
-        schema from the manifest."""
+        The bound is the caller's: these writes stay small (a handful of
+        postings stats rows; sync merges whose touched buckets fit under
+        ``driver_read_bytes()``), where a Spark write would spend a job
+        launch and a shuffle to move a few kilobytes."""
         import pyarrow.parquet as pq
 
-        version = f"v{int(time.time() * 1000)}_{os.getpid()}_{time.monotonic_ns()}"
-        vdir = os.path.join(self._dir(table), version)
-        written = set()
-        for b, t in by_bucket.items():
-            if not t.num_rows:
-                continue
-            bdir = os.path.join(vdir, f"_bucket={b}")
-            os.makedirs(bdir, exist_ok=True)
-            pq.write_table(t, os.path.join(bdir, "part-driver.parquet"), store_schema=False)
-            written.add(str(b))
+        def arrow_write(prior: dict) -> tuple[str, dict]:
+            version, vdir = self._new_version(table)
+            for b, t in data.items():
+                if t.num_rows:
+                    bdir = os.path.join(vdir, f"_bucket={b}")
+                    os.makedirs(bdir)
+                    pq.write_table(
+                        t, os.path.join(bdir, "part-driver.parquet"), store_schema=False
+                    )
+            return version, prior["schema"]
+
         self._commit_partial(
-            table,
-            version,
-            sorted(by_bucket),
-            key,
-            int(prior["n_buckets"]),
-            schema_json,
+            self._prepare(table, sorted(data), planned_n_buckets, arrow_write),
             planned_versions,
-            written,
-            self._version_stats(table, version),
         )
 
     # Unreferenced dirs beyond this age are swept by every commit's vacuum
@@ -1832,10 +1660,7 @@ class TableStore:
             ]
             self.write(table, cur.select(*cols), key=manifest.get("bucket_key", "id"))
         else:
-            # metadata-only swap is still a manifest read-modify-write —
-            # re-read and commit under the lock so a concurrent bucket
-            # commit's re-points are not dropped
-            with self._commit_lock(table):
-                manifest = self._read_manifest(table)
-                manifest["schema"] = json.loads(new_schema.json())
-                self._commit_manifest(table, manifest)
+            # metadata-only swap is still a manifest read-modify-write, so
+            # a concurrent bucket commit's re-points are not dropped
+            schema_json = json.loads(new_schema.json())
+            self._swap_manifest(table, lambda prior: {**prior, "schema": schema_json})

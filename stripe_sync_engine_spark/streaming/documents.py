@@ -37,9 +37,7 @@ from stripe_sync_engine_spark.operators.incremental_dedup import (
     ContaminationGate,
     IncrementalDeduper,
     IncrementalNearDeduper,
-    anti_probe,
-    commit_window,
-    with_occ_retry,
+    apply_gate_window,
 )
 
 DOCUMENT_SCHEMA = StructType(
@@ -114,30 +112,16 @@ def read_funnel_metrics(checkpoint_dir: str) -> list[dict]:
     return [by_batch[b] for b in sorted(by_batch)]
 
 
-def _merge_documents(store, table: str, rows: DataFrame) -> int:
+def _merge_documents(store, table: str, rows: DataFrame) -> None:
     """Keyed idempotent append: insert rows whose doc_id the sink has not
-    seen, rewriting only the touched buckets (the REJECTED_TABLE pattern
-    from the webhook stream). Returns inserted count."""
-    if not store.exists(table):
+    seen — an insert-only gate window (``apply_gate_window``: only the
+    buckets gaining rows are rewritten, OCC re-plans on a concurrent
+    commit). The table's first batch births it even when empty, so the
+    sink exists once a batch passed the gates."""
+    if store.exists(table):
+        apply_gate_window(store, table, "doc_id", ["doc_id"], ["doc_id"], ins=rows)
+    else:
         store.write(table, rows, key="doc_id")
-        return store.read(table).count()
-
-    def attempt() -> int:
-        manifest = store._read_manifest(table)
-        touched = store.buckets_of(rows, key="doc_id", table=table)
-        prior = store._scan_manifest(table, manifest, touched)
-        fresh = anti_probe(rows, prior, ["doc_id"]).localCheckpoint(
-            eager=True
-        )  # pre-commit materialization: the commit vacuums the files this lineage reads
-        n = fresh.count()
-        if n:
-            # only the buckets gaining rows are rewritten; replay-only
-            # buckets stay untouched (incremental_dedup.commit_window)
-            commit_window(store, table, "doc_id", manifest, fresh)
-        return n
-
-    # re-plan if an out-of-band maintain() compaction lands mid-merge
-    return with_occ_retry(attempt)
 
 
 def _local_checkpoint_path(checkpoint_dir: str) -> str:

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StringType, StructField, StructType
 
+from stripe_sync_engine_spark.operators.incremental_dedup import apply_gate_window
 from stripe_sync_engine_spark.sources.webhook import with_signature_verified
 from stripe_sync_engine_spark.sync.engine import StripeSparkSync
 
@@ -96,39 +97,27 @@ def start_webhook_stream(
                     F.current_timestamp().alias("rejected_at"),
                 )
                 if not rejected.isEmpty():
-                    # bucket-pruned append: only buckets receiving new
-                    # rejected rows are rewritten. A crash-replayed
+                    # an insert-only gate window: only buckets receiving
+                    # new rejected rows are rewritten. A crash-replayed
                     # micro-batch (foreachBatch is at-least-once; the file
                     # source re-delivers the same batch_id with identical
                     # content) appends NOTHING the second time: incoming
-                    # rows anti-join against rows ALREADY STORED for the
+                    # rows anti-probe against rows ALREADY STORED for the
                     # same (value, signature, batch_id). Within one batch,
                     # genuine duplicate rejections (the same bad body
                     # posted twice) are preserved — the dedup is against
                     # the store, never within the batch. The commit is a
                     # single atomic manifest swap, so a crash can't leave
-                    # a batch half-appended and defeat the anti-join.
+                    # a batch half-appended and defeat the anti-probe.
                     dedup_keys = ["value", "signature", "batch_id"]
-                    if engine.store.exists(REJECTED_TABLE):
-                        touched = engine.store.buckets_of(
-                            rejected, "value", table=REJECTED_TABLE
-                        )
-                        prior = engine.store.read_buckets(REJECTED_TABLE, touched)
-                        # batch-side broadcast probe: the store scan is
-                        # never shuffled (operators/incremental_dedup)
-                        from stripe_sync_engine_spark.operators.incremental_dedup import (
-                            anti_probe,
-                        )
-
-                        fresh = anti_probe(rejected, prior, dedup_keys)
-                        engine.store.write_buckets(
-                            REJECTED_TABLE,
-                            prior.unionByName(fresh),
-                            touched,
-                            key="value",
-                        )
-                    else:
-                        engine.store.write(REJECTED_TABLE, rejected, key="value")
+                    apply_gate_window(
+                        engine.store,
+                        REJECTED_TABLE,
+                        "value",
+                        dedup_keys,
+                        dedup_keys,
+                        ins=rejected,
+                    )
                 events = checked.where(F.col("signature_valid")).select(
                     F.col("payload").alias("value")
                 )

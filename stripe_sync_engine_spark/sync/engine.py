@@ -71,7 +71,7 @@ from stripe_sync_engine_spark.operators.merge import merge_upsert  # noqa: F401
 from stripe_sync_engine_spark.operators.validate import validate_enums
 from stripe_sync_engine_spark.schemas.entities import bucket_key, entity_schema
 from stripe_sync_engine_spark.sources.stripe_api import FLUSH_CHUNK, StripeAPI, to_json_rows
-from stripe_sync_engine_spark.storage import TableStore
+from stripe_sync_engine_spark.storage import TableStore, bucket_ids
 from stripe_sync_engine_spark.sync import registry as R
 from stripe_sync_engine_spark.sync.transforms import apply_transforms
 
@@ -352,7 +352,8 @@ class StripeSparkSync:
         O(touched buckets) regardless of table size; zero for replayed or
         stale batches, so maintenance inherits the merge's idempotence).
         ``touched=None`` means a full-table write. ``df`` is a DataFrame
-        (Spark write) or a driver merge's ``pa.Table`` (pyarrow write)."""
+        (Spark write) or a driver merge's ``{bucket: pa.Table}`` (pyarrow
+        write)."""
         from stripe_sync_engine_spark.operators import rollup as R_
 
         specs = self._rollups.get(table, ())
@@ -378,7 +379,7 @@ class StripeSparkSync:
         elif isinstance(df, DataFrame):
             self.store.write_buckets(table, df, touched, **kw)
         else:
-            self.store.write_arrow_buckets(table, df, touched, **kw)
+            self.store.write_rows_buckets(table, df, **kw)
         if not specs:
             return
         src_ms = self.store.commits(table)[-1]
@@ -1179,7 +1180,7 @@ class StripeSparkSync:
             # count AQE coalesces the merge's exchange to one task for
             # a micro-batch, and that task writes every touched bucket
             # dir sequentially — the serial tail the non-pre-clustered
-            # write path already avoids (storage._prepare_buckets).
+            # write path already avoids (storage.prepare_buckets).
             num_partitions=max(1, len(touched)),
             update_cols=update_cols,
         )
@@ -2080,12 +2081,15 @@ class StripeSparkSync:
         buckets with ``read_arrow`` — declining above
         ``driver_read_bytes()``, Spark's own broadcast bound, as the top-k
         reads do — rewrite them with ``merge`` (``pa.Table`` → ``pa.Table``,
-        a ``merge_upsert_arrow`` call) and commit through
-        ``_commit_buckets`` (pyarrow files, the locked manifest swap,
-        rollups). No Spark job. Also declined: a table birth (a full Spark
-        write) and a Python XXH64 that disagrees with this Spark's. False
-        when declined: nothing was written, and the caller runs the Spark
-        plan on the same ``probe``."""
+        a ``merge_upsert_arrow`` call), split the result by the Python
+        XXH64 of the bucket key and commit through ``_commit_buckets``
+        (pyarrow files, the locked manifest swap, rollups). No Spark job.
+        Also declined: a table birth (a full Spark write) and a Python
+        XXH64 that disagrees with this Spark's. False when declined:
+        nothing was written, and the caller runs the Spark plan on the
+        same ``probe``."""
+        import pyarrow as pa
+
         if not (self.store.exists(entity) and xxh64.driver_hash_matches(self.spark)):
             return False
         touched = [b for b, _ in probe]
@@ -2094,7 +2098,18 @@ class StripeSparkSync:
         target = self.store.read_arrow(entity, touched, max_bytes=self.store.driver_read_bytes())
         if target is None:
             return False
-        self._commit_buckets(entity, merge(target), touched, planned_n_buckets=nb_planned)
+        merged = merge(target)
+        rows_of: dict[int, list[int]] = {b: [] for b in touched}
+        keys = merged.column(self.store.table_bucket_key(entity)).to_pylist()
+        for i, b in enumerate(bucket_ids(keys, nb_planned)):
+            if b not in rows_of:
+                raise RuntimeError(
+                    f"row {i} of a {entity!r} write hashes to bucket {b}, outside "
+                    f"the touched set {sorted(rows_of)}"
+                )
+            rows_of[b].append(i)
+        by_bucket = {b: merged.take(pa.array(i, type=pa.int64())) for b, i in rows_of.items()}
+        self._commit_buckets(entity, by_bucket, touched, planned_n_buckets=nb_planned)
         return True
 
     def _merge(

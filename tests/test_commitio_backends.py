@@ -208,8 +208,7 @@ def test_lock_sidecar_reclaim_removes_only_orphans(tmp_path):
     file are reclaimable — the sweep removes exactly the ones whose
     parent side file is gone (recursively), leaves the live ones (they
     ARE the lock), is idempotent, and never touches held sidecars or
-    any .lock file — the store's presence-style .commit.lock and foreign
-    locks alike (different suffix by design)."""
+    a foreign .lock file (different suffix by design)."""
     import fcntl
     import os
 
@@ -222,17 +221,15 @@ def test_lock_sidecar_reclaim_removes_only_orphans(tmp_path):
     live_lock = str(tmp_path / f".live.json{cio.LOCK_SIDECAR_SUFFIX}")
     assert os.path.exists(dead_lock) and os.path.exists(live_lock)
 
-    # presence-style locks must be invisible to the sweep: the store's
-    # commit lock, and a foreign .lock whose .json parent is absent (the
-    # shape of an orphaned flock sidecar under the old suffix)
+    # a foreign .lock whose .json parent is absent (the shape of an
+    # orphaned flock sidecar under another suffix) is invisible to the
+    # sweep
     (tmp_path / "tbl").mkdir()
-    commit_lock = tmp_path / "tbl" / ".commit.lock"
-    commit_lock.write_text("")
     foreign_lock = tmp_path / "tbl" / ".x.json.lock"
     foreign_lock.write_text("")
 
     assert cio.reclaim_lock_sidecars(str(tmp_path)) == [dead_lock]
-    assert os.path.exists(live_lock) and commit_lock.exists() and foreign_lock.exists()
+    assert os.path.exists(live_lock) and foreign_lock.exists()
     assert not os.path.exists(dead_lock)
     assert cio.reclaim_lock_sidecars(str(tmp_path)) == []  # idempotent
 
@@ -250,7 +247,9 @@ def test_lock_sidecar_reclaim_removes_only_orphans(tmp_path):
 def test_non_posix_rmw_warns_and_reclaim_noops(tmp_path, monkeypatch):
     """VERDICT r14 #4: the fcntl-less fallback is LOUD — RMW emits the
     RuntimeWarning (unserialized writers lose updates off POSIX) but
-    still applies the update, and the sidecar sweep is a no-op."""
+    still applies the update, and the sidecar sweep is a no-op. The
+    store's commit lock refuses outright: a manifest commit never runs
+    unserialized."""
     import sys
 
     monkeypatch.setitem(sys.modules, "fcntl", None)  # import fcntl -> ImportError
@@ -262,6 +261,9 @@ def test_non_posix_rmw_warns_and_reclaim_noops(tmp_path, monkeypatch):
     # no sidecar was created, and the sweep no-ops
     assert not (tmp_path / f".state.json{cio.LOCK_SIDECAR_SUFFIX}").exists()
     assert cio.reclaim_lock_sidecars(str(tmp_path)) == []
+    with pytest.raises(RuntimeError, match="fcntl is unavailable"):
+        with TableStore(None, str(tmp_path / "wh"))._commit_lock("t"):
+            pass
 
 
 def test_rmw_stays_serialized_through_a_concurrent_reclaim(tmp_path):

@@ -2381,7 +2381,7 @@ def test_driver_read_fails_loudly_on_a_vacuumed_bucket(spark, tmp_path):
     """A bucket the manifest references whose directory is gone (a
     concurrent commit replaced and vacuumed it after the manifest was
     read) raises on the driver read — ``topk``'s stats read and, through
-    ``read_rows_driver``, the windows' stats commit — instead of returning
+    ``read_arrow``, the windows' stats commit — instead of returning
     partial N/avgdl and silently wrong scores."""
     import os
     import shutil
@@ -2405,7 +2405,7 @@ def test_driver_read_fails_loudly_on_a_vacuumed_bucket(spark, tmp_path):
     with _pytest.raises(RuntimeError, match=f"bucket {b} of .*{version}.*concurrent commit"):
         idx.topk(["alpha"])
     with _pytest.raises(RuntimeError, match="concurrent commit"):
-        store.read_rows_driver(idx.stats_table, [int(b)])
+        store.read_arrow(idx.stats_table, [int(b)])
 
 
 def test_read_arrow_casts_to_the_manifest_schema(spark, tmp_path):

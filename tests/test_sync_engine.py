@@ -2344,8 +2344,8 @@ def _mp_lock_worker(root, counter, n):
 
 
 def test_commit_lock_mutual_exclusion_across_processes(tmp_path):
-    """The commit lock is an O_CREAT|O_EXCL lock FILE precisely so that
-    writers in different PROCESSES serialize (the threading locks only
+    """The commit lock is a kernel flock on a sidecar FILE precisely so
+    that writers in different PROCESSES serialize (the threading locks only
     cover one driver). Four processes hammer a non-atomic read-modify-
     write under the lock; the counter is exact iff mutual exclusion
     held. (TableStore is constructed sparkless — the lock never touches
@@ -2366,6 +2366,55 @@ def test_commit_lock_mutual_exclusion_across_processes(tmp_path):
         assert p.exitcode == 0
     with open(counter) as f:
         assert int(f.read()) == 100
+
+
+def _mp_lock_holder(root, held):
+    import time
+
+    from stripe_sync_engine_spark.storage import TableStore
+
+    with TableStore(None, root)._commit_lock("t"):
+        held.set()
+        time.sleep(600)
+
+
+def test_commit_lock_is_released_when_its_holder_is_killed(tmp_path):
+    """A committer SIGKILLed while holding the commit lock does not stall
+    the next one: the kernel drops the holder's flock with its process,
+    so the lock is free again at once — no stale-lock timeout to wait
+    out."""
+    import multiprocessing as mp
+    import signal
+    import threading
+
+    root = str(tmp_path / "wh_killed")
+    ctx = mp.get_context("spawn")
+    held = ctx.Event()
+    holder = ctx.Process(target=_mp_lock_holder, args=(root, held))
+    holder.start()
+    try:
+        assert held.wait(120), "holder never took the lock"
+        assert holder.is_alive()
+        holder.kill()
+        holder.join(timeout=30)
+        assert not holder.is_alive() and holder.exitcode == -signal.SIGKILL
+    finally:
+        if holder.is_alive():
+            holder.kill()
+            holder.join(timeout=30)
+
+    store = TableStore(None, root)
+    got = threading.Event()
+
+    def take():
+        with store._commit_lock("t"):
+            got.set()
+
+    taker = threading.Thread(target=take, daemon=True)
+    taker.start()
+    assert got.wait(5), "the dead holder's lock was not released"
+    taker.join(timeout=5)
+    assert not taker.is_alive()
 
 
 def test_engine_maintain_compacts_and_reports(spark, tmp_path):
