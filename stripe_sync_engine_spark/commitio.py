@@ -42,6 +42,12 @@ backend only has to implement one conditional put and derive
 ``put_atomic`` / ``append`` / ``read_modify_write`` from it exactly as
 the fake does.
 
+``put_atomic(path, data)`` takes the object's whole content as
+``bytes``: the store's manifests and history snapshots are gzip JSON
+(``atomic_write_bytes``), and text side-files go through
+``atomic_write_text``, which encodes UTF-8. ``append`` and
+``read_modify_write`` stay text.
+
 Single-writer expectations stay with the CALLERS (the store's commit
 lock, the gates' external-serialization contract, the stream's serial
 foreachBatch); this module guarantees that each individual commit is
@@ -67,13 +73,13 @@ class PosixRenameBackend:
     """The default backend: write-to-temp + fsync + atomic rename +
     parent-directory fsync (the POSIX half of the module contract)."""
 
-    def put_atomic(self, path: str, text: str) -> None:
+    def put_atomic(self, path: str, data: bytes) -> None:
         d, base = os.path.split(path)
         if d:
             os.makedirs(d, exist_ok=True)
         tmp = os.path.join(d, f".{base}.tmp.{os.getpid()}")
-        with open(tmp, "w") as f:
-            f.write(text)
+        with open(tmp, "wb") as f:
+            f.write(data)
             # fsync BEFORE the rename, and the parent dir after: without
             # both, a power loss shortly after os.replace can surface an
             # empty or missing target on journal replay — the same reason
@@ -128,7 +134,7 @@ class PosixRenameBackend:
                     prior = f.read()
             except FileNotFoundError:
                 prior = ""
-            self.put_atomic(path, fn(prior))
+            self.put_atomic(path, fn(prior).encode())
 
         try:
             import fcntl  # noqa: F401
@@ -236,7 +242,7 @@ class InMemoryConditionalPutBackend:
         self.conflicts = 0  # CAS losses (each one a serialized retry)
         self._lock = threading.Lock()
 
-    def _conditional_put(self, path: str, text: str, if_generation_match: int) -> None:
+    def _conditional_put(self, path: str, data: bytes, if_generation_match: int) -> None:
         with self._lock:
             current = self.generations.get(path, 0)
             if current != if_generation_match:
@@ -247,17 +253,17 @@ class InMemoryConditionalPutBackend:
             d = os.path.dirname(path)
             if d:
                 os.makedirs(d, exist_ok=True)
-            with open(path, "w") as f:
-                f.write(text)
+            with open(path, "wb") as f:
+                f.write(data)
             self.generations[path] = current + 1
             self.puts += 1
 
-    def put_atomic(self, path: str, text: str) -> None:
+    def put_atomic(self, path: str, data: bytes) -> None:
         # expected generation sampled at CALL time, checked atomically in
         # the CAS: two put_atomic racers interleaved between sample and
         # check surface a LOUD conflict (these files are single-writer by
         # contract — a conflict is a caller bug, not a retry)
-        self._conditional_put(path, text, self.generations.get(path, 0))
+        self._conditional_put(path, data, self.generations.get(path, 0))
 
     def read_modify_write(self, path: str, fn, attempts: int = 64) -> None:
         """The callers' retry discipline for multi-writer side files:
@@ -277,7 +283,7 @@ class InMemoryConditionalPutBackend:
             except FileNotFoundError:
                 prior = ""
             try:
-                self._conditional_put(path, fn(prior), gen)
+                self._conditional_put(path, fn(prior).encode(), gen)
                 return
             except ConditionalPutConflict:
                 if i < attempts - 1:
@@ -308,13 +314,18 @@ def get_backend():
     return _backend
 
 
-def atomic_write_text(path: str, text: str) -> None:
-    """Atomically replace ``path`` with ``text`` (see module contract).
+def atomic_write_bytes(path: str, data: bytes) -> None:
+    """Atomically replace ``path`` with ``data`` (see module contract).
     Creates the parent directory if needed. Under the default backend
     the temp name is DOT-PREFIXED: Spark's file-stream source ignores
     dot-files, so a half-written landing envelope is never listed — and
     the prefix is harmless for every other side-file."""
-    _backend.put_atomic(path, text)
+    _backend.put_atomic(path, data)
+
+
+def atomic_write_text(path: str, text: str) -> None:
+    """``atomic_write_bytes`` of ``text`` encoded as UTF-8."""
+    atomic_write_bytes(path, text.encode())
 
 
 def atomic_write_json(path: str, obj, **dump_kwargs) -> None:

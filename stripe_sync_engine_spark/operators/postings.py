@@ -345,15 +345,14 @@ class PersistedPostingsIndex:
         runs driver-side (the terms are driver-known strings —
         ``buckets_of_values``), and N/avgdl come from a driver-side
         pyarrow read of the stats table's few rows. It then runs in one
-        of two placements:
+        of two placements, picked by ``store.driver_read``:
 
-        * **driver** (zero Spark jobs), when the probed buckets' files
-          total at most ``spark.sql.autoBroadcastJoinThreshold`` — the
-          size Spark already treats as small enough to ship to every
-          task: pyarrow reads them, numpy scores them, and the top-k
-          comes back as an Arrow-built local frame;
-        * **Spark**, above that bound (or with the threshold at -1): the
-          pruned bucket scan, semi-joined to the query terms, scored and
+        * **driver** (zero Spark jobs): pyarrow reads the probed
+          buckets, numpy scores them, and the top-k comes back as an
+          Arrow-built local frame;
+        * **Spark**, where ``driver_read`` declines (buckets over the
+          bound, the threshold at -1, an XXH64 mismatch): the pruned
+          bucket scan, semi-joined to the query terms, scored and
           reduced by a TakeOrdered — the scale path.
 
         Both score with ``textops.bm25_part``; they agree to float
@@ -388,12 +387,7 @@ class PersistedPostingsIndex:
         # same IEEE double division the Spark agg performed; an all-empty
         # corpus (n_dl == 0) has no postings rows, so avgdl is never read
         avgdl = (float(total_dl) / float(n_dl)) if n_dl else float("nan")
-        hits = store.read_arrow(
-            self.table,
-            touched,
-            columns=["term", "doc_id", "tf", "dl"],
-            max_bytes=store.driver_read_bytes(),
-        )
+        hits = store.driver_read(self.table, touched, columns=["term", "doc_id", "tf", "dl"])
         if hits is not None:
             return self._topk_driver(hits, terms, n_docs, avgdl, k)
         if probe is None:

@@ -902,22 +902,18 @@ class PersistedIVFPQ:
         driver (``probe_cells``, ``buckets_of_values``: zero jobs), and
         the scoring (``adc_topk``) runs in one of two placements:
 
-        * **driver** (zero Spark jobs), when the probed buckets' files
-          total at most ``spark.sql.autoBroadcastJoinThreshold``: pyarrow
-          reads them and the top-k comes back as an Arrow-built local
-          frame;
-        * **Spark**, above that bound (or with the threshold at -1):
-          ``ivf_pq_topk`` over the pruned bucket scan — the scale path.
+        * **driver** (zero Spark jobs), when ``store.driver_read``
+          returns the probed buckets: the top-k comes back as an
+          Arrow-built local frame;
+        * **Spark**, where it declines: ``ivf_pq_topk`` over the pruned
+          bucket scan — the scale path.
 
         Both return the same rows. Raises ``ValueError`` on an empty
         query list or a vector of the wrong dimension."""
         probe = probe_cells(self.index, queries, nprobe)
         store, table = self.store, self.table
         touched = store.buckets_of_values(np.unique(probe).tolist(), table=table)
-        codes = store.read_arrow(
-            table, touched, columns=["vec_id", "cell", "codes"],
-            max_bytes=store.driver_read_bytes(),
-        )
+        codes = store.driver_read(table, touched, columns=["vec_id", "cell", "codes"])
         if codes is None:
             return ivf_pq_topk(
                 store.read_buckets(table, touched), self.index, queries, k=k, probe=probe

@@ -8,6 +8,10 @@ entity as a HASH-BUCKETED parquet dataset with a per-bucket manifest:
     <root>/<table>/MANIFEST.json                 (the commit)
     <root>/<table>/_history/<ms>.json            (per-commit snapshots — time travel)
 
+Both layout files hold gzip-compressed JSON despite their ``.json`` name
+(``write_manifest_file``; ``load_manifest_file`` also reads plain JSON,
+as warehouses written before the compression hold).
+
 ``MANIFEST.json`` maps every bucket to the version directory holding its
 current data (plus the table schema and bucket count). A merge therefore
 rewrites ONLY the buckets containing batch keys: the new version dir gets
@@ -42,6 +46,7 @@ applied DDL in a ``_migrations.json`` file.
 from __future__ import annotations
 
 import contextlib
+import gzip
 import hashlib
 import json
 import os
@@ -53,7 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from stripe_sync_engine_spark.commitio import atomic_write_json, exclusive_lock
+from stripe_sync_engine_spark.commitio import atomic_write_bytes, atomic_write_json, exclusive_lock
 from stripe_sync_engine_spark.schemas.entities import bucket_key, entity_schema, entity_tables
 
 DEFAULT_N_BUCKETS = 32
@@ -94,14 +99,30 @@ def bucket_ids(values: list, nb: int) -> list[int]:
 # readers (which run in Spark's Python workers) share one copy.
 
 
+def load_manifest_file(path: str) -> dict:
+    """THE reader of a ``MANIFEST.json`` or ``_history/<ms>.json``: gzip
+    JSON (what ``write_manifest_file`` writes), or plain JSON — the
+    format of warehouses written before manifests were compressed, and
+    of manifests written by hand."""
+    with open(path, "rb") as f:
+        raw = f.read()
+    return json.loads(gzip.decompress(raw) if raw[:2] == b"\x1f\x8b" else raw)
+
+
+def write_manifest_file(path: str, manifest: dict) -> None:
+    """Commit ``manifest`` at ``path`` as gzip JSON. Its per-bucket stats
+    repeat the same keys, so it compresses about 8×; ``mtime=0`` makes
+    equal manifests equal bytes."""
+    atomic_write_bytes(path, gzip.compress(json.dumps(manifest).encode(), compresslevel=6, mtime=0))
+
+
 def read_manifest(tdir: str) -> dict | None:
     """The current ``MANIFEST.json`` of the table at ``tdir``; None when
     the table does not exist."""
     path = os.path.join(tdir, "MANIFEST.json")
     if not os.path.exists(path):
         return None
-    with open(path) as f:
-        return json.load(f)
+    return load_manifest_file(path)
 
 
 def history_commits(tdir: str) -> list[int]:
@@ -121,8 +142,7 @@ def snapshot_at(tdir: str, ms: int) -> dict | None:
     eligible = [c for c in history_commits(tdir) if c <= ms]
     if not eligible:
         return None
-    with open(os.path.join(tdir, "_history", f"{eligible[-1]}.json")) as f:
-        manifest = json.load(f)
+    manifest = load_manifest_file(os.path.join(tdir, "_history", f"{eligible[-1]}.json"))
     for b, version in manifest["buckets"].items():
         if not os.path.exists(os.path.join(tdir, version, f"_bucket={b}")):
             raise FileNotFoundError(
@@ -295,23 +315,21 @@ class TableStore:
 
     def _commit_manifest(self, table: str, manifest: dict) -> None:
         """Swap the manifest pointer AND record the commit in the table's
-        history (``_history/<ms>.json``, a full manifest snapshot — a few
-        hundred bytes). Because version dirs are immutable, a retained
-        history file IS a readable snapshot: ``read(table, as_of_ms=...)``
-        plans against it, Delta-time-travel style. Called only by
-        ``_swap_manifest``, under the commit lock, so history timestamps
-        are strictly increasing per table."""
-        atomic_write_json(self._manifest_path(table), manifest)
+        history (``_history/<commit_ms>.json``, a full manifest snapshot:
+        0.9–2.0 KB of gzip JSON at 4 buckets, 6.6–15.9 KB as plain JSON).
+        Because version dirs are immutable, a retained history file IS a
+        readable snapshot: ``read(table, as_of_ms=...)`` plans against
+        it, Delta-time-travel style. Called only by ``_swap_manifest``,
+        which stamps ``commit_ms`` under the commit lock, so history
+        timestamps are strictly increasing per table."""
+        write_manifest_file(self._manifest_path(table), manifest)
         # History is written AFTER the atomic swap: a crash between the two
         # loses one history entry (as-of reads around that instant resolve
         # to the previous snapshot — older but real data), never records a
         # phantom commit whose state was never the table's.
         hdir = os.path.join(self._dir(table), "_history")
         os.makedirs(hdir, exist_ok=True)
-        ms = int(time.time() * 1000)
-        while os.path.exists(os.path.join(hdir, f"{ms}.json")):
-            ms += 1
-        atomic_write_json(os.path.join(hdir, f"{ms}.json"), manifest)
+        write_manifest_file(os.path.join(hdir, f"{manifest['commit_ms']}.json"), manifest)
 
     def _commit_lock(self, table: str):
         """Mutual exclusion for the manifest read-modify-write. The HTTP
@@ -565,14 +583,26 @@ class TableStore:
     def driver_read_bytes(self) -> int:
         """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes
         — the size Spark itself treats as small enough to ship to every
-        task, reused as the bound under which an index read runs on the
-        driver (``read_arrow(max_bytes=...)``). ``-1`` (broadcasts off)
-        keeps every read on Spark."""
+        task, reused as the bound under which a read runs on the driver
+        (``driver_read``). ``-1`` (broadcasts off) keeps every read on
+        Spark."""
         import re
 
         raw = str(self.spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
         n, unit = re.fullmatch(r"(-?\d+)\s*([a-z]*)", raw.strip().lower()).groups()
         return int(n) * 1024 ** "bkmgtp".index(unit[:1] or "b")
+
+    def driver_read(self, table: str, buckets: list[int], columns: list[str] | None = None):
+        """THE placement decision of a driver-known read set (top-k probes,
+        a sync merge's touched buckets): the buckets as a ``pa.Table``
+        (``read_arrow``), or None — run the Spark plan — when the bound
+        ``driver_read_bytes()`` is negative or exceeded, or the Python
+        XXH64 disagrees with this Spark's."""
+        from stripe_sync_engine_spark.functions import xxh64
+
+        if not xxh64.driver_hash_matches(self.spark):
+            return None
+        return self.read_arrow(table, buckets, columns=columns, max_bytes=self.driver_read_bytes())
 
     def read_arrow(
         self,
@@ -1125,10 +1155,18 @@ class TableStore:
         with self._commit_lock(table):
             prior = self._read_manifest(table)
             manifest = update(prior)
+            now = int(time.time() * 1000)
             # table birth time, carried across every rewrite — read(as_of)
             # uses it to tell "before the table existed" (None) from
             # "snapshot aged out of retention" (raise)
-            manifest["created_ms"] = (prior or {}).get("created_ms", int(time.time() * 1000))
+            manifest["created_ms"] = (prior or {}).get("created_ms", now)
+            # the history name: past the prior commit even when the wall
+            # clock stepped back (a manifest written before commit_ms was
+            # recorded takes its history's newest name)
+            last = (prior or {}).get("commit_ms")
+            if last is None:
+                last = max(self.commits(table), default=-1)
+            manifest["commit_ms"] = max(now, last + 1)
             self._commit_manifest(table, manifest)
         replaced = (
             set(prior["buckets"].values()) - set(manifest["buckets"].values())
@@ -1423,9 +1461,9 @@ class TableStore:
                 cached = self._history_ref_cache.get(key)
             if cached is None:
                 try:
-                    with open(os.path.join(hdir, f"{ms}.json")) as f:
-                        cached = frozenset(json.load(f)["buckets"].values())
-                except (FileNotFoundError, json.JSONDecodeError, KeyError):
+                    snap = load_manifest_file(os.path.join(hdir, f"{ms}.json"))
+                    cached = frozenset(snap["buckets"].values())
+                except (OSError, EOFError, ValueError, KeyError):
                     continue
                 with self._history_ref_cache_lock:
                     self._history_ref_cache[key] = cached

@@ -46,7 +46,6 @@ from pyspark.sql.types import (
 )
 
 from stripe_sync_engine_spark.commitio import atomic_write_json
-from stripe_sync_engine_spark.functions import xxh64
 from stripe_sync_engine_spark.operators.incremental_dedup import (
     anti_probe,
     run_parallel,
@@ -2078,24 +2077,23 @@ class StripeSparkSync:
         merge: Callable,
     ) -> bool:
         """The driver placement of a bucket rewrite: read the touched
-        buckets with ``read_arrow`` — declining above
-        ``driver_read_bytes()``, Spark's own broadcast bound, as the top-k
-        reads do — rewrite them with ``merge`` (``pa.Table`` → ``pa.Table``,
-        a ``merge_upsert_arrow`` call), split the result by the Python
-        XXH64 of the bucket key and commit through ``_commit_buckets``
-        (pyarrow files, the locked manifest swap, rollups). No Spark job.
-        Also declined: a table birth (a full Spark write) and a Python
-        XXH64 that disagrees with this Spark's. False when declined:
+        buckets with ``store.driver_read`` (the top-k reads' placement
+        decision), rewrite them with ``merge`` (``pa.Table`` →
+        ``pa.Table``, a ``merge_upsert_arrow`` call), split the result by
+        the Python XXH64 of the bucket key and commit through
+        ``_commit_buckets`` (pyarrow files, the locked manifest swap,
+        rollups). No Spark job. Declined on a table birth (a full Spark
+        write) and wherever ``driver_read`` declines. False when declined:
         nothing was written, and the caller runs the Spark plan on the
         same ``probe``."""
         import pyarrow as pa
 
-        if not (self.store.exists(entity) and xxh64.driver_hash_matches(self.spark)):
+        if not self.store.exists(entity):
             return False
         touched = [b for b, _ in probe]
         if not touched:
             return True
-        target = self.store.read_arrow(entity, touched, max_bytes=self.store.driver_read_bytes())
+        target = self.store.driver_read(entity, touched)
         if target is None:
             return False
         merged = merge(target)

@@ -10,12 +10,13 @@ Delta-LogStore-style portability seam."""
 
 from __future__ import annotations
 
+import os
 import time
 
 import pytest
 
 import stripe_sync_engine_spark.commitio as cio
-from stripe_sync_engine_spark.storage import TableStore
+from stripe_sync_engine_spark.storage import TableStore, read_manifest, snapshot_at
 from stripe_sync_engine_spark.sync.engine import StripeSparkSync
 
 
@@ -41,12 +42,12 @@ def test_conditional_put_semantics(tmp_path):
     precondition."""
     fake = cio.InMemoryConditionalPutBackend()
     p = str(tmp_path / "nested" / "obj.json")
-    fake.put_atomic(p, "v1")
+    fake.put_atomic(p, b"v1")
     assert open(p).read() == "v1" and fake.generations[p] == 1
-    fake.put_atomic(p, "v2")
+    fake.put_atomic(p, b"v2")
     assert open(p).read() == "v2" and fake.generations[p] == 2
     with pytest.raises(cio.ConditionalPutConflict, match="generation 2"):
-        fake._conditional_put(p, "v3", if_generation_match=0)
+        fake._conditional_put(p, b"v3", if_generation_match=0)
     assert open(p).read() == "v2"  # the failed put changed nothing
     log = str(tmp_path / "log.jsonl")
     fake.append(log, "l1")
@@ -123,7 +124,7 @@ def test_rmw_conflict_retry_is_deterministic(tmp_path):
 
     fake = cio.InMemoryConditionalPutBackend()
     p = str(tmp_path / "counter.json")
-    fake.put_atomic(p, json.dumps({"n": 0}))
+    fake.put_atomic(p, json.dumps({"n": 0}).encode())
     in_window = threading.Event()
     racer_done = threading.Event()
     attempts = []
@@ -138,7 +139,7 @@ def test_rmw_conflict_retry_is_deterministic(tmp_path):
     t = threading.Thread(target=lambda: fake.read_modify_write(p, bump))
     t.start()
     assert in_window.wait(10)
-    fake.put_atomic(p, json.dumps({"n": 100}))  # the racer wins the window
+    fake.put_atomic(p, json.dumps({"n": 100}).encode())  # the racer wins the window
     racer_done.set()
     t.join(10)
     assert not t.is_alive()
@@ -373,6 +374,15 @@ def test_side_file_suite_runs_on_either_backend(spark, tmp_path, seam_backend):
         key="doc_id",
     )
     assert store.read("corpus").count() == 6  # manifests committed and readable
+    # both layout files went through the backend as gzip JSON, and the one
+    # reader serves current, snapshot and as-of reads from them
+    tdir = str(tmp_path / "wh_seam" / "corpus")
+    first, last = store.commits("corpus")
+    for name in ("MANIFEST.json", f"_history/{last}.json"):
+        with open(os.path.join(tdir, name), "rb") as f:
+            assert f.read(2) == b"\x1f\x8b"
+    assert snapshot_at(tdir, last) == read_manifest(tdir)
+    assert {r["doc_id"] for r in store.read("corpus", as_of_ms=first).collect()} == set(range(6))
 
     # cursor + two-phase pin lifecycle
     feed, cur = eng.consume_changes("c", "corpus", pin_window=True)

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from stripe_sync_engine_spark.sources.stripe_api import InMemoryStripeAPI
-from stripe_sync_engine_spark.storage import TableStore
+from stripe_sync_engine_spark.storage import TableStore, read_manifest
 from stripe_sync_engine_spark.sync import StripeSparkSync, SyncConfig
 from tests import fixtures as fx
 
@@ -389,7 +389,6 @@ def test_asof_join_null_payload_atomic(spark):
 
 # bucketed store: a small merge batch rewrites a strict subset of buckets
 def test_merge_rewrites_only_touched_buckets(engine):
-    import json as _json
     import os as _os
 
     # seed many keys so several buckets are populated
@@ -398,12 +397,12 @@ def test_merge_rewrites_only_touched_buckets(engine):
         for i in range(40)
     ]
     process(engine, *events)
-    mpath = _os.path.join(engine.store.root, "charges", "MANIFEST.json")
-    before = _json.load(open(mpath))["buckets"]
+    tdir = _os.path.join(engine.store.root, "charges")
+    before = read_manifest(tdir)["buckets"]
     assert len(set(before.values())) == 1  # one full version
     # single-key merge
     process(engine, fx.event("charge.updated", fx.charge(id="ch_bkt_0", amount=999), created=10_000))
-    after = _json.load(open(mpath))["buckets"]
+    after = read_manifest(tdir)["buckets"]
     moved = {b for b in after if after[b] != before.get(b)}
     kept = {b for b in after if after[b] == before.get(b)}
     assert len(moved) == 1  # exactly the bucket of ch_bkt_0 rewrote
@@ -663,7 +662,6 @@ def test_enum_null_policy_quarantines(spark, tmp_path):
 
 # reconcile and replace-set paths rewrite only the buckets they touch
 def test_reconcile_rewrites_subset_of_buckets(engine):
-    import json as _json
     import os as _os
 
     subs = [
@@ -678,8 +676,8 @@ def test_reconcile_rewrites_subset_of_buckets(engine):
         for i in range(12)
     ]
     process(engine, *subs)
-    mpath = _os.path.join(engine.store.root, "subscription_items", "MANIFEST.json")
-    before = _json.load(open(mpath))["buckets"]
+    tdir = _os.path.join(engine.store.root, "subscription_items")
+    before = read_manifest(tdir)["buckets"]
     # one subscription drops an item -> reconcile flips its deleted flag
     process(
         engine,
@@ -691,7 +689,7 @@ def test_reconcile_rewrites_subset_of_buckets(engine):
             created=10_000,
         ),
     )
-    after = _json.load(open(mpath))["buckets"]
+    after = read_manifest(tdir)["buckets"]
     kept = {b for b in after if after[b] == before.get(b)}
     assert kept  # untouched buckets still serve their old files
     rows = table_rows(engine, "subscription_items")
@@ -1444,7 +1442,7 @@ def test_retention_protects_long_lived_replaced_versions(spark, tmp_path):
     store = TableStore(spark, str(tmp_path / "wh_ret"), vacuum_retain_s=3600.0)
     store.write("t", spark.createDataFrame([("a", 1)], "id string, v int"))
     tdir = str(tmp_path / "wh_ret" / "t")
-    cur = _json.load(open(_os.path.join(tdir, "MANIFEST.json")))
+    cur = read_manifest(tdir)
     (real_version,) = set(cur["buckets"].values())
     # simulate a version that has been current for a long time: same files
     # under an ancient-creation name, manifest + history re-pointed to it
