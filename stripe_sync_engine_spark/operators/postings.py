@@ -351,9 +351,9 @@ class PersistedPostingsIndex:
           buckets, numpy scores them, and the top-k comes back as an
           Arrow-built local frame;
         * **Spark**, where ``driver_read`` declines (buckets over the
-          bound, the threshold at -1, an XXH64 mismatch): the pruned
-          bucket scan, semi-joined to the query terms, scored and
-          reduced by a TakeOrdered — the scale path.
+          bound, or the threshold at -1): the pruned bucket scan,
+          semi-joined to the query terms, scored and reduced by a
+          TakeOrdered — the scale path.
 
         Both score with ``textops.bm25_part``; they agree to float
         rounding (JVM vs libm ``ln`` and summation order differ by ulps)."""

@@ -315,12 +315,13 @@ class TableStore:
 
     def _commit_manifest(self, table: str, manifest: dict) -> None:
         """Swap the manifest pointer AND record the commit in the table's
-        history (``_history/<commit_ms>.json``, a full manifest snapshot:
-        0.9–2.0 KB of gzip JSON at 4 buckets, 6.6–15.9 KB as plain JSON).
-        Because version dirs are immutable, a retained history file IS a
-        readable snapshot: ``read(table, as_of_ms=...)`` plans against
-        it, Delta-time-travel style. Called only by ``_swap_manifest``,
-        which stamps ``commit_ms`` under the commit lock, so history
+        history (``_history/<ms>.json``, a full manifest snapshot: 0.9–2.0
+        KB of gzip JSON at 4 buckets, 6.6–15.9 KB as plain JSON). Because
+        version dirs are immutable, a retained history file IS a readable
+        snapshot: ``read(table, as_of_ms=...)`` plans against it,
+        Delta-time-travel style. Called only by ``_swap_manifest``, under
+        the commit lock; the snapshot is named past the newest one (never
+        pruned) even when the wall clock stepped back, so history
         timestamps are strictly increasing per table."""
         write_manifest_file(self._manifest_path(table), manifest)
         # History is written AFTER the atomic swap: a crash between the two
@@ -329,7 +330,8 @@ class TableStore:
         # phantom commit whose state was never the table's.
         hdir = os.path.join(self._dir(table), "_history")
         os.makedirs(hdir, exist_ok=True)
-        write_manifest_file(os.path.join(hdir, f"{manifest['commit_ms']}.json"), manifest)
+        ms = max(int(time.time() * 1000), max(self.commits(table), default=-1) + 1)
+        write_manifest_file(os.path.join(hdir, f"{ms}.json"), manifest)
 
     def _commit_lock(self, table: str):
         """Mutual exclusion for the manifest read-modify-write. The HTTP
@@ -596,12 +598,7 @@ class TableStore:
         """THE placement decision of a driver-known read set (top-k probes,
         a sync merge's touched buckets): the buckets as a ``pa.Table``
         (``read_arrow``), or None — run the Spark plan — when the bound
-        ``driver_read_bytes()`` is negative or exceeded, or the Python
-        XXH64 disagrees with this Spark's."""
-        from stripe_sync_engine_spark.functions import xxh64
-
-        if not xxh64.driver_hash_matches(self.spark):
-            return None
+        ``driver_read_bytes()`` is negative or exceeded."""
         return self.read_arrow(table, buckets, columns=columns, max_bytes=self.driver_read_bytes())
 
     def read_arrow(
@@ -1155,18 +1152,10 @@ class TableStore:
         with self._commit_lock(table):
             prior = self._read_manifest(table)
             manifest = update(prior)
-            now = int(time.time() * 1000)
             # table birth time, carried across every rewrite — read(as_of)
             # uses it to tell "before the table existed" (None) from
             # "snapshot aged out of retention" (raise)
-            manifest["created_ms"] = (prior or {}).get("created_ms", now)
-            # the history name: past the prior commit even when the wall
-            # clock stepped back (a manifest written before commit_ms was
-            # recorded takes its history's newest name)
-            last = (prior or {}).get("commit_ms")
-            if last is None:
-                last = max(self.commits(table), default=-1)
-            manifest["commit_ms"] = max(now, last + 1)
+            manifest["created_ms"] = (prior or {}).get("created_ms", int(time.time() * 1000))
             self._commit_manifest(table, manifest)
         replaced = (
             set(prior["buckets"].values()) - set(manifest["buckets"].values())
@@ -1463,7 +1452,7 @@ class TableStore:
                 try:
                     snap = load_manifest_file(os.path.join(hdir, f"{ms}.json"))
                     cached = frozenset(snap["buckets"].values())
-                except (OSError, EOFError, ValueError, KeyError):
+                except (FileNotFoundError, gzip.BadGzipFile, EOFError, ValueError, KeyError):
                     continue
                 with self._history_ref_cache_lock:
                     self._history_ref_cache[key] = cached

@@ -46,6 +46,7 @@ from pyspark.sql.types import (
 )
 
 from stripe_sync_engine_spark.commitio import atomic_write_json
+from stripe_sync_engine_spark.functions import xxh64
 from stripe_sync_engine_spark.operators.incremental_dedup import (
     anti_probe,
     run_parallel,
@@ -2082,13 +2083,13 @@ class StripeSparkSync:
         ``pa.Table``, a ``merge_upsert_arrow`` call), split the result by
         the Python XXH64 of the bucket key and commit through
         ``_commit_buckets`` (pyarrow files, the locked manifest swap,
-        rollups). No Spark job. Declined on a table birth (a full Spark
-        write) and wherever ``driver_read`` declines. False when declined:
-        nothing was written, and the caller runs the Spark plan on the
-        same ``probe``."""
+        rollups). No Spark job. Also declined: a table birth (a full Spark
+        write) and a Python XXH64 that disagrees with this Spark's. False
+        when declined: nothing was written, and the caller runs the Spark
+        plan on the same ``probe``."""
         import pyarrow as pa
 
-        if not self.store.exists(entity):
+        if not (self.store.exists(entity) and xxh64.driver_hash_matches(self.spark)):
             return False
         touched = [b for b, _ in probe]
         if not touched:
